@@ -118,11 +118,7 @@ object LogReg {
       // relation join plan costs an analysis+codegen cycle that dwarfs its
       // 65-row compute) with the identical arithmetic: w − lr·(g/n) in the
       // same association, null/absent gradients as 0.0 (the old left-join
-      // coalesce), and HALF_UP rounding through BigDecimal.valueOf —
-      // bit-for-bit what Spark's round(double, 8) evaluates.
-      def round8(v: Double): Double =
-        java.math.BigDecimal.valueOf(v).setScale(8, java.math.RoundingMode.HALF_UP)
-          .doubleValue()
+      // coalesce), and HALF_UP rounding through `round8`.
       var w: Seq[(Long, Double)] = (0L to buckets.toLong).map(_ -> 0.0)
       for (r <- 1 to rounds) {
         val wLit = typedlit(w.sortBy(_._1).map(_._2).toIndexedSeq)
@@ -183,6 +179,12 @@ object LogReg {
       .agg(sum(($"err" * $"f.c").cast("decimal(30,10)")).cast("double").as("g"))
       .explain("formatted")
   }
+
+  /** HALF_UP rounding to 8 decimals, bit for bit what Spark's
+    * round(double, 8) evaluates; NaN and ±Infinity come back unchanged. */
+  private[operators] def round8(v: Double): Double =
+    if (v.isNaN || v.isInfinite) v
+    else java.math.BigDecimal.valueOf(v).setScale(8, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** SERVING-side margin of a raw token array under a bucket-indexed
     * weight vector (index 2^logBuckets = bias): one decimal(30,10) fold

@@ -55,27 +55,20 @@ object FixedWidthFilters {
     case _                        => false
   }
 
-  /** compileOnBuffer + the reader-facing malformed policy: under tolerant
-    * modes a predicate field whose bytes fail the typed parse evaluates as
-    * SQL NULL at the LEAF (no match for that comparison) — identical to what
-    * Spark would compute post-scan on the PERMISSIVE-nulled field, and an
-    * already-doomed record under DROPMALFORMED. The NULL must be encoded at
-    * the leaf, not by catching around the whole tree: with a top-level catch
-    * `x > 5 OR y = 2` on a malformed x would skip the record even when the
-    * y arm is TRUE, where Catalyst computes NULL OR TRUE = TRUE. (Leaf
-    * NULL-as-false composes soundly through And/Or — see the Or note in
-    * `supported`.) */
-  def compileTolerant(
-      f: Filter,
-      opts: FixedWidthOptions,
-      buf: Array[Byte],
-      offset: () => Long): Option[() => Boolean] =
-    compileOnBuffer(f, opts, buf, offset)
-
   /** Compile a pushed filter to a predicate over the reused record buffer.
     * `offset` supplies the current record's byte offset (the synthetic
     * `offset` column). Returns None only for shapes `supported` rejects —
-    * the ScanBuilder guarantees it never pushes those. */
+    * the ScanBuilder guarantees it never pushes those.
+    *
+    * Under tolerant modes a predicate field whose bytes fail the typed
+    * parse evaluates as SQL NULL at the LEAF (no match for that
+    * comparison) — identical to what Spark would compute post-scan on the
+    * PERMISSIVE-nulled field, and an already-doomed record under
+    * DROPMALFORMED. The NULL must be encoded at the leaf, not by catching
+    * around the whole tree: with a top-level catch `x > 5 OR y = 2` on a
+    * malformed x would skip the record even when the y arm is TRUE, where
+    * Catalyst computes NULL OR TRUE = TRUE. (Leaf NULL-as-false composes
+    * soundly through And/Or — see the Or note in `supported`.) */
   def compileOnBuffer(
       f: Filter,
       opts: FixedWidthOptions,
@@ -135,15 +128,12 @@ object FixedWidthFilters {
             // Spark (NaN == greatest).
             val raw = value.asInstanceOf[Number].doubleValue()
             val v = if (raw == 0.0d) 0.0d else raw
-            Some(nullOnMalformed(() => {
-              val d = AsciiParse.parseDouble(buf, from, until)
-              if (d == null) null
+            Some(nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
               else {
-                val rv0 = d.doubleValue()
+                val rv0 = AsciiParse.parseDouble(buf, from, until)
                 val rv = if (rv0 == 0.0d) 0.0d else rv0
                 Integer.valueOf(java.lang.Double.compare(rv, v))
-              }
-            }))
+              }))
           case "string" =>
             val cs = opts.charset
             val v = UTF8String.fromString(value.toString)
@@ -270,12 +260,9 @@ object FixedWidthFilters {
               }
               set.add(java.lang.Double.valueOf(if (raw == 0.0d) 0.0d else raw))
             }
-            Some(boolGuard(() => {
-              val d = AsciiParse.parseDouble(buf, from, until)
-              d != null && {
-                val rv0 = d.doubleValue()
-                set.contains(java.lang.Double.valueOf(if (rv0 == 0.0d) 0.0d else rv0))
-              }
+            Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) && {
+              val rv0 = AsciiParse.parseDouble(buf, from, until)
+              set.contains(java.lang.Double.valueOf(if (rv0 == 0.0d) 0.0d else rv0))
             }))
           case "string" =>
             val set = new java.util.HashSet[UTF8String]()

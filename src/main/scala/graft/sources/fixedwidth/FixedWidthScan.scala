@@ -1,7 +1,5 @@
 package graft.sources.fixedwidth
 
-import java.io.EOFException
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -1157,11 +1155,11 @@ class FixedWidthReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new FixedWidthPartitionReader(unwrap(partition), opts, requiredSchema, conf.value, pushedFilters)
 
-  /** Always columnar: with pushed filters the columnar reader now evaluates
-    * predicates on a scratch row per record (same skip-decode property as
-    * the row path) while keeping the batch output format that whole-stage
-    * codegen consumes fastest. The row reader remains for API completeness
-    * and as the plain-`InternalRow` fallback. */
+  /** Always columnar: with pushed filters the columnar reader evaluates
+    * predicates per record and decodes only the survivors (same
+    * skip-decode property as the row path) while keeping the batch output
+    * format that whole-stage codegen consumes fastest. The row reader
+    * remains for API completeness and as the plain-`InternalRow` fallback. */
   override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
@@ -1169,9 +1167,13 @@ class FixedWidthReaderFactory(
 }
 
 /** Chunk-walking record cursor shared by the row and columnar readers: opens
-  * one stream at a time across a partition's packed chunks, fills the caller
-  * buffer with whole records. `fetch` returns the record's byte offset in
-  * its file (the reference's default-key semantics) or -1 at end of data.
+  * one stream at a time across a partition's packed chunks. `fetchBlock`
+  * fills the caller's buffer with up to `max` whole records of ONE chunk
+  * (so of one file) and sets `blockOffset` to the first one's byte offset
+  * in its file, the reference's default key. An uncompressed chunk fills
+  * the block with one bulk read; compressed chunks (`.fwz`, gzip, split
+  * bz2) read record by record, keeping every EOF, stall and
+  * trailing-fragment check. `fetch` is the one-record block.
   */
 final class ChunkedRecordStream(
     part: FixedWidthInputPartition,
@@ -1302,72 +1304,91 @@ final class ChunkedRecordStream(
       s"fixedwidth: EOF mid-record at offset $pos of $curPath: " +
         s"file is not a multiple of recordLength=$recLen")
 
-  private def fetchFromChunk(buf: Array[Byte]): Boolean =
+  /** Read up to `max` records of the current chunk into `dst`; 0 at its end. */
+  private def fetchFromChunk(dst: Array[Byte], max: Int): Int =
     if (curCompressed) {
+      var k = 0
       // split bz2 ranges bound `end` to their owned record starts (gzip
       // whole-file chunks set Long.MaxValue — EOF-bounded, check is free)
-      if (pos >= end) return false
-      var n = 0
-      while (n < recLen) {
-        val r = compIn.read(buf, n, recLen - n)
-        if (r <= 0) {
-          // r == 0 is an IO-protocol violation for a blocking stream —
-          // zstd-jni's continuous mode can return it when a BOUNDED source
-          // runs dry mid-frame (e.g. a corrupt .fwz whose per-frame cLens
-          // tile the file but misalign with the actual frame payloads).
-          // Treating it as progress would spin this loop forever inside a
-          // task; fail loudly like any other corruption.
-          if (r == 0)
-            throw new java.io.IOException(
-              s"fixedwidth: decompressor stalled (read 0 bytes) at logical " +
-                s"offset ${pos + n} of $curPath — corrupt compressed chunk")
-          // EOF mid-chunk. For a SPLIT range with a known decompressed
-          // file length, the ONLY legitimate mid-record EOF is the file's
-          // genuine trailing fragment (the bz2 BYBLOCK stream reads past
-          // its range bound to file EOF, so a spanning tail record always
-          // completes; fwz frame grids come from the validated footer);
-          // anything else means the phase-1 bz2 index is stale, BYBLOCK
-          // semantics changed, or an fwz frame's payload disagrees with
-          // its footer — fail loudly instead of silently dropping records
-          // per range (phase 1 has the same guard as a require on
-          // block-boundary reads).
-          if (curFileDLen >= 0L) {
-            val tailFragment = (curFileDLen % recLen).toInt
-            if (pos != curFileDLen - tailFragment || n != tailFragment)
+      while (k < max && pos < end) {
+        var n = 0
+        while (n < recLen) {
+          val r = compIn.read(dst, k * recLen + n, recLen - n)
+          if (r <= 0) {
+            // r == 0 is an IO-protocol violation for a blocking stream —
+            // zstd-jni's continuous mode can return it when a BOUNDED source
+            // runs dry mid-frame (e.g. a corrupt .fwz whose per-frame cLens
+            // tile the file but misalign with the actual frame payloads).
+            // Treating it as progress would spin this loop forever inside a
+            // task; fail loudly like any other corruption.
+            if (r == 0)
               throw new java.io.IOException(
-                s"fixedwidth: unexpected EOF at logical offset ${pos + n} " +
-                  s"of $curPath (indexed decompressed length $curFileDLen) — " +
-                  "split index/footer is stale or inconsistent with the " +
-                  "compressed payload; refusing to silently drop records")
+                s"fixedwidth: decompressor stalled (read 0 bytes) at logical " +
+                  s"offset ${pos + n} of $curPath — corrupt compressed chunk")
+            // EOF mid-chunk. For a SPLIT range with a known decompressed
+            // file length, the ONLY legitimate mid-record EOF is the file's
+            // genuine trailing fragment (the bz2 BYBLOCK stream reads past
+            // its range bound to file EOF, so a spanning tail record always
+            // completes; fwz frame grids come from the validated footer);
+            // anything else means the phase-1 bz2 index is stale, BYBLOCK
+            // semantics changed, or an fwz frame's payload disagrees with
+            // its footer — fail loudly instead of silently dropping records
+            // per range (phase 1 has the same guard as a require on
+            // block-boundary reads).
+            if (curFileDLen >= 0L) {
+              val tailFragment = (curFileDLen % recLen).toInt
+              if (pos != curFileDLen - tailFragment || n != tailFragment)
+                throw new java.io.IOException(
+                  s"fixedwidth: unexpected EOF at logical offset ${pos + n} " +
+                    s"of $curPath (indexed decompressed length $curFileDLen) — " +
+                    "split index/footer is stale or inconsistent with the " +
+                    "compressed payload; refusing to silently drop records")
+            }
+            if (n > 0 && !opts.tolerant) truncated() // tolerant: drop the trailing partial record
+            end = pos // drained: later calls must not read past this EOF again
+            return k
           }
-          if (n == 0) return false
-          if (opts.tolerant) return false // drop trailing partial record
-          truncated()
+          n += r
         }
-        n += r
+        pos += recLen
+        k += 1
       }
-      true
+      k
     } else {
-      if (pos >= end) return false
-      try rawIn.readFully(buf, 0, recLen)
-      catch { case _: EOFException => truncated() }
-      true
+      if (pos >= end) return 0
+      // every record STARTING before `end` belongs to the chunk
+      val n = math.min(max.toLong, (end - pos + recLen - 1) / recLen).toInt
+      var got = 0
+      while (got < n * recLen) {
+        val r = rawIn.read(dst, got, n * recLen - got)
+        if (r < 0) { pos += got / recLen * recLen; truncated() }
+        got += r
+      }
+      pos += got
+      n
     }
+
+  /** Byte offset in its file of the first record of the last block. */
+  var blockOffset = -1L
+
+  /** Fill `dst` with up to `max` whole records of one chunk; returns how
+    * many (0 when all chunks are drained) and sets `blockOffset`. */
+  def fetchBlock(dst: Array[Byte], max: Int): Int = {
+    while (true) {
+      if (chunkIdx >= 0 && rawIn != null) {
+        blockOffset = pos
+        val n = fetchFromChunk(dst, max)
+        if (n > 0) { recordsRead += n; return n }
+      }
+      if (!openNextChunk()) return 0
+    }
+    0 // unreachable
+  }
 
   /** Fill `buf` with the next record; returns its byte offset in its file,
     * or -1 when all chunks are drained. */
-  def fetch(buf: Array[Byte]): Long = {
-    while (true) {
-      if (chunkIdx >= 0 && rawIn != null && fetchFromChunk(buf)) {
-        val at = pos
-        pos += recLen
-        recordsRead += 1
-        return at
-      }
-      if (!openNextChunk()) return -1L
-    }
-    -1L // unreachable
-  }
+  def fetch(buf: Array[Byte]): Long =
+    if (fetchBlock(buf, 1) == 1) blockOffset else -1L
 }
 
 /** Streams whole records from one aligned split: open, seek once, readFully
@@ -1408,7 +1429,7 @@ class FixedWidthPartitionReader(
   // filters are NOT re-evaluated by Spark and their columns may not even be
   // projected. Non-matching records never run a single column decoder.
   private val predicates: Array[() => Boolean] =
-    pushedFilters.map(f => FixedWidthFilters.compileTolerant(f, opts, buf, () => pos).getOrElse(
+    pushedFilters.map(f => FixedWidthFilters.compileOnBuffer(f, opts, buf, () => pos).getOrElse(
       // fail LOUDLY: this filter was accepted as fully pushed, so nothing
       // downstream re-evaluates it — dropping it would silently unfilter
       throw new IllegalStateException(s"fixedwidth: accepted pushed filter failed to compile: $f")))
@@ -1561,8 +1582,8 @@ object FixedWidthRowDecoders {
       }
     case "double" =>
       () => {
-        val d = AsciiParse.parseDouble(buf, f.start, f.end)
-        if (d == null) row.setNullAt(i) else row.setDouble(i, d.doubleValue())
+        if (AsciiParse.isBlank(buf, f.start, f.end)) row.setNullAt(i)
+        else row.setDouble(i, AsciiParse.parseDouble(buf, f.start, f.end))
       }
     case FieldSpec.DecimalRe(p, s) =>
       val (prec, scale) = (p.toInt, s.toInt)
@@ -1591,7 +1612,7 @@ object FixedWidthMalformed {
         case "long" | "timestamp" =>
           Some(() => if (!AsciiParse.isBlank(buf, from, until)) { AsciiParse.parseLong(buf, from, until); () })
         case "double" =>
-          Some(() => { AsciiParse.parseDouble(buf, from, until); () })
+          Some(() => if (!AsciiParse.isBlank(buf, from, until)) { AsciiParse.parseDouble(buf, from, until); () })
         case FieldSpec.DecimalRe(p, s) =>
           val (prec, scale) = (p.toInt, s.toInt)
           Some(() => if (!AsciiParse.isBlank(buf, from, until)) { AsciiParse.parseDecimal(buf, from, until, prec, scale); () })
@@ -1608,7 +1629,15 @@ object FixedWidthMalformed {
 
 /** Allocation-free ASCII numeric parsing over a byte range (spaces trimmed on
   * both sides; all-space field decodes to SQL NULL — callers test `isBlank`
-  * first, so no in-band sentinel value can collide with real data). */
+  * first, so no in-band sentinel value can collide with real data). These
+  * are the ONE parse definitions: the row and columnar readers,
+  * `FixedWidthFilters` and `FwzStats` all call them.
+  *
+  * Decimals of precision ≤ 18 and doubles take fast paths over plain
+  * `[sign]digits[.digits]` that build no String, BigDecimal or boxed value.
+  * The fallback rule: any input a fast path does not cover exactly goes to
+  * the general `BigDecimal` / `Double.parseDouble` parse, so every value
+  * and every `NumberFormatException` message is the general path's. */
 object AsciiParse {
 
   /** Configurable space-trim of a byte range, packed as (start << 32) | end —
@@ -1689,22 +1718,115 @@ object AsciiParse {
     v.toInt
   }
 
-  def parseDouble(buf: Array[Byte], from: Int, until: Int): java.lang.Double = {
+  /** Parse a double. Plain `[sign]digits[.digits]` with at most 15 digits
+    * (leading integer zeros aside, so at most 15 fractional) takes Clinger's
+    * exact fast path: the digits form an integer m < 2^53 and 10^f is an
+    * exact double, so the one correctly rounded division m / 10^f is
+    * exactly what `Double.parseDouble` returns. Every other input (exponents, NaN,
+    * Infinity, longer mantissas, stray bytes) goes through
+    * `Double.parseDouble` itself, so values and exception messages are
+    * unchanged. Caller must have checked `isBlank` first. */
+  def parseDouble(buf: Array[Byte], from: Int, until: Int): Double = {
     var s = from
     var e = until
     while (s < e && buf(s) == ' ') s += 1
     while (e > s && buf(e - 1) == ' ') e -= 1
-    if (s >= e) return null
-    // Doubles are written as Double.toString (shortest round-trip form), so
-    // java.lang.Double.parseDouble is the exact inverse.
-    java.lang.Double.parseDouble(new String(buf, s, e - s, java.nio.charset.StandardCharsets.US_ASCII))
+    if (s >= e)
+      throw new NumberFormatException("fixedwidth: empty numeric field (caller must isBlank-check)")
+    var i = s
+    val neg = buf(i) == '-'
+    if (neg || buf(i) == '+') i += 1
+    val lead = i
+    while (i < e && buf(i) == '0') i += 1 // leading zeros are not significant
+    val first = i
+    if (e - first > 16) return parseDoubleSlow(buf, s, e) // over 15 digits
+    var m = 0L
+    var dot = -1
+    while (i < e) {
+      val d = buf(i) - '0'
+      if (d >= 0 && d <= 9) m = m * 10 + d
+      else if (buf(i) == '.' && dot < 0) dot = i
+      else return parseDoubleSlow(buf, s, e)
+      i += 1
+    }
+    val digits = e - first - (if (dot < 0) 0 else 1)
+    val frac = if (dot < 0) 0 else e - dot - 1
+    if (digits > 15 || (digits == 0 && first == lead)) return parseDoubleSlow(buf, s, e)
+    val v = if (frac == 0) m.toDouble else m.toDouble / Pow10D(frac)
+    if (neg) -v else v
   }
+
+  /** Exact powers of ten as doubles (exact up to 10^22; the fast path
+    * needs 10^15 at most). */
+  private val Pow10D: Array[Double] = Array.tabulate(16)(i => math.pow(10, i))
+
+  /** Doubles are written as Double.toString (shortest round-trip form), so
+    * java.lang.Double.parseDouble is the exact inverse. */
+  private def parseDoubleSlow(buf: Array[Byte], s: Int, e: Int): Double =
+    java.lang.Double.parseDouble(new String(buf, s, e - s, java.nio.charset.StandardCharsets.US_ASCII))
 
   /** Parse a plain-notation decimal into an exact Decimal(precision, scale).
     * A value that does not FIT the declared precision/scale errors rather
     * than silently rounding — mainframe money fields must round-trip
-    * bit-exact. Caller must have checked `isBlank` first. */
+    * bit-exact. Precision ≤ 18 goes through [[parseUnscaled]], so no
+    * BigDecimal is built for it. Caller must have checked `isBlank` first. */
   def parseDecimal(buf: Array[Byte], from: Int, until: Int,
+      precision: Int, scale: Int): org.apache.spark.sql.types.Decimal =
+    if (precision <= org.apache.spark.sql.types.Decimal.MAX_LONG_DIGITS)
+      org.apache.spark.sql.types.Decimal.createUnsafe(
+        parseUnscaled(buf, from, until, precision, scale), precision, scale)
+    else parseDecimalSlow(buf, from, until, precision, scale)
+
+  /** The unscaled long of a decimal(precision ≤ 18, scale) field: the value
+    * `OnHeapColumnVector.putDecimal` stores (`putInt` up to 9 digits,
+    * `putLong` up to 18). Plain `[sign]digits[.digits]` that fits the
+    * declared type is parsed straight to the long; anything else — an
+    * exponent, a stray byte, a scale above the declared one, a precision
+    * overflow — goes through [[parseDecimalSlow]], which returns the same
+    * value or throws the same message. Caller must have checked `isBlank`. */
+  def parseUnscaled(buf: Array[Byte], from: Int, until: Int,
+      precision: Int, scale: Int): Long = {
+    var s = from
+    var e = until
+    while (s < e && buf(s) == ' ') s += 1
+    while (e > s && buf(e - 1) == ' ') e -= 1
+    var i = s
+    val neg = i < e && buf(i) == '-'
+    if (i < e && (neg || buf(i) == '+')) i += 1
+    val lead = i
+    while (i < e && buf(i) == '0') i += 1 // leading zeros carry no precision
+    val first = i
+    if (e - first > precision + 1) return slowUnscaled(buf, from, until, precision, scale)
+    // at most precision + 1 ≤ 19 digits: a 19-digit v may wrap, but then
+    // digits > precision below rejects it before v is used
+    var v = 0L
+    var dot = -1
+    while (i < e) {
+      val d = buf(i) - '0'
+      if (d >= 0 && d <= 9) v = v * 10 + d
+      else if (buf(i) == '.' && dot < 0) dot = i
+      else return slowUnscaled(buf, from, until, precision, scale)
+      i += 1
+    }
+    val digits = e - first - (if (dot < 0) 0 else 1)
+    val frac = if (dot < 0) 0 else e - dot - 1
+    // fits decimal(precision, scale) iff v·10^(scale - frac) < 10^precision
+    if (digits > precision || frac > scale || (digits == 0 && first == lead) ||
+        v >= Pow10L(precision - scale + frac))
+      return slowUnscaled(buf, from, until, precision, scale)
+    val u = v * Pow10L(scale - frac)
+    if (neg) -u else u
+  }
+
+  private val Pow10L: Array[Long] = Array.iterate(1L, 19)(_ * 10)
+
+  private def slowUnscaled(buf: Array[Byte], from: Int, until: Int,
+      precision: Int, scale: Int): Long =
+    parseDecimalSlow(buf, from, until, precision, scale).toUnscaledLong
+
+  /** The general decimal parse through `java.math.BigDecimal`: the fallback
+    * of the fast paths and the only path above 18 digits of precision. */
+  def parseDecimalSlow(buf: Array[Byte], from: Int, until: Int,
       precision: Int, scale: Int): org.apache.spark.sql.types.Decimal = {
     var s = from
     var e = until

@@ -524,7 +524,7 @@ private[fixedwidth] object FwzStatsDecode {
       case "int" | "date" => Integer.valueOf(AsciiParse.parseInt(b, 0, b.length))
       case "long" | "timestamp" => java.lang.Long.valueOf(AsciiParse.parseLong(b, 0, b.length))
       case "double" =>
-        val d = AsciiParse.parseDouble(b, 0, b.length).doubleValue()
+        val d = AsciiParse.parseDouble(b, 0, b.length)
         java.lang.Double.valueOf(if (d == 0.0d) 0.0d else d) // Catalyst -0.0 normalization
       case "string" =>
         val trimRight = trimId == 0 || trimId == 2

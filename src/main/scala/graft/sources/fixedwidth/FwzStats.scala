@@ -84,7 +84,7 @@ object FwzStats {
               case "long" | "timestamp" =>
                 java.lang.Long.valueOf(AsciiParse.parseLong(buf, from, until))
               case "double" =>
-                val d = AsciiParse.parseDouble(buf, from, until).doubleValue()
+                val d = AsciiParse.parseDouble(buf, from, until)
                 // Catalyst-normalized: -0.0 ranks as 0.0 (a pushed
                 // EqualTo(0.0) must not skip a frame holding only -0.0);
                 // NaN ranks greatest via Double.compare — both matching the

@@ -149,4 +149,13 @@ class LogRegSpec extends SparkSpec with Matchers {
       LogReg.trainWeights(spark.emptyDataset[(Long, String, Int)]
         .toDF("doc_id", "text", "y"), "doc_id", "text", col("y") === 1, 6, 1, 0.1)
   }
+
+  test("round8 is total: NaN and +/-Infinity pass through, finite values match Spark's round") {
+    LogReg.round8(Double.NaN).isNaN shouldBe true
+    LogReg.round8(Double.PositiveInfinity) shouldBe Double.PositiveInfinity
+    LogReg.round8(Double.NegativeInfinity) shouldBe Double.NegativeInfinity
+    val xs = Seq(0.0, -0.0, 0.123456785, -0.123456785, 1e-9, 12345.678901234, Double.MaxValue)
+    val viaSpark = xs.toDF("x").select(round(col("x"), 8)).collect().map(_.getDouble(0)).toSeq
+    xs.map(LogReg.round8) shouldBe viaSpark
+  }
 }

@@ -95,6 +95,41 @@ class FixedWidthMalformedSpec extends SparkSpec with Matchers {
     intercept[Exception](read(dir).collect())
   }
 
+  test("PERMISSIVE and DROPMALFORMED hold across block boundaries of the columnar reader") {
+    // 9000 records of 24 bytes read as blocks of 4096: malformed records sit
+    // on both sides of each block boundary, at the ends, and mid-block
+    val n = 9000
+    val badQty = Set(0, 4095, 4097, 8192, 8999)
+    val badPrice = Set(4096, 6000, 8191)
+    val recs = (0 until n).map { i =>
+      val qty = if (badQty(i)) "  1X  " else f"${i % 97}%6d"
+      val price = if (badPrice(i)) "2.x5    " else f"${(i % 89).toDouble}%.2f".padTo(8, ' ')
+      f"${i + 1}%6d" + qty + "nm  " + price
+    }
+    val dir = tmp()
+    Files.write(JPath.of(dir, "data.fwb"), recs.mkString.getBytes("US-ASCII"))
+    val bad = (badQty ++ badPrice).map(_ + 1L)
+
+    val perm = read(dir, "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_bad")
+      .select($("id"), $("qty"), $("price"), $("_bad")).collect()
+    perm.length shouldBe n
+    perm.filter(!_.isNullAt(3)).map(_.getLong(0)).toSet shouldBe bad
+    perm.filter(_.isNullAt(1)).map(_.getLong(0)).toSet shouldBe badQty.map(_ + 1L)
+    perm.filter(_.isNullAt(2)).map(_.getLong(0)).toSet shouldBe badPrice.map(_ + 1L)
+    perm.filter(r => !r.isNullAt(3)).foreach(r => r.getString(3) shouldBe recs(r.getLong(0).toInt - 1))
+    perm.filter(r => r.isNullAt(3)).foreach(r => r.getLong(1) shouldBe (r.getLong(0) - 1) % 97)
+    // the verdict on non-projected fields still reaches the corrupt column
+    read(dir, "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_bad")
+      .filter($("_bad").isNotNull).select($("id")).collect().map(_.getLong(0)).toSet shouldBe bad
+
+    val drop = read(dir, "mode" -> "DROPMALFORMED")
+    drop.select($("id")).collect().map(_.getLong(0)).toSet shouldBe
+      (1L to n.toLong).toSet -- bad
+    // pushed filter + drop, on a range spanning the first block boundary
+    drop.filter($("id") > 4090L && $("id") <= 4100L).select($("id")).collect()
+      .map(_.getLong(0)).toSet shouldBe (4091L to 4100L).toSet -- bad
+  }
+
   test("pushed filters stay tolerant: malformed predicate field = no match, no throw") {
     val dir = writePoisoned()
     val df = read(dir, "mode" -> "PERMISSIVE")

@@ -2,15 +2,19 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{BytesWritable, LongWritable}
 import org.apache.hadoop.mapreduce.lib.input.{FixedLengthInputFormat => HadoopFLIF}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.sources.fixedwidth._
 
 /** DIFFERENTIAL parity against the real thing: the reference repo's
   * descendant, `org.apache.hadoop.mapreduce.lib.input.FixedLengthInputFormat`
@@ -98,6 +102,86 @@ class HadoopDifferentialSpec extends SparkSpec with Matchers {
       test(s"parity: randomized case $i (n=$n len=$len maxSplit=$maxSplit)")(
         check(n, len, maxSplit, seed = 100 + i))
     }
+  }
+
+  // --------------------------------------------------------------------
+  // BLOCK boundaries of the columnar reader: a block is at most 4096
+  // records and 1 MiB, never crosses a chunk, hence never a file.
+  // --------------------------------------------------------------------
+
+  test("parity: a record longer than the block budget reads one record per block")(
+    check(n = 3, len = (1 << 20) + 37, None, seed = 5))
+
+  private def rawOpts(len: Int, extra: (String, String)*): FixedWidthOptions =
+    FixedWidthOptions(new CaseInsensitiveStringMap(
+      (Map("recordLength" -> len.toString) ++ extra).asJava))
+
+  /** Drive the columnar reader over `chunks` on this thread; returns each
+    * batch as (the batch's _source_file, its (offset, value) rows). */
+  private def columnarBatches(o: FixedWidthOptions, chunks: Seq[FileChunk])
+      : Seq[(String, Seq[(Long, Seq[Byte])])] = {
+    val schema = o.schema.add(FixedWidthOptions.SourceFileCol, StringType)
+    val r = new FixedWidthColumnarReader(FixedWidthInputPartition(chunks), o, schema,
+      spark.sessionState.newHadoopConf())
+    try Iterator.continually(r).takeWhile(_.next()).map { rr =>
+      val b = rr.get()
+      b.column(2).getUTF8String(0).toString ->
+        (0 until b.numRows()).map(i => (b.column(0).getLong(i), b.column(1).getBinary(i).toSeq))
+    }.toList
+    finally r.close()
+  }
+
+  test("block boundary: batches across capacity, chunk and file switches match Hadoop per file") {
+    val len = 7
+    val a = writeFile(5000, len, seed = 6) + "/data.fwb"
+    val b = writeFile(10, len, seed = 7) + "/data.fwb"
+    val c = writeFile(4100, len, seed = 8) + "/data.fwb"
+    // two chunks of the same file, then two more files, in one partition
+    val chunks = Seq(
+      FileChunk(a, 0L, 3000L * len, compressed = false),
+      FileChunk(a, 3000L * len, 2000L * len, compressed = false),
+      FileChunk(b, 0L, 10L * len, compressed = false),
+      FileChunk(c, 0L, 4100L * len, compressed = false))
+    val batches = columnarBatches(rawOpts(len), chunks)
+    // one block per batch: capacity-bounded, never spanning a chunk
+    batches.map(_._2.size) shouldBe Seq(3000, 2000, 10, 4096, 4)
+    batches.map(_._1) shouldBe Seq(a, a, b, c, c)
+    for (f <- Seq(a, b, c)) withClue(s"$f: ") {
+      val ours = batches.filter(_._1 == f).flatMap(_._2)
+      ours shouldBe readHadoopPath(f, len, None).sortBy(_._1)
+    }
+  }
+
+  test("block boundary: a file truncated after planning fails with the EOF-mid-record message") {
+    val len = 7
+    val f = writeFile(5000, len, seed = 9) + "/data.fwb"
+    Files.write(Paths.get(f), Array[Byte](1, 2, 3), java.nio.file.StandardOpenOption.APPEND)
+    // the plan still claims whole records past the file's end
+    for (claimed <- Seq(5001L, 6000L)) {
+      val e = intercept[java.io.IOException](
+        columnarBatches(rawOpts(len), Seq(FileChunk(f, 0L, claimed * len, compressed = false))))
+      e.getMessage shouldBe s"fixedwidth: EOF mid-record at offset ${5000L * len} of $f: " +
+        s"file is not a multiple of recordLength=$len"
+    }
+  }
+
+  test("block boundary: compressed trailing fragment errors under FAILFAST, drops when tolerant") {
+    val len = 7
+    val dir = Files.createTempDirectory("graft-hadoop-diff-gz")
+    val gz = dir.resolve("data.fwb.gz").toString
+    val rng = new Random(10)
+    val bytes = new Array[Byte](5000 * len + 3)
+    rng.nextBytes(bytes)
+    val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(gz))
+    try out.write(bytes) finally out.close()
+    val chunk = Seq(FileChunk(gz, 0L, Files.size(Paths.get(gz)), compressed = true))
+    val e = intercept[java.io.IOException](columnarBatches(rawOpts(len), chunk))
+    e.getMessage shouldBe s"fixedwidth: EOF mid-record at offset ${5000L * len} of $gz: " +
+      s"file is not a multiple of recordLength=$len"
+    val batches = columnarBatches(rawOpts(len, "mode" -> "DROPMALFORMED"), chunk)
+    batches.map(_._2.size) shouldBe Seq(4096, 904)
+    batches.flatMap(_._2) shouldBe (0 until 5000).map(i =>
+      (i.toLong * len, bytes.slice(i * len, (i + 1) * len).toSeq))
   }
 
   // --------------------------------------------------------------------

@@ -57,6 +57,33 @@ class MetadataColumnSpec extends SparkSpec with Matchers {
     }
   }
 
+  test("_source_file and offset stay exact across batch-capacity, chunk and file switches") {
+    // ~5000 records per file: blocks of 4096 split every file, and with a
+    // small split size chunks of several files pack into one partition
+    val dir = Files.createTempDirectory("graft-metacol-blocks")
+    val perm = new scala.util.Random(3).shuffle((0 until 15000).toVector)
+    val truth: Map[Int, (String, Long)] = perm.grouped(5000).zipWithIndex.flatMap { case (ids, fi) =>
+      val name = s"part-$fi.fwb"
+      Files.write(dir.resolve(name), ids.map(i => f"$i%05d").mkString.getBytes("US-ASCII"))
+      ids.zipWithIndex.map { case (id, j) => id -> (name, j * 5L) }
+    }.toMap
+    truth.size shouldBe 15000
+    for (split <- Seq(None, Some("9000"))) withClue(s"maxPartitionBytes=$split: ") {
+      split.foreach(spark.conf.set("spark.sql.files.maxPartitionBytes", _))
+      try {
+        val got = spark.read.format("fixedwidth")
+          .option("recordLength", 5).option("fields", "id:int:0:5").load(dir.toString)
+          .select(col("id"), col("_source_file"), col("offset")).collect()
+        got.length shouldBe 15000
+        got.foreach { r =>
+          val (name, off) = truth(r.getInt(0))
+          r.getString(1) should endWith(name)
+          r.getLong(2) shouldBe off
+        }
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+  }
+
   test("_source_file composes with pushed filters and prunes cleanly") {
     val dir = Files.createTempDirectory("graft-metacol3").toString
     writeTyped(dir, 0 until 40)
