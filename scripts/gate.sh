@@ -28,11 +28,19 @@ echo "== gate: oracle check (dtype-strict) =="
 python3 scripts/oracle_check.py "$SF_DIR" "$OUT_DIR" | tail -3
 
 echo "== gate: Probe edge cases =="
-PROBE_OUT="$(sbt -batch "runMain graft.tools.Probe" 2>&1 | grep "PROBE" || true)"
+PROBE_LOG="$OUT_DIR/probe.log"
+if ! sbt -batch "runMain graft.tools.Probe" >"$PROBE_LOG" 2>&1; then
+  tail -20 "$PROBE_LOG"
+  echo "gate: Probe run failed (sbt exited non-zero)"; exit 1
+fi
+PROBE_OUT="$(grep "PROBE" "$PROBE_LOG" || true)"
 echo "$PROBE_OUT" | tail -3
 if echo "$PROBE_OUT" | grep -q "NO-ERROR (unexpected)"; then
   echo "gate: Probe found an unexpected NO-ERROR case"; exit 1
 fi
 N_PROBE="$(echo "$PROBE_OUT" | grep -c "PROBE" || true)"
+if [ "$N_PROBE" -eq 0 ]; then
+  echo "gate: Probe printed no PROBE lines"; exit 1
+fi
 echo "gate: $N_PROBE probe cases, all intended"
 echo "== gate: PASS =="

@@ -909,12 +909,12 @@ object CoreQueries {
   /** q238: global MIN/MAX answered from fwz FOOTER STATISTICS (r15) — the
     * min/max twin of the framed count(*) pushdown: over a stats-framed
     * compressed feed, `SELECT min(key), max(key), min(ts), max(ts),
-    * count(*)` (the feed-freshness question) plans a
-    * FixedWidthListingAggScan that reads ONLY the memoized footers — zero
+    * count(*)` (the feed-freshness question) plans a one-row
+    * FixedWidthCountScan that reads ONLY the memoized footers — zero
     * frames decompressed, zero data IO, at any feed size. Values travel as
-    * the winning records' raw field slices and decode through the same row
-    * decoders a scan uses (FixedWidthTable.decodeSliceValue), so the
-    * oracle's from-parquet aggregate must hash-match bit-exactly. */
+    * the winning records' raw field slices and decode through the same
+    * parsers a scan uses (FixedWidthTable.decodeField), so the oracle's
+    * from-parquet aggregate must hash-match bit-exactly. */
   def q238(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val fieldsOpt = FixedWidthOptions.renderFields(lineitemLayout)

@@ -57,11 +57,15 @@ class FixedWidthColumnarReader(
   private var skipped = 0L
   private var malformed = 0L
 
-  // Malformed-record policy — same probe sets as the row reader (see
-  // FixedWidthPartitionReader). DROPMALFORMED probes ALL declared fields
-  // BEFORE any vector write: a half-written slot can't be reused because
-  // WritableColumnVector.putNull is sticky (overwrites don't clear the null
-  // bit), so dropped records must never touch the vectors.
+  // Malformed-record policy (see FixedWidthMalformed). `probes`
+  // attempt-parse the typed fields whose malformation the projected
+  // decoders would not surface: ALL declared fields under DROPMALFORMED
+  // (the drop verdict must not depend on which columns a query projects),
+  // the non-projected ones under PERMISSIVE when the corrupt-record column
+  // is selected. DROPMALFORMED probes run BEFORE any vector write: a
+  // half-written slot can't be reused because WritableColumnVector.putNull
+  // is sticky (overwrites don't clear the null bit), so dropped records
+  // must never touch the vectors.
   private val corruptIdx: Int = opts.corruptRecordCol
     .map(c => requiredSchema.fieldNames.indexWhere(_.equalsIgnoreCase(c))).getOrElse(-1)
   private val probes: Array[() => Unit] =

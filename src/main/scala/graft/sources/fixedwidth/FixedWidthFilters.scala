@@ -1,6 +1,6 @@
 package graft.sources.fixedwidth
 
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -55,6 +55,41 @@ object FixedWidthFilters {
     case _                        => false
   }
 
+  // Literal conversions to the stored representation of each field type,
+  // shared by comparisons and In; None for a literal of another class.
+  // Dates are epoch days, timestamps epoch micros (Catalyst's own
+  // DateTimeUtils conversions).
+  private def intLiteral(value: Any): Option[Int] = value match {
+    case d: java.sql.Date        => Some(DateTimeUtils.fromJavaDate(d))
+    case ld: java.time.LocalDate => Some(DateTimeUtils.localDateToDays(ld))
+    case n: Number               => Some(n.intValue())
+    case _                       => None
+  }
+
+  private def longLiteral(value: Any): Option[Long] = value match {
+    case t: java.sql.Timestamp        => Some(DateTimeUtils.fromJavaTimestamp(t))
+    case inst: java.time.Instant      => Some(DateTimeUtils.instantToMicros(inst))
+    case ldt: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(ldt))
+    case n: Number                    => Some(n.longValue())
+    case _                            => None
+  }
+
+  /** -0.0 normalizes to 0.0: Double.compare orders -0.0 < 0.0 while
+    * Catalyst's primitive comparison treats them equal, so a pushed
+    * EqualTo(0.0) must not drop -0.0 records at the source. Record values
+    * get the same normalization. */
+  private def doubleLiteral(value: Any): Option[Double] = value match {
+    case n: Number => val d = n.doubleValue(); Some(if (d == 0.0d) 0.0d else d)
+    case _         => None
+  }
+
+  private def decimalLiteral(value: Any): Option[java.math.BigDecimal] = value match {
+    case b: java.math.BigDecimal => Some(b)
+    case b: BigDecimal           => Some(b.bigDecimal)
+    case n: Number               => Some(new java.math.BigDecimal(n.toString))
+    case _                       => None
+  }
+
   /** Compile a pushed filter to a predicate over the reused record buffer.
     * `offset` supplies the current record's byte offset (the synthetic
     * `offset` column). Returns None only for shapes `supported` rejects —
@@ -100,35 +135,16 @@ object FixedWidthFilters {
         val until = fs.end
         fs.ftype match {
           case "int" | "date" =>
-            import org.apache.spark.sql.catalyst.util.DateTimeUtils
-            val v: Int = value match {
-              case d: java.sql.Date        => DateTimeUtils.fromJavaDate(d)
-              case ld: java.time.LocalDate => DateTimeUtils.localDateToDays(ld)
-              case n: Number               => n.intValue()
-              case _                       => return None
-            }
-            Some(nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
+            intLiteral(value).map(v => nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
               else Integer.valueOf(java.lang.Integer.compare(AsciiParse.parseInt(buf, from, until), v))))
           case "long" | "timestamp" =>
-            import org.apache.spark.sql.catalyst.util.DateTimeUtils
-            val v: Long = value match {
-              case t: java.sql.Timestamp        => DateTimeUtils.fromJavaTimestamp(t)
-              case inst: java.time.Instant      => DateTimeUtils.instantToMicros(inst)
-              case ldt: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(ldt)
-              case n: Number                    => n.longValue()
-              case _                            => return None
-            }
-            Some(nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
+            longLiteral(value).map(v => nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
               else Integer.valueOf(java.lang.Long.compare(AsciiParse.parseLong(buf, from, until), v))))
           case "double" =>
-            // Normalize -0.0 to 0.0 on both sides: Double.compare orders
-            // -0.0 < 0.0 while Catalyst's primitive comparison treats them
-            // equal — a pushed EqualTo(0.0) must not drop -0.0 records at
-            // the source. NaN ordering via Double.compare already matches
-            // Spark (NaN == greatest).
-            val raw = value.asInstanceOf[Number].doubleValue()
-            val v = if (raw == 0.0d) 0.0d else raw
-            Some(nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
+            // -0.0 normalized on both sides (see doubleLiteral); NaN
+            // ordering via Double.compare already matches Spark (NaN ==
+            // greatest).
+            doubleLiteral(value).map(v => nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
               else {
                 val rv0 = AsciiParse.parseDouble(buf, from, until)
                 val rv = if (rv0 == 0.0d) 0.0d else rv0
@@ -145,13 +161,7 @@ object FixedWidthFilters {
             val (prec, scale) = (pp.toInt, ss.toInt)
             // Catalyst compares decimals by numeric VALUE (scale-agnostic):
             // BigDecimal.compareTo has the same semantics.
-            val v: java.math.BigDecimal = value match {
-              case b: java.math.BigDecimal => b
-              case b: BigDecimal           => b.bigDecimal
-              case n: Number               => new java.math.BigDecimal(n.toString)
-              case _                       => return None
-            }
-            Some(nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
+            decimalLiteral(value).map(v => nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
               else Integer.valueOf(
                 AsciiParse.parseDecimal(buf, from, until, prec, scale).toJavaBigDecimal.compareTo(v))))
           case _ => None
@@ -221,45 +231,20 @@ object FixedWidthFilters {
         val until = fs.end
         fs.ftype match {
           case "int" | "date" =>
-            import org.apache.spark.sql.catalyst.util.DateTimeUtils
             val set = new java.util.HashSet[Integer]()
-            vs.foreach { value =>
-              val v: Int = value match {
-                case d: java.sql.Date        => DateTimeUtils.fromJavaDate(d)
-                case ld: java.time.LocalDate => DateTimeUtils.localDateToDays(ld)
-                case n: Number               => n.intValue()
-                case _                       => return None
-              }
-              set.add(Integer.valueOf(v))
-            }
+            vs.foreach(value => set.add(Integer.valueOf(intLiteral(value).getOrElse(return None))))
             Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) &&
               set.contains(Integer.valueOf(AsciiParse.parseInt(buf, from, until)))))
           case "long" | "timestamp" =>
-            import org.apache.spark.sql.catalyst.util.DateTimeUtils
             val set = new java.util.HashSet[java.lang.Long]()
-            vs.foreach { value =>
-              val v: Long = value match {
-                case t: java.sql.Timestamp        => DateTimeUtils.fromJavaTimestamp(t)
-                case inst: java.time.Instant      => DateTimeUtils.instantToMicros(inst)
-                case ldt: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(ldt)
-                case n: Number                    => n.longValue()
-                case _                            => return None
-              }
-              set.add(java.lang.Long.valueOf(v))
-            }
+            vs.foreach(value => set.add(java.lang.Long.valueOf(longLiteral(value).getOrElse(return None))))
             Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) &&
               set.contains(java.lang.Long.valueOf(AsciiParse.parseLong(buf, from, until)))))
           case "double" =>
             // same -0.0 normalization as cmp; boxed Double equality makes
             // NaN match NaN, which is Spark's own `=` semantics for doubles
             val set = new java.util.HashSet[java.lang.Double]()
-            vs.foreach { value =>
-              val raw = value match {
-                case n: Number => n.doubleValue()
-                case _         => return None
-              }
-              set.add(java.lang.Double.valueOf(if (raw == 0.0d) 0.0d else raw))
-            }
+            vs.foreach(value => set.add(java.lang.Double.valueOf(doubleLiteral(value).getOrElse(return None))))
             Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) && {
               val rv0 = AsciiParse.parseDouble(buf, from, until)
               set.contains(java.lang.Double.valueOf(if (rv0 == 0.0d) 0.0d else rv0))
@@ -273,15 +258,7 @@ object FixedWidthFilters {
             // equality), not BigDecimal.equals — normalize both sides
             val (prec, scale) = (pp.toInt, ss.toInt)
             val set = new java.util.HashSet[java.math.BigDecimal]()
-            vs.foreach { value =>
-              val v: java.math.BigDecimal = value match {
-                case b: java.math.BigDecimal => b
-                case b: BigDecimal           => b.bigDecimal
-                case n: Number               => new java.math.BigDecimal(n.toString)
-                case _                       => return None
-              }
-              set.add(v.stripTrailingZeros)
-            }
+            vs.foreach(value => set.add(decimalLiteral(value).getOrElse(return None).stripTrailingZeros))
             Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) &&
               set.contains(AsciiParse.parseDecimal(buf, from, until, prec, scale)
                 .toJavaBigDecimal.stripTrailingZeros)))

@@ -18,10 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Filter pushdown (`SupportsPushDownFilters`): supported comparison filters
   * are evaluated INSIDE the reader right after the predicate's own fields
-  * decode, so non-matching records skip the remaining field decodes and the
-  * row emit entirely. The source cannot skip IO (no indexes — same as the
-  * reference), so every filter is also returned as a post-scan filter for
-  * Spark to re-apply; the win is decode CPU, which is the per-record cost.
+  * decode, so non-matching records skip the remaining field decodes
+  * entirely. They are fully accepted, not returned as post-scan filters
+  * (see `pushFilters`). Inside a plain file the source cannot skip IO (no
+  * indexes — same as the reference); the win there is decode CPU, which is
+  * the per-record cost.
   */
 class FixedWidthScanBuilder(
     opts: FixedWidthOptions,
@@ -35,7 +36,6 @@ class FixedWidthScanBuilder(
 
   private var requiredSchema: StructType = opts.schema
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var groupedPushed = false // a GROUPED aggregate was fully pushed
   private var limitN: Long = -1L  // cap on raw record index (includes any offset)
   private var offsetN: Long = 0L  // records skipped from the front
 
@@ -119,10 +119,6 @@ class FixedWidthScanBuilder(
   // foreign `k=01` directory merges with `k=1`), validated driver-side;
   // doubles are refused (Catalyst normalizes -0.0/NaN in group keys — not
   // worth replicating for a pathological partition type).
-  private var groupedRows: Seq[(Seq[String], Seq[FixedWidthListingCol])] = Nil
-  private var groupedAggSchema: StructType = new StructType()
-  private var groupFields: Seq[FieldSpec] = Nil
-
   private def groupColsOf(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[Seq[FieldSpec]] = {
     val cols = agg.groupByExpressions.toSeq.map {
@@ -137,9 +133,6 @@ class FixedWidthScanBuilder(
     if (fields.exists(_.ftype == "double")) return None
     Some(fields)
   }
-
-  private def decodeDirValue(f: FieldSpec, raw: String): Any =
-    FixedWidthTable.decodeDirValue(opts, f, raw)
 
   /** Grouped aggregate over partition columns, answered per DIRECTORY
     * group: COUNT(*) from per-file exact counts (plain length math, framed
@@ -171,7 +164,7 @@ class FixedWidthScanBuilder(
         .empty[Seq[Any], (Seq[String], scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus])]
       kept.foreach { pf =>
         val raws = lowerNames.map(pf.partValues)
-        val key = fields.zip(raws).map { case (f, r) => decodeDirValue(f, r) }
+        val key = fields.zip(raws).map { case (f, r) => FixedWidthTable.decodeDirValue(opts, f, r) }
         grouped.getOrElseUpdate(key,
           (raws, scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]))._2 += pf.status
       }
@@ -185,12 +178,12 @@ class FixedWidthScanBuilder(
           case m: Min =>
             val f = minMaxFieldOf(m.column()).getOrElse(return None)
             footerExtremeOver(sts.toSeq, f, wantMax = false)
-              .map(s => FixedWidthSliceCol(s"min(${f.name})", f, s): FixedWidthListingCol)
+              .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol)
               .getOrElse(return None)
           case m: Max =>
             val f = minMaxFieldOf(m.column()).getOrElse(return None)
             footerExtremeOver(sts.toSeq, f, wantMax = true)
-              .map(s => FixedWidthSliceCol(s"max(${f.name})", f, s): FixedWidthListingCol)
+              .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol)
               .getOrElse(return None)
           case _ => return None
         }
@@ -250,8 +243,6 @@ class FixedWidthScanBuilder(
   // compare through their DECODED Catalyst forms (all supported types are
   // Comparable with Catalyst-identical order: UTF8String binary, numeric,
   // Decimal; doubles refused — -0.0/NaN ordering not worth replicating).
-  private var listingCols: Seq[FixedWidthListingCol] = Nil
-
   private def minMaxPreconditionsOk: Boolean = {
     val res = prunedForPushed()
     val recLen = opts.recordLength.toLong
@@ -267,9 +258,6 @@ class FixedWidthScanBuilder(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[Seq[FixedWidthListingCol]] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     if (agg.groupByExpressions.nonEmpty || agg.aggregateExpressions.isEmpty) return None
-
-    def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[FieldSpec] =
-      minMaxFieldOf(e)
 
     lazy val keptWithParts: Option[Seq[FixedWidthTable.PartitionedFile]] =
       if (!minMaxPreconditionsOk) None
@@ -318,60 +306,64 @@ class FixedWidthScanBuilder(
       case _: CountStar =>
         countable.map(n => FixedWidthCountCol(n): FixedWidthListingCol).getOrElse(return None)
       case m: Min =>
-        val f = fieldOf(m.column()).getOrElse(return None)
+        val f = minMaxFieldOf(m.column()).getOrElse(return None)
         extremeOf(f, wantMax = false)
-          .map(raw => FixedWidthValueCol(s"min(${f.name})", f, raw): FixedWidthListingCol)
+          .map(raw => FixedWidthValueCol(f, raw): FixedWidthListingCol)
           .orElse(footerExtremeOf(f, wantMax = false)
-            .map(s => FixedWidthSliceCol(s"min(${f.name})", f, s): FixedWidthListingCol))
+            .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol))
           .getOrElse(return None)
       case m: Max =>
-        val f = fieldOf(m.column()).getOrElse(return None)
+        val f = minMaxFieldOf(m.column()).getOrElse(return None)
         extremeOf(f, wantMax = true)
-          .map(raw => FixedWidthValueCol(s"max(${f.name})", f, raw): FixedWidthListingCol)
+          .map(raw => FixedWidthValueCol(f, raw): FixedWidthListingCol)
           .orElse(footerExtremeOf(f, wantMax = true)
-            .map(s => FixedWidthSliceCol(s"max(${f.name})", f, s): FixedWidthListingCol))
+            .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol))
           .getOrElse(return None)
       case _ => return None
     }
     Some(cols)
   }
 
+  /** The answer of a fully pushed aggregate: its group columns and one
+    * (raw group values, result columns) row per group. A global aggregate
+    * is the one group of zero columns. */
+  private def aggAnswerOf(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[(Seq[FieldSpec], Seq[(Seq[String], Seq[FixedWidthListingCol])])] =
+    if (agg.groupByExpressions.isEmpty) globalListingAggOf(agg).map(cols => (Nil, Seq((Nil, cols))))
+    else groupedAggOf(agg)
+
+  /** Output schema of a fully pushed aggregate, one field per aggregate
+    * expression in order: `count(*)` (`count(*)_i` past position 0),
+    * `min(f)`, `max(f)`. */
+  private def aggSchemaOf(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): StructType = {
+    import org.apache.spark.sql.connector.expressions.aggregate.{Max, Min}
+    def extreme(kind: String, e: org.apache.spark.sql.connector.expressions.Expression) = {
+      val f = minMaxFieldOf(e).get
+      StructField(s"$kind(${f.name})", f.dataType, nullable = true)
+    }
+    StructType(agg.aggregateExpressions.toSeq.zipWithIndex.map {
+      case (m: Min, _) => extreme("min", m.column())
+      case (m: Max, _) => extreme("max", m.column())
+      case (_, i) => StructField(s"count(*)${if (i == 0) "" else s"_$i"}", LongType, nullable = false)
+    })
+  }
+
+  private var aggScan: Option[FixedWidthCountScan] = None
+
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    if (agg.groupByExpressions.isEmpty) globalListingAggOf(agg).isDefined
-    else groupedAggOf(agg).isDefined
+    aggAnswerOf(agg).isDefined
 
+  // Never accept a PARTIAL pushdown (complete-unsupported cases): the
+  // answer is the FINAL aggregate, not a per-partition partial.
   override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    if (agg.groupByExpressions.isEmpty)
-      globalListingAggOf(agg) match {
-        case Some(cols) =>
-          listingCols = cols
-          true
-        // Never accept a PARTIAL pushdown (complete-unsupported cases): our
-        // one-row answer is the FINAL aggregate, not a per-partition partial.
-        case None => false
-      }
-    else
-      groupedAggOf(agg) match {
-        case Some((fields, rows)) =>
-          import org.apache.spark.sql.connector.expressions.aggregate.{Max, Min}
-          groupFields = fields
-          groupedRows = rows
-          groupedAggSchema = StructType(agg.aggregateExpressions.toSeq.zipWithIndex.map {
-            case (m: Min, _) =>
-              val f = minMaxFieldOf(m.column()).get
-              StructField(s"min(${f.name})", f.dataType, nullable = true)
-            case (m: Max, _) =>
-              val f = minMaxFieldOf(m.column()).get
-              StructField(s"max(${f.name})", f.dataType, nullable = true)
-            case (_, i) =>
-              StructField(s"count(*)${if (i == 0) "" else s"_$i"}", LongType, nullable = false)
-          })
-          groupedPushed = true
-          true
-        case None => false
-      }
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+    aggScan = aggAnswerOf(agg).map { case (fields, rows) =>
+      new FixedWidthCountScan(opts, fields, rows, aggSchemaOf(agg))
+    }
+    aggScan.isDefined
+  }
 
   // ---- LIMIT/OFFSET pushdown: truncate SPLIT PLANNING to the record index
   // range [offset, limit) — `df.limit(n)` on a 100 TB feed plans one tiny
@@ -396,85 +388,34 @@ class FixedWidthScanBuilder(
     if (canTruncate) { offsetN = offset.toLong; true } else false
 
   override def build(): Scan =
-    if (listingCols.nonEmpty)
-      new FixedWidthListingAggScan(opts, listingCols)
-    else if (groupedPushed)
-      new FixedWidthCountScan(opts, groupFields, groupedRows, groupedAggSchema)
-    else new FixedWidthScan(opts, tableOptions, requiredSchema, conf, pushed,
+    aggScan.getOrElse(new FixedWidthScan(opts, tableOptions, requiredSchema, conf, pushed,
       recordRange = if (limitN >= 0 || offsetN > 0)
-        Some((offsetN, if (limitN >= 0) limitN else Long.MaxValue)) else None)
+        Some((offsetN, if (limitN >= 0) limitN else Long.MaxValue)) else None))
 }
 
-/** One result column of a fully-listing-answered GLOBAL aggregate. */
+/** One result column of a fully pushed aggregate, for one group. */
 sealed trait FixedWidthListingCol extends Serializable
 final case class FixedWidthCountCol(n: Long) extends FixedWidthListingCol
 /** min/max of a partition column: the winning directory value travels raw
   * and decodes on the executor (None = SQL NULL — no non-null value). */
-final case class FixedWidthValueCol(alias: String, field: FieldSpec, raw: Option[String])
+final case class FixedWidthValueCol(field: FieldSpec, raw: Option[String])
     extends FixedWidthListingCol
 /** min/max answered from fwz footer statistics: the winning record's raw
   * field SLICE travels and decodes on the executor through the same
   * parsers a record read uses (None = SQL NULL — no non-null value). */
-final case class FixedWidthSliceCol(alias: String, field: FieldSpec, slice: Option[Array[Byte]])
+final case class FixedWidthSliceCol(field: FieldSpec, slice: Option[Array[Byte]])
     extends FixedWidthListingCol
 
-/** The whole scan when a global COUNT(*)/MIN/MAX-over-partition-columns
-  * aggregate is fully pushed: one partition, ONE row, zero data IO. */
-class FixedWidthListingAggScan(opts: FixedWidthOptions, cols: Seq[FixedWidthListingCol])
-    extends Scan with Batch {
-
-  override def readSchema(): StructType = StructType(cols.zipWithIndex.map {
-    case (FixedWidthCountCol(_), i) => StructField(s"count(*)${if (i == 0) "" else s"_$i"}", LongType, nullable = false)
-    case (FixedWidthValueCol(alias, f, _), _) => StructField(alias, f.dataType, nullable = true)
-    case (FixedWidthSliceCol(alias, f, _), _) => StructField(alias, f.dataType, nullable = true)
-  })
-
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"FixedWidthListingAggScan [PushedAggregates: ${cols.map {
-      case FixedWidthCountCol(_) => "COUNT(*)"
-      case FixedWidthValueCol(alias, _, _) => alias.toUpperCase
-      case FixedWidthSliceCol(alias, _, _) => alias.toUpperCase + " (fwz stats)"
-    }.mkString(", ")}]"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(FixedWidthListingAggPartition(opts, cols))
-
-  override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
-    override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-      new PartitionReader[InternalRow] {
-        private val lp = p.asInstanceOf[FixedWidthListingAggPartition]
-        private var emitted = false
-        override def next(): Boolean = if (emitted) false else { emitted = true; true }
-        override def get(): InternalRow = {
-          val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(lp.cols.length)
-          lp.cols.zipWithIndex.foreach {
-            case (FixedWidthCountCol(n), i) => row.setLong(i, n)
-            case (FixedWidthValueCol(_, _, None), i) => row.setNullAt(i)
-            case (FixedWidthValueCol(_, f, Some(raw)), i) =>
-              row.update(i, FixedWidthTable.decodeDirValue(lp.opts, f, raw))
-            case (FixedWidthSliceCol(_, _, None), i) => row.setNullAt(i)
-            case (FixedWidthSliceCol(_, f, Some(b)), i) =>
-              row.update(i, FixedWidthTable.decodeSliceValue(lp.opts, f, b))
-          }
-          row
-        }
-        override def close(): Unit = ()
-      }
-  }
-}
-
-final case class FixedWidthListingAggPartition(
-    opts: FixedWidthOptions, cols: Seq[FixedWidthListingCol]) extends InputPartition
-
-/** The whole scan when a GROUPED aggregate over partition columns is fully
-  * pushed down: zero data IO — COUNT(*) from the driver-side (pruned) file
-  * listing, and MIN/MAX of fwz-stats-covered fields from the group's
-  * files' footer envelopes (r15). One row per directory group. Group
-  * values travel as the raw directory strings and decode on the executor
-  * through the same decoders a record read uses; min/max values travel as
-  * the winning records' raw field slices and decode identically
-  * (FixedWidthTable.decodeSliceValue). */
+/** The whole scan when an aggregate is fully pushed down: one partition,
+  * one row per group, zero data IO. A global aggregate is the case of zero
+  * group columns and exactly one group. COUNT(*) comes from the
+  * driver-side (pruned) file listing; MIN/MAX from partition directory
+  * values, or from fwz-stats-covered fields' footer envelopes (r15). Group
+  * values and directory extremes travel as raw directory strings and
+  * decode on the executor through FixedWidthTable.decodeDirValue, the
+  * decode that grouped them at plan time; footer extremes travel as the
+  * winning records' raw field slices and decode through
+  * FixedWidthTable.decodeField. */
 class FixedWidthCountScan(
     opts: FixedWidthOptions,
     groupFields: Seq[FieldSpec],
@@ -485,14 +426,17 @@ class FixedWidthCountScan(
     groupFields.map(f => StructField(f.name, f.dataType, nullable = true)) ++ aggSchema.fields)
 
   override def toBatch: Batch = this
-  override def description(): String =
-    s"FixedWidthCountScan(groups=${groups.length}) [PushedAggregates: " +
-      aggSchema.fieldNames.map(n =>
-        if (n.startsWith("count(*)")) "COUNT(*)" else n.toUpperCase).mkString(", ") +
+  override def description(): String = {
+    val aggs = aggSchema.fieldNames.zipWithIndex.map { case (n, j) =>
+      (if (n.startsWith("count(*)")) "COUNT(*)" else n.toUpperCase) +
+        (if (groups.exists(_._2(j).isInstanceOf[FixedWidthSliceCol])) " (fwz stats)" else "")
+    }
+    s"FixedWidthCountScan(groups=${groups.length}) [PushedAggregates: ${aggs.mkString(", ")}" +
       (if (groupFields.nonEmpty) s", GroupBy: ${groupFields.map(_.name).mkString(",")}" else "") + "]"
+  }
 
   override def planInputPartitions(): Array[InputPartition] =
-    Array(FixedWidthCountPartition(opts, groupFields, groups, aggSchema))
+    Array(FixedWidthCountPartition(opts, groupFields, groups, readSchema()))
 
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -504,45 +448,27 @@ final case class FixedWidthCountPartition(
     opts: FixedWidthOptions,
     groupFields: Seq[FieldSpec],
     groups: Seq[(Seq[String], Seq[FixedWidthListingCol])],
-    aggSchema: StructType) extends InputPartition
+    schema: StructType) extends InputPartition
 
 class FixedWidthCountReader(p: FixedWidthCountPartition) extends PartitionReader[InternalRow] {
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-
   private val nGroup = p.groupFields.length
-  private val buf = new Array[Byte](p.opts.recordLength)
-  private val row = new GenericInternalRow(nGroup + p.aggSchema.length)
-  private val decoders: Array[() => Unit] =
-    FixedWidthRowDecoders.plan(
-      p.opts,
-      StructType(p.groupFields.map(f => StructField(f.name, f.dataType))),
-      buf, row, () => 0L)
-  private val proj = UnsafeProjection.create(
-    StructType(p.groupFields.map(f => StructField(f.name, f.dataType)) ++
-      p.aggSchema.fields.zipWithIndex.map { case (f, i) => StructField(s"c$i", f.dataType) }))
+  private val row = new GenericInternalRow(p.schema.length)
+  private val proj = UnsafeProjection.create(p.schema)
   private var idx = -1
 
   override def next(): Boolean = { idx += 1; idx < p.groups.length }
 
   override def get(): InternalRow = {
-    val (raws, aggVals) = p.groups(idx)
-    java.util.Arrays.fill(buf, ' '.toByte)
-    p.groupFields.zip(raws).foreach { case (f, raw) =>
-      val bytes =
-        if (f.ftype == "string") raw.getBytes(p.opts.charset)
-        else raw.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      System.arraycopy(bytes, 0, buf, f.start, math.min(bytes.length, f.len))
+    val (raws, cols) = p.groups(idx)
+    p.groupFields.zip(raws).zipWithIndex.foreach { case ((f, raw), i) =>
+      row.update(i, FixedWidthTable.decodeDirValue(p.opts, f, raw))
     }
-    var i = 0
-    while (i < decoders.length) { decoders(i)(); i += 1 }
-    aggVals.zipWithIndex.foreach {
+    cols.zipWithIndex.foreach {
       case (FixedWidthCountCol(n), j) => row.setLong(nGroup + j, n)
-      case (FixedWidthSliceCol(_, _, None), j) => row.setNullAt(nGroup + j)
-      case (FixedWidthSliceCol(_, f, Some(b)), j) =>
-        row.update(nGroup + j, FixedWidthTable.decodeSliceValue(p.opts, f, b))
-      case (FixedWidthValueCol(_, _, None), j) => row.setNullAt(nGroup + j)
-      case (FixedWidthValueCol(_, f, Some(raw)), j) =>
-        row.update(nGroup + j, FixedWidthTable.decodeDirValue(p.opts, f, raw))
+      case (FixedWidthValueCol(f, raw), j) =>
+        row.update(nGroup + j, raw.map(FixedWidthTable.decodeDirValue(p.opts, f, _)).orNull)
+      case (FixedWidthSliceCol(f, slice), j) =>
+        row.update(nGroup + j, slice.map(FixedWidthTable.decodeField(p.opts, f, _)).orNull)
     }
     proj(row)
   }
@@ -1139,6 +1065,10 @@ final case class FixedWidthKeyedInputPartition(
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
+/** Columnar-only: every partition reads through [[FixedWidthColumnarReader]],
+  * batch and streaming alike. Spark asks for a row reader only when a scan
+  * has no input partitions (it derives `supportsColumnar` from them), and
+  * then never opens one. */
 class FixedWidthReaderFactory(
     opts: FixedWidthOptions,
     requiredSchema: StructType,
@@ -1153,27 +1083,23 @@ class FixedWidthReaderFactory(
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new FixedWidthPartitionReader(unwrap(partition), opts, requiredSchema, conf.value, pushedFilters)
+    throw new UnsupportedOperationException(
+      "fixedwidth: the reader factory is columnar-only; use createColumnarReader")
 
-  /** Always columnar: with pushed filters the columnar reader evaluates
-    * predicates per record and decodes only the survivors (same
-    * skip-decode property as the row path) while keeping the batch output
-    * format that whole-stage codegen consumes fastest. The row reader
-    * remains for API completeness and as the plain-`InternalRow` fallback. */
   override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new FixedWidthColumnarReader(unwrap(partition), opts, requiredSchema, conf.value, pushedFilters)
 }
 
-/** Chunk-walking record cursor shared by the row and columnar readers: opens
-  * one stream at a time across a partition's packed chunks. `fetchBlock`
+/** Chunk-walking record cursor of [[FixedWidthColumnarReader]]: opens one
+  * stream at a time across a partition's packed chunks. `fetchBlock`
   * fills the caller's buffer with up to `max` whole records of ONE chunk
   * (so of one file) and sets `blockOffset` to the first one's byte offset
   * in its file, the reference's default key. An uncompressed chunk fills
   * the block with one bulk read; compressed chunks (`.fwz`, gzip, split
   * bz2) read record by record, keeping every EOF, stall and
-  * trailing-fragment check. `fetch` is the one-record block.
+  * trailing-fragment check.
   */
 final class ChunkedRecordStream(
     part: FixedWidthInputPartition,
@@ -1199,8 +1125,8 @@ final class ChunkedRecordStream(
 
   // Current file path as UTF-8 bytes, converted ONCE per chunk — the
   // `_source_file` metadata column must not pay a per-record String→UTF8
-  // encode. Empty until the first chunk opens (readers only consult it
-  // after a successful fetch).
+  // encode. Empty until the first chunk opens (the reader only consults it
+  // after a successful fetchBlock).
   private var curPathUtf8: Array[Byte] = Array.emptyByteArray
 
   /** UTF-8 bytes of the file the LAST fetched record came from. */
@@ -1384,217 +1310,9 @@ final class ChunkedRecordStream(
     }
     0 // unreachable
   }
-
-  /** Fill `buf` with the next record; returns its byte offset in its file,
-    * or -1 when all chunks are drained. */
-  def fetch(buf: Array[Byte]): Long =
-    if (fetchBlock(buf, 1) == 1) blockOffset else -1L
 }
 
-/** Streams whole records from one aligned split: open, seek once, readFully
-  * per record (reference FixedLengthRecordReader.java:186-243). Buffers are
-  * allocated once and reused for every record — the reference's deliberate
-  * perf idiom (:198-206) — and rows are emitted through a reused
-  * `UnsafeProjection`, so steady-state per-record allocation is ~zero (the
-  * 100 TB-scale must-have).
-  */
-class FixedWidthPartitionReader(
-    part: FixedWidthInputPartition,
-    opts: FixedWidthOptions,
-    requiredSchema: StructType,
-    conf: Configuration,
-    pushedFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends PartitionReader[InternalRow] {
-
-  private val recLen = opts.recordLength
-  private val stream = new ChunkedRecordStream(part, opts, conf)
-  private var pos = 0L // byte offset of the CURRENT record in its file
-
-  private val buf = new Array[Byte](recLen)
-  private val keyBuf = if (opts.hasKey && !opts.typed) new Array[Byte](opts.keyLen) else null
-  private val row = new GenericInternalRow(requiredSchema.length)
-  private val proj = UnsafeProjection.create(requiredSchema)
-
-  private var recordsSkipped = 0L
-
-  // Precompiled per-column decoders writing into `row`. Closing over the
-  // reusable `buf` is safe: `proj` copies all bytes into its own buffer
-  // before the next record overwrites `buf`.
-  private val decoders: Array[() => Unit] =
-    FixedWidthRowDecoders.plan(opts, requiredSchema, buf, row, () => pos, keyBuf,
-      () => stream.currentPathUtf8)
-
-  // Pushed predicates evaluate straight off the record buffer — fully
-  // independent of the (possibly pruned) output schema, because fully-pushed
-  // filters are NOT re-evaluated by Spark and their columns may not even be
-  // projected. Non-matching records never run a single column decoder.
-  private val predicates: Array[() => Boolean] =
-    pushedFilters.map(f => FixedWidthFilters.compileOnBuffer(f, opts, buf, () => pos).getOrElse(
-      // fail LOUDLY: this filter was accepted as fully pushed, so nothing
-      // downstream re-evaluates it — dropping it would silently unfilter
-      throw new IllegalStateException(s"fixedwidth: accepted pushed filter failed to compile: $f")))
-
-  // Malformed-record policy (see FixedWidthMalformed). `probes` attempt-parse
-  // the typed fields whose malformation the projected decoders would not
-  // surface: ALL fields under DROPMALFORMED (the drop verdict must not depend
-  // on which columns a query projects), the non-projected ones under
-  // PERMISSIVE when the corrupt-record column is selected.
-  private val corruptIdx: Int = opts.corruptRecordCol
-    .map(c => requiredSchema.fieldNames.indexWhere(_.equalsIgnoreCase(c))).getOrElse(-1)
-  private val probes: Array[() => Unit] =
-    if (opts.dropMalformed) FixedWidthMalformed.probes(opts.fields, buf)
-    else if (corruptIdx >= 0)
-      FixedWidthMalformed.probes(
-        opts.fields.filterNot(f => requiredSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))), buf)
-    else Array.empty
-  private var recordsMalformed = 0L
-
-  override def next(): Boolean = {
-    var at = stream.fetch(buf)
-    while (at >= 0) {
-      pos = at
-      var pass = true
-      var i = 0
-      while (pass && i < predicates.length) { pass = predicates(i)(); i += 1 }
-      if (pass) {
-        if (decodeRecord()) return true // else: dropped as malformed
-      } else recordsSkipped += 1
-      at = stream.fetch(buf)
-    }
-    false
-  }
-
-  /** Decode the current record into `row`; false ⇒ drop it (DROPMALFORMED). */
-  private def decodeRecord(): Boolean =
-    if (!opts.tolerant) {
-      var i = 0
-      while (i < decoders.length) { decoders(i)(); i += 1 }
-      true
-    } else if (opts.dropMalformed) {
-      try {
-        var i = 0
-        while (i < probes.length) { probes(i)(); i += 1 }
-      } catch {
-        case _: NumberFormatException =>
-          recordsMalformed += 1
-          recordsSkipped += 1
-          return false
-      }
-      var i = 0
-      while (i < decoders.length) { decoders(i)(); i += 1 }
-      true
-    } else { // PERMISSIVE: null the bad field(s), optionally keep the raw record
-      var bad = false
-      var i = 0
-      while (i < decoders.length) {
-        try decoders(i)()
-        catch { case _: NumberFormatException => row.setNullAt(i); bad = true }
-        i += 1
-      }
-      if (corruptIdx >= 0) {
-        var j = 0
-        while (!bad && j < probes.length) {
-          try probes(j)() catch { case _: NumberFormatException => bad = true }
-          j += 1
-        }
-        // decoders already nulled the slot; overwrite only when malformed
-        if (bad) row.update(corruptIdx, FixedWidthMalformed.rawRecord(buf, recLen, opts.charset))
-      }
-      if (bad) recordsMalformed += 1
-      true
-    }
-
-  override def get(): InternalRow = proj(row)
-
-  override def close(): Unit = stream.close()
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(
-      FixedWidthMetrics.task("fwRecordsRead", stream.recordsRead),
-      FixedWidthMetrics.task("fwBytesRead", stream.recordsRead * recLen),
-      FixedWidthMetrics.task("fwRecordsSkipped", recordsSkipped),
-      FixedWidthMetrics.task("fwRecordsMalformed", recordsMalformed))
-}
-
-/** Precompiled per-column decoders from a reused record buffer into a
-  * `GenericInternalRow` — shared by the row reader (all columns) and the
-  * columnar reader's pushed-filter path (predicate columns only, into a
-  * scratch row). Closing over the caller's reusable `buf` is intentional;
-  * consumers copy bytes out before the next record overwrites it. */
-object FixedWidthRowDecoders {
-
-  def plan(
-      opts: FixedWidthOptions,
-      requiredSchema: StructType,
-      buf: Array[Byte],
-      row: GenericInternalRow,
-      offset: () => Long,
-      keyBufOrNull: Array[Byte] = null,
-      sourceFileUtf8: () => Array[Byte] = null): Array[() => Unit] = {
-    val keyBuf =
-      if (keyBufOrNull != null) keyBufOrNull
-      else if (opts.hasKey && !opts.typed) new Array[Byte](opts.keyLen)
-      else null
-    requiredSchema.fields.zipWithIndex.map { case (sf, i) =>
-      sf.name match {
-        case FixedWidthOptions.OffsetCol =>
-          () => row.setLong(i, offset())
-        case FixedWidthOptions.SourceFileCol
-            if sourceFileUtf8 != null && !opts.fields.exists(_.name.equalsIgnoreCase(sf.name)) =>
-          () => row.update(i,
-            org.apache.spark.unsafe.types.UTF8String.fromBytes(sourceFileUtf8()))
-        case FixedWidthOptions.KeyCol if !opts.typed =>
-          () => {
-            System.arraycopy(buf, opts.keyStartAt, keyBuf, 0, opts.keyLen)
-            row.update(i, keyBuf)
-          }
-        case FixedWidthOptions.ValueCol if !opts.typed =>
-          () => row.update(i, buf)
-        case name if opts.corruptRecordCol.exists(_.equalsIgnoreCase(name)) =>
-          // Default NULL; the PERMISSIVE reader overwrites it with the raw
-          // record after the record's malformed verdict is known.
-          () => row.setNullAt(i)
-        case name =>
-          val f = opts.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
-            throw new IllegalArgumentException(s"fixedwidth: unknown column '$name'"))
-          fieldDecoder(opts, f, i, buf, row)
-      }
-    }
-  }
-
-  private def fieldDecoder(
-      opts: FixedWidthOptions, f: FieldSpec, i: Int,
-      buf: Array[Byte], row: GenericInternalRow): () => Unit = f.ftype match {
-    case "string" =>
-      val cs = opts.charset
-      val trimRight = opts.trim == "right" || opts.trim == "both"
-      val trimLeft = opts.trim == "left" || opts.trim == "both"
-      () => row.update(i, AsciiParse.decodeString(buf, f.start, f.end, trimLeft, trimRight, cs))
-    case "int" | "date" => // date stored as epoch-day decimal int
-      () => {
-        if (AsciiParse.isBlank(buf, f.start, f.end)) row.setNullAt(i)
-        else row.setInt(i, AsciiParse.parseInt(buf, f.start, f.end))
-      }
-    case "long" | "timestamp" => // timestamp stored as epoch-micros decimal long
-      () => {
-        if (AsciiParse.isBlank(buf, f.start, f.end)) row.setNullAt(i)
-        else row.setLong(i, AsciiParse.parseLong(buf, f.start, f.end))
-      }
-    case "double" =>
-      () => {
-        if (AsciiParse.isBlank(buf, f.start, f.end)) row.setNullAt(i)
-        else row.setDouble(i, AsciiParse.parseDouble(buf, f.start, f.end))
-      }
-    case FieldSpec.DecimalRe(p, s) =>
-      val (prec, scale) = (p.toInt, s.toInt)
-      () => {
-        if (AsciiParse.isBlank(buf, f.start, f.end)) row.setNullAt(i)
-        else row.update(i, AsciiParse.parseDecimal(buf, f.start, f.end, prec, scale))
-      }
-  }
-}
-
-/** Malformed-typed-field machinery shared by the row and columnar readers:
+/** Malformed-typed-field machinery of [[FixedWidthColumnarReader]]:
   * attempt-parse probes (throw `NumberFormatException` iff the field's bytes
   * would not decode) and the raw-record payload for the corrupt-record
   * column. String fields can never malform (any bytes are a valid string),
@@ -1642,8 +1360,7 @@ object AsciiParse {
 
   /** Configurable space-trim of a byte range, packed as (start << 32) | end —
     * one primitive return, no tuple allocation on the per-record path. The
-    * SAME loop previously lived (and could drift) in four decode sites: the
-    * row reader, the columnar reader, and both pushed-filter compile paths. */
+    * one trim loop of every string decode site, so they cannot drift. */
   def trimRange(buf: Array[Byte], from: Int, until: Int,
       trimLeft: Boolean, trimRight: Boolean): Long = {
     var s = from
@@ -1654,9 +1371,9 @@ object AsciiParse {
   }
 
   /** Trimmed, charset-decoded string field value — the ONE definition of
-    * what a fixedwidth string field decodes to, shared by the row reader
-    * and both pushed-filter paths so pushed predicates match Catalyst's
-    * post-scan semantics bit-exactly. UTF-8 zero-copies: the returned
+    * what a fixedwidth string field decodes to, shared by
+    * FixedWidthTable.decodeField and both pushed-filter paths so pushed
+    * predicates match Catalyst's post-scan semantics bit-exactly. UTF-8 zero-copies: the returned
     * UTF8String SHARES `buf`, so callers must consume it before the next
     * record overwrites the buffer. */
   def decodeString(buf: Array[Byte], from: Int, until: Int,

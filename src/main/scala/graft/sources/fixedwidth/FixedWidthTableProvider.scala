@@ -195,63 +195,54 @@ object FixedWidthTable {
     }
   }
 
-  /** Decode a directory value string to its Catalyst value through the same
-    * synthetic-record path pruning uses (so "1"/"01" merge, trim applies,
-    * blank = NULL). Throws NumberFormatException on foreign garbage. */
   /** Driver-side memo for directory-value decodes: callers run per FILE
     * (grouped counts, keyed groups, partition rows) but a listing has only
     * as many distinct (field, raw) pairs as leaf directories — without the
-    * cache a 1M-file planning walk allocated a recordLength buffer and a
-    * fresh decoder plan per file per partition column. Failures (over-width
-    * values) are not cached and rethrow on every call, preserving the
-    * NumberFormatException contract. Decoded values are immutable (UTF8String
-    * is cloned off the buffer), so sharing across callers is safe. */
+    * cache a 1M-file planning walk decoded the same value once per file per
+    * partition column. Failures (over-width values) are not cached and
+    * rethrow on every call, preserving the NumberFormatException contract.
+    * Decoded values are immutable (decodeField copies strings), so sharing
+    * across callers is safe. */
   private val dirValueCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String, FieldSpec, String), Any]()
 
+  /** Decode a directory value string to its Catalyst value through
+    * [[decodeField]] (so "1"/"01" merge, trim applies, blank = NULL).
+    * Throws NumberFormatException on foreign garbage. */
   def decodeDirValue(opts: FixedWidthOptions, f: FieldSpec, raw: String): Any =
     dirValueCache.computeIfAbsent(
       (opts.charset.name, opts.trim, f, raw),
       _ => decodeDirValueUncached(opts, f, raw))
 
-  /** Decode a raw field SLICE (an fwz stats extreme) exactly as a record
-    * read would: placed at its field range in a blank record buffer and run
-    * through the same row decoders — a footer-answered min/max is therefore
-    * bit-identical to what scanning the winning record would return. */
-  def decodeSliceValue(opts: FixedWidthOptions, f: FieldSpec, slice: Array[Byte]): Any = {
-    val buf = new Array[Byte](opts.recordLength)
-    java.util.Arrays.fill(buf, ' '.toByte)
-    System.arraycopy(slice, 0, buf, f.start, math.min(slice.length, f.len))
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-    FixedWidthRowDecoders.plan(
-      opts,
-      org.apache.spark.sql.types.StructType(
-        Seq(org.apache.spark.sql.types.StructField(f.name, f.dataType))),
-      buf, row, () => 0L)(0)()
-    row.get(0, f.dataType) match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.clone() // buf-backed
-      case other => other
-    }
-  }
-
   private def decodeDirValueUncached(opts: FixedWidthOptions, f: FieldSpec, raw: String): Any = {
-    val buf = new Array[Byte](opts.recordLength)
-    java.util.Arrays.fill(buf, ' '.toByte)
     val bytes =
       if (f.ftype == "string") raw.getBytes(opts.charset)
       else raw.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     if (f.ftype != "string" && bytes.length > f.len)
       throw new NumberFormatException(s"over-width directory value '$raw'")
-    System.arraycopy(bytes, 0, buf, f.start, math.min(bytes.length, f.len))
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-    FixedWidthRowDecoders.plan(
-      opts,
-      org.apache.spark.sql.types.StructType(
-        Seq(org.apache.spark.sql.types.StructField(f.name, f.dataType))),
-      buf, row, () => 0L)(0)()
-    row.get(0, f.dataType) match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.clone() // buf-backed
-      case other => other
+    decodeField(opts, f, bytes)
+  }
+
+  /** Decode ONE declared field from its raw bytes, space-padded or cut to
+    * the field width, with the parsers a record read uses: NULL for a blank
+    * typed field, a copied `UTF8String` for strings. Throws
+    * NumberFormatException on bytes the typed parse rejects. An fwz stats
+    * extreme decodes through here, so a footer-answered min/max is
+    * bit-identical to what scanning the winning record would return. */
+  def decodeField(opts: FixedWidthOptions, f: FieldSpec, bytes: Array[Byte]): Any = {
+    val n = f.len
+    val buf = Array.fill[Byte](n)(' ')
+    System.arraycopy(bytes, 0, buf, 0, math.min(bytes.length, n))
+    f.ftype match {
+      case "string" =>
+        val trimLeft = opts.trim == "left" || opts.trim == "both"
+        val trimRight = opts.trim == "right" || opts.trim == "both"
+        AsciiParse.decodeString(buf, 0, n, trimLeft, trimRight, opts.charset).clone()
+      case _ if AsciiParse.isBlank(buf, 0, n) => null
+      case "int" | "date" => AsciiParse.parseInt(buf, 0, n)
+      case "long" | "timestamp" => AsciiParse.parseLong(buf, 0, n)
+      case "double" => AsciiParse.parseDouble(buf, 0, n)
+      case FieldSpec.DecimalRe(p, s) => AsciiParse.parseDecimal(buf, 0, n, p.toInt, s.toInt)
     }
   }
 

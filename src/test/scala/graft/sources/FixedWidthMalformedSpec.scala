@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
-import graft.sources.fixedwidth._
 
 /** Malformed-record policy for typed decode (PERMISSIVE null /
   * DROPMALFORMED / FAILFAST) plus the Or / string prefix-suffix-contains
@@ -209,37 +208,6 @@ class FixedWidthMalformedSpec extends SparkSpec with Matchers {
     intercept[IllegalArgumentException](
       read(dir, "mode" -> "WHATEVER").collect())
       .getMessage should include("DROPMALFORMED")
-  }
-
-  test("row reader (non-columnar lane) applies the same policy") {
-    val dir = writePoisoned()
-    import scala.jdk.CollectionConverters._
-    val optMap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-      Map("fields" -> fields, "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_bad").asJava)
-    val opts = FixedWidthOptions(optMap)
-    val file = JPath.of(dir, "data.fwb")
-    val part = FixedWidthInputPartition(Seq(
-      FileChunk(file.toString, 0L, Files.size(file), compressed = false)))
-    val reader = new FixedWidthPartitionReader(
-      part, opts, opts.schema, spark.sessionState.newHadoopConf())
-    val got = Iterator.continually(reader)
-      .takeWhile(_.next())
-      .map { r =>
-        val row = r.get()
-        (row.getLong(1), row.isNullAt(2), row.isNullAt(5))
-      } // (id, qty null?, _bad null?)
-      .toList
-    reader.close()
-    got shouldBe List((1L, false, true), (2L, true, false), (3L, false, false), (4L, true, true))
-
-    // and DROPMALFORMED on the row lane
-    val optsDrop = FixedWidthOptions(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-      Map("fields" -> fields, "mode" -> "DROPMALFORMED").asJava))
-    val r2 = new FixedWidthPartitionReader(
-      part, optsDrop, optsDrop.schema, spark.sessionState.newHadoopConf())
-    val ids = Iterator.continually(r2).takeWhile(_.next()).map(_.get().getLong(1)).toList
-    r2.close()
-    ids shouldBe List(1L, 4L)
   }
 
   test("Or and string prefix/suffix/contains push down fully (no FilterExec)") {

@@ -38,7 +38,7 @@ class FixedWidthPushdownSpec extends SparkSpec with Matchers {
     val df = read(dir).agg(count(lit(1)).as("n"))
     df.collect().map(_.getLong(0)) shouldBe Array(500L)
     val p = plan(df)
-    p should include("FixedWidthListingAggScan")
+    p should include("FixedWidthCountScan")
     p should not include "HashAggregate"
   }
 
@@ -48,7 +48,7 @@ class FixedWidthPushdownSpec extends SparkSpec with Matchers {
     writeData(dir, partitioned = true)
     val df = read(dir).filter($"p" === "p1").agg(count(lit(1)).as("n"))
     df.collect().map(_.getLong(0)) shouldBe Array((1 to 500).count(_ % 4 == 1).toLong)
-    plan(df) should include("FixedWidthListingAggScan")
+    plan(df) should include("FixedWidthCountScan")
   }
 
   test("count(*) with a record-level filter falls back to a real scan") {
@@ -87,7 +87,7 @@ class FixedWidthPushdownSpec extends SparkSpec with Matchers {
     df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))) shouldBe
       Array(("p0", "p3", 500L))
     val p = plan(df)
-    p should include("FixedWidthListingAggScan")
+    p should include("FixedWidthCountScan")
     p should include("MAX(P)")
     p should not include "HashAggregate"
     // min/max of a NON-partition column falls back to a real scan
@@ -105,7 +105,7 @@ class FixedWidthPushdownSpec extends SparkSpec with Matchers {
     val df = spark.read.format("fixedwidth").option("fields", lay).load(dir)
       .agg(min($"k").as("kmin"), max($"k").as("kmax"))
     df.collect().map(r => (r.getLong(0), r.getLong(1))) shouldBe Array((0L, 2L))
-    plan(df) should include("FixedWidthListingAggScan")
+    plan(df) should include("FixedWidthCountScan")
   }
 
   test("count(*) grouped by a partition column is answered from the listing") {
@@ -216,6 +216,32 @@ class FixedWidthPushdownSpec extends SparkSpec with Matchers {
     joined.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))) shouldBe
       Array(("p1", "one", (1 to 500).count(_ % 4 == 1).toLong),
             ("p3", "three", (1 to 500).count(_ % 4 == 3).toLong))
+  }
+
+  /** Spark takes the row path when a scan plans no input partitions (it
+    * derives supportsColumnar from them); the reader factory is
+    * columnar-only, so such a scan must finish without opening a reader. */
+  private def rowPathScans(df: DataFrame): Seq[Boolean] =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.supportsColumnar
+    }
+
+  test("a directory with no data files reads as zero rows on the row path") {
+    val dir = tmp()
+    Files.write(java.nio.file.Paths.get(dir, "_SUCCESS"), Array.emptyByteArray)
+    val df = read(dir)
+    df.collect() shouldBe empty
+    rowPathScans(df) shouldBe Seq(false)
+  }
+
+  test("a pushed filter that prunes every partition directory reads as zero rows") {
+    import spark.implicits._
+    val dir = tmp()
+    writeData(dir, partitioned = true)
+    val df = read(dir).filter($"p" === "p9")
+    df.collect() shouldBe empty
+    rowPathScans(df) shouldBe Seq(false)
+    plan(df) should include("FixedWidthScan(")
   }
 
   test("limit truncates split planning to the requested records") {

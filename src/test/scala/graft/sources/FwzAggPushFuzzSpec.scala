@@ -14,7 +14,7 @@ import graft.SparkSpec
   * must equal the same aggregate computed in plain Scala over the fully
   * collected rows — an oracle with no Spark aggregation (and no pushdown)
   * anywhere in it. Non-vacuity is asserted on the physical plan: the
-  * global lanes must actually plan the FixedWidthListingAggScan (a fuzz
+  * global lanes must actually plan the FixedWidthCountScan (a fuzz
   * that silently fell back to a real scan would prove nothing). */
 class FwzAggPushFuzzSpec extends SparkSpec with Matchers {
 
@@ -85,7 +85,7 @@ class FwzAggPushFuzzSpec extends SparkSpec with Matchers {
         min(col("dt")).as("mn_d"),
         max(col("ts")).as("mx_t"))
       // non-vacuity: this exact shape must answer from the footer scan
-      agg.queryExecution.executedPlan.toString should include("FixedWidthListingAggScan")
+      agg.queryExecution.executedPlan.toString should include("FixedWidthCountScan")
       val r = agg.collect().head
       val (n, mnK, mxK, mnP, mnD, mxT) = expected(dir)
       withClue(s"seed=$seed: ") {

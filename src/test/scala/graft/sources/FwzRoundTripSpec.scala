@@ -175,7 +175,7 @@ class FwzRoundTripSpec extends SparkSpec with Matchers {
     // the exactRecordCount footer path keeps the listing-level answer
     // available for compressed feeds — plan must show the listing scan
     val p = cnt.queryExecution.executedPlan.toString
-    withClue(p) { p should include("FixedWidthListingAggScan") }
+    withClue(p) { p should include("FixedWidthCountScan") }
     // real aggregates still decompress and are correct
     r.agg(sum(col("id"))).collect()(0).getLong(0) shouldBe (19999L * 20000L / 2)
   }

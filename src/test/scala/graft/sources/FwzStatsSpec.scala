@@ -303,7 +303,7 @@ class FwzStatsSpec extends SparkSpec with Matchers {
         min(col("amt")).as("amn"), max(col("amt")).as("amx"),
         count(lit(1)).as("n"))
     val planned = agg(withStats).queryExecution.executedPlan.toString
-    planned should include("FixedWidthListingAggScan")
+    planned should include("FixedWidthCountScan")
     planned should include("(fwz stats)")
     val r = agg(withStats).collect()(0)
     (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)) shouldBe
@@ -313,7 +313,7 @@ class FwzStatsSpec extends SparkSpec with Matchers {
     r.getLong(6) shouldBe 40000L
     // stats-less: no listing-agg plan, same values through a real scan
     val plannedNs = agg(noStats).queryExecution.executedPlan.toString
-    plannedNs should not include "FixedWidthListingAggScan"
+    plannedNs should not include "FixedWidthCountScan"
     agg(noStats).collect()(0).toSeq shouldBe r.toSeq
     // NULLs are ignored, all-null columns yield SQL NULL (the null fixture:
     // ids 1000-1999 blank)
