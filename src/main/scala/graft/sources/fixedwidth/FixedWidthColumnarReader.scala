@@ -3,7 +3,7 @@ package graft.sources.fixedwidth
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -57,8 +57,8 @@ class FixedWidthColumnarReader(
   private var skipped = 0L
   private var malformed = 0L
 
-  // Malformed-record policy (see FixedWidthMalformed). `probes`
-  // attempt-parse the typed fields whose malformation the projected
+  // Malformed-record policy. `probes` are the codec probes
+  // (FieldCodec.probe) of the fields whose malformation the projected
   // decoders would not surface: ALL declared fields under DROPMALFORMED
   // (the drop verdict must not depend on which columns a query projects),
   // the non-projected ones under PERMISSIVE when the corrupt-record column
@@ -69,11 +69,9 @@ class FixedWidthColumnarReader(
   private val corruptIdx: Int = opts.corruptRecordCol
     .map(c => requiredSchema.fieldNames.indexWhere(_.equalsIgnoreCase(c))).getOrElse(-1)
   private val probes: Array[() => Unit] =
-    if (opts.dropMalformed) FixedWidthMalformed.probes(opts.fields, buf)
-    else if (corruptIdx >= 0)
-      FixedWidthMalformed.probes(
-        opts.fields.filterNot(f => requiredSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))), buf)
-    else Array.empty
+    (if (opts.dropMalformed) opts.fields
+     else if (corruptIdx >= 0) opts.fields.filterNot(f => requiredSchema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
+     else Nil).flatMap(f => opts.codec(f).probe(buf, f.start, f.end)).toArray
   /** PERMISSIVE: which of the batch's records had a malformed field. */
   private val bad = if (opts.permissive) new Array[Boolean](rows) else null
 
@@ -115,47 +113,7 @@ class FixedWidthColumnarReader(
       case name =>
         val f = opts.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
           throw new IllegalArgumentException(s"fixedwidth: unknown column '$name'"))
-        fieldDecoder(f, v)
-    }
-  }
-
-  private def fieldDecoder(f: FieldSpec, v: OnHeapColumnVector): (Int, Int) => Unit = {
-    val (s, e) = (f.start, f.end)
-    f.ftype match {
-      case "string" =>
-        val cs = opts.charset
-        val utf8 = cs == java.nio.charset.StandardCharsets.UTF_8
-        val trimRight = opts.trim == "right" || opts.trim == "both"
-        val trimLeft = opts.trim == "left" || opts.trim == "both"
-        (r: Int, b: Int) => {
-          val tr = AsciiParse.trimRange(block, b + s, b + e, trimLeft, trimRight)
-          val ts = (tr >>> 32).toInt
-          val te = (tr & 0xffffffffL).toInt
-          if (utf8) v.putByteArray(r, block, ts, te - ts)
-          else v.putByteArray(r, new String(block, ts, te - ts, cs).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-      case "int" | "date" =>
-        (r: Int, b: Int) =>
-          if (AsciiParse.isBlank(block, b + s, b + e)) v.putNull(r)
-          else v.putInt(r, AsciiParse.parseInt(block, b + s, b + e))
-      case "long" | "timestamp" =>
-        (r: Int, b: Int) =>
-          if (AsciiParse.isBlank(block, b + s, b + e)) v.putNull(r)
-          else v.putLong(r, AsciiParse.parseLong(block, b + s, b + e))
-      case "double" =>
-        (r: Int, b: Int) =>
-          if (AsciiParse.isBlank(block, b + s, b + e)) v.putNull(r)
-          else v.putDouble(r, AsciiParse.parseDouble(block, b + s, b + e))
-      case FieldSpec.DecimalRe(p, sc) =>
-        val (prec, scale) = (p.toInt, sc.toInt)
-        (r: Int, b: Int) =>
-          if (AsciiParse.isBlank(block, b + s, b + e)) v.putNull(r)
-          else if (prec > Decimal.MAX_LONG_DIGITS)
-            v.putDecimal(r, AsciiParse.parseDecimal(block, b + s, b + e, prec, scale), prec)
-          else { // the unscaled long is what putDecimal stores up to 18 digits
-            val u = AsciiParse.parseUnscaled(block, b + s, b + e, prec, scale)
-            if (prec <= Decimal.MAX_INT_DIGITS) v.putInt(r, u.toInt) else v.putLong(r, u)
-          }
+        opts.codec(f).columnDecoder(block, f.start, f.end, v)
     }
   }
 

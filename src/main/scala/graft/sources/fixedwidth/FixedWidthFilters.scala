@@ -1,8 +1,6 @@
 package graft.sources.fixedwidth
 
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Pushed-filter compilation for the fixedwidth reader: each supported
@@ -13,25 +11,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * redundant re-evaluation and may prune predicate-only columns from the
   * read schema entirely; that is why predicates read from the buffer, not
   * from the output row. Unsupported shapes are simply not pushed (Spark
-  * evaluates them post-scan as usual).
+  * evaluates them post-scan as usual). Each field's parse, literal
+  * conversion and comparison come from its [[FieldCodec]], the same ones
+  * the column decoder and the fwz frame skipper use.
   */
 object FixedWidthFilters {
 
-  /** Field types we can compare (timestamps/dates are stored as epoch
-    * micros/days, so comparisons reduce to long/int compares once the
-    * literal is converted through Catalyst's own DateTimeUtils; decimals
-    * compare as exact BigDecimal). */
+  /** Every declared field compares through its codec (dates and timestamps
+    * as epoch days and micros, decimals by exact value); prefix, suffix and
+    * contains push down only on string fields, where they are byte
+    * compares at a fixed offset. */
   private def comparableField(name: String, opts: FixedWidthOptions): Boolean =
-    name.equalsIgnoreCase(FixedWidthOptions.OffsetCol) ||
-      opts.fields.exists(f => f.name.equalsIgnoreCase(name) &&
-        (Set("int", "long", "double", "string", "timestamp", "date").contains(f.ftype) ||
-          FieldSpec.DecimalRe.matches(f.ftype)))
+    name.equalsIgnoreCase(FixedWidthOptions.OffsetCol) || opts.fields.exists(_.name.equalsIgnoreCase(name))
 
-  /** String-typed declared field (prefix/suffix/contains push down only on
-    * these — they are the cheapest predicates this format can run: byte
-    * compares at a fixed offset). */
   private def stringField(name: String, opts: FixedWidthOptions): Boolean =
-    opts.fields.exists(f => f.name.equalsIgnoreCase(name) && f.ftype == "string")
+    opts.fields.exists(f => f.name.equalsIgnoreCase(name) && opts.codec(f).isString)
 
   def supported(f: Filter, opts: FixedWidthOptions): Boolean = f match {
     case EqualTo(a, _)            => comparableField(a, opts)
@@ -53,41 +47,6 @@ object FixedWidthFilters {
     // encoding: not(null) = null must filter, but not(false) = true.)
     case Or(l, r)                 => supported(l, opts) && supported(r, opts)
     case _                        => false
-  }
-
-  // Literal conversions to the stored representation of each field type,
-  // shared by comparisons and In; None for a literal of another class.
-  // Dates are epoch days, timestamps epoch micros (Catalyst's own
-  // DateTimeUtils conversions).
-  private def intLiteral(value: Any): Option[Int] = value match {
-    case d: java.sql.Date        => Some(DateTimeUtils.fromJavaDate(d))
-    case ld: java.time.LocalDate => Some(DateTimeUtils.localDateToDays(ld))
-    case n: Number               => Some(n.intValue())
-    case _                       => None
-  }
-
-  private def longLiteral(value: Any): Option[Long] = value match {
-    case t: java.sql.Timestamp        => Some(DateTimeUtils.fromJavaTimestamp(t))
-    case inst: java.time.Instant      => Some(DateTimeUtils.instantToMicros(inst))
-    case ldt: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(ldt))
-    case n: Number                    => Some(n.longValue())
-    case _                            => None
-  }
-
-  /** -0.0 normalizes to 0.0: Double.compare orders -0.0 < 0.0 while
-    * Catalyst's primitive comparison treats them equal, so a pushed
-    * EqualTo(0.0) must not drop -0.0 records at the source. Record values
-    * get the same normalization. */
-  private def doubleLiteral(value: Any): Option[Double] = value match {
-    case n: Number => val d = n.doubleValue(); Some(if (d == 0.0d) 0.0d else d)
-    case _         => None
-  }
-
-  private def decimalLiteral(value: Any): Option[java.math.BigDecimal] = value match {
-    case b: java.math.BigDecimal => Some(b)
-    case b: BigDecimal           => Some(b.bigDecimal)
-    case n: Number               => Some(new java.math.BigDecimal(n.toString))
-    case _                       => None
   }
 
   /** Compile a pushed filter to a predicate over the reused record buffer.
@@ -123,49 +82,17 @@ object FixedWidthFilters {
       else () => try g() catch { case _: NumberFormatException => null }
 
     /** Comparator returning sign of (record value - literal), null when the
-      * field is blank (SQL NULL — comparisons never match) or, under
-      * tolerant modes, when its bytes fail the typed parse. */
+      * field is NULL (comparisons never match) or, under tolerant modes,
+      * when its bytes fail the typed parse. The literal converts through the
+      * field codec, as the fwz frame skipper's does. */
     def cmp(name: String, value: Any): Option[() => java.lang.Integer] = {
       if (isOffset(name)) {
         val v = value.asInstanceOf[Number].longValue()
         return Some(() => Integer.valueOf(java.lang.Long.compare(offset(), v)))
       }
       fieldOf(name).flatMap { fs =>
-        val from = fs.start
-        val until = fs.end
-        fs.ftype match {
-          case "int" | "date" =>
-            intLiteral(value).map(v => nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
-              else Integer.valueOf(java.lang.Integer.compare(AsciiParse.parseInt(buf, from, until), v))))
-          case "long" | "timestamp" =>
-            longLiteral(value).map(v => nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
-              else Integer.valueOf(java.lang.Long.compare(AsciiParse.parseLong(buf, from, until), v))))
-          case "double" =>
-            // -0.0 normalized on both sides (see doubleLiteral); NaN
-            // ordering via Double.compare already matches Spark (NaN ==
-            // greatest).
-            doubleLiteral(value).map(v => nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
-              else {
-                val rv0 = AsciiParse.parseDouble(buf, from, until)
-                val rv = if (rv0 == 0.0d) 0.0d else rv0
-                Integer.valueOf(java.lang.Double.compare(rv, v))
-              }))
-          case "string" =>
-            val cs = opts.charset
-            val v = UTF8String.fromString(value.toString)
-            val trimRight = opts.trim == "right" || opts.trim == "both"
-            val trimLeft = opts.trim == "left" || opts.trim == "both"
-            Some(() => Integer.valueOf(
-              AsciiParse.decodeString(buf, from, until, trimLeft, trimRight, cs).compareTo(v)))
-          case FieldSpec.DecimalRe(pp, ss) =>
-            val (prec, scale) = (pp.toInt, ss.toInt)
-            // Catalyst compares decimals by numeric VALUE (scale-agnostic):
-            // BigDecimal.compareTo has the same semantics.
-            decimalLiteral(value).map(v => nullOnMalformed(() => if (AsciiParse.isBlank(buf, from, until)) null
-              else Integer.valueOf(
-                AsciiParse.parseDecimal(buf, from, until, prec, scale).toJavaBigDecimal.compareTo(v))))
-          case _ => None
-        }
+        val codec = opts.codec(fs)
+        codec.literal(value).map(v => nullOnMalformed(codec.comparator(buf, fs.start, fs.end, v)))
       }
     }
 
@@ -173,12 +100,8 @@ object FixedWidthFilters {
       * exactly what the column decoder emits, so pushed prefix/suffix/
       * contains predicates match Catalyst's post-scan semantics bit-exactly. */
     def strGetter(name: String): Option[() => UTF8String] =
-      fieldOf(name).filter(_.ftype == "string").map { fs =>
-        val (from, until) = (fs.start, fs.end)
-        val cs = opts.charset
-        val trimRight = opts.trim == "right" || opts.trim == "both"
-        val trimLeft = opts.trim == "left" || opts.trim == "both"
-        () => AsciiParse.decodeString(buf, from, until, trimLeft, trimRight, cs)
+      fieldOf(name).map(fs => (fs, opts.codec(fs))).collect { case (fs, s: FieldCodec.Str) =>
+        () => s.statsValue(buf, fs.start, fs.end)
       }
 
     /** String fields decode to "" (never NULL); numeric fields are NULL iff
@@ -191,19 +114,11 @@ object FixedWidthFilters {
       if (isOffset(name)) return Some(() => !expectNull)
       fieldOf(name).map { fs =>
         val (from, until) = (fs.start, fs.end)
-        def decodesNull(parse: () => Any): () => Boolean =
-          if (!opts.tolerant) () => AsciiParse.isBlank(buf, from, until)
-          else () => AsciiParse.isBlank(buf, from, until) ||
+        val nullTest: () => Boolean = opts.codec(fs).probe(buf, from, until) match {
+          case None => () => false
+          case Some(parse) if opts.tolerant => () => AsciiParse.isBlank(buf, from, until) ||
             (try { parse(); false } catch { case _: NumberFormatException => true })
-        val nullTest: () => Boolean = fs.ftype match {
-          case "string" => () => false
-          case "int" | "date" => decodesNull(() => AsciiParse.parseInt(buf, from, until))
-          case "long" | "timestamp" => decodesNull(() => AsciiParse.parseLong(buf, from, until))
-          case "double" => decodesNull(() => AsciiParse.parseDouble(buf, from, until))
-          case FieldSpec.DecimalRe(pp, ss) =>
-            val (prec, scale) = (pp.toInt, ss.toInt)
-            decodesNull(() => AsciiParse.parseDecimal(buf, from, until, prec, scale))
-          case _ => () => AsciiParse.isBlank(buf, from, until)
+          case Some(_) => () => AsciiParse.isBlank(buf, from, until)
         }
         () => nullTest() == expectNull
       }
@@ -227,43 +142,10 @@ object FixedWidthFilters {
         return Some(() => set.contains(java.lang.Long.valueOf(offset())))
       }
       fieldOf(name).flatMap { fs =>
-        val from = fs.start
-        val until = fs.end
-        fs.ftype match {
-          case "int" | "date" =>
-            val set = new java.util.HashSet[Integer]()
-            vs.foreach(value => set.add(Integer.valueOf(intLiteral(value).getOrElse(return None))))
-            Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) &&
-              set.contains(Integer.valueOf(AsciiParse.parseInt(buf, from, until)))))
-          case "long" | "timestamp" =>
-            val set = new java.util.HashSet[java.lang.Long]()
-            vs.foreach(value => set.add(java.lang.Long.valueOf(longLiteral(value).getOrElse(return None))))
-            Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) &&
-              set.contains(java.lang.Long.valueOf(AsciiParse.parseLong(buf, from, until)))))
-          case "double" =>
-            // same -0.0 normalization as cmp; boxed Double equality makes
-            // NaN match NaN, which is Spark's own `=` semantics for doubles
-            val set = new java.util.HashSet[java.lang.Double]()
-            vs.foreach(value => set.add(java.lang.Double.valueOf(doubleLiteral(value).getOrElse(return None))))
-            Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) && {
-              val rv0 = AsciiParse.parseDouble(buf, from, until)
-              set.contains(java.lang.Double.valueOf(if (rv0 == 0.0d) 0.0d else rv0))
-            }))
-          case "string" =>
-            val set = new java.util.HashSet[UTF8String]()
-            vs.foreach(v => set.add(UTF8String.fromString(v.toString)))
-            strGetter(name).map(g => () => set.contains(g()))
-          case FieldSpec.DecimalRe(pp, ss) =>
-            // membership must follow compareTo (scale-agnostic numeric
-            // equality), not BigDecimal.equals — normalize both sides
-            val (prec, scale) = (pp.toInt, ss.toInt)
-            val set = new java.util.HashSet[java.math.BigDecimal]()
-            vs.foreach(value => set.add(decimalLiteral(value).getOrElse(return None).stripTrailingZeros))
-            Some(boolGuard(() => !AsciiParse.isBlank(buf, from, until) &&
-              set.contains(AsciiParse.parseDecimal(buf, from, until, prec, scale)
-                .toJavaBigDecimal.stripTrailingZeros)))
-          case _ => None
-        }
+        val codec = opts.codec(fs)
+        val lits = vs.toSeq.map(codec.literal)
+        if (lits.exists(_.isEmpty)) None
+        else Some(boolGuard(codec.member(buf, fs.start, fs.end, lits.flatten)))
       }
     }
 

@@ -33,7 +33,7 @@ final case class FieldSpec(name: String, ftype: String, start: Int, len: Int) {
 }
 
 object FieldSpec {
-  private[fixedwidth] val DecimalRe = """decimal\((\d+),(\d+)\)""".r
+  private val DecimalRe = """decimal\((\d+),(\d+)\)""".r
 }
 
 /** Parsed + validated reader/writer options for the `fixedwidth` format.
@@ -73,6 +73,15 @@ final case class FixedWidthOptions(
     * at the engine level with Spark CSV/JSON-source-parity semantics.) */
   def tolerant: Boolean = mode != "FAILFAST"
 
+  /** Which ends of a string field lose their pad spaces under `trim`. */
+  def trimLeft: Boolean = FixedWidthOptions.TrimModes(trim)._1
+  def trimRight: Boolean = FixedWidthOptions.TrimModes(trim)._2
+
+  /** Each declared field's codec, resolved once from its Catalyst type. */
+  @transient private lazy val codecs: Map[FieldSpec, FieldCodec] =
+    fields.map(f => f -> FieldCodec(f.dataType, trimLeft, trimRight, charsetName)).toMap
+  def codec(f: FieldSpec): FieldCodec = codecs(f)
+
   def typed: Boolean = fields.nonEmpty
   def hasKey: Boolean = keyStartAt >= 0
   def keyLen: Int = keyEndAt - keyStartAt + 1
@@ -110,6 +119,11 @@ object FixedWidthOptions {
     * references it (`select($"_source_file")`), the provenance column a
     * 100 TB lineage audit needs without paying for it on every scan. */
   val SourceFileCol = "_source_file"
+
+  /** `trim` mode → (trim left, trim right): the one definition of the
+    * string trim policy. */
+  val TrimModes: Map[String, (Boolean, Boolean)] = Map(
+    "right" -> (false, true), "left" -> (true, false), "both" -> (true, true), "none" -> (false, false))
 
   /** Hadoop config-key aliases for drop-in migration: the reference's job-conf
     * property names (reference FixedLengthInputFormat.java:97-149) are accepted
@@ -181,7 +195,7 @@ object FixedWidthOptions {
     }
 
     val trim = Option(map.get("trim")).getOrElse("right").toLowerCase
-    if (!Set("right", "left", "both", "none").contains(trim))
+    if (!TrimModes.contains(trim))
       throw new IllegalArgumentException(s"fixedwidth: option 'trim' must be one of right|left|both|none, got '$trim'")
 
     val charsetName = Option(map.get("charset")).getOrElse("UTF-8")

@@ -130,7 +130,7 @@ class FixedWidthScanBuilder(
     val fields = cols.map { c =>
       opts.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(return None)
     }
-    if (fields.exists(_.ftype == "double")) return None
+    if (!fields.forall(opts.codec(_).listingAnswerable)) return None
     Some(fields)
   }
 
@@ -198,7 +198,7 @@ class FixedWidthScanBuilder(
   private def minMaxFieldOf(
       e: org.apache.spark.sql.connector.expressions.Expression): Option[FieldSpec] = e match {
     case nr: org.apache.spark.sql.connector.expressions.NamedReference if nr.fieldNames.length == 1 =>
-      opts.fields.find(f => f.name.equalsIgnoreCase(nr.fieldNames()(0))).filter(_.ftype != "double")
+      opts.fields.find(f => f.name.equalsIgnoreCase(nr.fieldNames()(0))).filter(opts.codec(_).listingAnswerable)
     case _ => None
   }
 
@@ -209,7 +209,7 @@ class FixedWidthScanBuilder(
   private def footerExtremeOver(
       files: Seq[org.apache.hadoop.fs.FileStatus], f: FieldSpec, wantMax: Boolean): Option[Option[Array[Byte]]] = {
     val recLen = opts.recordLength.toLong
-    var best: Any = null
+    var best: AnyRef = null
     var bestSlice: Array[Byte] = null
     files.foreach { st =>
       if (!FwzFormat.isFramed(st.getPath)) return None
@@ -218,17 +218,14 @@ class FixedWidthScanBuilder(
         catch { case _: Exception => return None }
       if (footer.totalDLen % recLen != 0) return None // foreign trailing fragment
       val block = footer.stats.getOrElse(return None)
-      val entry = FwzStats.usableEntry(opts, block.envelope, f.name)
-        .getOrElse(return None)._2
+      val (codec, entry) = FwzStats.usableEntry(opts, block.envelope, f.name).getOrElse(return None)
       val flags = entry.flags(0)
       if ((flags & FwzFormat.FlagUnknown) != 0) return None
       if ((flags & FwzFormat.FlagHasValue) != 0) {
         val slice = if (wantMax) entry.maxs(0) else entry.mins(0)
-        val v =
-          try FwzStatsDecode.decode(f.ftype, slice, block.trimId, block.charsetName)
-          catch { case _: Exception => return None }
+        val v = try codec.extreme(slice) catch { case _: Exception => return None }
         val better = best == null || {
-          val c = v.asInstanceOf[Comparable[Any]].compareTo(best)
+          val c = codec.compare(v, best)
           if (wantMax) c > 0 else c < 0
         }
         if (better) { best = v; bestSlice = slice }
@@ -1312,30 +1309,13 @@ final class ChunkedRecordStream(
   }
 }
 
-/** Malformed-typed-field machinery of [[FixedWidthColumnarReader]]:
-  * attempt-parse probes (throw `NumberFormatException` iff the field's bytes
-  * would not decode) and the raw-record payload for the corrupt-record
-  * column. String fields can never malform (any bytes are a valid string),
-  * so they compile to no probe.
+/** The corrupt-record payload of [[FixedWidthColumnarReader]]. Whether a
+  * field is malformed is its codec's attempt-parse probe
+  * ([[FieldCodec.probe]]), which throws `NumberFormatException` iff the
+  * field's bytes would not decode; strings have none, since any bytes
+  * decode to a string.
   */
 object FixedWidthMalformed {
-
-  def probes(fields: Seq[FieldSpec], buf: Array[Byte]): Array[() => Unit] =
-    fields.flatMap { f =>
-      val (from, until) = (f.start, f.end)
-      f.ftype match {
-        case "string" => None
-        case "int" | "date" =>
-          Some(() => if (!AsciiParse.isBlank(buf, from, until)) { AsciiParse.parseInt(buf, from, until); () })
-        case "long" | "timestamp" =>
-          Some(() => if (!AsciiParse.isBlank(buf, from, until)) { AsciiParse.parseLong(buf, from, until); () })
-        case "double" =>
-          Some(() => if (!AsciiParse.isBlank(buf, from, until)) { AsciiParse.parseDouble(buf, from, until); () })
-        case FieldSpec.DecimalRe(p, s) =>
-          val (prec, scale) = (p.toInt, s.toInt)
-          Some(() => if (!AsciiParse.isBlank(buf, from, until)) { AsciiParse.parseDecimal(buf, from, until, prec, scale); () })
-      }
-    }.toArray
 
   /** The corrupt-record payload: the whole raw record, charset-decoded,
     * UNtrimmed (the fixed-width analog of CSV's raw line). The returned
@@ -1348,8 +1328,9 @@ object FixedWidthMalformed {
 /** Allocation-free ASCII numeric parsing over a byte range (spaces trimmed on
   * both sides; all-space field decodes to SQL NULL — callers test `isBlank`
   * first, so no in-band sentinel value can collide with real data). These
-  * are the ONE parse definitions: the row and columnar readers,
-  * `FixedWidthFilters` and `FwzStats` all call them.
+  * are the ONE parse definitions: the field codecs ([[FieldCodec]]) call
+  * them, and every reader, filter, stats and directory-value path decodes
+  * through a codec.
   *
   * Decimals of precision ≤ 18 and doubles take fast paths over plain
   * `[sign]digits[.digits]` that build no String, BigDecimal or boxed value.
@@ -1371,9 +1352,9 @@ object AsciiParse {
   }
 
   /** Trimmed, charset-decoded string field value — the ONE definition of
-    * what a fixedwidth string field decodes to, shared by
-    * FixedWidthTable.decodeField and both pushed-filter paths so pushed
-    * predicates match Catalyst's post-scan semantics bit-exactly. UTF-8 zero-copies: the returned
+    * what a fixedwidth string field decodes to, called by the string codec
+    * ([[FieldCodec.Str]]) so pushed predicates, stats and directory values
+    * match Catalyst's post-scan semantics bit-exactly. UTF-8 zero-copies: the returned
     * UTF8String SHARES `buf`, so callers must consume it before the next
     * record overwrites the buffer. */
   def decodeString(buf: Array[Byte], from: Int, until: Int,

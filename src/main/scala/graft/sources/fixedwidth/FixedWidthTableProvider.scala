@@ -214,14 +214,9 @@ object FixedWidthTable {
       (opts.charset.name, opts.trim, f, raw),
       _ => decodeDirValueUncached(opts, f, raw))
 
-  private def decodeDirValueUncached(opts: FixedWidthOptions, f: FieldSpec, raw: String): Any = {
-    val bytes =
-      if (f.ftype == "string") raw.getBytes(opts.charset)
-      else raw.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    if (f.ftype != "string" && bytes.length > f.len)
-      throw new NumberFormatException(s"over-width directory value '$raw'")
-    decodeField(opts, f, bytes)
-  }
+  private def decodeDirValueUncached(opts: FixedWidthOptions, f: FieldSpec, raw: String): Any =
+    decodeField(opts, f, opts.codec(f).textBytes(raw, f.len).getOrElse(
+      throw new NumberFormatException(s"over-width directory value '$raw'")))
 
   /** Decode ONE declared field from its raw bytes, space-padded or cut to
     * the field width, with the parsers a record read uses: NULL for a blank
@@ -233,17 +228,7 @@ object FixedWidthTable {
     val n = f.len
     val buf = Array.fill[Byte](n)(' ')
     System.arraycopy(bytes, 0, buf, 0, math.min(bytes.length, n))
-    f.ftype match {
-      case "string" =>
-        val trimLeft = opts.trim == "left" || opts.trim == "both"
-        val trimRight = opts.trim == "right" || opts.trim == "both"
-        AsciiParse.decodeString(buf, 0, n, trimLeft, trimRight, opts.charset).clone()
-      case _ if AsciiParse.isBlank(buf, 0, n) => null
-      case "int" | "date" => AsciiParse.parseInt(buf, 0, n)
-      case "long" | "timestamp" => AsciiParse.parseLong(buf, 0, n)
-      case "double" => AsciiParse.parseDouble(buf, 0, n)
-      case FieldSpec.DecimalRe(p, s) => AsciiParse.parseDecimal(buf, 0, n, p.toInt, s.toInt)
-    }
+    opts.codec(f).decode(buf, 0, n)
   }
 
   /** `exact = true` ⇔ the kept files contain EXACTLY the records satisfying
@@ -312,11 +297,7 @@ object FixedWidthTable {
           fwOpts.fields.find(_.name.equalsIgnoreCase(k)) match {
             case None => true // undeclared col=value dir: not bound, ignore
             case Some(f) =>
-              val bytes =
-                if (f.ftype == "string") v.getBytes(fwOpts.charset)
-                else v.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-              if (f.ftype != "string" && bytes.length > f.len) false // foreign dir
-              else {
+              fwOpts.codec(f).textBytes(v, f.len).exists { bytes => // None: a foreign dir
                 // strings beyond the width were truncated in the record too
                 System.arraycopy(bytes, 0, buf, f.start, math.min(bytes.length, f.len))
                 true

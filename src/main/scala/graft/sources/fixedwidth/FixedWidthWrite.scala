@@ -405,7 +405,9 @@ object FixedWidthEncoder {
           throw new IllegalArgumentException(
             s"fixedwidth: write schema is missing layout field '${f.name}' " +
               s"(have: ${querySchema.fieldNames.mkString(", ")})")
-        fieldEncoder(f, ord, querySchema.fields(ord).dataType, opts.charset, opts.strictWidth)
+        val dt = querySchema.fields(ord).dataType
+        opts.codec(f).encoder(f, ord, dt, opts.strictWidth).getOrElse(throw new IllegalArgumentException(
+          s"fixedwidth: cannot encode column '${f.name}' of Spark type $dt as layout type '${f.ftype}'"))
       }.toArray
     } else {
       val ord = querySchema.fieldNames.indexWhere(_.equalsIgnoreCase(FixedWidthOptions.ValueCol))
@@ -449,22 +451,8 @@ object FixedWidthEncoder {
           s"fixedwidth: write schema is missing partition column '$c' " +
             s"(have: ${querySchema.fieldNames.mkString(", ")})")
       val dt = querySchema.fields(ord).dataType
-      val render: InternalRow => String = (f.ftype, dt) match {
-        case ("string", StringType)       => r => r.getUTF8String(ord).toString
-        case ("int", IntegerType)         => r => r.getInt(ord).toString
-        case ("long", LongType)           => r => r.getLong(ord).toString
-        case ("long", IntegerType)        => r => r.getInt(ord).toString
-        case ("double", DoubleType)       => r => r.getDouble(ord).toString
-        case ("date", DateType)           => r => r.getInt(ord).toString
-        case ("timestamp", TimestampType) => r => r.getLong(ord).toString
-        case ("timestamp", TimestampNTZType) => r => r.getLong(ord).toString
-        case (FieldSpec.DecimalRe(p, s), d: DecimalType)
-            if d.precision == p.toInt && d.scale == s.toInt =>
-          r => r.getDecimal(ord, d.precision, d.scale).toJavaBigDecimal.toPlainString
-        case (ft, other) =>
-          throw new IllegalArgumentException(
-            s"fixedwidth: cannot partition by column '$c' of Spark type $other as layout type '$ft'")
-      }
+      val render = opts.codec(f).render(ord, dt).getOrElse(throw new IllegalArgumentException(
+        s"fixedwidth: cannot partition by column '$c' of Spark type $dt as layout type '${f.ftype}'"))
       (f.name, (row: InternalRow) => if (row.isNullAt(ord)) "" else render(row))
     }.toArray
   }
@@ -514,52 +502,10 @@ object FixedWidthEncoder {
     sb.toString
   }
 
-  private def place(bytes: Array[Byte], buf: Array[Byte], start: Int, width: Int, name: String): Unit = {
+  private[fixedwidth] def place(bytes: Array[Byte], buf: Array[Byte], start: Int, width: Int, name: String): Unit = {
     if (bytes.length > width)
       throw new IllegalArgumentException(
         s"fixedwidth: value of '$name' is ${bytes.length} bytes, exceeds field width $width")
     System.arraycopy(bytes, 0, buf, start, bytes.length)
-  }
-
-  private def ascii(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
-
-  private def fieldEncoder(
-      f: FieldSpec, ord: Int, dt: DataType, cs: java.nio.charset.Charset,
-      strictWidth: Boolean): Enc = {
-    def numeric(render: InternalRow => String): Enc = (row, buf) =>
-      if (!row.isNullAt(ord)) place(ascii(render(row)), buf, f.start, f.len, f.name)
-    val utf8 = cs == StandardCharsets.UTF_8
-    (f.ftype, dt) match {
-      case ("string", StringType) =>
-        (row, buf) =>
-          if (!row.isNullAt(ord)) {
-            val b = if (utf8) row.getUTF8String(ord).getBytes
-                    else row.getUTF8String(ord).toString.getBytes(cs)
-            // Strings may be truncated to the declared width (SURVEY.md §2.1
-            // S9: pad/truncate); numerics error instead — truncation would
-            // silently corrupt them. strictWidth=true makes over-width
-            // STRINGS error too (a payload field that silently loses bytes
-            // surfaces only as a downstream digest mismatch).
-            if (strictWidth && b.length > f.len)
-              throw new IllegalArgumentException(
-                s"fixedwidth: value of '${f.name}' is ${b.length} bytes, exceeds field " +
-                  s"width ${f.len} (strictWidth=true; widen the field or pre-truncate)")
-            System.arraycopy(b, 0, buf, f.start, math.min(b.length, f.len))
-          }
-      case ("int", IntegerType)        => numeric(r => r.getInt(ord).toString)
-      case ("long", LongType)          => numeric(r => r.getLong(ord).toString)
-      case ("long", IntegerType)       => numeric(r => r.getInt(ord).toString)
-      case ("double", DoubleType)      => numeric(r => r.getDouble(ord).toString)
-      case ("date", DateType)          => numeric(r => r.getInt(ord).toString)      // epoch day
-      case ("timestamp", TimestampType) => numeric(r => r.getLong(ord).toString)    // epoch micros
-      case ("timestamp", TimestampNTZType) => numeric(r => r.getLong(ord).toString) // epoch micros (no zone)
-      case (FieldSpec.DecimalRe(p, s), dt: DecimalType)
-          if dt.precision == p.toInt && dt.scale == s.toInt =>
-        // toPlainString: no exponent notation, exact inverse of parseDecimal
-        numeric(r => r.getDecimal(ord, dt.precision, dt.scale).toJavaBigDecimal.toPlainString)
-      case (ft, other) =>
-        throw new IllegalArgumentException(
-          s"fixedwidth: cannot encode column '${f.name}' of Spark type $other as layout type '$ft'")
-    }
   }
 }

@@ -150,15 +150,15 @@ object FwzFormat {
       * fold a query pays O(fields) to discard a whole out-of-range file
       * instead of O(frames): the difference between minutes and
       * milliseconds of driver planning on a 10^8-frame feed. Self-decoding
-      * via the recorded `ftype` + trim/charset conventions, so the fold
-      * needs no reader options. */
+      * through [[codecOf]], so the fold needs no reader options. */
     lazy val envelope: FwzStatsBlock = FwzStatsBlock(
       charsetName, trimId,
       fields.map { f =>
+        lazy val codec = codecOf(f)
         val n = f.flags.length
         var flags = 0
-        var minV: Any = null
-        var maxV: Any = null
+        var minV: AnyRef = null
+        var maxV: AnyRef = null
         var minB: Array[Byte] = null
         var maxB: Array[Byte] = null
         var i = 0
@@ -169,12 +169,12 @@ object FwzFormat {
             flags |= fl & (FlagHasValue | FlagHasNull)
             if ((fl & FlagHasValue) != 0) {
               try {
-                val mn = FwzStatsDecode.decode(f.ftype, f.mins(i), trimId, charsetName)
-                val mx = FwzStatsDecode.decode(f.ftype, f.maxs(i), trimId, charsetName)
-                if (minV == null || mn.asInstanceOf[Comparable[Any]].compareTo(minV) < 0) {
+                val mn = codec.extreme(f.mins(i))
+                val mx = codec.extreme(f.maxs(i))
+                if (minV == null || codec.compare(mn, minV) < 0) {
                   minV = mn; minB = f.mins(i)
                 }
-                if (maxV == null || mx.asInstanceOf[Comparable[Any]].compareTo(maxV) > 0) {
+                if (maxV == null || codec.compare(mx, maxV) > 0) {
                   maxV = mx; maxB = f.maxs(i)
                 }
               } catch { case _: Exception => flags = FlagUnknown }
@@ -188,11 +188,25 @@ object FwzFormat {
           Array(if (minB != null) minB else zero),
           Array(if (maxB != null) maxB else zero))
       })
+
+    /** The codec of an entry under the block's RECORDED type token and
+      * string conventions — needs no reader options. The same parsers a
+      * record read uses. */
+    def codecOf(f: FwzFieldStats): FieldCodec = {
+      val dt = try FieldSpec(f.name, f.ftype, f.start, f.width).dataType catch {
+        case _: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"fixedwidth: unknown fwz stats type token '${f.ftype}'")
+      }
+      val (trimLeft, trimRight) = TrimById.get(trimId).fold((false, false))(FixedWidthOptions.TrimModes)
+      FieldCodec(dt, trimLeft, trimRight, charsetName)
+    }
   }
 
-  /** trim option ↔ the byte recorded in the stats block. */
+  /** trim option ↔ the byte recorded in the stats block, one table read in
+    * both directions. */
   val TrimIds: Map[String, Byte] =
     Map("right" -> 0.toByte, "left" -> 1.toByte, "both" -> 2.toByte, "none" -> 3.toByte)
+  private[fixedwidth] val TrimById: Map[Byte, String] = TrimIds.map(_.swap)
 
   final case class FwzFooter(
       codec: Byte, frames: Seq[FwzFrame], stats: Option[FwzStatsBlock] = None) {
@@ -511,31 +525,6 @@ object FwzFormat {
       .put(if (statsBytes.isDefined) VersionStatsV3 else Version).putInt(Magic)
     out.write(bb.array())
   }
-}
-
-/** Decode one stats extreme slice under the block's RECORDED conventions —
-  * shared by the whole-file envelope fold (no reader in sight) and the
-  * plan-time skipper (whose string-validity gate guarantees the reader's
-  * conventions equal the recorded ones; numeric parses are
-  * convention-independent). Same parsers a record read uses. */
-private[fixedwidth] object FwzStatsDecode {
-  def decode(ftype: String, b: Array[Byte], trimId: Byte, charsetName: String): Any =
-    ftype match {
-      case "int" | "date" => Integer.valueOf(AsciiParse.parseInt(b, 0, b.length))
-      case "long" | "timestamp" => java.lang.Long.valueOf(AsciiParse.parseLong(b, 0, b.length))
-      case "double" =>
-        val d = AsciiParse.parseDouble(b, 0, b.length)
-        java.lang.Double.valueOf(if (d == 0.0d) 0.0d else d) // Catalyst -0.0 normalization
-      case "string" =>
-        val trimRight = trimId == 0 || trimId == 2
-        val trimLeft = trimId == 1 || trimId == 2
-        AsciiParse.decodeString(b, 0, b.length, trimLeft, trimRight,
-          java.nio.charset.Charset.forName(charsetName))
-      case FieldSpec.DecimalRe(p, s) =>
-        AsciiParse.parseDecimal(b, 0, b.length, p.toInt, s.toInt).toJavaBigDecimal
-      case other =>
-        throw new IllegalArgumentException(s"fixedwidth: unknown fwz stats type token '$other'")
-    }
 }
 
 /** Reads at most `limit` bytes from `in` — bounds a frame run so the

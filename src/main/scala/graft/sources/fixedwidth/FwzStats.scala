@@ -34,11 +34,9 @@ object FwzStats {
     * exact bytes being compressed), [[block]] at file close. */
   final class Tracker(opts: FixedWidthOptions, statFields: Seq[FieldSpec]) {
     private val recLen = opts.recordLength
-    private val trimRight = opts.trim == "right" || opts.trim == "both"
-    private val trimLeft = opts.trim == "left" || opts.trim == "both"
-    private val cs = opts.charset
 
     private final class FieldAcc(val f: FieldSpec) {
+      val codec: FieldCodec = opts.codec(f)
       val flags = scala.collection.mutable.ArrayBuffer.empty[Byte]
       val mins = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
       val maxs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
@@ -63,9 +61,10 @@ object FwzStats {
       while (ai < accs.length) {
         val acc = accs(ai)
         val f = acc.f
+        val codec = acc.codec
         var flags = 0
-        var minV: Any = null // Comparable under the field's typed ordering
-        var maxV: Any = null
+        var minV: AnyRef = null
+        var maxV: AnyRef = null
         var minB: Array[Byte] = null
         var maxB: Array[Byte] = null
         try {
@@ -73,43 +72,18 @@ object FwzStats {
           while (base < len) {
             val from = base + f.start
             val until = from + f.len
-            val v: Any = f.ftype match {
-              case "string" =>
-                // decodeString zero-copies UTF8 out of `buf`; clone before
-                // keeping (the next frame reuses the buffer)
-                AsciiParse.decodeString(buf, from, until, trimLeft, trimRight, cs)
-              case _ if AsciiParse.isBlank(buf, from, until) => null
-              case "int" | "date" =>
-                Integer.valueOf(AsciiParse.parseInt(buf, from, until))
-              case "long" | "timestamp" =>
-                java.lang.Long.valueOf(AsciiParse.parseLong(buf, from, until))
-              case "double" =>
-                val d = AsciiParse.parseDouble(buf, from, until)
-                // Catalyst-normalized: -0.0 ranks as 0.0 (a pushed
-                // EqualTo(0.0) must not skip a frame holding only -0.0);
-                // NaN ranks greatest via Double.compare — both matching the
-                // pushed-filter comparator in FixedWidthFilters.
-                java.lang.Double.valueOf(if (d == 0.0d) 0.0d else d)
-              case FieldSpec.DecimalRe(p, s) =>
-                AsciiParse.parseDecimal(buf, from, until, p.toInt, s.toInt)
-                  .toJavaBigDecimal
-              case _ => throw new NumberFormatException(s"untrackable type ${f.ftype}")
-            }
+            // a UTF-8 string value shares `buf`, which stays unchanged
+            // until this frame is folded
+            val v = codec.statsValue(buf, from, until)
             if (v == null) flags |= FlagHasNull
             else {
               flags |= FlagHasValue
-              if (minV == null || v.asInstanceOf[Comparable[Any]].compareTo(minV) < 0) {
-                minV = v match {
-                  case u: UTF8String => u.clone()
-                  case other => other
-                }
+              if (minV == null || codec.compare(v, minV) < 0) {
+                minV = v
                 minB = java.util.Arrays.copyOfRange(buf, from, until)
               }
-              if (maxV == null || v.asInstanceOf[Comparable[Any]].compareTo(maxV) > 0) {
-                maxV = v match {
-                  case u: UTF8String => u.clone()
-                  case other => other
-                }
+              if (maxV == null || codec.compare(v, maxV) > 0) {
+                maxV = v
                 maxB = java.util.Arrays.copyOfRange(buf, from, until)
               }
             }
@@ -155,16 +129,13 @@ object FwzStats {
       }
       if (!any) return false
       try {
-        var prevMax: Any = null
+        var prevMax: AnyRef = null
         i = 0
         while (i < n) {
           if ((a.flags(i) & FlagHasValue) != 0) {
-            val mn = FwzStatsDecode.decode(
-              a.f.ftype, a.mins(i), FwzFormat.TrimIds(opts.trim), opts.charsetName)
-            if (prevMax != null && prevMax.asInstanceOf[Comparable[Any]].compareTo(mn) > 0)
-              return false
-            prevMax = FwzStatsDecode.decode(
-              a.f.ftype, a.maxs(i), FwzFormat.TrimIds(opts.trim), opts.charsetName)
+            val mn = a.codec.extreme(a.mins(i))
+            if (prevMax != null && a.codec.compare(prevMax, mn) > 0) return false
+            prevMax = a.codec.extreme(a.maxs(i))
           }
           i += 1
         }
@@ -259,20 +230,17 @@ object FwzStats {
   def usableEntry(
       opts: FixedWidthOptions,
       block: FwzStatsBlock,
-      name: String): Option[(FieldSpec, FwzFieldStats)] =
+      name: String): Option[(FieldCodec, FwzFieldStats)] =
     opts.fields.find(_.name.equalsIgnoreCase(name)).flatMap { fs =>
-      val stringOk = fs.ftype != "string" ||
+      val codec = opts.codec(fs)
+      val stringOk = !codec.isString ||
         (FwzFormat.TrimIds.get(opts.trim).contains(block.trimId) &&
           block.charsetName.equalsIgnoreCase(opts.charsetName))
-      val typeOk =
-        Set("int", "long", "date", "timestamp", "double").contains(fs.ftype) ||
-          FieldSpec.DecimalRe.matches(fs.ftype) ||
-          fs.ftype == "string"
-      if (!typeOk || !stringOk) None
+      if (!stringOk) None
       else block.fields.find(b =>
         b.name.equalsIgnoreCase(fs.name) && b.ftype == fs.ftype &&
           b.start == fs.start && b.width == fs.len)
-        .map(fs -> _)
+        .map(codec -> _)
     }
 
   /** Compile the pushed conjunction into a per-frame may-match predicate
@@ -287,76 +255,29 @@ object FwzStats {
       block: FwzStatsBlock): Option[Int => Boolean] = {
     if (filters.isEmpty || block.fields.isEmpty) return None
 
-    /** Per-field soundness gates shared with the aggregate path — see
-      * [[usableEntry]]. */
-    def statOf(name: String): Option[(FieldSpec, FwzFieldStats)] =
-      usableEntry(opts, block, name)
-
     /** Decoded extreme bounds, memoized per (entry, bound, frame): a
       * conjunction with several leaves on one field decodes each frame's
       * bound ONCE, not once per leaf — and one-sided comparisons never
-      * decode the bound they don't test. Decoding goes through the shared
-      * recorded-convention decoder (the string-validity gate above
-      * guarantees the reader's trim/charset equal the recorded ones;
-      * numerics are convention-independent), so it is identical to a
-      * record read of those bytes. A slice that fails the typed parse —
-      * possible only in a foreign-written stats block, since this writer
-      * ranks extremes through the same parser — memoizes as
-      * [[Undecodable]] and the leaf degrades to may-match, mirroring the
-      * envelope fold's degrade-don't-crash contract. */
+      * decode the bound they don't test. Decoding goes through the reader's
+      * field codec, whose conventions equal the recorded ones (the
+      * string-validity gate above; numerics are convention-independent),
+      * so it is identical to a record read of those bytes; pushed literals
+      * convert through the same codec as the record filter's. A slice that
+      * fails the typed parse — possible only in a foreign-written stats
+      * block, since this writer ranks extremes through the same parser —
+      * memoizes as [[Undecodable]] and the leaf degrades to may-match,
+      * mirroring the envelope fold's degrade-don't-crash contract. */
     val decodeMemo = scala.collection.mutable.HashMap.empty[(FwzFieldStats, Boolean), Array[AnyRef]]
-    def bound(fs: FieldSpec, st: FwzFieldStats, i: Int, wantMax: Boolean): AnyRef = {
+    def bound(codec: FieldCodec, st: FwzFieldStats, i: Int, wantMax: Boolean): AnyRef = {
       val arr = decodeMemo.getOrElseUpdate((st, wantMax), new Array[AnyRef](st.flags.length))
       var v = arr(i)
       if (v == null) {
-        val b = if (wantMax) st.maxs(i) else st.mins(i)
-        v = try FwzStatsDecode.decode(fs.ftype, b, block.trimId, block.charsetName)
-              .asInstanceOf[AnyRef]
+        v = try codec.extreme(if (wantMax) st.maxs(i) else st.mins(i))
             catch { case _: Exception => Undecodable }
         arr(i) = v
       }
       v
     }
-
-    /** Convert a pushed literal to the same comparable form [[decode]]
-      * yields — mirroring FixedWidthFilters.cmp's conversions exactly. */
-    def literal(fs: FieldSpec, value: Any): Option[Any] = fs.ftype match {
-      case "int" | "date" =>
-        import org.apache.spark.sql.catalyst.util.DateTimeUtils
-        value match {
-          case d: java.sql.Date        => Some(Integer.valueOf(DateTimeUtils.fromJavaDate(d)))
-          case ld: java.time.LocalDate => Some(Integer.valueOf(DateTimeUtils.localDateToDays(ld)))
-          case n: Number               => Some(Integer.valueOf(n.intValue()))
-          case _                       => None
-        }
-      case "long" | "timestamp" =>
-        import org.apache.spark.sql.catalyst.util.DateTimeUtils
-        value match {
-          case t: java.sql.Timestamp        => Some(java.lang.Long.valueOf(DateTimeUtils.fromJavaTimestamp(t)))
-          case inst: java.time.Instant      => Some(java.lang.Long.valueOf(DateTimeUtils.instantToMicros(inst)))
-          case ldt: java.time.LocalDateTime => Some(java.lang.Long.valueOf(DateTimeUtils.localDateTimeToMicros(ldt)))
-          case n: Number                    => Some(java.lang.Long.valueOf(n.longValue()))
-          case _                            => None
-        }
-      case "double" => value match {
-        case n: Number =>
-          val d = n.doubleValue()
-          Some(java.lang.Double.valueOf(if (d == 0.0d) 0.0d else d))
-        case _ => None
-      }
-      case "string" => Some(UTF8String.fromString(value.toString))
-      case FieldSpec.DecimalRe(_, _) => value match {
-        case b: java.math.BigDecimal => Some(b)
-        case b: BigDecimal           => Some(b.bigDecimal)
-        case n: Number               => Some(new java.math.BigDecimal(n.toString))
-        case _                       => None
-      }
-      case _ => None
-    }
-
-    // BigDecimal extremes compare against literals of ANY scale via
-    // compareTo — same numeric-value semantics as the record filter.
-    def cmpVals(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
 
     def unknown(st: FwzFieldStats, i: Int): Boolean = (st.flags(i) & FlagUnknown) != 0
     def hasVal(st: FwzFieldStats, i: Int): Boolean = (st.flags(i) & FlagHasValue) != 0
@@ -403,9 +324,9 @@ object FwzStats {
       * slice is as out-of-contract as one recording wrong extreme bytes. A
       * probed bound that still fails to decode bails the whole leaf back
       * to its linear walk. */
-    def orderedBound(fs: FieldSpec, st: FwzFieldStats, valIdx: Array[Int])(
-        j: Int, wantMax: Boolean): Any = {
-      val v = bound(fs, st, valIdx(j), wantMax)
+    def orderedBound(codec: FieldCodec, st: FwzFieldStats, valIdx: Array[Int])(
+        j: Int, wantMax: Boolean): AnyRef = {
+      val v = bound(codec, st, valIdx(j), wantMax)
       if (v eq Undecodable) throw BailToLinear
       v
     }
@@ -421,43 +342,43 @@ object FwzStats {
       *     lo: first max_i ≥ lit (=, ≥) / first max_i > lit (>) / 0
       *     hi: last min_i ≤ lit (=, ≤) / last min_i < lit (<) / n-1. */
     def cmpLeaf(name: String, value: Any, op: String): Pred =
-      statOf(name).flatMap { case (fs, st) =>
-        literal(fs, value).map { lit =>
+      usableEntry(opts, block, name).flatMap { case (codec, st) =>
+        codec.literal(value).map { lit =>
           def linear: Pred = op match {
             case "=" => Pred(i => unknown(st, i) || (hasVal(st, i) && {
-              val mn = bound(fs, st, i, wantMax = false)
-              val mx = bound(fs, st, i, wantMax = true)
+              val mn = bound(codec, st, i, wantMax = false)
+              val mx = bound(codec, st, i, wantMax = true)
               (mn eq Undecodable) || (mx eq Undecodable) ||
-                (cmpVals(mn, lit) <= 0 && cmpVals(mx, lit) >= 0)
+                (codec.compare(mn, lit) <= 0 && codec.compare(mx, lit) >= 0)
             }), trivial = false)
             case ">" | ">=" => Pred(i => unknown(st, i) || (hasVal(st, i) && {
-              val mx = bound(fs, st, i, wantMax = true)
+              val mx = bound(codec, st, i, wantMax = true)
               (mx eq Undecodable) ||
-                (if (op == ">") cmpVals(mx, lit) > 0 else cmpVals(mx, lit) >= 0)
+                (if (op == ">") codec.compare(mx, lit) > 0 else codec.compare(mx, lit) >= 0)
             }), trivial = false)
             case _ => Pred(i => unknown(st, i) || (hasVal(st, i) && {
-              val mn = bound(fs, st, i, wantMax = false)
+              val mn = bound(codec, st, i, wantMax = false)
               (mn eq Undecodable) ||
-                (if (op == "<") cmpVals(mn, lit) < 0 else cmpVals(mn, lit) <= 0)
+                (if (op == "<") codec.compare(mn, lit) < 0 else codec.compare(mn, lit) <= 0)
             }), trivial = false)
           }
           orderedValIdx(st) match {
             case None => linear
             case Some(valIdx) =>
               val m = valIdx.length
-              val b = orderedBound(fs, st, valIdx) _
+              val b = orderedBound(codec, st, valIdx) _
               try {
                 // ranks within the value-frame subsequence, mapped back to
                 // frame indices; all-null frames inside the interval are
                 // excluded by the hasVal check (a compare never matches null)
                 val lo = op match {
-                  case ">" => firstTrue(m, j => cmpVals(b(j, true), lit) > 0)
-                  case ">=" | "=" => firstTrue(m, j => cmpVals(b(j, true), lit) >= 0)
+                  case ">" => firstTrue(m, j => codec.compare(b(j, true), lit) > 0)
+                  case ">=" | "=" => firstTrue(m, j => codec.compare(b(j, true), lit) >= 0)
                   case _ => 0
                 }
                 val hi = op match {
-                  case "<" => firstTrue(m, j => cmpVals(b(j, false), lit) >= 0) - 1
-                  case "<=" | "=" => firstTrue(m, j => cmpVals(b(j, false), lit) > 0) - 1
+                  case "<" => firstTrue(m, j => codec.compare(b(j, false), lit) >= 0) - 1
+                  case "<=" | "=" => firstTrue(m, j => codec.compare(b(j, false), lit) > 0) - 1
                   case _ => m - 1
                 }
                 if (lo >= m || hi < 0 || lo > hi) Pred(_ => false, trivial = false)
@@ -497,15 +418,15 @@ object FwzStats {
       case LessThan(a, v) => cmpLeaf(a, v, "<")
       case LessThanOrEqual(a, v) => cmpLeaf(a, v, "<=")
       case In(a, vs) =>
-        statOf(a).flatMap { case (fs, st) =>
-          val lits = vs.map(literal(fs, _))
+        usableEntry(opts, block, a).flatMap { case (codec, st) =>
+          val lits = vs.map(codec.literal)
           if (lits.exists(_.isEmpty)) None
           else {
             def linear: Pred = Pred(i => unknown(st, i) || (hasVal(st, i) && {
-              val mn = bound(fs, st, i, wantMax = false)
-              val mx = bound(fs, st, i, wantMax = true)
+              val mn = bound(codec, st, i, wantMax = false)
+              val mx = bound(codec, st, i, wantMax = true)
               (mn eq Undecodable) || (mx eq Undecodable) ||
-                lits.exists(l => cmpVals(mn, l.get) <= 0 && cmpVals(mx, l.get) >= 0)
+                lits.exists(l => codec.compare(mn, l.get) <= 0 && codec.compare(mx, l.get) >= 0)
             }), trivial = false)
             // Ordered fast path: an IN list is a disjunction of equalities,
             // and each equality resolves to one frame interval exactly as
@@ -523,12 +444,12 @@ object FwzStats {
               case None => linear
               case Some(valIdx) =>
                 val m = valIdx.length
-                val b = orderedBound(fs, st, valIdx) _
+                val b = orderedBound(codec, st, valIdx) _
                 try {
                   val ivs = lits.flatMap { l =>
                     val lit = l.get
-                    val lo = firstTrue(m, j => cmpVals(b(j, true), lit) >= 0)
-                    val hi = firstTrue(m, j => cmpVals(b(j, false), lit) > 0) - 1
+                    val lo = firstTrue(m, j => codec.compare(b(j, true), lit) >= 0)
+                    val hi = firstTrue(m, j => codec.compare(b(j, false), lit) > 0) - 1
                     if (lo >= m || hi < 0 || lo > hi) None
                     else Some((valIdx(lo), valIdx(hi)))
                   }.sortBy(_._1)
@@ -553,23 +474,23 @@ object FwzStats {
           }
         }.getOrElse(AlwaysTrue)
       case IsNull(a) =>
-        statOf(a).map { case (fs, st) =>
+        usableEntry(opts, block, a).map { case (codec, st) =>
           // string fields decode to "" (never SQL NULL) — IsNull can never
           // match, matching FixedWidthFilters.isNullPred
-          if (fs.ftype == "string") Pred(i => unknown(st, i), trivial = false)
+          if (codec.isString) Pred(i => unknown(st, i), trivial = false)
           else Pred(i => unknown(st, i) || hasNull(st, i), trivial = false)
         }.getOrElse(AlwaysTrue)
       case IsNotNull(a) =>
-        statOf(a).map { case (fs, st) =>
-          if (fs.ftype == "string") AlwaysTrue // strings are never NULL
+        usableEntry(opts, block, a).map { case (codec, st) =>
+          if (codec.isString) AlwaysTrue // strings are never NULL
           else Pred(i => unknown(st, i) || hasVal(st, i), trivial = false)
         }.getOrElse(AlwaysTrue)
       case StringStartsWith(a, v) =>
-        statOf(a).filter(_._1.ftype == "string").map { case (fs, st) =>
+        usableEntry(opts, block, a).filter(_._1.isString).map { case (codec, st) =>
           val p = UTF8String.fromString(v)
           def linear: Pred = Pred(i => unknown(st, i) || (hasVal(st, i) && {
-            val mn = bound(fs, st, i, wantMax = false)
-            val mx = bound(fs, st, i, wantMax = true)
+            val mn = bound(codec, st, i, wantMax = false)
+            val mx = bound(codec, st, i, wantMax = true)
             (mn eq Undecodable) || (mx eq Undecodable) ||
               (prefixCmp(mn.asInstanceOf[UTF8String], p) <= 0 &&
                 prefixCmp(mx.asInstanceOf[UTF8String], p) >= 0)
@@ -586,7 +507,7 @@ object FwzStats {
             case None => linear
             case Some(valIdx) =>
               val m = valIdx.length
-              val b = orderedBound(fs, st, valIdx) _
+              val b = orderedBound(codec, st, valIdx) _
               try {
                 val lo = firstTrue(m,
                   j => prefixCmp(b(j, true).asInstanceOf[UTF8String], p) >= 0)

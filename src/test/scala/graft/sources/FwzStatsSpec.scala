@@ -411,4 +411,118 @@ class FwzStatsSpec extends SparkSpec with Matchers {
     read.filter(col("id").isNull).count() shouldBe 1000L
     read.filter(col("id").isNotNull).count() shouldBe 3000L
   }
+
+  test("every trim mode: edge-spaced strings decode, push down, prune, skip and aggregate like the unfiltered read") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.sources.fixedwidth.FixedWidthTable
+    val layout = "id:long:0:6,s:string:6:6"
+    val width = 6
+    // written left-aligned and space-padded to 6 bytes, so the stored bytes
+    // carry each value's own leading spaces plus the pad; 100-record runs
+    // cluster the frames and give each partition directory 100 records.
+    // " zz" is the greatest value only when leading spaces are trimmed, so
+    // extremes ranked under another trim convention answer MAX wrongly
+    val values = Seq(" ab", "  ab", "ab", "ab  ", " ab ", "a b", "b", " b", "ba ", "  ", "z", " zz")
+    val n = values.length * 100
+    val lits = Seq("ab", " ab", "ab ", " ab ", "  ab  ", "b", " ", "z", "zz ")
+    def decoded(v: String, trim: String): String = {
+      val padded = v.padTo(width, ' ')
+      val r = if (trim == "right" || trim == "both") padded.replaceAll(" +$", "") else padded
+      if (trim == "left" || trim == "both") r.replaceAll("^ +", "") else r
+    }
+    val filters: Seq[Filter] = lits.flatMap(l => Seq(
+      EqualTo("s", l), LessThan("s", l), GreaterThan("s", l),
+      StringStartsWith("s", l), StringEndsWith("s", l), StringContains("s", l))) :+
+      In("s", Array[Any]("ab", " ab ", "b", "zz "))
+    def column(f: Filter): org.apache.spark.sql.Column = f match {
+      case EqualTo(a, v)          => col(a) === v
+      case LessThan(a, v)         => col(a) < v
+      case GreaterThan(a, v)      => col(a) > v
+      case In(a, vs)              => col(a).isin(vs.toSeq: _*)
+      case StringStartsWith(a, v) => col(a).startsWith(v)
+      case StringEndsWith(a, v)   => col(a).endsWith(v)
+      case StringContains(a, v)   => col(a).contains(v)
+      case other                  => fail(s"no column form for $other")
+    }
+    // the fixture is ASCII, where String order is UTF8String's byte order
+    def holds(f: Filter, v: String): Boolean = f match {
+      case EqualTo(_, l)          => v == l
+      case LessThan(_, l)         => v.compareTo(l.toString) < 0
+      case GreaterThan(_, l)      => v.compareTo(l.toString) > 0
+      case In(_, ls)              => ls.contains(v)
+      case StringStartsWith(_, l) => v.startsWith(l)
+      case StringEndsWith(_, l)   => v.endsWith(l)
+      case StringContains(_, l)   => v.contains(l)
+      case other                  => fail(s"no reference for $other")
+    }
+    def norm(p: String): String = new Path(p).toUri.getPath
+
+    for (trim <- Seq("right", "left", "both", "none"); partitioned <- Seq(false, true))
+      withClue(s"trim=$trim partitioned=$partitioned: ") {
+        val dir = Files.createTempDirectory("graft-fwzstats-trims").toString
+        val w = (0 until n).map(i => (i.toLong, values(i / 100))).toDF("id", "s").coalesce(1)
+          .write.format("fixedwidth").option("fields", layout).option("trim", trim)
+          .option("compression", "zstd").option("frameBytes", (25 * 12).toString)
+          .option("frameStats", "all")
+        (if (partitioned) w.partitionBy("s") else w).mode("overwrite").save(dir)
+        val read = spark.read.format("fixedwidth").option("fields", layout)
+          .option("trim", trim).load(dir)
+
+        // decoded strings: the expected trim of each written value
+        val rows = read.select(col("id"), col("s"), col("offset"), col("_source_file"))
+          .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), norm(r.getString(3))))
+        rows.map(_._1).sorted shouldBe (0L until n.toLong).toArray
+        rows.foreach { case (id, s, _, _) =>
+          withClue(s"id=$id: ") { s shouldBe decoded(values((id / 100).toInt), trim) }
+        }
+
+        val o = FixedWidthOptions(new CaseInsensitiveStringMap(
+          Map("fields" -> layout, "recordLength" -> "12", "trim" -> trim).asJava))
+        val partFiles = FixedWidthTable.listPartitionedFiles(
+          new CaseInsensitiveStringMap(Map("path" -> dir).asJava), conf)
+        val fwzFiles = partFiles.map(pf => pf.status.getPath.toString -> pf.status.getLen)
+        var skippedAny = 0L
+        var prunedAny = 0L
+        filters.foreach { f =>
+          withClue(s"filter $f: ") {
+            val expected = rows.filter(r => holds(f, r._2))
+            // pushed predicate: the same rows as filtering the unfiltered read
+            read.filter(column(f)).select(col("id")).collect().map(_.getLong(0)).sorted shouldBe
+              expected.map(_._1).sorted
+            // frame skipping keeps every frame holding a matching record
+            val pm = new FwzStats.PlanMetrics
+            val chunks = FixedWidthScan.alignedPartitionsOf(fwzFiles, o, None, Array(f), pm)
+              .flatMap(_.asInstanceOf[FixedWidthInputPartition].chunks)
+            skippedAny += pm.framesSkipped
+            expected.foreach { case (id, _, off, path) =>
+              withClue(s"id=$id: ") {
+                chunks.exists(c => norm(c.filePath) == path &&
+                  c.dStart <= off && off < c.dStart + c.dLen) shouldBe true
+              }
+            }
+            // directory pruning keeps every file holding a matching record;
+            // an exact verdict means its kept files hold nothing else
+            if (partitioned) {
+              val res = FixedWidthTable.pruneFiles(partFiles, o, Array(f))
+              prunedAny += res.pruned
+              val kept = res.kept.map(st => norm(st.getPath.toString)).toSet
+              expected.map(_._4).toSet.subsetOf(kept) shouldBe true
+              res.exact shouldBe true
+              rows.filter(r => kept.contains(r._4)).map(_._1).sorted shouldBe expected.map(_._1).sorted
+            }
+          }
+        }
+        skippedAny should be > 0L
+        if (partitioned) prunedAny should be > 0L
+
+        // footer-answered MIN/MAX/COUNT of the string column
+        val agg = read.agg(min(col("s")), max(col("s")), count(lit(1)))
+        agg.queryExecution.executedPlan.toString should include("FixedWidthCountScan")
+        val r = agg.collect()(0)
+        (r.getString(0), r.getString(1), r.getLong(2)) shouldBe
+          ((rows.map(_._2).min, rows.map(_._2).max, n.toLong))
+      }
+  }
 }
