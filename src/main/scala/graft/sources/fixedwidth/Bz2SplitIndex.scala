@@ -65,27 +65,6 @@ object Bz2SplitIndex {
     * alone (zero phase-1 jobs) serves a fresh "driver". */
   private[sources] def clearMemoForTest(): Unit = cache.clear()
 
-  /** Content fingerprint folded into the cache key: the file's last
-    * ≤16 bytes, which for bzip2 contain the stream footer + COMBINED CRC32
-    * of every block — any same-length rewrite that changes any record
-    * changes this. Costs one positioned read per big file at plan time and
-    * closes the stale-index window a same-length rewrite inside the
-    * filesystem's mtime granularity would otherwise open (a stale index
-    * silently duplicates or drops records instead of erroring). */
-  private def tailFingerprint(p: Path, len: Long, conf: Configuration): Long = {
-    val n = math.min(16L, len).toInt
-    if (n <= 0) return 0L
-    val in = p.getFileSystem(conf).open(p)
-    try {
-      val buf = new Array[Byte](n)
-      in.readFully(len - n, buf, 0, n)
-      var h = 1125899906842597L
-      var i = 0
-      while (i < n) { h = h * 31 + buf(i); i += 1 }
-      h
-    } finally in.close()
-  }
-
   /** Indexed ranges for a SET of bz2 files — one executor-parallel phase-1
     * job covers every uncached (file, range) pair across the whole set, so
     * planning a directory of N large files decompresses the entire tree in
@@ -106,7 +85,11 @@ object Bz2SplitIndex {
     val keyed = big.map { case (p, len) =>
       val hp = new Path(p)
       val mtime = hp.getFileSystem(conf).getFileStatus(hp).getModificationTime
-      (p, len, (p, len, mtime, rangeBytes, tailFingerprint(hp, len, conf)))
+      // the last ≤16 bytes hold the bzip2 stream footer + COMBINED CRC32 of
+      // every block: any same-length rewrite inside the filesystem's mtime
+      // granularity changes the key (a stale index silently duplicates or
+      // drops records instead of erroring)
+      (p, len, (p, len, mtime, rangeBytes, FwzFormat.tailFingerprint(hp, len, 16, conf)))
     }
     val unmemoized = keyed.filter { case (_, _, k) => !cache.containsKey(k) }
     // Sidecar tier between the JVM memo and phase 1: a hit with every key

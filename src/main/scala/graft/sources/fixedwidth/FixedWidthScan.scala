@@ -66,59 +66,34 @@ class FixedWidthScanBuilder(
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
 
-  // ---- COUNT(*) pushdown: the one aggregate an indexless fixed-width
-  // format can answer with ZERO data IO — every record is recordLength
-  // bytes, so the count is file lengths over the (partition-pruned) listing.
-  // On a 100 TB feed, `SELECT count(*) ... WHERE date = X` becomes a driver-
-  // side directory listing. Preconditions (else fall back to a normal scan):
-  //  - global aggregation, COUNT(*) columns only (no group-by, no count(col)
-  //    — typed fields can be NULL via blank bytes, which lengths can't see);
-  //  - pushed filters, if any, are EXACTLY answered by directory pruning
-  //    (PruneResult.exact) — a record-level residual would need real IO;
+  private val files = new FixedWidthPlanFiles(opts, tableOptions, conf)
+
+  // ---- Aggregate pushdown: COUNT(*), MIN and MAX answered from the file
+  // view alone, with ZERO data IO. Every record is recordLength bytes, so a
+  // count is file lengths over the (partition-pruned) listing, or footer
+  // totals for framed .fwz files; on a 100 TB feed, `SELECT count(*) ...
+  // WHERE date = X` becomes a driver-side directory listing. One planner
+  // serves every shape: a global aggregate is the group of zero columns.
+  // Preconditions (else Spark runs a normal scan):
+  //  - COUNT(*), MIN and MAX only (no count(col): typed fields can be NULL
+  //    via blank bytes, which lengths can't see);
+  //  - every group column a partition column bound in every kept file;
   //  - no DROPMALFORMED (dropped records aren't visible in lengths; the
   //    PERMISSIVE trailing-fragment floor IS visible — floor(len/recLen));
-  //  - no compressed files (on-disk length ≠ record count) and, under
-  //    FAILFAST, no truncated tail (the scan must throw, not undercount).
-  private lazy val listedFiles = FixedWidthTable.listPartitionedFiles(tableOptions, conf)
+  //  - pushed filters, if any, EXACTLY answered by directory pruning
+  //    (PruneResult.exact) — a record-level residual would need real IO.
+  // Groups merge by DECODED directory value (a foreign `k=01` directory
+  // merges with `k=1`). Per group, COUNT(*) sums the files' exact counts
+  // (FixedWidthPlanFiles.records); any unknowable count (a foreign
+  // compressed file, a FAILFAST fragment, an unreadable footer) declines the
+  // push. MIN/MAX of a field come from the directory values when the field
+  // is bound in every file of the group and each file holds a record (the
+  // distinct directory values ARE the distinct column values, by the writer
+  // contract); otherwise from the group's fwz footer envelopes.
 
-  // One prune walk per pushed-filter set: the aggregate-pushdown probes
-  // (countable, grouped counts, min/max preconditions, kept-with-parts) all
-  // ask the same question — without the memo a single COUNT(*) planning
-  // walked the full listing up to four times.
-  private var pruneMemo: Option[(Seq[org.apache.spark.sql.sources.Filter],
-    FixedWidthTable.PruneResult)] = None
-  private def prunedForPushed(): FixedWidthTable.PruneResult = {
-    val key = pushed.toSeq
-    pruneMemo match {
-      case Some((k, r)) if k == key => r
-      case _ =>
-        val r = FixedWidthTable.pruneFiles(listedFiles, opts, pushed)
-        pruneMemo = Some((key, r))
-        r
-    }
-  }
-
-  private lazy val countable: Option[Long] = {
-    val res = prunedForPushed()
-    val recLen = opts.recordLength.toLong
-    if (!res.exact || opts.dropMalformed) None
-    else {
-      // per-file exact counts: length arithmetic for plain files, footer
-      // reads for framed .fwz (count(*) over a compressed feed without
-      // decompressing a byte); any unknowable file disables the push
-      val counts = res.kept.map(
-        FixedWidthTable.exactRecordCount(_, recLen, opts.tolerant, conf))
-      if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
-    }
-  }
-
-  // GROUP BY over partition columns composes with the same trick: one group
-  // per distinct directory assignment, its count from that directory's file
-  // lengths. `SELECT date, count(*) ... GROUP BY date` on a date-partitioned
-  // feed never opens a file. Group keys are merged by DECODED value (a
-  // foreign `k=01` directory merges with `k=1`), validated driver-side;
-  // doubles are refused (Catalyst normalizes -0.0/NaN in group keys — not
-  // worth replicating for a pathological partition type).
+  /** The declared fields of a group-by, if each is one a directory value
+    * can answer (doubles refused: Catalyst normalizes -0.0/NaN in group
+    * keys — not worth replicating for a pathological partition type). */
   private def groupColsOf(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[Seq[FieldSpec]] = {
     val cols = agg.groupByExpressions.toSeq.map {
@@ -134,65 +109,6 @@ class FixedWidthScanBuilder(
     Some(fields)
   }
 
-  /** Grouped aggregate over partition columns, answered per DIRECTORY
-    * group: COUNT(*) from per-file exact counts (plain length math, framed
-    * footer reads — the original grouped-count push), and — r15 — MIN/MAX
-    * of fwz-stats-covered fields from the group's files' footer envelopes:
-    * `SELECT date, min(ts), max(ts), count(*) ... GROUP BY date` on a
-    * compressed feed is a footer walk, zero data IO. Any unanswerable
-    * position (unknowable count, plain/foreign member under min/max,
-    * uncovered field) declines the whole push. */
-  private def groupedAggOf(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[(Seq[FieldSpec], Seq[(Seq[String], Seq[FixedWidthListingCol])])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    if (agg.aggregateExpressions.isEmpty ||
-        !agg.aggregateExpressions.forall(e =>
-          e.isInstanceOf[CountStar] || e.isInstanceOf[Min] || e.isInstanceOf[Max])) return None
-    val fields = groupColsOf(agg).getOrElse(return None)
-    if (opts.dropMalformed) return None
-    val res = prunedForPushed()
-    if (!res.exact) return None
-    // need the partition assignment per kept file, not just the status
-    val keptPaths = res.kept.map(_.getPath.toString).toSet
-    val kept = listedFiles.filter(pf => keptPaths.contains(pf.status.getPath.toString))
-    val recLen = opts.recordLength.toLong
-    val lowerNames = fields.map(_.name.toLowerCase)
-    if (kept.exists(pf => !lowerNames.forall(pf.partValues.contains))) return None
-    try {
-      // group files by decoded key; keep the first raw representative
-      val grouped = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[Any], (Seq[String], scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus])]
-      kept.foreach { pf =>
-        val raws = lowerNames.map(pf.partValues)
-        val key = fields.zip(raws).map { case (f, r) => FixedWidthTable.decodeDirValue(opts, f, r) }
-        grouped.getOrElseUpdate(key,
-          (raws, scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]))._2 += pf.status
-      }
-      val rows = grouped.values.toSeq.map { case (raws, sts) =>
-        val cols: Seq[FixedWidthListingCol] = agg.aggregateExpressions.toSeq.map {
-          case _: CountStar =>
-            // per-file exact counts; any unknowable file disables the push
-            val counts = sts.map(FixedWidthTable.exactRecordCount(_, recLen, opts.tolerant, conf))
-            if (counts.exists(_.isEmpty)) return None
-            FixedWidthCountCol(counts.flatten.sum): FixedWidthListingCol
-          case m: Min =>
-            val f = minMaxFieldOf(m.column()).getOrElse(return None)
-            footerExtremeOver(sts.toSeq, f, wantMax = false)
-              .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol)
-              .getOrElse(return None)
-          case m: Max =>
-            val f = minMaxFieldOf(m.column()).getOrElse(return None)
-            footerExtremeOver(sts.toSeq, f, wantMax = true)
-              .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol)
-              .getOrElse(return None)
-          case _ => return None
-        }
-        (raws, cols)
-      }
-      Some((fields, rows))
-    } catch { case _: NumberFormatException => None }
-  }
-
   /** A declared field a MIN/MAX aggregate may target (doubles refused:
     * Catalyst normalizes -0.0/NaN in ways not worth replicating). */
   private def minMaxFieldOf(
@@ -202,20 +118,23 @@ class FixedWidthScanBuilder(
     case _ => None
   }
 
-  /** Extreme of a stats-covered field over the given ALL-FRAMED files, from
-    * their cached footers' whole-file envelopes — see the scaladoc on the
-    * global path's footerExtremeOf wrapper inside globalListingAggOf. None
-    * = not answerable; Some(None) = no non-null value (SQL NULL). */
+  /** Extreme of a stats-covered field over ALL-FRAMED files, from their
+    * footers' whole-file envelopes ([[FwzStats]]): `SELECT min(ts),
+    * max(ts), count(*)` (the feed-freshness query) over a 100 TB compressed
+    * feed is a footer walk. Sound because envelope extremes are the
+    * decoded-value extremes of every record (tracked through the reader's
+    * own parsers, type/slice/convention gated by usableEntry); NULLs never
+    * participate (FlagHasValue); an unknown envelope, a foreign trailing
+    * fragment or any plain/foreign member declines. None = not answerable;
+    * Some(None) = no non-null value (SQL NULL). */
   private def footerExtremeOver(
-      files: Seq[org.apache.hadoop.fs.FileStatus], f: FieldSpec, wantMax: Boolean): Option[Option[Array[Byte]]] = {
+      sts: Seq[org.apache.hadoop.fs.FileStatus], f: FieldSpec, wantMax: Boolean): Option[Option[Array[Byte]]] = {
     val recLen = opts.recordLength.toLong
     var best: AnyRef = null
     var bestSlice: Array[Byte] = null
-    files.foreach { st =>
+    sts.foreach { st =>
       if (!FwzFormat.isFramed(st.getPath)) return None
-      val footer =
-        try FwzFormat.readFooterCached(st.getPath, st.getLen, st.getModificationTime, conf)
-        catch { case _: Exception => return None }
+      val footer = files.footer(st).getOrElse(return None)
       if (footer.totalDLen % recLen != 0) return None // foreign trailing fragment
       val block = footer.stats.getOrElse(return None)
       val (codec, entry) = FwzStats.usableEntry(opts, block.envelope, f.name).getOrElse(return None)
@@ -234,100 +153,76 @@ class FixedWidthScanBuilder(
     Some(Option(bestSlice))
   }
 
-  // Global MIN/MAX over a partition column composes too: the distinct
-  // directory values ARE the distinct column values (writer contract), so
-  // "what date range does this feed cover?" is a listing walk. Values
-  // compare through their DECODED Catalyst forms (all supported types are
-  // Comparable with Catalyst-identical order: UTF8String binary, numeric,
-  // Decimal; doubles refused — -0.0/NaN ordering not worth replicating).
-  private def minMaxPreconditionsOk: Boolean = {
-    val res = prunedForPushed()
-    val recLen = opts.recordLength.toLong
-    // every kept file must have a KNOWN, NONZERO record count: a directory
-    // value backed only by record-less files (a tolerant trailing-fragment
-    // file, or an empty framed write) must not surface in min/max
-    res.exact && !opts.dropMalformed &&
-      res.kept.forall(st =>
-        FixedWidthTable.exactRecordCount(st, recLen, opts.tolerant, conf).exists(_ > 0L))
-  }
-
-  private def globalListingAggOf(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[Seq[FixedWidthListingCol]] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    if (agg.groupByExpressions.nonEmpty || agg.aggregateExpressions.isEmpty) return None
-
-    lazy val keptWithParts: Option[Seq[FixedWidthTable.PartitionedFile]] =
-      if (!minMaxPreconditionsOk) None
-      else {
-        val keptPaths = prunedForPushed().kept
-          .map(_.getPath.toString).toSet
-        Some(listedFiles.filter(pf => keptPaths.contains(pf.status.getPath.toString)))
-      }
-
-    /** Extreme of a stats-covered field over an ALL-FRAMED kept listing,
-      * from the cached footers' whole-file envelopes ([[FwzStats]]): the
-      * min/max twin of the framed count(*) — `SELECT min(ts), max(ts),
-      * count(*)` (the feed-freshness query) over a 100 TB compressed feed
-      * becomes a footer walk with ZERO data IO. Sound because envelope
-      * extremes are the decoded-value extremes of every record (tracked
-      * through the reader's own parsers, type/slice/convention gated by
-      * usableEntry); NULLs never participate (FlagHasValue); an unknown
-      * envelope, a foreign trailing fragment, any plain/foreign member, or
-      * a residual pushed filter disables the push. None = not answerable;
-      * Some(None) = no non-null value anywhere (SQL NULL). */
-    def footerExtremeOf(f: FieldSpec, wantMax: Boolean): Option[Option[Array[Byte]]] = {
-      val res = prunedForPushed()
-      if (!res.exact || opts.dropMalformed) return None
-      footerExtremeOver(res.kept, f, wantMax)
-    }
-
-    /** Extreme of a partition column over the kept listing: None = not
-      * answerable; Some(None) = no non-null value (SQL NULL result). */
-    def extremeOf(f: FieldSpec, wantMax: Boolean): Option[Option[String]] =
-      keptWithParts.flatMap { kept =>
-        val lower = f.name.toLowerCase
-        if (!kept.forall(_.partValues.contains(lower))) None
-        else try {
-          val candidates = kept.map(_.partValues(lower)).distinct
-            .map(raw => raw -> FixedWidthTable.decodeDirValue(opts, f, raw))
-            .filter(_._2 != null) // blank = SQL NULL: min/max ignore it
-          if (candidates.isEmpty) Some(None)
-          else Some(Some(candidates.reduceLeft { (a, b) =>
-            val c = a._2.asInstanceOf[Comparable[Any]].compareTo(b._2)
-            if ((c >= 0) == wantMax) a else b
-          }._1))
-        } catch { case _: NumberFormatException => None }
-      }
-
-    val cols = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar =>
-        countable.map(n => FixedWidthCountCol(n): FixedWidthListingCol).getOrElse(return None)
-      case m: Min =>
-        val f = minMaxFieldOf(m.column()).getOrElse(return None)
-        extremeOf(f, wantMax = false)
-          .map(raw => FixedWidthValueCol(f, raw): FixedWidthListingCol)
-          .orElse(footerExtremeOf(f, wantMax = false)
-            .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol))
-          .getOrElse(return None)
-      case m: Max =>
-        val f = minMaxFieldOf(m.column()).getOrElse(return None)
-        extremeOf(f, wantMax = true)
-          .map(raw => FixedWidthValueCol(f, raw): FixedWidthListingCol)
-          .orElse(footerExtremeOf(f, wantMax = true)
-            .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol))
-          .getOrElse(return None)
-      case _ => return None
-    }
-    Some(cols)
+  /** Extreme of a field over a group's directory values: None when the
+    * field is not bound in every file, when a file holds no record (a
+    * directory value backed only by record-less files — a tolerant
+    * trailing-fragment file, an empty framed write — must not surface), or
+    * when a value does not decode. Values compare through their DECODED
+    * Catalyst forms (all listing-answerable types are Comparable with
+    * Catalyst-identical order). Some(None) = no non-null value (SQL NULL). */
+  private def dirExtremeOver(
+      pfs: Seq[FixedWidthTable.PartitionedFile], counts: Seq[Long],
+      f: FieldSpec, wantMax: Boolean): Option[Option[String]] = {
+    val lower = f.name.toLowerCase
+    if (counts.contains(0L) || !pfs.forall(_.partValues.contains(lower))) return None
+    try {
+      val candidates = pfs.map(_.partValues(lower)).distinct
+        .map(raw => raw -> FixedWidthTable.decodeDirValue(opts, f, raw))
+        .filter(_._2 != null) // blank = SQL NULL: min/max ignore it
+      Some(if (candidates.isEmpty) None else Some(candidates.reduceLeft { (a, b) =>
+        val c = a._2.asInstanceOf[Comparable[Any]].compareTo(b._2)
+        if ((c >= 0) == wantMax) a else b
+      }._1))
+    } catch { case _: NumberFormatException => None }
   }
 
   /** The answer of a fully pushed aggregate: its group columns and one
-    * (raw group values, result columns) row per group. A global aggregate
-    * is the one group of zero columns. */
+    * (raw group values, result columns) row per group. */
   private def aggAnswerOf(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[(Seq[FieldSpec], Seq[(Seq[String], Seq[FixedWidthListingCol])])] =
-    if (agg.groupByExpressions.isEmpty) globalListingAggOf(agg).map(cols => (Nil, Seq((Nil, cols))))
-    else groupedAggOf(agg)
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[(Seq[FieldSpec], Seq[(Seq[String], Seq[FixedWidthListingCol])])] = {
+    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
+    // the shape, before any IO: group columns, and the MIN/MAX target of
+    // each position
+    val aggs = agg.aggregateExpressions.toSeq
+    if (aggs.isEmpty || opts.dropMalformed) return None
+    val fields = groupColsOf(agg).getOrElse(return None)
+    val targets: Seq[Option[FieldSpec]] = aggs.map {
+      case _: CountStar => None
+      case m: Min => Some(minMaxFieldOf(m.column()).getOrElse(return None))
+      case m: Max => Some(minMaxFieldOf(m.column()).getOrElse(return None))
+      case _ => return None
+    }
+    val res = files.pruned(pushed)
+    if (!res.exact) return None
+    val lowerNames = fields.map(_.name.toLowerCase)
+    if (res.keptFiles.exists(pf => !lowerNames.forall(pf.partValues.contains))) return None
+    // group by decoded key, keeping the first raw representative; zero
+    // group columns make exactly one group, even one holding no file
+    val grouped = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[Any], (Seq[String], scala.collection.mutable.ArrayBuffer[FixedWidthTable.PartitionedFile])]
+    if (fields.isEmpty) grouped(Nil) = (Nil, scala.collection.mutable.ArrayBuffer.empty)
+    try res.keptFiles.foreach { pf =>
+      val raws = lowerNames.map(pf.partValues)
+      val key = fields.zip(raws).map { case (f, r) => FixedWidthTable.decodeDirValue(opts, f, r) }
+      grouped.getOrElseUpdate(key, (raws, scala.collection.mutable.ArrayBuffer.empty))._2 += pf
+    } catch { case _: NumberFormatException => return None }
+    val rows = grouped.values.toSeq.map { case (raws, members) =>
+      val pfs = members.toSeq
+      val counts = pfs.map(pf => files.records(pf.status).getOrElse(return None))
+      val cols = aggs.zip(targets).map {
+        case (_, None) => FixedWidthCountCol(counts.sum): FixedWidthListingCol
+        case (m, Some(f)) =>
+          val wantMax = m.isInstanceOf[Max]
+          dirExtremeOver(pfs, counts, f, wantMax)
+            .map(raw => FixedWidthValueCol(f, raw): FixedWidthListingCol)
+            .orElse(footerExtremeOver(pfs.map(_.status), f, wantMax)
+              .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol))
+            .getOrElse(return None)
+      }
+      (raws, cols)
+    }
+    Some((fields, rows))
+  }
 
   /** Output schema of a fully pushed aggregate, one field per aggregate
     * expression in order: `count(*)` (`count(*)_i` past position 0),
@@ -373,7 +268,7 @@ class FixedWidthScanBuilder(
   // compressed files have unknown record counts and disable the push.
   private def canTruncate: Boolean =
     pushed.isEmpty && !opts.dropMalformed &&
-      !listedFiles.exists(pf => FixedWidthTable.isCompressed(pf.status.getPath))
+      !files.listed.exists(pf => FixedWidthTable.isCompressed(pf.status.getPath))
 
   override def pushLimit(limit: Int): Boolean =
     if (canTruncate) { limitN = limit.toLong; true } else false
@@ -385,7 +280,7 @@ class FixedWidthScanBuilder(
     if (canTruncate) { offsetN = offset.toLong; true } else false
 
   override def build(): Scan =
-    aggScan.getOrElse(new FixedWidthScan(opts, tableOptions, requiredSchema, conf, pushed,
+    aggScan.getOrElse(new FixedWidthScan(opts, tableOptions, requiredSchema, conf, files, pushed,
       recordRange = if (limitN >= 0 || offsetN > 0)
         Some((offsetN, if (limitN >= 0) limitN else Long.MaxValue)) else None))
 }
@@ -405,9 +300,10 @@ final case class FixedWidthSliceCol(field: FieldSpec, slice: Option[Array[Byte]]
 
 /** The whole scan when an aggregate is fully pushed down: one partition,
   * one row per group, zero data IO. A global aggregate is the case of zero
-  * group columns and exactly one group. COUNT(*) comes from the
-  * driver-side (pruned) file listing; MIN/MAX from partition directory
-  * values, or from fwz-stats-covered fields' footer envelopes (r15). Group
+  * group columns and exactly one group. Every group is answered by the same
+  * rule from the query's [[FixedWidthPlanFiles]]: COUNT(*) from per-file
+  * exact counts; MIN/MAX from the group's partition directory values, or
+  * from fwz-stats-covered fields' footer envelopes. Group
   * values and directory extremes travel as raw directory strings and
   * decode on the executor through FixedWidthTable.decodeDirValue, the
   * decode that grouped them at plan time; footer extremes travel as the
@@ -478,6 +374,7 @@ class FixedWidthScan(
     tableOptions: CaseInsensitiveStringMap,
     requiredSchema: StructType,
     conf: Configuration,
+    files: FixedWidthPlanFiles,
     pushedFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     recordRange: Option[(Long, Long)] = None)
     extends Scan with Batch
@@ -508,15 +405,13 @@ class FixedWidthScan(
 
   override def readSchema(): StructType = requiredSchema
 
-  /** Directory-pruned file listing, computed once per scan (plan time, on the
-    * driver): pushed filters fully covered by a file's `col=value` path
-    * segments skip the file's IO entirely — see FixedWidthTable.pruneFiles.
-    * Statistics and split planning both read the pruned list, so Catalyst's
-    * size estimates (broadcast decisions) shrink with the pruning too. */
-  private lazy val listedFiles = FixedWidthTable.listPartitionedFiles(tableOptions, conf)
-  private lazy val pruneResult: FixedWidthTable.PruneResult =
-    FixedWidthTable.pruneFiles(listedFiles, opts, pushedFilters)
-  private def prunedFiles = pruneResult.kept
+  /** Directory-pruned file listing, from the query's file view (plan time,
+    * on the driver): pushed filters fully covered by a file's `col=value`
+    * path segments skip the file's IO entirely — see
+    * FixedWidthTable.pruneFiles. Statistics and split planning both read the
+    * pruned list, so Catalyst's size estimates (broadcast decisions) shrink
+    * with the pruning too. */
+  private def pruneResult: FixedWidthTable.PruneResult = files.pruned(pushedFilters)
   // set by planInputPartitions (which sees runtime filters); statistics and
   // the metric fall back to the static pruning before that
   @volatile private var filesPruned: Long = -1L
@@ -530,14 +425,10 @@ class FixedWidthScan(
     * (a trailing fragment under PERMISSIVE yields no record). */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
-      private lazy val files = prunedFiles
-      // per-file exact counts (length arithmetic / framed footer reads);
-      // None if ANY file is unknowable (a foreign compressed member) —
-      // report unknown rather than an undercount that would trick
-      // Catalyst into auto-broadcasting an arbitrarily large table
+      // per-file exact counts (length arithmetic / framed footer totals);
+      // None if ANY file is unknowable (a foreign compressed member)
       private lazy val counts: Option[Long] = {
-        val cs = files.map(st => FixedWidthTable.exactRecordCount(
-          st, opts.recordLength.toLong, opts.tolerant, conf))
+        val cs = pruneResult.kept.map(files.records)
         if (cs.exists(_.isEmpty)) None else Some(cs.flatten.sum)
       }
       override def sizeInBytes(): java.util.OptionalLong =
@@ -570,8 +461,7 @@ class FixedWidthScan(
       catch { case _: Exception => false }
     if (!bucketing || !opts.typed || recordRange.nonEmpty) None
     else {
-      val keptPaths = prunedFiles.map(_.getPath.toString).toSet
-      val kept = listedFiles.filter(pf => keptPaths.contains(pf.status.getPath.toString))
+      val kept = pruneResult.keptFiles
       if (kept.isEmpty) None
       else {
         // partition columns bound in EVERY file's path, in layout order,
@@ -643,26 +533,25 @@ class FixedWidthScan(
     * runtime filtering may drop whole groups — reporting a SUBSET of the
     * original partition values is explicitly allowed). */
   override def planInputPartitions(): Array[InputPartition] = {
-    val res =
-      if (runtimeFilters.isEmpty) pruneResult
-      else FixedWidthTable.pruneFiles(listedFiles, opts, pushedFilters ++ runtimeFilters)
-    filesPruned = res.pruned
     // Frame skipping sees pushed AND runtime filters: a join-derived In on a
     // stats-covered key can skip compressed frames too (always sound — Spark
     // re-evaluates the join itself).
     val allFilters = pushedFilters ++ runtimeFilters
+    val res = files.pruned(allFilters)
+    filesPruned = res.pruned
     val pm = new FwzStats.PlanMetrics
+    def plan(kept: Seq[org.apache.hadoop.fs.FileStatus], range: Option[(Long, Long)]) =
+      FixedWidthScan.alignedPartitions(kept, opts, conf, range, allFilters, pm, files.footer(_).get)
     val parts: Array[InputPartition] = keyedGroups match {
       case Some((_, groups)) =>
-        val keptNow = res.kept.map(_.getPath.toString).toSet
+        // runtime filters may drop members of the statically pruned groups
+        val keptNow = res.keptFiles.toSet
         groups.toArray.flatMap { case (key, pfs) =>
-          val files = pfs.collect { case pf if keptNow.contains(pf.status.getPath.toString) => pf.status }
-          FixedWidthScan.alignedPartitions(files, opts, conf, None, allFilters, pm).map { p =>
+          plan(pfs.filter(keptNow).map(_.status), None).map { p =>
             FixedWidthKeyedInputPartition(p.asInstanceOf[FixedWidthInputPartition], key)
           }
         }
-      case None =>
-        FixedWidthScan.alignedPartitions(res.kept, opts, conf, recordRange, allFilters, pm)
+      case None => plan(res.kept, recordRange)
     }
     framesSkipped = pm.framesSkipped
     parts
@@ -772,17 +661,17 @@ object FixedWidthScan {
   def alignedPartitions(
       files: Seq[org.apache.hadoop.fs.FileStatus],
       opts: FixedWidthOptions,
-      conf: Configuration = null,
-      recordRange: Option[(Long, Long)] = None,
-      pushedFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-      planMetrics: FwzStats.PlanMetrics = null): Array[InputPartition] = {
+      conf: Configuration,
+      recordRange: Option[(Long, Long)],
+      pushedFilters: Array[org.apache.spark.sql.sources.Filter],
+      planMetrics: FwzStats.PlanMetrics,
+      footer: org.apache.hadoop.fs.FileStatus => FwzFormat.FwzFooter): Array[InputPartition] = {
+    val byPath = files.map(st => st.getPath.toString -> st).toMap
     val parts = alignedPartitionsOf(
       files.map(st => st.getPath.toString -> st.getLen), opts, recordRange,
-      pushedFilters, planMetrics)
-    if (conf == null) return parts
+      pushedFilters, planMetrics, p => footer(byPath(p)))
     // Attach HDFS block hosts per chunk for executor data locality (same
     // driver-side NN lookups Spark's own file sources do at plan time).
-    val byPath = files.map(st => st.getPath.toString -> st).toMap
     parts.map { p =>
       val fwp = p.asInstanceOf[FixedWidthInputPartition]
       FixedWidthInputPartition(fwp.chunks.map { c =>
@@ -800,6 +689,9 @@ object FixedWidthScan {
 
   /** Plan from bare (path, length) pairs — used by the streaming source to
     * plan strictly from offset-recorded state rather than a live listing.
+    * `footerOf`, when given, supplies each framed file's footer (a batch
+    * scan passes its file view's); otherwise each footer is read through
+    * the footer cache after one stat for its mtime.
     *
     * `recordRange = Some((start, end))` restricts planning to the half-open
     * GLOBAL record index range [start, end) in listing order — the pushed
@@ -811,7 +703,8 @@ object FixedWidthScan {
       opts: FixedWidthOptions,
       recordRange: Option[(Long, Long)] = None,
       pushedFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-      planMetrics: FwzStats.PlanMetrics = null): Array[InputPartition] = {
+      planMetrics: FwzStats.PlanMetrics = null,
+      footerOf: String => FwzFormat.FwzFooter = null): Array[InputPartition] = {
     val recLen = opts.recordLength.toLong
     // .fwz first: the sink's OWN framed layout (FwzFormat) is always
     // readable — it is not the foreign-codec compatibility path the
@@ -849,12 +742,13 @@ object FixedWidthScan {
     val target = math.min(maxPartitionBytes, math.max(bytesPerCore, 4L * 1024 * 1024))
     val aligned = math.max(recLen, (target / recLen) * recLen)
 
-    val conf = session.sessionState.newHadoopConf()
-    // footer per framed file, read ONCE here and shared by the record-range
-    // clipping and the chunker below (two bounded reads per file, the
-    // parquet planning shape)
+    lazy val conf = session.sessionState.newHadoopConf()
+    // footer per framed file, taken ONCE here and shared by the record-range
+    // clipping and the chunker below: from the caller's file view, or read
+    // through the footer cache with the mtime resolved by a stat
     val fwzFooters: Map[String, FwzFormat.FwzFooter] = framedFiles.map { case (p, len) =>
-      p -> FwzFormat.readFooterCachedStat(new org.apache.hadoop.fs.Path(p), len, conf)
+      p -> (if (footerOf != null) footerOf(p)
+            else FwzFormat.readFooterCachedStat(new org.apache.hadoop.fs.Path(p), len, conf))
     }.toMap
 
     val (rangeStart, rangeEnd) = recordRange.getOrElse((0L, Long.MaxValue))

@@ -71,25 +71,6 @@ object FixedWidthTable {
     CompressedExts.exists(n.endsWith)
   }
 
-  /** Exact record count of a file WITHOUT scanning its data: plain files
-    * by length arithmetic, framed .fwz by footer (two bounded reads —
-    * frames carry content sizes, so `count(*)` over a compressed feed
-    * never decompresses a byte); None for foreign compressed files
-    * (unknowable without decompression) and for files the scan would
-    * reject anyway (let the scan surface the real error). Floors per
-    * file: a trailing fragment under PERMISSIVE yields no record. */
-  def exactRecordCount(
-      st: FileStatus, recLen: Long, tolerant: Boolean,
-      conf: Configuration): Option[Long] =
-    if (FwzFormat.isFramed(st.getPath))
-      scala.util.Try(FwzFormat.readFooterCached(
-          st.getPath, st.getLen, st.getModificationTime, conf).totalDLen)
-        .toOption
-        .flatMap(d => if (!tolerant && d % recLen != 0) None else Some(d / recLen))
-    else if (isCompressed(st.getPath)) None
-    else if (!tolerant && st.getLen % recLen != 0) None
-    else Some(st.getLen / recLen)
-
   def isDataFile(s: FileStatus): Boolean = {
     val n = s.getPath.getName
     s.isFile && s.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
@@ -125,9 +106,6 @@ object FixedWidthTable {
       fs.listStatus(st.getPath).toSeq.flatMap(listRecursive(fs, _, nested))
     } else Seq(st).filter(isDataFile).map(PartitionedFile(_, parts))
   }
-
-  def listFiles(opts: CaseInsensitiveStringMap, conf: Configuration): Seq[FileStatus] =
-    listPartitionedFiles(opts, conf).map(_.status)
 
   /** Resolve the `path`/`paths` options to concrete data files. Runs on the
     * driver at plan time (analog of FileInputFormat listing inside
@@ -231,11 +209,15 @@ object FixedWidthTable {
     opts.codec(f).decode(buf, 0, n)
   }
 
-  /** `exact = true` ⇔ the kept files contain EXACTLY the records satisfying
-    * the pushed filters (every filter was fully covered by every kept file's
-    * partition path and every directory value evaluated cleanly) — the
-    * precondition for answering COUNT(*) from file lengths alone. */
-  final case class PruneResult(kept: Seq[FileStatus], pruned: Long, exact: Boolean)
+  /** The files a pushed filter set keeps, with their directory assignments
+    * (`kept` is their statuses, in listing order). `exact = true` ⇔ the kept
+    * files contain EXACTLY the records satisfying the pushed filters (every
+    * filter was fully covered by every kept file's partition path and every
+    * directory value evaluated cleanly) — the precondition for answering
+    * COUNT(*) from file lengths alone. */
+  final case class PruneResult(keptFiles: Seq[PartitionedFile], pruned: Long, exact: Boolean) {
+    lazy val kept: Seq[FileStatus] = keptFiles.map(_.status)
+  }
 
   /** Directory pruning — the read half of `partitionBy` (the analog of the
     * reference's split-enumeration hook, FixedLengthInputFormat.java:318-365:
@@ -261,9 +243,9 @@ object FixedWidthTable {
       fwOpts: FixedWidthOptions,
       pushed: Array[org.apache.spark.sql.sources.Filter]): PruneResult = {
     if (pushed.isEmpty)
-      return PruneResult(files.map(_.status), 0L, exact = true)
+      return PruneResult(files, 0L, exact = true)
     if (!fwOpts.typed || files.forall(_.partValues.isEmpty))
-      return PruneResult(files.map(_.status), 0L, exact = false)
+      return PruneResult(files, 0L, exact = false)
 
     // Catalyst splits conjunctions before pushdown, but an And can still
     // arrive atomically (e.g. pushed programmatically); its partition-only
@@ -330,7 +312,7 @@ object FixedWidthTable {
         keep
       }
     }
-    PruneResult(kept.map(_.status), (files.size - kept.size).toLong, exact)
+    PruneResult(kept, (files.size - kept.size).toLong, exact)
   }
 }
 

@@ -251,13 +251,14 @@ object FwzFormat {
     }
 
   // ---- Footer memoization: the footer is immutable for a given
-  // (path, length, mtime, tail fingerprint) and is consulted by count-star,
-  // grouped-count, min/max ANSWERS, estimateStatistics AND split planning —
-  // without the memo one query plan over a directory of framed files paid
-  // repeated driver-side positioned-read round-trips per file (the same
-  // reason Bz2SplitIndex memoizes its phase-1 index). Bounded by total
-  // cached frames; wholesale-cleared past the bound (entries are cheap to
-  // rebuild: two bounded reads).
+  // (path, length, mtime, tail fingerprint). A batch query consults it once
+  // per kept file through its FixedWidthPlanFiles view, which answers
+  // COUNT(*)/MIN/MAX, statistics and split planning from that one consult;
+  // the memo spares REPEATED queries (and each streaming trigger) the
+  // trailer+table+stats reads of a miss (the same reason Bz2SplitIndex
+  // memoizes its phase-1 index). Bounded by total cached frames;
+  // wholesale-cleared past the bound (entries are cheap to rebuild: two
+  // bounded reads).
   //
   // The TAIL FINGERPRINT (r16, mirroring the r14 Bz2SplitIndex fix): mtime
   // alone cannot see a same-length rewrite inside the filesystem's mtime
@@ -288,11 +289,15 @@ object FwzFormat {
     f.frames.length.toLong * (48L + statBytes)
   }
 
-  /** Content fingerprint folded into the cache key: FNV-1a-style hash of
-    * the file's last ≤4 KiB (see the cache comment above for exactly what
-    * that window covers per version). One bounded positioned read. */
-  private def tailFingerprint(path: Path, fileLen: Long, conf: Configuration): Long = {
-    val n = math.min(4096L, fileLen).toInt
+  /** Content fingerprint folded into a cache key: a multiplicative hash
+    * (seed 1125899906842597, `h * 31 + b`) of the file's last ≤`window`
+    * bytes. One bounded positioned read. The footer memo hashes 4 KiB (see
+    * the cache comment above for what that window covers per version);
+    * [[Bz2SplitIndex]] hashes 16 bytes, and its persisted sidecar keys hold
+    * the value, so the hash must never change. */
+  private[fixedwidth] def tailFingerprint(
+      path: Path, fileLen: Long, window: Int, conf: Configuration): Long = {
+    val n = math.min(window.toLong, fileLen).toInt
     if (n <= 0) return 0L
     val in = path.getFileSystem(conf).open(path)
     try {
@@ -307,7 +312,7 @@ object FwzFormat {
 
   /** [[readFooter]] memoized per (path, length, mtime, tail fingerprint). */
   def readFooterCached(path: Path, fileLen: Long, mtime: Long, conf: Configuration): FwzFooter = {
-    val key = (path.toString, fileLen, mtime, tailFingerprint(path, fileLen, conf))
+    val key = (path.toString, fileLen, mtime, tailFingerprint(path, fileLen, 4096, conf))
     val hit = footerCache.get(key)
     if (hit != null) return hit
     val f = readFooter(path, fileLen, conf)

@@ -74,9 +74,9 @@ object ProfileFwzStats {
     val opts = FixedWidthOptions(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("fields", fieldsOpt)))
     val files = graft.sources.fixedwidth.FixedWidthTable
-      .listFiles(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      .listPartitionedFiles(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Map.of("path", withStats, "fields", fieldsOpt)), conf)
-      .map(st => st.getPath.toString -> st.getLen)
+      .map(pf => pf.status.getPath.toString -> pf.status.getLen)
     val pm = new graft.sources.fixedwidth.FwzStats.PlanMetrics
     val parts = graft.sources.fixedwidth.FixedWidthScan.alignedPartitionsOf(
       files, opts, None,

@@ -131,6 +131,34 @@ class FixedWidthPushdownSpec extends SparkSpec with Matchers {
     plan(df) should include("FixedWidthCountScan")
   }
 
+  test("grouped min/max of an inner partition column come from each group's directories") {
+    import spark.implicits._
+    val dir = tmp()
+    val lay = "id:long:0:8,p:string:8:6,q:long:14:4"
+    (1 to 300).map(i => (i.toLong, s"p${i % 3}", (i % 7 + i % 3).toLong)).toDF("id", "p", "q")
+      .write.format("fixedwidth").option("fields", lay).partitionBy("p", "q")
+      .mode("overwrite").save(dir)
+    val all = spark.read.format("fixedwidth").option("fields", lay).load(dir)
+    val df = all.groupBy($"p").agg(min($"q"), max($"q"), count(lit(1))).orderBy($"p")
+    val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val rows = all.select("p", "q").collect().map(r => (r.getString(0), r.getLong(1)))
+    got.toSeq shouldBe rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (p, rs) =>
+      (p, rs.map(_._2).min, rs.map(_._2).max, rs.length.toLong)
+    }
+    val pl = plan(df)
+    pl should include("FixedWidthCountScan")
+    pl should not include "FixedWidthScan("
+  }
+
+  test("global min/max/count over a listing pruned to nothing is one (NULL, NULL, 0) row") {
+    import spark.implicits._
+    val dir = tmp()
+    writeData(dir, partitioned = true)
+    val df = read(dir).filter($"p" === "p9").agg(min($"v"), max($"v"), count(lit(1)))
+    df.collect().map(r => (r.get(0), r.get(1), r.getLong(2))) shouldBe Array((null, null, 0L))
+    plan(df) should include("FixedWidthCountScan")
+  }
+
   test("grouping by a non-partition column falls back to a real scan") {
     import spark.implicits._
     val dir = tmp()
