@@ -1,5 +1,7 @@
 package graft.sources.fixedwidth
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -832,6 +834,7 @@ object FixedWidthScan {
       val hi = lastRec * recLen
       val out = Seq.newBuilder[FileChunk]
       var run = List.empty[FwzFormat.FwzFrame] // reversed
+      var runFirst = 0 // footer index of the run's first frame
       var cBytes = 0L
       def flush(): Unit = if (run.nonEmpty) {
         val frames = run.reverse
@@ -840,8 +843,10 @@ object FixedWidthScan {
         val dStart = math.max(lo, dOrigin)
         if (dEnd > dStart)
           out += FileChunk(p, frames.head.cOff, cBytes, compressed = true,
-            dStart = dStart, dLen = dEnd - dStart, fileDLen = fileDLen,
-            framedCodec = footer.codec, dOrigin = dOrigin)
+            dStart = dStart, dLen = dEnd - dStart,
+            framedCodec = footer.codec, dOrigin = dOrigin,
+            frameLens = ArraySeq.from(frames.iterator.flatMap(f => Iterator(f.cLen, f.dLen))),
+            firstFrame = runFirst)
         run = Nil; cBytes = 0L
       }
       // Per-frame statistics skipping ([[FwzStats]]): frames whose recorded
@@ -878,6 +883,7 @@ object FixedWidthScan {
             flush() // the gap ends the current contiguous run
             if (planMetrics != null) planMetrics.framesSkipped += 1
           } else {
+            if (run.isEmpty) runFirst = i
             run = f :: run
             cBytes += f.cLen
             // cut only where the NEXT chunk would start on the record grid —
@@ -926,12 +932,18 @@ object FixedWidthScan {
   * compressed size); `compressed` chunks with `dStart >= 0` are SPLIT
   * bzip2 ranges — [start, start+length) in compressed bytes, owning the
   * blocks that decompress to the `dLen` logical bytes at decompressed
-  * offset `dStart` (see [[Bz2SplitIndex]]). `hosts` are the HDFS block
-  * hosts of the range (empty on non-located filesystems). */
+  * offset `dStart` (see [[Bz2SplitIndex]]). `.fwz` chunks (`framedCodec
+  * >= 0`) are a contiguous frame run starting at compressed offset `start`
+  * and decompressed offset `dOrigin`: `frameLens` holds the run's footer
+  * lengths as interleaved (cLen, dLen) pairs, `firstFrame` the footer index
+  * of its first frame, and the chunk owns the `dLen` bytes at `dStart`.
+  * `hosts` are the HDFS block hosts of the range (empty on non-located
+  * filesystems). */
 final case class FileChunk(
     filePath: String, start: Long, length: Long, compressed: Boolean,
     hosts: Seq[String] = Nil, dStart: Long = -1L, dLen: Long = -1L,
-    fileDLen: Long = -1L, framedCodec: Byte = -1, dOrigin: Long = -1L)
+    fileDLen: Long = -1L, framedCodec: Byte = -1, dOrigin: Long = -1L,
+    frameLens: ArraySeq[Long] = ArraySeq.empty, firstFrame: Int = -1)
 
 /** A packed set of independently record-aligned chunks (serialized driver →
   * executor; the Spark analog of a packed `FilePartition`). */
@@ -984,12 +996,14 @@ class FixedWidthReaderFactory(
 }
 
 /** Chunk-walking record cursor of [[FixedWidthColumnarReader]]: opens one
-  * stream at a time across a partition's packed chunks. `fetchBlock`
+  * chunk at a time across a partition's packed chunks. `fetchBlock`
   * fills the caller's buffer with up to `max` whole records of ONE chunk
   * (so of one file) and sets `blockOffset` to the first one's byte offset
   * in its file, the reference's default key. An uncompressed chunk fills
-  * the block with one bulk read; compressed chunks (`.fwz`, gzip, split
-  * bz2) read record by record, keeping every EOF, stall and
+  * the block with one bulk read. A `.fwz` chunk decodes its frame run one
+  * frame at a time into a reused buffer and copies whole records out of
+  * it. Foreign compressed chunks (gzip whole-file, split bz2) read record
+  * by record from a Hadoop codec stream, keeping every EOF, stall and
   * trailing-fragment check.
   */
 final class ChunkedRecordStream(
@@ -1000,17 +1014,27 @@ final class ChunkedRecordStream(
   private val recLen = opts.recordLength
   private var chunkIdx = -1
   private var rawIn: org.apache.hadoop.fs.FSDataInputStream = null
-  private var compIn: java.io.InputStream = null
-  private var curCompressed = false
+  private var compIn: java.io.InputStream = null // Hadoop codec stream
   private var curDecompressor: org.apache.hadoop.io.compress.Decompressor = null
   private var curPath: String = ""
   private var end = 0L
   private var pos = 0L // byte offset in the current file (uncompressed/logical)
-  // total decompressed file length for SPLIT compressed ranges (-1 when
-  // unknown: plain, gzip whole-file, small-bz2 whole-file) — lets the
-  // fetch loop tell the file's genuine trailing fragment from an
-  // unexpected early EOF and fail loudly on the latter
+  // total decompressed file length for SPLIT bz2 ranges (-1 when unknown:
+  // plain, gzip whole-file, small-bz2 whole-file) — lets the fetch loop
+  // tell the file's genuine trailing fragment from an unexpected early EOF
+  // and fail loudly on the latter
   private var curFileDLen = -1L
+
+  // The current .fwz chunk (null for any other chunk), the run index of its
+  // next frame to decode, and the decoded frame in dBuf[fOff, fLen). The
+  // buffers and the zstd context serve every chunk of the reader.
+  private var fwz: FileChunk = null
+  private var nextFrame = 0
+  private var cBuf = Array.emptyByteArray
+  private var dBuf = Array.emptyByteArray
+  private var fOff = 0
+  private var fLen = 0
+  private var zstd: com.github.luben.zstd.ZstdDecompressCtx = null
 
   var recordsRead = 0L
 
@@ -1024,53 +1048,47 @@ final class ChunkedRecordStream(
   def currentPathUtf8: Array[Byte] = curPathUtf8
 
   def close(): Unit = {
+    closeChunk()
+    if (zstd != null) { zstd.close(); zstd = null }
+  }
+
+  private def closeChunk(): Unit = {
     if (compIn != null) { compIn.close(); compIn = null }
     if (rawIn != null) { rawIn.close(); rawIn = null }
     if (curDecompressor != null) {
       org.apache.hadoop.io.compress.CodecPool.returnDecompressor(curDecompressor)
       curDecompressor = null
     }
+    fwz = null
   }
 
   private def openNextChunk(): Boolean = {
-    close()
+    closeChunk()
     chunkIdx += 1
     if (chunkIdx >= part.chunks.length) return false
     val c = part.chunks(chunkIdx)
     val p = new Path(c.filePath)
     rawIn = p.getFileSystem(conf).open(p)
-    curCompressed = c.compressed
     curPath = c.filePath
     curPathUtf8 = c.filePath.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     curFileDLen = -1L
     if (c.framedCodec >= 0) {
-      // framed .fwz chunk (FwzFormat): a contiguous frame run — seek,
-      // decompress the run through one continuous stream bounded to its
-      // compressed range (the bound keeps the decompressor from parsing
-      // the footer or a later chunk's frames), and read the chunk's owned
-      // records. No spanning tail: frame boundaries are record boundaries.
-      // A pushed limit/offset may clip the owned range INSIDE the run —
-      // the stream decodes from the run's first frame (dOrigin) and the
-      // head [dOrigin, dStart) bytes are discarded here, outside any
-      // record; trailing frame bytes past `end` are simply never read.
+      // framed .fwz chunk (FwzFormat): a contiguous frame run, decoded one
+      // frame at a time from the footer lengths the chunk carries. A pushed
+      // limit/offset may clip the owned range inside the run: the head
+      // [dOrigin, dStart) is skipped in the decoded frames, and frames past
+      // `end` are never read. No spanning tail: frame boundaries are
+      // record boundaries.
       rawIn.seek(c.start)
-      compIn = FwzFormat.frameRunStream(c.framedCodec,
-        new BoundedInputStream(rawIn, c.length))
+      if (c.framedCodec == FwzFormat.CodecZstd && zstd == null)
+        zstd = new com.github.luben.zstd.ZstdDecompressCtx
+      fwz = c
+      nextFrame = 0
+      fOff = 0
+      fLen = 0
       pos = c.dStart
       end = c.dStart + c.dLen
-      curFileDLen = c.fileDLen
-      var toSkip = c.dStart - (if (c.dOrigin >= 0L) c.dOrigin else c.dStart)
-      if (toSkip > 0) {
-        val scratch = new Array[Byte](math.min(toSkip, 64L * 1024).toInt)
-        while (toSkip > 0) {
-          val r = compIn.read(scratch, 0, math.min(toSkip, scratch.length.toLong).toInt)
-          if (r <= 0) // r == 0: zstd continuous-mode stall on a dry bounded source
-            throw new java.io.IOException(
-              s"fixedwidth fwz: EOF while skipping to clipped offset ${c.dStart} " +
-                s"of $curPath — footer grid inconsistent with frame payload")
-          toSkip -= r
-        }
-      }
+      take(null, c.dStart - c.dOrigin)
     } else if (c.compressed && c.dStart >= 0L) {
       // split bzip2 range: BYBLOCK stream aligned to the range's first
       // block; the record grid comes from the phase-1 index (dStart/dLen —
@@ -1121,9 +1139,66 @@ final class ChunkedRecordStream(
       s"fixedwidth: EOF mid-record at offset $pos of $curPath: " +
         s"file is not a multiple of recordLength=$recLen")
 
+  /** The decoded bytes of the current file ended at logical offset `at`,
+    * short of what its split index or footer promised: fail loudly instead
+    * of silently dropping records. */
+  private def unexpectedEof(at: Long): Nothing =
+    throw new java.io.IOException(
+      s"fixedwidth: unexpected EOF at logical offset $at of $curPath — " +
+        "split index/footer is stale or inconsistent with the compressed " +
+        "payload; refusing to silently drop records")
+
+  /** Decode the run's next frame into `dBuf`: one sequential read of its
+    * cLen bytes, one decompress call, and a hard check that it holds
+    * exactly the dLen bytes its footer records. */
+  private def decodeFrame(): Unit = {
+    val lens = fwz.frameLens
+    if (2 * nextFrame >= lens.length) unexpectedEof(pos)
+    val cLen = lens(2 * nextFrame)
+    val dLen = lens(2 * nextFrame + 1)
+    def fail(why: String): Nothing = throw new java.io.IOException(
+      s"fixedwidth fwz: frame ${fwz.firstFrame + nextFrame} of $curPath $why " +
+        "— corrupt frame or frame table")
+    if (cLen > Int.MaxValue - 8 || dLen > Int.MaxValue - 8)
+      fail(s"is too large to decode in one buffer ($cLen, $dLen bytes)")
+    if (cBuf.length < cLen) cBuf = new Array[Byte](cLen.toInt)
+    if (dBuf.length < dLen) dBuf = new Array[Byte](dLen.toInt)
+    val n =
+      try {
+        rawIn.readFully(cBuf, 0, cLen.toInt)
+        FwzFormat.decompressFrame(fwz.framedCodec, zstd, cBuf, cLen.toInt, dBuf, dLen.toInt)
+      } catch {
+        case e @ (_: java.io.IOException | _: com.github.luben.zstd.ZstdException) =>
+          fail(s"does not decode to the $dLen bytes its footer records: ${e.getMessage}")
+      }
+    if (n != dLen) fail(s"decompressed to $n bytes, not the $dLen its footer records")
+    nextFrame += 1
+    fOff = 0
+    fLen = n
+  }
+
+  /** Move the run's next `n` decoded bytes to the start of `dst` (`dst`
+    * null: skip them), decoding a frame whenever the current one is used
+    * up; a record that straddles two frames is assembled here. */
+  private def take(dst: Array[Byte], n: Long): Unit = {
+    var done = 0L
+    while (done < n) {
+      if (fOff == fLen) decodeFrame()
+      val m = math.min(n - done, (fLen - fOff).toLong).toInt
+      if (dst != null) System.arraycopy(dBuf, fOff, dst, done.toInt, m)
+      fOff += m
+      done += m
+    }
+  }
+
   /** Read up to `max` records of the current chunk into `dst`; 0 at its end. */
   private def fetchFromChunk(dst: Array[Byte], max: Int): Int =
-    if (curCompressed) {
+    if (fwz != null) {
+      val n = math.min(max.toLong, (end - pos) / recLen).toInt
+      take(dst, n.toLong * recLen)
+      pos += n.toLong * recLen
+      n
+    } else if (compIn != null) {
       var k = 0
       // split bz2 ranges bound `end` to their owned record starts (gzip
       // whole-file chunks set Long.MaxValue — EOF-bounded, check is free)
@@ -1132,34 +1207,23 @@ final class ChunkedRecordStream(
         while (n < recLen) {
           val r = compIn.read(dst, k * recLen + n, recLen - n)
           if (r <= 0) {
-            // r == 0 is an IO-protocol violation for a blocking stream —
-            // zstd-jni's continuous mode can return it when a BOUNDED source
-            // runs dry mid-frame (e.g. a corrupt .fwz whose per-frame cLens
-            // tile the file but misalign with the actual frame payloads).
-            // Treating it as progress would spin this loop forever inside a
-            // task; fail loudly like any other corruption.
+            // r == 0 breaks the blocking-stream contract of a Hadoop codec
+            // stream. Treating it as progress would spin this loop forever
+            // inside a task; fail loudly like any other corruption.
             if (r == 0)
               throw new java.io.IOException(
                 s"fixedwidth: decompressor stalled (read 0 bytes) at logical " +
                   s"offset ${pos + n} of $curPath — corrupt compressed chunk")
-            // EOF mid-chunk. For a SPLIT range with a known decompressed
+            // EOF mid-chunk. For a SPLIT bz2 range with a known decompressed
             // file length, the ONLY legitimate mid-record EOF is the file's
-            // genuine trailing fragment (the bz2 BYBLOCK stream reads past
-            // its range bound to file EOF, so a spanning tail record always
-            // completes; fwz frame grids come from the validated footer);
-            // anything else means the phase-1 bz2 index is stale, BYBLOCK
-            // semantics changed, or an fwz frame's payload disagrees with
-            // its footer — fail loudly instead of silently dropping records
-            // per range (phase 1 has the same guard as a require on
-            // block-boundary reads).
+            // genuine trailing fragment (the BYBLOCK stream reads past its
+            // range bound to file EOF, so a spanning tail record always
+            // completes); anything else means the phase-1 index is stale or
+            // BYBLOCK semantics changed (phase 1 has the same guard as a
+            // require on block-boundary reads).
             if (curFileDLen >= 0L) {
               val tailFragment = (curFileDLen % recLen).toInt
-              if (pos != curFileDLen - tailFragment || n != tailFragment)
-                throw new java.io.IOException(
-                  s"fixedwidth: unexpected EOF at logical offset ${pos + n} " +
-                    s"of $curPath (indexed decompressed length $curFileDLen) — " +
-                    "split index/footer is stale or inconsistent with the " +
-                    "compressed payload; refusing to silently drop records")
+              if (pos != curFileDLen - tailFragment || n != tailFragment) unexpectedEof(pos + n)
             }
             if (n > 0 && !opts.tolerant) truncated() // tolerant: drop the trailing partial record
             end = pos // drained: later calls must not read past this EOF again

@@ -29,9 +29,9 @@ import org.apache.hadoop.fs.Path
   * }}}
   * The trailer is fixed-size (10 bytes) at EOF, so a reader seeks to
   * `len-10`, validates magic/version, then reads the 16·nFrames-byte footer
-  * — two bounded reads regardless of file size. Frame payloads are
-  * self-framing codecs, so a chunk reader decompresses a frame RUN through
-  * one continuous stream without per-frame bookkeeping.
+  * — two bounded reads regardless of file size. A chunk reader decodes a
+  * frame run one frame at a time from those lengths: one read of cLen
+  * bytes, one decompress call, and a check that it produced exactly dLen.
   *
   * Layout (version 2 — READ-compatibility only since r16; the parquet
   * row-group-statistics idea applied to this framed layout, so a pushed
@@ -238,16 +238,24 @@ object FwzFormat {
         bos.toByteArray
     }
 
-  /** Decompressing stream over a CONTIGUOUS frame run already positioned at
-    * the run's first compressed byte; `in` must be bounded to the run. */
-  def frameRunStream(codec: Byte, in: java.io.InputStream): java.io.InputStream =
+  /** Decompress the frame `src[0, cLen)` into `dst[0, dLen)` and return how
+    * many bytes it holds; a malformed frame, or one that holds more than
+    * dLen bytes, throws. zstd is one call on the caller's reused context;
+    * gzip reads one member stream over the frame's bytes. */
+  def decompressFrame(codec: Byte, zstd: com.github.luben.zstd.ZstdDecompressCtx,
+      src: Array[Byte], cLen: Int, dst: Array[Byte], dLen: Int): Int =
     codec match {
-      case CodecZstd =>
-        val z = new com.github.luben.zstd.ZstdInputStream(in)
-        z.setContinuous(true) // read ACROSS concatenated frames
-        z
+      case CodecZstd => zstd.decompressByteArray(dst, 0, dLen, src, 0, cLen)
       case CodecGzip =>
-        new java.util.zip.GZIPInputStream(in, 64 * 1024) // multi-member capable
+        val g = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(src, 0, cLen))
+        try {
+          var n = 0
+          var r = 0
+          while (r >= 0 && n < dLen) { r = g.read(dst, n, dLen - n); if (r > 0) n += r }
+          if (n == dLen && g.read() >= 0)
+            throw new java.io.IOException(s"gzip frame holds more than $dLen bytes")
+          n
+        } finally g.close()
     }
 
   // ---- Footer memoization: the footer is immutable for a given
@@ -530,21 +538,4 @@ object FwzFormat {
       .put(if (statsBytes.isDefined) VersionStatsV3 else Version).putInt(Magic)
     out.write(bb.array())
   }
-}
-
-/** Reads at most `limit` bytes from `in` — bounds a frame run so the
-  * decompressor can never read into the footer (or a later chunk's frames)
-  * and misparse it as a frame header. */
-private[fixedwidth] final class BoundedInputStream(
-    in: java.io.InputStream, private var limit: Long) extends java.io.InputStream {
-  override def read(): Int =
-    if (limit <= 0) -1
-    else { val r = in.read(); if (r >= 0) limit -= 1; r }
-  override def read(b: Array[Byte], off: Int, len: Int): Int = {
-    if (limit <= 0) return -1
-    val r = in.read(b, off, math.min(len.toLong, limit).toInt)
-    if (r > 0) limit -= r
-    r
-  }
-  override def close(): Unit = in.close()
 }

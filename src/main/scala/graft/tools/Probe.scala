@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.sources.fixedwidth.FwzFormat
+
 /** Edge-case probe for the fixedwidth format, driven through the public
   * `spark.read/write.format("fixedwidth")` surface. Run with
   * `sbt "runMain graft.tools.Probe"`. Prints one PROBE line per case.
@@ -197,6 +199,46 @@ object Probe {
         .option("strictWidth", "true").mode("overwrite").save(s"$base/strict-out")
     }
 
+    // A .fwz frame table that lies about one frame's decompressed length
+    // (first and last dLen swapped: totals and tiling still plan) must
+    // fail the read, naming the file and frame, not return shifted rows.
+    expectError("fwz-frame-mismatch") {
+      val dir = s"$base/fwz-lying"
+      (0 until 5500).map(i => (i.toLong, s"p$i")).toDF("id", "payload").coalesce(1)
+        .write.format("fixedwidth").option("fields", "id:long:0:8,payload:string:8:24")
+        .option("recordLength", 32).option("compression", "zstd")
+        .option("frameBytes", 1000 * 32).mode("overwrite").save(dir)
+      new java.io.File(dir).listFiles.filter(_.getName.endsWith(".fwz"))
+        .foreach(f => swapFrameLens(f.getPath, field = 1))
+      spark.read.format("fixedwidth").option("fields", "id:long:0:8,payload:string:8:24")
+        .option("recordLength", 32).load(dir).collect()
+    }
+
     spark.stop()
+  }
+
+  /** Swap the first and last frames' cLen (`field` 0) or dLen (`field` 1)
+    * entries in the frame table of the `.fwz` file at `path`, in place, and
+    * drop its Hadoop checksum sidecar so the rewrite reads as written data. */
+  def swapFrameLens(path: String, field: Int): Unit = {
+    val f = new java.io.RandomAccessFile(path, "rw")
+    try {
+      f.seek(f.length - FwzFormat.TrailerLen)
+      val nFrames = f.readInt()
+      f.readByte() // codec
+      val trailerLen = f.readByte() match {
+        case FwzFormat.VersionStatsV3 => FwzFormat.TrailerLenV3
+        case FwzFormat.VersionStats => FwzFormat.TrailerLenV2
+        case _ => FwzFormat.TrailerLen
+      }
+      val first = f.length - trailerLen - 16L * nFrames + 8 * field
+      val last = first + 16L * (nFrames - 1)
+      f.seek(first); val a = f.readLong()
+      f.seek(last); val b = f.readLong()
+      f.seek(first); f.writeLong(b)
+      f.seek(last); f.writeLong(a)
+    } finally f.close()
+    val p = Paths.get(path)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
   }
 }

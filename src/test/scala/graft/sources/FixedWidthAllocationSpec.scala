@@ -82,4 +82,58 @@ class FixedWidthAllocationSpec extends AnyFunSuite with Matchers {
     }
     Files.delete(file)
   }
+
+  test("zstd .fwz scan through one reader allocates under 32 bytes per record") {
+    val n = 200000
+    val plain = writeRecords(n)
+    val bytes = Files.readAllBytes(plain)
+    Files.delete(plain)
+    // 16 300-byte frames: the 163 records of 100 bytes a 16 KiB frameBytes holds
+    val frameLen = 163 * 100
+    val file = plain.resolveSibling("data.fwz")
+    val out = Files.newOutputStream(file)
+    try {
+      val frames = bytes.grouped(frameLen).map { d =>
+        val c = FwzFormat.compressFrame(FwzFormat.CodecZstd, d, d.length)
+        out.write(c)
+        (c.length.toLong, d.length.toLong)
+      }.toSeq
+      FwzFormat.writeFooter(out, FwzFormat.CodecZstd, frames)
+    } finally out.close()
+    val opts = FixedWidthOptions(new CaseInsensitiveStringMap(Map("fields" -> layout).asJava))
+    graft.SparkSpec.session // the planner sizes splits from the active session
+    // ONE reader over every planned chunk: a reader per chunk would measure
+    // its fixed buffers, not the per-record cost
+    val part = FixedWidthInputPartition(
+      FixedWidthScan.alignedPartitionsOf(Seq(file.toString -> Files.size(file)), opts)
+        .toSeq.flatMap(_.asInstanceOf[FixedWidthInputPartition].chunks))
+    part.chunks.size should be > 1
+    val factory = new FixedWidthReaderFactory(opts, opts.schema,
+      new SerializableHadoopConf(new Configuration()))
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val kIdx = opts.schema.fieldIndex("k")
+
+    val runs = (1 to 4).map { _ =>
+      val a0 = threads.getThreadAllocatedBytes(tid)
+      var rows = 0L
+      var sumK = 0L
+      val r = factory.createColumnarReader(part)
+      try while (r.next()) {
+        val b = r.get()
+        var i = 0
+        while (i < b.numRows()) { sumK += b.column(kIdx).getLong(i); i += 1 }
+        rows += b.numRows()
+      } finally r.close()
+      (rows, sumK, threads.getThreadAllocatedBytes(tid) - a0)
+    }
+    all(runs.map(_._1)) shouldBe n.toLong
+    all(runs.map(_._2)) shouldBe n.toLong * (n - 1) / 2
+    val perRecord = runs.tail.map(_._3).min.toDouble / n
+    withClue(s"allocated bytes per record: $perRecord: ") {
+      perRecord should be < 32.0
+    }
+    Files.delete(file)
+  }
 }
