@@ -261,21 +261,25 @@ class FixedWidthMicroBatchStream(
   private def snapshot(): Map[String, Long] = {
     val meta = Map.newBuilder[String, Long]
     val failingNow = scala.collection.mutable.Set.empty[String]
-    val kept = FixedWidthTable.pruneFiles(
-      FixedWidthTable.listPartitionedFiles(tableOptions, conf), opts, pushedFilters)
-      .kept
+    val listed = FixedWidthTable.pruneFiles(
+      FixedWidthTable.listPartitionedFiles(tableOptions, conf), opts, pushedFilters).kept
+    // ALREADY-ADMITTED framed files skip the footer probe entirely: the
+    // footer was complete when they were admitted, their record counts are
+    // checkpointed, and nothing about them can affect admission again —
+    // without this, a 10k-file watched directory pays 10k tail reads per
+    // trigger forever (the r16 fingerprint fold made cache hits a
+    // positioned read, which is fine per QUERY plan but not per streaming
+    // trigger per processed file). The unseen ones are probed in one
+    // parallel batch, then judged one by one in listing order.
+    val unseen = listed.filter(st =>
+      FwzFormat.isFramed(st.getPath) && !seen.contains(st.getPath.toString))
+    val probed = unseen.map(_.getPath.toString).zip(FwzFormat.footersInParallel(unseen)(st =>
+      FwzFormat.readFooterCached(st.getPath, st.getLen, st.getModificationTime, conf))).toMap
+    val kept = listed
       .filter { st =>
         if (!FwzFormat.isFramed(st.getPath)) true
-        // ALREADY-ADMITTED framed files skip the footer probe entirely: the
-        // footer was complete when they were admitted, their record counts
-        // are checkpointed, and nothing about them can affect admission
-        // again — without this, a 10k-file watched directory pays 10k tail
-        // reads per trigger forever (the r16 fingerprint fold made cache
-        // hits a positioned read, which is fine per QUERY plan but not per
-        // streaming trigger per processed file)
         else if (seen.contains(st.getPath.toString)) true
-        else scala.util.Try(FwzFormat.readFooterCached(
-          st.getPath, st.getLen, st.getModificationTime, conf)) match {
+        else probed(st.getPath.toString) match {
           case scala.util.Success(footer) =>
             meta += st.getPath.toString -> footer.totalDLen / opts.recordLength
             fwzFirstUnreadable.remove(st.getPath.toString)
@@ -404,8 +408,10 @@ class FixedWidthMicroBatchStream(
 
   // Pushed filters were fully accepted by the ScanBuilder (no residual), so
   // the streaming reader MUST evaluate them just like the batch reader does.
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FixedWidthReaderFactory(opts, requiredSchema, new SerializableHadoopConf(conf), pushedFilters)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+  // one conf broadcast per stream, not one conf per task
+  private lazy val readerFactory = new FixedWidthReaderFactory(opts, requiredSchema,
+    SerializableHadoopConf.broadcast(conf), pushedFilters)
 
   override def commit(end: Offset): Unit = ()
 

@@ -12,9 +12,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (FixedLengthInputFormat.java:318-365). The table is listed once and
   * pruned once per filter set, and each framed file's footer is consulted
   * once, through the footer cache with the listing's own length and mtime
-  * (no second stat). Aggregate pushdown, statistics and split planning all
-  * read it, so they plan with the same files and footers: none is older or
-  * newer than the listing. */
+  * (no second stat); the consults of one pruning run in parallel.
+  * Aggregate pushdown, statistics and split planning all read it, so they
+  * plan with the same files and footers: none is older or newer than the
+  * listing. */
 final class FixedWidthPlanFiles(
     opts: FixedWidthOptions,
     tableOptions: CaseInsensitiveStringMap,
@@ -29,18 +30,31 @@ final class FixedWidthPlanFiles(
     scala.collection.mutable.HashMap.empty[String, Try[FwzFormat.FwzFooter]]
 
   /** The listing under directory pruning by `filters` (see
-    * [[FixedWidthTable.pruneFiles]]). */
-  def pruned(filters: Array[Filter]): FixedWidthTable.PruneResult = synchronized {
-    prunes.getOrElseUpdate(filters.toSeq, FixedWidthTable.pruneFiles(listed, opts, filters))
+    * [[FixedWidthTable.pruneFiles]]). The kept framed files' footers not yet
+    * consulted are read here, in parallel and outside the lock, so the
+    * statistics, aggregate and split planning that follow find them all. */
+  def pruned(filters: Array[Filter]): FixedWidthTable.PruneResult = {
+    val (res, missing) = synchronized {
+      val r = prunes.getOrElseUpdate(filters.toSeq, FixedWidthTable.pruneFiles(listed, opts, filters))
+      (r, r.kept.filter(st => FwzFormat.isFramed(st.getPath) && !footers.contains(st.getPath.toString)))
+    }
+    val read = FwzFormat.footersInParallel(missing)(consult)
+    synchronized {
+      missing.zip(read).foreach { case (st, f) => footers.getOrElseUpdate(st.getPath.toString, f) }
+    }
+    res
   }
 
   /** The footer of a framed file of the listing. A failure stays a value:
     * push decisions read it as "not answerable", split planning rethrows
     * it. */
   def footer(st: FileStatus): Try[FwzFormat.FwzFooter] = synchronized {
-    footers.getOrElseUpdate(st.getPath.toString,
-      Try(FwzFormat.readFooterCached(st.getPath, st.getLen, st.getModificationTime, conf)))
+    footers.getOrElseUpdate(st.getPath.toString, Try(consult(st)))
   }
+
+  /** One footer cache consult, with the listing's own length and mtime. */
+  private def consult(st: FileStatus): FwzFormat.FwzFooter =
+    FwzFormat.readFooterCached(st.getPath, st.getLen, st.getModificationTime, conf)
 
   /** Exact record count of a file WITHOUT scanning its data: plain files
     * by length arithmetic, framed .fwz by footer (frames carry content

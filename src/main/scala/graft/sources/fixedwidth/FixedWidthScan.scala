@@ -4,6 +4,7 @@ import scala.collection.immutable.ArraySeq
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
@@ -11,6 +12,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Column pruning (`SupportsPushDownRequiredColumns`): the reference always
   * materializes the whole record (SURVEY.md §4 table); here a projection that
@@ -534,7 +536,16 @@ class FixedWidthScan(
     * every split carries its key (Spark groups same-key splits itself;
     * runtime filtering may drop whole groups — reporting a SUBSET of the
     * original partition values is explicitly allowed). */
-  override def planInputPartitions(): Array[InputPartition] = {
+  override def planInputPartitions(): Array[InputPartition] = synchronized {
+    // Spark asks a batch scan for its partitions more than once; frame
+    // skipping and the block-location lookups run once per runtime-filter set
+    val key = runtimeFilters.toSeq
+    if (planned == null || planned._1 != key) planned = (key, planPartitions())
+    planned._2
+  }
+  private var planned: (Seq[org.apache.spark.sql.sources.Filter], Array[InputPartition]) = null
+
+  private def planPartitions(): Array[InputPartition] = {
     // Frame skipping sees pushed AND runtime filters: a join-derived In on a
     // stats-covered key can skip compressed frames too (always sound — Spark
     // re-evaluates the join itself).
@@ -569,8 +580,10 @@ class FixedWidthScan(
         if (filesPruned >= 0) filesPruned else pruneResult.pruned),
       FixedWidthMetrics.task("fwFramesSkipped", framesSkipped))
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FixedWidthReaderFactory(opts, requiredSchema, new SerializableHadoopConf(conf), pushedFilters)
+  // one conf broadcast per scan, not one conf per task
+  private lazy val readerFactory = new FixedWidthReaderFactory(opts, requiredSchema,
+    SerializableHadoopConf.broadcast(conf), pushedFilters)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     // Streaming plans bypass V2 column pruning, so Spark maps the
@@ -747,11 +760,13 @@ object FixedWidthScan {
     lazy val conf = session.sessionState.newHadoopConf()
     // footer per framed file, taken ONCE here and shared by the record-range
     // clipping and the chunker below: from the caller's file view, or read
-    // through the footer cache with the mtime resolved by a stat
-    val fwzFooters: Map[String, FwzFormat.FwzFooter] = framedFiles.map { case (p, len) =>
-      p -> (if (footerOf != null) footerOf(p)
-            else FwzFormat.readFooterCachedStat(new org.apache.hadoop.fs.Path(p), len, conf))
-    }.toMap
+    // in parallel through the footer cache with the mtime resolved by a
+    // stat (a failure rethrows for the first failing file in listing order)
+    val fwzFooters: Map[String, FwzFormat.FwzFooter] =
+      if (footerOf != null) framedFiles.map { case (p, _) => p -> footerOf(p) }.toMap
+      else framedFiles.map(_._1).zip(FwzFormat.footersInParallel(framedFiles) { case (p, len) =>
+        FwzFormat.readFooterCachedStat(new org.apache.hadoop.fs.Path(p), len, conf)
+      }.map(_.get)).toMap
 
     val (rangeStart, rangeEnd) = recordRange.getOrElse((0L, Long.MaxValue))
     // Global record intervals are assigned over the ORIGINAL listing order
@@ -975,9 +990,15 @@ final case class FixedWidthKeyedInputPartition(
 class FixedWidthReaderFactory(
     opts: FixedWidthOptions,
     requiredSchema: StructType,
-    conf: SerializableHadoopConf,
-    pushedFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    conf: Broadcast[SerializableConfiguration],
+    pushedFilters: Array[org.apache.spark.sql.sources.Filter])
     extends PartitionReaderFactory {
+
+  /** A factory for in-process callers holding a bare conf (single-thread
+    * harnesses and tests); it broadcasts the conf as a scan does. */
+  def this(opts: FixedWidthOptions, requiredSchema: StructType, conf: SerializableHadoopConf) =
+    this(opts, requiredSchema,
+      SerializableHadoopConf.broadcast(conf.value), Array.empty)
 
   private def unwrap(partition: InputPartition): FixedWidthInputPartition = partition match {
     case k: FixedWidthKeyedInputPartition => k.inner
@@ -992,7 +1013,7 @@ class FixedWidthReaderFactory(
   override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new FixedWidthColumnarReader(unwrap(partition), opts, requiredSchema, conf.value, pushedFilters)
+    new FixedWidthColumnarReader(unwrap(partition), opts, requiredSchema, conf.value.value, pushedFilters)
 }
 
 /** Chunk-walking record cursor of [[FixedWidthColumnarReader]]: opens one

@@ -4,10 +4,12 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** Fixed-width sink: the inverse of the scan, the production analog of the
   * reference test harness's file writers (reference
@@ -147,7 +149,8 @@ class FixedWidthWriteBuilder(
         n
       }.getOrElse(0L)
       new FixedWidthBatchWrite(
-        path, opts, info.schema(), doTruncate, new SerializableHadoopConf(conf), partitionCols,
+        path, opts, info.schema(), doTruncate,
+        SerializableHadoopConf.broadcast(conf), partitionCols,
         maxRecords, framedCodec, frameBytes, statFields)
     }
   }
@@ -168,7 +171,7 @@ class FixedWidthBatchWrite(
     opts: FixedWidthOptions,
     querySchema: StructType,
     truncate: Boolean,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableConfiguration],
     partitionCols: Seq[String] = Nil,
     maxRecordsPerFile: Long = 0L,
     framedCodec: Byte = -1,
@@ -182,7 +185,7 @@ class FixedWidthBatchWrite(
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // Driver-side, before any task launches.
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
+    val fs = dir.getFileSystem(conf.value.value)
     if (truncate && fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(tempDir)
     // Validate the incoming schema maps onto the layout once, up front.
@@ -196,7 +199,7 @@ class FixedWidthBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
+    val fs = dir.getFileSystem(conf.value.value)
     messages.collect { case m: FixedWidthCommitMessage => m }.foreach { m =>
       m.relPaths.foreach { rel =>
         val src = new Path(tempDir, rel)
@@ -211,7 +214,7 @@ class FixedWidthBatchWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = new Path(path).getFileSystem(conf.value.value)
     fs.delete(tempDir, true)
   }
 }
@@ -225,7 +228,7 @@ class FixedWidthDataWriterFactory(
     tempDir: String,
     opts: FixedWidthOptions,
     querySchema: StructType,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableConfiguration],
     partitionCols: Seq[String] = Nil,
     maxRecordsPerFile: Long = 0L,
     jobTag: String = "",
@@ -239,7 +242,7 @@ class FixedWidthDataWriterFactory(
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new FixedWidthDataWriter(
       tempDir, f"part-$partitionId%05d-$taskId${if (jobTag.isEmpty) "" else s"-$jobTag"}",
-      opts, querySchema, conf.value, partitionCols, maxRecordsPerFile,
+      opts, querySchema, conf.value.value, partitionCols, maxRecordsPerFile,
       framedCodec, frameBytes, statFields)
 }
 

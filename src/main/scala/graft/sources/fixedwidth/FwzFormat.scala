@@ -1,5 +1,7 @@
 package graft.sources.fixedwidth
 
+import scala.util.Try
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
@@ -343,6 +345,16 @@ object FwzFormat {
                 catch { case _: java.io.IOException => return readFooter(path, fileLen, conf) }
     readFooterCached(path, fileLen, mtime, conf)
   }
+
+  /** Footers of a batch of framed files, `read` (a footer cache consult)
+    * fanned out over at most 8 driver threads, the constant Spark's own
+    * Parquet footer reads use. Each result is its read's own `Try`, in
+    * input order: callers decide per file exactly as they would serially,
+    * and a rethrown failure keeps its message. A batch of one or none
+    * reads on the caller's thread. */
+  def footersInParallel[A](files: Seq[A])(read: A => FwzFooter): Seq[Try[FwzFooter]] =
+    if (files.lengthCompare(1) <= 0) files.map(a => Try(read(a)))
+    else org.apache.spark.sql.graft.ThreadBridge.parmap(files, "fwz-footers", 8)(a => Try(read(a)))
 
   /** Read and validate a file's footer: two bounded reads (trailer, then
     * frame table + stats), magic/version/codec checks, and structural

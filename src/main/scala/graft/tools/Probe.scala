@@ -214,6 +214,27 @@ object Probe {
         .option("recordLength", 32).load(dir).collect()
     }
 
+    // One truncated .fwz among 64 files: the footers are read in parallel,
+    // and the read must still fail naming that file. An error that does not
+    // name it is swallowed, so the case prints NO-ERROR (unexpected).
+    expectError("fwz-truncated-1-of-64") {
+      val dir = s"$base/fwz-truncated"
+      (0 until 6400).map(i => (i.toLong, s"p$i")).toDF("id", "payload").repartition(64)
+        .write.format("fixedwidth").option("fields", "id:long:0:8,payload:string:8:24")
+        .option("recordLength", 32).option("compression", "zstd")
+        .mode("overwrite").save(dir)
+      val victim = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".fwz"))
+        .sortBy(_.getName).apply(37)
+      val raf = new java.io.RandomAccessFile(victim, "rw")
+      try raf.setLength(raf.length - 5) finally raf.close()
+      Files.deleteIfExists(Paths.get(victim.getParent, s".${victim.getName}.crc"))
+      scala.util.Try(spark.read.format("fixedwidth").option("fields", "id:long:0:8,payload:string:8:24")
+        .option("recordLength", 32).load(dir).collect()).failed.toOption
+        .filter(e => Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+          .getMessage.contains(victim.getName))
+        .foreach(throw _)
+    }
+
     spark.stop()
   }
 

@@ -23,10 +23,13 @@ object CountingLocalFs {
   val opens = new AtomicLong
   val fwzStats = new AtomicLong
   val rootListings = new AtomicLong
+  /** Names of the threads that opened a `.fwz` file. */
+  val openThreads = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   @volatile var root: String = ""
 
   def reset(dir: String): Unit = {
     opens.set(0); fwzStats.set(0); rootListings.set(0)
+    openThreads.clear()
     root = new Path(dir).toUri.getPath
   }
 }
@@ -39,6 +42,7 @@ class CountingLocalFs extends LocalFileSystem {
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     if (f.getName.endsWith(".fwz")) opens.incrementAndGet()
+    if (f.getName.endsWith(".fwz")) openThreads.add(Thread.currentThread.getName)
     getRawFileSystem.open(f, bufferSize)
   }
 
@@ -75,6 +79,21 @@ class FixedWidthPlanIoSpec extends SparkSpec with Matchers {
       .option("frameStats", "k")
       .mode("overwrite").save(dir)
     new java.io.File(dir).listFiles.count(_.getName.endsWith(".fwz")) shouldBe nFiles
+    dir
+  }
+
+  /** `n` framed files of the same layout and stats as [[writeFramed]]. */
+  private def writeFramedFiles(n: Int): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-planio-n").toString
+    (0 until nRows).map(i => (i.toLong, (i % 100).toLong)).toDF("k", "qty")
+      .repartition(n)
+      .write.format("fixedwidth").option("fields", layout)
+      .option("recordLength", recLen.toString)
+      .option("compression", "zstd").option("frameBytes", (50 * recLen).toString)
+      .option("frameStats", "k")
+      .mode("overwrite").save(dir)
+    new java.io.File(dir).listFiles.count(_.getName.endsWith(".fwz")) shouldBe n
     dir
   }
 
@@ -169,5 +188,63 @@ class FixedWidthPlanIoSpec extends SparkSpec with Matchers {
     opens shouldBe nFiles
     stats shouldBe 0L
     listings shouldBe 1L
+  }
+
+  test("a warm MIN/MAX/COUNT over many files reads their footers on more than one thread") {
+    val n = 16
+    val dir = writeFramedFiles(n)
+    planLikeSpark(dir, Array.empty, minMaxCount) // warms the footer cache
+    val (opens, stats, listings) = countedIo(dir) {
+      planLikeSpark(dir, Array.empty, minMaxCount).description() should include("FixedWidthCountScan")
+    }
+    opens shouldBe n.toLong
+    stats shouldBe 0L
+    listings shouldBe 1L
+    val threads = CountingLocalFs.openThreads.asScala.toSet
+    withClue(s"threads $threads: ") {
+      threads.size should be > 1
+      all(threads) should startWith("fwz-footers")
+    }
+  }
+
+  test("a batch scan plans its partitions once per runtime-filter set") {
+    val dir = writeFramed()
+    val countSum = new Aggregation(
+      Array[AggregateFunc](new CountStar(), new Sum(ref("qty"), false)), Array.empty[Expression])
+    val scan = planLikeSpark(dir, Array.empty, countSum)
+    val batch = scan.toBatch
+    val first = batch.planInputPartitions()
+    batch.planInputPartitions() should be theSameInstanceAs first
+    scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
+      .filter(Array[Filter](GreaterThanOrEqual("k", nRows / 2L)))
+    val filtered = batch.planInputPartitions()
+    filtered should not be theSameInstanceAs(first)
+    batch.planInputPartitions() should be theSameInstanceAs filtered
+  }
+
+  test("a session fs.file.impl reaches the executor-side reader") {
+    val dir = writeFramed()
+    def query() = spark.read.format("fixedwidth").option("fields", layout)
+      .option("recordLength", recLen.toString).load(dir).agg(sum(col("qty")), count(lit(1)))
+    query().collect()
+    var row: org.apache.spark.sql.Row = null
+    val (opens, _, _) = countedIo(dir) { row = query().collect().head }
+    (row.getLong(0), row.getLong(1)) shouldBe
+      (((0 until nRows).map(_ % 100L).sum, nRows.toLong))
+    // one warm footer consult per file, and at least one scan open per file
+    opens should be >= 2L * nFiles
+    CountingLocalFs.openThreads.asScala.exists(_.startsWith("Executor task launch")) shouldBe true
+  }
+
+  test("the reader factory ships a broadcast conf, not the conf itself") {
+    val dir = writeFramed()
+    val countSum = new Aggregation(
+      Array[AggregateFunc](new CountStar(), new Sum(ref("qty"), false)), Array.empty[Expression])
+    val factory = planLikeSpark(dir, Array.empty, countSum).toBatch.createReaderFactory()
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(factory)
+    out.close()
+    bytes.size should be < 16 * 1024
   }
 }
