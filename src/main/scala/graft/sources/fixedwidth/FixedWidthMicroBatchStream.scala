@@ -10,6 +10,8 @@ import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroB
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.fixedwidth.FixedWidthOptions.positiveLong
+
 /** Streaming offset = a metadata-log SEQUENCE NUMBER — O(1) regardless of
   * how many files the source has ever seen (round-2 design note fixed: the
   * previous offset carried the full seen-file map, O(total files) JSON per
@@ -185,28 +187,18 @@ class FixedWidthMicroBatchStream(
   private val seen: scala.collection.mutable.Set[String] =
     scala.collection.mutable.Set.empty ++ log.allSeenUpTo(curSeq).keySet
 
-  private def posLongOpt(k: String): Option[Long] =
-    Option(tableOptions.get(k)).map { v =>
-      val n =
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"fixedwidth: option '$k' must be a positive integer, got '$v'")
-        }
-      if (n <= 0)
-        throw new IllegalArgumentException(
-          s"fixedwidth: option '$k' must be a positive integer, got '$v'")
-      n
-    }
+  /** A file the stream may admit: its path, its length, and, for a framed
+    * file, the exact record count from the footer its admission read. */
+  private type Candidate = (String, Long, Option[Long])
 
-  private val maxFilesPerTrigger: Option[Int] = posLongOpt("maxFilesPerTrigger").map { n =>
-    if (n > Int.MaxValue)
-      throw new IllegalArgumentException(s"fixedwidth: 'maxFilesPerTrigger' too large: $n")
-    n.toInt
-  }
-  private val maxRecordsPerTrigger: Option[Long] = posLongOpt("maxRecordsPerTrigger")
-  private val maxBytesPerTrigger: Option[Long] = posLongOpt("maxBytesPerTrigger")
+  private val maxFilesPerTrigger: Option[Int] =
+    positiveLong(tableOptions, "maxFilesPerTrigger").map { n =>
+      if (n > Int.MaxValue)
+        throw new IllegalArgumentException(s"fixedwidth: 'maxFilesPerTrigger' too large: $n")
+      n.toInt
+    }
+  private val maxRecordsPerTrigger: Option[Long] = positiveLong(tableOptions, "maxRecordsPerTrigger")
+  private val maxBytesPerTrigger: Option[Long] = positiveLong(tableOptions, "maxBytesPerTrigger")
 
   /** How long a framed file may stay unreadable AT A STABLE LENGTH before
     * the stream fails loudly instead of excluding it for another trigger.
@@ -216,30 +208,12 @@ class FixedWidthMicroBatchStream(
     * WARN is the one place the streaming path was weaker than the batch
     * path (which fails loudly on the same directory). */
   private val fwzUnreadableGraceMs: Long =
-    posLongOpt("fwzUnreadableGraceMs").getOrElse(10L * 60 * 1000)
+    positiveLong(tableOptions, "fwzUnreadableGraceMs").getOrElse(10L * 60 * 1000)
 
   /** Backlog snapshot for Trigger.AvailableNow: fixed at query start, so the
     * drain has a definite end even while files keep landing. */
-  private var availableNowBacklog: Option[Vector[(String, Long)]] = None
+  private var availableNowBacklog: Option[Vector[Candidate]] = None
 
-  /** Directory-pruned listing: files whose `col=value` path can never match
-    * the pushed filters are not even admitted to the file log — on a
-    * date-partitioned streaming feed the checkpoint state stays proportional
-    * to the matching partitions. (Pruned-away files also never age into the
-    * seen-set; that is fine because they could never produce rows.)
-    *
-    * Framed `.fwz` files additionally gate on FOOTER COMPLETENESS: a file a
-    * foreign writer is still streaming has no trailer yet (this sink's own
-    * commit protocol renames only completed files, but a watched directory
-    * makes no such promise), and admitting it would crash the batch at plan
-    * time. An incomplete file is simply NOT admitted this trigger — it stays
-    * out of the seen-set, so the stream re-probes it every cycle and picks
-    * it up in the trigger after its footer lands. The footer probe is
-    * memoized per (path, length, mtime), so a completed file pays it once. */
-  // Exact record counts of the VALID framed files seen by the latest
-  // snapshot (from the same memoized footer read the completeness gate
-  // pays) — admission reuses them instead of re-stat'ing every file.
-  @volatile private var fwzRecords: Map[String, Long] = Map.empty
   // One WARN per (path, length): an excluded file must be visible in the
   // logs — "not yet complete" and "permanently corrupt" are
   // indistinguishable from outside at first sight, so the operator can see
@@ -258,34 +232,47 @@ class FixedWidthMicroBatchStream(
   private val fwzFirstUnreadable = scala.collection.mutable.Map.empty[String, (Long, Long, Long, Long)]
   private val logger = org.slf4j.LoggerFactory.getLogger(classOf[FixedWidthMicroBatchStream])
 
-  private def snapshot(): Map[String, Long] = {
-    val meta = Map.newBuilder[String, Long]
+  /** Unseen files of the directory-pruned listing: files whose `col=value`
+    * path can never match the pushed filters are not even admitted to the
+    * file log — on a date-partitioned streaming feed the checkpoint state
+    * stays proportional to the matching partitions. (Pruned-away files also
+    * never age into the seen-set; that is fine because they could never
+    * produce rows.)
+    *
+    * Framed `.fwz` files additionally gate on FOOTER COMPLETENESS: a file a
+    * foreign writer is still streaming has no trailer yet (this sink's own
+    * commit protocol renames only completed files, but a watched directory
+    * makes no such promise), and admitting it would crash the batch at plan
+    * time. An incomplete file is simply NOT admitted this trigger — it stays
+    * out of the seen-set, so the stream re-probes it every cycle and picks
+    * it up in the trigger after its footer lands. The footer probe is
+    * memoized per (path, length, mtime), so a completed file pays it once,
+    * and the same read gives admission the file's exact record count. */
+  private def snapshot(): Vector[Candidate] = {
     val failingNow = scala.collection.mutable.Set.empty[String]
-    val listed = FixedWidthTable.pruneFiles(
-      FixedWidthTable.listPartitionedFiles(tableOptions, conf), opts, pushedFilters).kept
-    // ALREADY-ADMITTED framed files skip the footer probe entirely: the
+    // ALREADY-ADMITTED files are dropped before the footer probe: the
     // footer was complete when they were admitted, their record counts are
     // checkpointed, and nothing about them can affect admission again —
     // without this, a 10k-file watched directory pays 10k tail reads per
     // trigger forever (the r16 fingerprint fold made cache hits a
     // positioned read, which is fine per QUERY plan but not per streaming
-    // trigger per processed file). The unseen ones are probed in one
+    // trigger per processed file). The unseen framed ones are probed in one
     // parallel batch, then judged one by one in listing order.
-    val unseen = listed.filter(st =>
-      FwzFormat.isFramed(st.getPath) && !seen.contains(st.getPath.toString))
-    val probed = unseen.map(_.getPath.toString).zip(FwzFormat.footersInParallel(unseen)(st =>
+    val listed = FixedWidthTable.pruneFiles(
+      FixedWidthTable.listPartitionedFiles(tableOptions, conf), opts, pushedFilters).kept
+      .filterNot(st => seen.contains(st.getPath.toString))
+    val framed = listed.filter(st => FwzFormat.isFramed(st.getPath))
+    val probed = framed.map(_.getPath.toString).zip(FwzFormat.footersInParallel(framed)(st =>
       FwzFormat.readFooterCached(st.getPath, st.getLen, st.getModificationTime, conf))).toMap
     val kept = listed
-      .filter { st =>
-        if (!FwzFormat.isFramed(st.getPath)) true
-        else if (seen.contains(st.getPath.toString)) true
-        else probed(st.getPath.toString) match {
+      .flatMap { st =>
+        val pathStr = st.getPath.toString
+        if (!FwzFormat.isFramed(st.getPath)) Some((pathStr, st.getLen, None))
+        else probed(pathStr) match {
           case scala.util.Success(footer) =>
-            meta += st.getPath.toString -> footer.totalDLen / opts.recordLength
-            fwzFirstUnreadable.remove(st.getPath.toString)
-            true
+            fwzFirstUnreadable.remove(pathStr)
+            Some((pathStr, st.getLen, Some(footer.totalDLen / opts.recordLength)))
           case scala.util.Failure(e) =>
-            val pathStr = st.getPath.toString
             failingNow += pathStr
             val now = System.currentTimeMillis()
             fwzFirstUnreadable.get(pathStr) match {
@@ -308,7 +295,7 @@ class FixedWidthMicroBatchStream(
                 s"(${st.getLen} B) until its footer becomes readable — a file " +
                 "still being written completes (or grows) on its own; one frozen " +
                 s"at this length past ${fwzUnreadableGraceMs} ms fails the stream: $e")
-            false
+            None
         }
       }
     // Evict deadline entries only for files CONFIRMED resolved: admitted or
@@ -325,8 +312,7 @@ class FixedWidthMicroBatchStream(
     fwzFirstUnreadable.filterInPlace { case (p, (_, _, _, lastFailing)) =>
       failingNow.contains(p) || evictNow - lastFailing <= fwzUnreadableGraceMs
     }
-    fwzRecords = meta.result()
-    kept.map(st => st.getPath.toString -> st.getLen).toMap
+    kept.toVector
   }
 
   override def initialOffset(): Offset = FixedWidthStreamOffset(0L)
@@ -334,23 +320,13 @@ class FixedWidthMicroBatchStream(
   /** Unseen files in deterministic (path) order — admission order must not
     * depend on filesystem listing order or a batch boundary would move
     * between runs of the same backlog. */
-  private def freshFiles(): Vector[(String, Long)] =
-    snapshot().filterNot { case (p, _) => seen.contains(p) }.toVector.sortBy(_._1)
+  private def freshFiles(): Vector[Candidate] = snapshot().distinctBy(_._1).sortBy(_._1)
 
-  private def admissible(limit: ReadLimit, files: Vector[(String, Long)]): Vector[(String, Long)] = {
-    // exact record counts for framed members, carried over from the footer
-    // reads snapshot()'s completeness gate already paid — genuinely no
-    // extra IO here (the stat-resolving fallback covers only a file that
-    // somehow bypassed the snapshot, e.g. an AvailableNow backlog entry
-    // surviving a fwzRecords wipe)
-    val counts = files.collect {
-      case (p, l) if FwzFormat.isFramed(new Path(p)) =>
-        p -> fwzRecords.getOrElse(p,
-          scala.util.Try(FwzFormat.readFooterCachedStat(new Path(p), l, conf).totalDLen)
-            .getOrElse(l) / opts.recordLength)
-    }.toMap
-    FixedWidthMicroBatchStream.admissiblePrefix(limit, files, opts.recordLength, counts)
-  }
+  // exact record counts for framed members come with each candidate, from
+  // the footer read snapshot()'s completeness gate already paid
+  private def admissible(limit: ReadLimit, files: Vector[Candidate]): Vector[(String, Long)] =
+    FixedWidthMicroBatchStream.admissiblePrefix(limit, files.map(f => (f._1, f._2)),
+      opts.recordLength, files.collect { case (p, _, Some(n)) => p -> n }.toMap)
 
   private def admit(files: Vector[(String, Long)]): Unit = {
     if (files.nonEmpty) {
@@ -382,7 +358,7 @@ class FixedWidthMicroBatchStream(
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
     val pending = availableNowBacklog match {
       // AvailableNow: never look at the filesystem again — drain the snapshot
-      case Some(b) => b.filterNot { case (p, _) => seen.contains(p) }
+      case Some(b) => b.filterNot(f => seen.contains(f._1))
       case None => freshFiles()
     }
     admit(admissible(limit, pending))

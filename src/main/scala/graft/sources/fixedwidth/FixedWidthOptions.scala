@@ -134,6 +134,13 @@ object FixedWidthOptions {
     "keyStartAt"   -> "mapreduce.input.fixedlengthinputformat.recordkey.startat",
     "keyEndAt"     -> "mapreduce.input.fixedlengthinputformat.recordkey.endat")
 
+  /** Option `k` as a positive integer, or None when it is unset. */
+  def positiveLong(map: CaseInsensitiveStringMap, k: String): Option[Long] =
+    Option(map.get(k)).map { v =>
+      scala.util.Try(v.trim.toLong).toOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"fixedwidth: option '$k' must be a positive integer, got '$v'"))
+    }
+
   def apply(map: CaseInsensitiveStringMap): FixedWidthOptions = {
     def rawOpt(k: String): String = {
       val native = map.get(k)

@@ -66,15 +66,8 @@ class FixedWidthWriteBuilder(
   // Target DECOMPRESSED bytes per frame (rounded down to a record multiple,
   // floored at one record). Smaller frames split finer but compress worse;
   // 1 MiB ≈ a few thousand records is the sane default for both codecs.
-  private val frameBytes: Long = Option(tableOptions.get("frameBytes")).map { v =>
-    val n = try v.trim.toLong catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"fixedwidth: option 'frameBytes' must be a positive integer, got '$v'")
-    }
-    if (n <= 0) throw new IllegalArgumentException(
-      s"fixedwidth: option 'frameBytes' must be > 0, got $n")
-    n
-  }.getOrElse(1L * 1024 * 1024)
+  private val frameBytes: Long =
+    FixedWidthOptions.positiveLong(tableOptions, "frameBytes").getOrElse(1L * 1024 * 1024)
   if (framedCodec < 0 && tableOptions.get("frameBytes") != null)
     throw new IllegalArgumentException(
       "fixedwidth: 'frameBytes' requires compression=zstd|gzip (framed layout)")
@@ -138,16 +131,8 @@ class FixedWidthWriteBuilder(
     override def toBatch: BatchWrite = {
       val path = Option(tableOptions.get("path")).getOrElse(
         throw new IllegalArgumentException("fixedwidth: write requires a single 'path'"))
-      val maxRecords = Option(tableOptions.get("maxRecordsPerFile")).map { v =>
-        val n = try v.trim.toLong catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"fixedwidth: option 'maxRecordsPerFile' must be a positive integer, got '$v'")
-        }
-        if (n <= 0) throw new IllegalArgumentException(
-          s"fixedwidth: option 'maxRecordsPerFile' must be > 0, got $n")
-        n
-      }.getOrElse(0L)
+      val maxRecords =
+        FixedWidthOptions.positiveLong(tableOptions, "maxRecordsPerFile").getOrElse(0L)
       new FixedWidthBatchWrite(
         path, opts, info.schema(), doTruncate,
         SerializableHadoopConf.broadcast(conf), partitionCols,

@@ -208,6 +208,17 @@ object FwzStats {
   private final case class Pred(eval: Int => Boolean, trivial: Boolean)
   private val AlwaysTrue = Pred(_ => true, trivial = true)
 
+  /** One range of decoded values, as two optional monotone tests on a
+    * frame's decoded extremes: `reaches` tests the max and goes from false
+    * to true over ascending extremes; `within` tests the min and goes from
+    * true to false. A side with no test is unconstrained, and its bound is
+    * never decoded. */
+  private final case class ValueRange(
+      reaches: Option[AnyRef => Boolean],
+      within: Option[AnyRef => Boolean]) {
+    def holds(min: AnyRef, max: AnyRef): Boolean = reaches.forall(_(max)) && within.forall(_(min))
+  }
+
   /** Memoized sentinel for a stats slice that fails its typed parse (only
     * reachable via a foreign-written block) — leaves degrade to may-match. */
   private object Undecodable
@@ -331,37 +342,34 @@ object FwzStats {
       v
     }
 
-    /** Comparison leaf with the ordered fast path: on a proved-ordered
-      * field (mins AND maxs both ascend, since max_i ≤ min_{i+1}), the kept
-      * frames of any single comparison form one contiguous INTERVAL, found
-      * by binary search over the decoded extremes — O(log frames) decodes
-      * against the linear walk's O(frames) (probe/decodability contract:
-      * [[orderedBound]]). The interval reproduces the
-      * linear decisions EXACTLY (FwzOrderedSpec pins this differentially):
-      *   keep(i) for `op lit` ⇔ lo(op) ≤ i ≤ hi(op) where
-      *     lo: first max_i ≥ lit (=, ≥) / first max_i > lit (>) / 0
-      *     hi: last min_i ≤ lit (=, ≤) / last min_i < lit (<) / n-1. */
-    def cmpLeaf(name: String, value: Any, op: String): Pred =
+    /** Range leaf (`= < <= > >=`, IN, StringStartsWith): the union of
+      * `ranges` over field `name`. Linear walk: a frame is kept when it is
+      * unknown, or has a value and either a tested bound does not decode or
+      * some range holds on every side it tests. Ordered fast path: on a
+      * proved-ordered field (mins AND maxs both ascend, since
+      * max_i ≤ min_{i+1}), each range keeps one contiguous INTERVAL of the
+      * value frames, found by binary search — O(|ranges|·log frames)
+      * decodes against the linear walk's O(frames) (probe/decodability
+      * contract: [[orderedBound]]):
+      *   lo = first max that `reaches` (0 when untested)
+      *   hi = last min `within` (the last value frame when untested).
+      * The intervals merge (integer frame indices, so merging at gap 0 is
+      * the exact union) and each frame binary-searches the merged starts;
+      * all-null frames inside an interval are excluded by the hasVal check
+      * (a range never matches null). The decisions are the linear walk's
+      * EXACTLY (FwzOrderedSpec and FwzRangeRuleSpec pin this
+      * differentially). */
+    def rangeLeaf(name: String)(ranges: FieldCodec => Option[Seq[ValueRange]]): Pred =
       usableEntry(opts, block, name).flatMap { case (codec, st) =>
-        codec.literal(value).map { lit =>
-          def linear: Pred = op match {
-            case "=" => Pred(i => unknown(st, i) || (hasVal(st, i) && {
-              val mn = bound(codec, st, i, wantMax = false)
-              val mx = bound(codec, st, i, wantMax = true)
-              (mn eq Undecodable) || (mx eq Undecodable) ||
-                (codec.compare(mn, lit) <= 0 && codec.compare(mx, lit) >= 0)
-            }), trivial = false)
-            case ">" | ">=" => Pred(i => unknown(st, i) || (hasVal(st, i) && {
-              val mx = bound(codec, st, i, wantMax = true)
-              (mx eq Undecodable) ||
-                (if (op == ">") codec.compare(mx, lit) > 0 else codec.compare(mx, lit) >= 0)
-            }), trivial = false)
-            case _ => Pred(i => unknown(st, i) || (hasVal(st, i) && {
-              val mn = bound(codec, st, i, wantMax = false)
-              (mn eq Undecodable) ||
-                (if (op == "<") codec.compare(mn, lit) < 0 else codec.compare(mn, lit) <= 0)
-            }), trivial = false)
-          }
+        ranges(codec).map { rs =>
+          // an empty IN list decodes both bounds, as its `=` ranges would
+          val testsMin = rs.isEmpty || rs.exists(_.within.isDefined)
+          val testsMax = rs.isEmpty || rs.exists(_.reaches.isDefined)
+          def linear: Pred = Pred(i => unknown(st, i) || (hasVal(st, i) && {
+            val mn = if (testsMin) bound(codec, st, i, wantMax = false) else null
+            val mx = if (testsMax) bound(codec, st, i, wantMax = true) else null
+            (mn eq Undecodable) || (mx eq Undecodable) || rs.exists(_.holds(mn, mx))
+          }), trivial = false)
           orderedValIdx(st) match {
             case None => linear
             case Some(valIdx) =>
@@ -369,32 +377,55 @@ object FwzStats {
               val b = orderedBound(codec, st, valIdx) _
               try {
                 // ranks within the value-frame subsequence, mapped back to
-                // frame indices; all-null frames inside the interval are
-                // excluded by the hasVal check (a compare never matches null)
-                val lo = op match {
-                  case ">" => firstTrue(m, j => codec.compare(b(j, true), lit) > 0)
-                  case ">=" | "=" => firstTrue(m, j => codec.compare(b(j, true), lit) >= 0)
-                  case _ => 0
+                // frame indices
+                val ivs = rs.flatMap { r =>
+                  val lo = r.reaches.fold(0)(t => firstTrue(m, j => t(b(j, true))))
+                  val hi = r.within.fold(m)(t => firstTrue(m, j => !t(b(j, false)))) - 1
+                  if (lo > hi) None else Some((valIdx(lo), valIdx(hi)))
+                }.sortBy(_._1)
+                val merged = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+                ivs.foreach { case (s, e) =>
+                  if (merged.nonEmpty && s <= merged.last._2 + 1)
+                    merged(merged.length - 1) = (merged.last._1, math.max(merged.last._2, e))
+                  else merged += ((s, e))
                 }
-                val hi = op match {
-                  case "<" => firstTrue(m, j => codec.compare(b(j, false), lit) >= 0) - 1
-                  case "<=" | "=" => firstTrue(m, j => codec.compare(b(j, false), lit) > 0) - 1
-                  case _ => m - 1
-                }
-                if (lo >= m || hi < 0 || lo > hi) Pred(_ => false, trivial = false)
-                else {
-                  val loF = valIdx(lo)
-                  val hiF = valIdx(hi)
-                  Pred(i => i >= loF && i <= hiF && hasVal(st, i), trivial = false)
+                if (merged.length == 1) {
+                  // one interval stays two integer compares
+                  val (lo, hi) = merged.head
+                  Pred(i => i >= lo && i <= hi && hasVal(st, i), trivial = false)
+                } else {
+                  val starts = merged.map(_._1).toArray
+                  val ends = merged.map(_._2).toArray
+                  Pred(i => hasVal(st, i) && {
+                    var k = java.util.Arrays.binarySearch(starts, i)
+                    if (k < 0) k = -k - 2 // greatest start <= i
+                    k >= 0 && i <= ends(k)
+                  }, trivial = false)
                 }
               } catch { case BailToLinear => linear }
           }
         }
       }.getOrElse(AlwaysTrue)
 
+    /** The range of `x` with `c(x) op 0`, for a three-way compare `c`
+      * against one literal: `=` tests both sides, `>`/`>=` only the max,
+      * `<`/`<=` only the min. */
+    def range(c: AnyRef => Int, op: String): ValueRange = op match {
+      case "=" => ValueRange(Some(c(_) >= 0), Some(c(_) <= 0))
+      case ">" => ValueRange(Some(c(_) > 0), None)
+      case ">=" => ValueRange(Some(c(_) >= 0), None)
+      case "<" => ValueRange(None, Some(c(_) < 0))
+      case _ => ValueRange(None, Some(c(_) <= 0))
+    }
+
+    def cmpLeaf(name: String, value: Any, op: String): Pred =
+      rangeLeaf(name)(codec =>
+        codec.literal(value).map(lit => Seq(range(codec.compare(_, lit), op))))
+
     /** Unsigned-lexicographic compare of `u`'s first `n` BYTES against
       * prefix `p` (UTF8String order is bytewise, so byte truncation is the
-      * exact parquet truncated-stats compare). */
+      * exact parquet truncated-stats compare). Monotone in the UTF8 byte
+      * order, so a prefix is an `=` range under it. */
     def prefixCmp(u: UTF8String, p: UTF8String): Int = {
       val ub = u.getBytes
       val pb = p.getBytes
@@ -417,62 +448,13 @@ object FwzStats {
       case GreaterThanOrEqual(a, v) => cmpLeaf(a, v, ">=")
       case LessThan(a, v) => cmpLeaf(a, v, "<")
       case LessThanOrEqual(a, v) => cmpLeaf(a, v, "<=")
+      // an IN list is a disjunction of equalities: one `=` range per literal
       case In(a, vs) =>
-        usableEntry(opts, block, a).flatMap { case (codec, st) =>
-          val lits = vs.map(codec.literal)
-          if (lits.exists(_.isEmpty)) None
-          else {
-            def linear: Pred = Pred(i => unknown(st, i) || (hasVal(st, i) && {
-              val mn = bound(codec, st, i, wantMax = false)
-              val mx = bound(codec, st, i, wantMax = true)
-              (mn eq Undecodable) || (mx eq Undecodable) ||
-                lits.exists(l => codec.compare(mn, l.get) <= 0 && codec.compare(mx, l.get) >= 0)
-            }), trivial = false)
-            // Ordered fast path: an IN list is a disjunction of equalities,
-            // and each equality resolves to one frame interval exactly as
-            // cmpLeaf's `=` does — so the kept set is the UNION of
-            // per-literal binary-searched intervals, O(|lits|·log frames)
-            // decodes instead of O(|lits|·frames). Without this, IN-list
-            // pushdowns on the ordered key were the one leaf where the
-            // "planning stays flat past ~10^5 frames/file" property
-            // silently did not hold. Adjacent/overlapping intervals merge
-            // (integer frame indices, so merging at gap 0 is the exact
-            // union) and the per-frame eval binary-searches the merged
-            // starts — decisions identical to the linear walk, pinned by
-            // FwzOrderedSpec.
-            Some(orderedValIdx(st) match {
-              case None => linear
-              case Some(valIdx) =>
-                val m = valIdx.length
-                val b = orderedBound(codec, st, valIdx) _
-                try {
-                  val ivs = lits.flatMap { l =>
-                    val lit = l.get
-                    val lo = firstTrue(m, j => codec.compare(b(j, true), lit) >= 0)
-                    val hi = firstTrue(m, j => codec.compare(b(j, false), lit) > 0) - 1
-                    if (lo >= m || hi < 0 || lo > hi) None
-                    else Some((valIdx(lo), valIdx(hi)))
-                  }.sortBy(_._1)
-                  if (ivs.isEmpty) Pred(_ => false, trivial = false)
-                  else {
-                    val merged = scala.collection.mutable.ArrayBuffer(ivs.head)
-                    ivs.tail.foreach { case (s, e) =>
-                      val (ms, me) = merged.last
-                      if (s <= me + 1) merged(merged.length - 1) = (ms, math.max(me, e))
-                      else merged += ((s, e))
-                    }
-                    val starts = merged.map(_._1).toArray
-                    val ends = merged.map(_._2).toArray
-                    Pred(i => hasVal(st, i) && {
-                      var k = java.util.Arrays.binarySearch(starts, i)
-                      if (k < 0) k = -k - 2 // greatest start <= i
-                      k >= 0 && i <= ends(k)
-                    }, trivial = false)
-                  }
-                } catch { case BailToLinear => linear }
-            })
-          }
-        }.getOrElse(AlwaysTrue)
+        rangeLeaf(a) { codec =>
+          val lits = vs.flatMap(codec.literal)
+          Option.when(lits.length == vs.length)(
+            lits.toSeq.map(lit => range(codec.compare(_, lit), "=")))
+        }
       case IsNull(a) =>
         usableEntry(opts, block, a).map { case (codec, st) =>
           // string fields decode to "" (never SQL NULL) — IsNull can never
@@ -486,42 +468,10 @@ object FwzStats {
           else Pred(i => unknown(st, i) || hasVal(st, i), trivial = false)
         }.getOrElse(AlwaysTrue)
       case StringStartsWith(a, v) =>
-        usableEntry(opts, block, a).filter(_._1.isString).map { case (codec, st) =>
+        rangeLeaf(a) { codec =>
           val p = UTF8String.fromString(v)
-          def linear: Pred = Pred(i => unknown(st, i) || (hasVal(st, i) && {
-            val mn = bound(codec, st, i, wantMax = false)
-            val mx = bound(codec, st, i, wantMax = true)
-            (mn eq Undecodable) || (mx eq Undecodable) ||
-              (prefixCmp(mn.asInstanceOf[UTF8String], p) <= 0 &&
-                prefixCmp(mx.asInstanceOf[UTF8String], p) >= 0)
-          }), trivial = false)
-          // Ordered fast path: prefixCmp(·, p) is monotone in the UTF8
-          // byte order (truncation to |p| bytes preserves lexicographic
-          // rank, and a strict prefix of p ranks below every p-prefixed
-          // string), so on ascending extremes the kept frames form ONE
-          // interval exactly as a comparison leaf's do:
-          //   lo = first max_i with prefixCmp ≥ 0, hi = last min_i with
-          //   prefixCmp ≤ 0 — binary-searched, decisions identical to the
-          //   linear walk (FwzOrderedSpec pins this differentially).
-          orderedValIdx(st) match {
-            case None => linear
-            case Some(valIdx) =>
-              val m = valIdx.length
-              val b = orderedBound(codec, st, valIdx) _
-              try {
-                val lo = firstTrue(m,
-                  j => prefixCmp(b(j, true).asInstanceOf[UTF8String], p) >= 0)
-                val hi = firstTrue(m,
-                  j => prefixCmp(b(j, false).asInstanceOf[UTF8String], p) > 0) - 1
-                if (lo >= m || hi < 0 || lo > hi) Pred(_ => false, trivial = false)
-                else {
-                  val loF = valIdx(lo)
-                  val hiF = valIdx(hi)
-                  Pred(i => i >= loF && i <= hiF && hasVal(st, i), trivial = false)
-                }
-              } catch { case BailToLinear => linear }
-          }
-        }.getOrElse(AlwaysTrue)
+          Option.when(codec.isString)(Seq(range(u => prefixCmp(u.asInstanceOf[UTF8String], p), "=")))
+        }
       case And(l, r) =>
         val (lp, rp) = (compile(l), compile(r))
         if (lp.trivial) rp
