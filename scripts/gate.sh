@@ -2,7 +2,11 @@
 # One-command local correctness gate — run before the final bench commit of
 # each round (the r8 cadence, scripted).
 #
-#   scripts/gate.sh [sfDir]          # default /root/testdata/sf0.01
+#   scripts/gate.sh [sfDir] [lane...]   # sfDir defaults to the sf0.01 test data
+#
+# Lane names (SparkEntry.queries keys, or bare numbers such as q230 q233
+# q239) limit step 2 to those lanes, so step 3 checks only their outputs;
+# with none, every lane runs.
 #
 # Steps (any failure aborts with nonzero exit):
 #   1. sbt test                 — full ScalaTest suite
@@ -14,14 +18,15 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SF_DIR="${1:-/root/testdata/sf0.01}"
+LANES="${*:2}"
 OUT_DIR="$(mktemp -d /tmp/graft-gate.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 
 echo "== gate: sbt test =="
 sbt -batch test 2>&1 | grep -E "^\[info\] (Tests:|Suites:|All tests)|^\[error\]" | tail -5
 
-echo "== gate: Verify -> $OUT_DIR =="
-sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" 2>&1 \
+echo "== gate: Verify${LANES:+ $LANES} -> $OUT_DIR =="
+sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR${LANES:+ $LANES}" 2>&1 \
   | { grep -E '\[verify\].*failed' && { echo "gate: Verify reported failures"; exit 1; } || true; }
 
 echo "== gate: oracle check (dtype-strict) =="

@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName...] — names (dev convenience) limit
-    // the dump to a subset; the driver passes exactly two args → full run.
+    // the dump to a subset, a bare lane number (`q230`) naming its lane;
+    // with exactly two args every lane runs.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -19,7 +20,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => only.isEmpty || only(name) || only(name.takeWhile(_ != '_')) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -73,16 +73,12 @@ object Bz2SplitIndex {
     * footer-CRC fingerprint so a same-size rewrite (scratch fixtures, even
     * inside mtime granularity) can't serve a stale index, rangeBytes
     * because a different split setting is a different index (the first
-    * read's granularity must not cap a later, finer read). Files at most one
-    * range wide skip indexing entirely (whole-file read with an unbounded
-    * grid — no phase-1 cost for small files). */
+    * read's granularity must not cap a later, finer read). The planner
+    * reads a file at most one range wide whole ([[WholeFile]]) and never
+    * indexes it; one passed here gets its one exact range. */
   def rangesOfAll(files: Seq[(String, Long)], rangeBytes: Long,
       conf: Configuration, indexDir: Option[String] = None): Map[String, Seq[Bz2Range]] = {
-    val (small, big) = files.partition(_._2 <= rangeBytes)
-    val smallOut = small.map { case (p, len) =>
-      p -> Seq(Bz2Range(0L, len, 0L, Long.MaxValue))
-    }
-    val keyed = big.map { case (p, len) =>
+    val keyed = files.map { case (p, len) =>
       val hp = new Path(p)
       val mtime = hp.getFileSystem(conf).getFileStatus(hp).getModificationTime
       // the last ≤16 bytes hold the bzip2 stream footer + COMBINED CRC32 of
@@ -138,7 +134,7 @@ object Bz2SplitIndex {
         indexDir.foreach(dir => writeSidecar(dir, key, ranges, conf))
       }
     }
-    (smallOut ++ keyed.map { case (p, _, k) => p -> cache.get(k) }).toMap
+    keyed.map { case (p, _, k) => p -> cache.get(k) }.toMap
   }
 
   /** Sidecar object name for a cache key: content-addressed by a hash of

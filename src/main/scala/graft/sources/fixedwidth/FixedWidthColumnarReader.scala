@@ -8,8 +8,10 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Vectorized fixedwidth reader. Each `next()` reads ONE block of whole
-  * records from one chunk (`ChunkedRecordStream.fetchBlock`: one bulk read
-  * for an uncompressed chunk) and decodes it column by column into reused
+  * records from one chunk through the cursor of its kind
+  * (`ChunkedRecordStream.fetchBlock`: one bulk read for a [[PlainRange]],
+  * frame-at-a-time decode for an [[FwzRun]], codec-stream reads for a
+  * [[WholeFile]] or [[Bz2Split]]) and decodes it column by column into reused
   * `OnHeapColumnVector`s: the outer loop runs over columns, the inner loop
   * over the block's records. Typed decoders use `AsciiParse`'s
   * allocation-free fast paths, falling back to `BigDecimal` /

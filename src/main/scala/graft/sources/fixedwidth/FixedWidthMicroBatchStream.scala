@@ -117,8 +117,10 @@ final class FixedWidthFileLog(dir: Path, conf: Configuration, compactInterval: I
   * compressed inputs (allowCompressed) the
   * on-disk length under-counts records, so record/byte admission caps
   * become conservative rate heuristics rather than exact — batch
-  * CORRECTNESS is unaffected (partition planning shares the batch scan's
-  * alignedPartitionsOf, including the r13 bz2 split path); only the
+  * CORRECTNESS is unaffected (a micro-batch is planned by the batch scan's
+  * alignedPartitionsOf, with one planner per chunk kind — [[PlainRange]],
+  * [[WholeFile]], [[Bz2Split]], [[FwzRun]] — and read through the same
+  * per-kind cursors); only the
   * per-trigger batch sizing drifts looser. Under `Trigger.AvailableNow`
   * (`SupportsTriggerAvailableNow`) the backlog is SNAPSHOTTED at query
   * start and drained in limit-sized batches; files arriving mid-drain wait

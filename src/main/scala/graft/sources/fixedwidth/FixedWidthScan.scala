@@ -1,9 +1,8 @@
 package graft.sources.fixedwidth
 
-import scala.collection.immutable.ArraySeq
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.hadoop.io.compress.{CodecPool, CompressionCodecFactory, SplittableCompressionCodec}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -685,20 +684,19 @@ object FixedWidthScan {
     val parts = alignedPartitionsOf(
       files.map(st => st.getPath.toString -> st.getLen), opts, recordRange,
       pushedFilters, planMetrics, p => footer(byPath(p)))
-    // Attach HDFS block hosts per chunk for executor data locality (same
-    // driver-side NN lookups Spark's own file sources do at plan time).
+    // HDFS block hosts for executor data locality (the same plan-time
+    // NameNode lookups Spark's own file sources do): the three hosts
+    // holding the most of a partition's on-disk bytes
     parts.map { p =>
       val fwp = p.asInstanceOf[FixedWidthInputPartition]
-      FixedWidthInputPartition(fwp.chunks.map { c =>
-        val hosts =
-          try {
-            val st = byPath(c.filePath)
-            val fs = st.getPath.getFileSystem(conf)
-            fs.getFileBlockLocations(st, c.start, math.max(c.length, 1L))
-              .flatMap(_.getHosts).toSeq.distinct.filterNot(_ == "localhost")
-          } catch { case _: Exception => Nil }
-        c.copy(hosts = hosts)
-      })
+      val bytesOnHost = fwp.chunks.flatMap { c =>
+        val st = byPath(c.filePath)
+        try st.getPath.getFileSystem(conf).getFileBlockLocations(st, c.start, math.max(c.length, 1L))
+          .toSeq.flatMap(_.getHosts).distinct.filterNot(_ == "localhost").map(_ -> c.length)
+        catch { case _: Exception => Nil }
+      }
+      fwp.copy(hosts = bytesOnHost.groupMapReduce(_._1)(_._2)(_ + _)
+        .toSeq.sortBy(-_._2).take(3).map(_._1))
     }
   }
 
@@ -712,6 +710,11 @@ object FixedWidthScan {
     * GLOBAL record index range [start, end) in listing order — the pushed
     * LIMIT/OFFSET truncation (the builder guarantees callers only pass it
     * when raw records map 1:1 to output rows and no compressed files exist).
+    *
+    * The steps every kind shares live here: validation, the record clip,
+    * the [[FwzStats]] frame skipper and the packing; each kind's own
+    * planner ([[PlainRange]], [[WholeFile]], [[Bz2Split]], [[FwzRun]])
+    * turns one file into chunks under its clip.
     */
   def alignedPartitionsOf(
       files: Seq[(String, Long)],
@@ -785,16 +788,7 @@ object FixedWidthScan {
         p -> (firstRec, lastRec)
       }.toMap
     }
-    val plainChunks = plain.flatMap { case (path, len) =>
-      // PERMISSIVE: chunks cover only whole records; the trailing fragment
-      // is never read. Whole files drop out when the pushed range doesn't
-      // touch them.
-      val (firstRec, lastRec) = clipOf(path)
-      val usable = lastRec * recLen
-      (firstRec * recLen until usable by aligned).map { start =>
-        FileChunk(path, start, math.min(aligned, usable - start), compressed = false)
-      }
-    }
+    val plainChunks = plain.flatMap { case (p, _) => PlainRange.plan(p, clipOf(p), recLen, aligned) }
     // Compressed: the reference rejects codecs outright
     // (FixedLengthRecordReader.java:147-152); under the opt-in escape,
     // gzip (no block structure) stays one whole-file chunk while bzip2 —
@@ -803,38 +797,20 @@ object FixedWidthScan {
     // 100 TB compressed feed doesn't serialize into per-file readers.
     // Compressed range granularity: the plain-file target scaled by a
     // conservative 1:4 compression guess (granularity only — ownership
-    // and grid math are exact), floored at 128 KiB (~1.5 bzip2 blocks).
+    // and grid math are exact), floored at 128 KiB (~1.5 bzip2 blocks). A
+    // bz2 file no wider than one range is read whole: no phase-1 cost for
+    // small files.
     val bz2RangeBytes = math.max(128L * 1024, target / 4)
-    val (bz2Files, wholeFile) =
-      compressed.partition(_._1.toLowerCase.endsWith(".bz2"))
+    val (bz2Files, otherCompressed) = compressed.partition(_._1.toLowerCase.endsWith(".bz2"))
+    val splitBz2 = bz2Files.filter(_._2 > bz2RangeBytes)
     // ONE phase-1 job for the whole file set — per-file jobs would run
     // serially at plan time and underutilize the cluster on each
     val bz2Ranges =
-      if (bz2Files.isEmpty) Map.empty[String, Seq[Bz2Range]]
-      else Bz2SplitIndex.rangesOfAll(bz2Files, bz2RangeBytes, conf, opts.bz2IndexDir)
-    val gzChunks = bz2Files.flatMap { case (p, _) =>
-      val rs = bz2Ranges(p)
-      // total decompressed length, carried per chunk so the reader can
-      // tell the file's genuine trailing fragment from an unexpected
-      // early EOF (stale index / changed BYBLOCK semantics) and fail
-      // loudly on the latter instead of silently dropping a spanning
-      // tail record per range
-      val fileDLen = rs.lastOption match {
-        case Some(last) if last.dLen != Long.MaxValue => last.dStart + last.dLen
-        case _ => -1L
-      }
-      rs.map(r =>
-        FileChunk(p, r.cStart, r.cLen, compressed = true,
-          dStart = r.dStart, dLen = r.dLen, fileDLen = fileDLen))
-    } ++ wholeFile.map { case (p, len) =>
-      FileChunk(p, 0L, len, compressed = true)
+      if (splitBz2.isEmpty) Map.empty[String, Seq[Bz2Range]]
+      else Bz2SplitIndex.rangesOfAll(splitBz2, bz2RangeBytes, conf, opts.bz2IndexDir)
+    val compressedChunks = (bz2Files ++ otherCompressed).flatMap { case (p, len) =>
+      bz2Ranges.get(p).fold[Seq[FileChunk]](Seq(WholeFile(p, len)))(Bz2Split.plan(p, _))
     }
-    // Framed .fwz files: the footer's exact (compressed, decompressed)
-    // frame grid plans chunks directly — contiguous frame runs cut only at
-    // record-aligned frame boundaries, packed by their known decompressed
-    // weight, CLIPPED to the pushed record range (a limit/offset on a
-    // compressed feed decompresses only the frames it touches). No phase-1
-    // job, no spanning tail records.
     val fwzChunks = framedFiles.flatMap { case (p, _) =>
       val footer = fwzFooters(p)
       val fileDLen = footer.totalDLen
@@ -843,27 +819,6 @@ object FixedWidthScan {
           s"fixedwidth: fwz decompressed length $fileDLen of $p is not a multiple of " +
             s"recordLength=$recLen (wrong recordLength, or truncated write; " +
             "mode=PERMISSIVE/DROPMALFORMED drops the trailing partial record)")
-      // the file's owned decompressed byte range under the pushed clip
-      val (firstRec, lastRec) = clipOf(p)
-      val lo = firstRec * recLen
-      val hi = lastRec * recLen
-      val out = Seq.newBuilder[FileChunk]
-      var run = List.empty[FwzFormat.FwzFrame] // reversed
-      var runFirst = 0 // footer index of the run's first frame
-      var cBytes = 0L
-      def flush(): Unit = if (run.nonEmpty) {
-        val frames = run.reverse
-        val dOrigin = frames.head.dOff
-        val dEnd = math.min(hi, run.head.dOff + run.head.dLen)
-        val dStart = math.max(lo, dOrigin)
-        if (dEnd > dStart)
-          out += FileChunk(p, frames.head.cOff, cBytes, compressed = true,
-            dStart = dStart, dLen = dEnd - dStart,
-            framedCodec = footer.codec, dOrigin = dOrigin,
-            frameLens = ArraySeq.from(frames.iterator.flatMap(f => Iterator(f.cLen, f.dLen))),
-            firstFrame = runFirst)
-        run = Nil; cBytes = 0L
-      }
       // Per-frame statistics skipping ([[FwzStats]]): frames whose recorded
       // min/max prove no record can satisfy the pushed conjunction are cut
       // out of the runs entirely — never decompressed, never even read.
@@ -885,90 +840,39 @@ object FixedWidthScan {
           planMetrics.framesSkipped += footer.frames.length.toLong
         Nil
       } else {
-      val skipper: Option[Int => Boolean] =
-        if (!statsUsable) None
-        else footer.stats.flatMap(FwzStats.compileSkipper(pushedFilters, opts, _))
-      footer.frames.zipWithIndex.foreach { case (f, i) =>
-        if (f.dOff + f.dLen > lo && f.dOff < hi) { // frame overlaps the clip
-          // a skipped frame must sit on the record grid on BOTH ends or the
-          // surrounding chunks' dStart/dLen math would split a record
-          // (writer frames always do; this only guards foreign grids)
-          if (skipper.exists(sk => !sk(i)) &&
-              f.dOff % recLen == 0 && (f.dOff + f.dLen) % recLen == 0) {
-            flush() // the gap ends the current contiguous run
-            if (planMetrics != null) planMetrics.framesSkipped += 1
-          } else {
-            if (run.isEmpty) runFirst = i
-            run = f :: run
-            cBytes += f.cLen
-            // cut only where the NEXT chunk would start on the record grid —
-            // writer-produced frames always do; a recordLength-mismatched
-            // read just degrades to coarser chunks and fails the check above
-            val owned = math.min(hi, f.dOff + f.dLen) - math.max(lo, run.last.dOff)
-            if (owned >= aligned && (f.dOff + f.dLen) % recLen == 0) flush()
-          }
+        val keep: Option[Int => Boolean] =
+          if (!statsUsable) None
+          else footer.stats.flatMap(FwzStats.compileSkipper(pushedFilters, opts, _))
+        FwzRun.plan(p, footer, clipOf(p), recLen, aligned) { i =>
+          val skip = keep.exists(k => !k(i))
+          if (skip && planMetrics != null) planMetrics.framesSkipped += 1
+          skip
         }
-      }
-      flush()
-      out.result()
       }
     }
 
     // Pack chunks into partitions up to the target size (greedy, listing
-    // order) — a million small files must NOT become a million partitions.
-    // Each chunk stays independently record-aligned, so packing never risks
-    // a record straddling two files (the multi-file coalescing hazard
-    // SURVEY.md §7.4 flags in Spark's own FilePartition packing).
-    val partitions = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    val current = scala.collection.mutable.ArrayBuffer.empty[FileChunk]
-    var currentBytes = 0L
-    // Packing weight: split bz2 ranges pack by their DECOMPRESSED length
-    // (known exactly from the phase-1 index) — packing by compressed bytes
-    // would hand a partition 4-10x the intended work at bzip2's typical
-    // ratios. Whole-file compressed chunks have no known decompressed size
-    // and keep their on-disk weight.
-    def weight(c: FileChunk): Long =
-      if (c.dStart >= 0L && c.dLen != Long.MaxValue) c.dLen else c.length
-    (plainChunks ++ gzChunks ++ fwzChunks).foreach { c =>
-      if (current.nonEmpty && currentBytes + weight(c) > target) {
-        partitions += FixedWidthInputPartition(current.toSeq)
-        current.clear(); currentBytes = 0L
-      }
-      current += c
-      currentBytes += weight(c)
+    // order, by each kind's weight) — a million small files must NOT become
+    // a million partitions. Each chunk stays independently record-aligned,
+    // so packing never risks a record straddling two files (the multi-file
+    // coalescing hazard SURVEY.md §7.4 flags in Spark's own FilePartition
+    // packing). A chunk joins the open partition when it fits, else opens
+    // the next; `packed` holds (chunks, weight) per partition, newest first.
+    val packed = (plainChunks ++ compressedChunks ++ fwzChunks).foldLeft(List.empty[(List[FileChunk], Long)]) {
+      case ((open, bytes) :: full, c) if bytes + c.weight <= target => (c :: open, bytes + c.weight) :: full
+      case (all, c) => (List(c), c.weight) :: all
     }
-    if (current.nonEmpty) partitions += FixedWidthInputPartition(current.toSeq)
-    partitions.toArray
+    packed.reverseIterator.map(p => FixedWidthInputPartition(p._1.reverse): InputPartition).toArray
   }
 }
 
-/** One record-aligned byte range of one file. `compressed` chunks with
-  * `dStart < 0` cover the whole file (gzip path; `length` is the on-disk
-  * compressed size); `compressed` chunks with `dStart >= 0` are SPLIT
-  * bzip2 ranges — [start, start+length) in compressed bytes, owning the
-  * blocks that decompress to the `dLen` logical bytes at decompressed
-  * offset `dStart` (see [[Bz2SplitIndex]]). `.fwz` chunks (`framedCodec
-  * >= 0`) are a contiguous frame run starting at compressed offset `start`
-  * and decompressed offset `dOrigin`: `frameLens` holds the run's footer
-  * lengths as interleaved (cLen, dLen) pairs, `firstFrame` the footer index
-  * of its first frame, and the chunk owns the `dLen` bytes at `dStart`.
-  * `hosts` are the HDFS block hosts of the range (empty on non-located
-  * filesystems). */
-final case class FileChunk(
-    filePath: String, start: Long, length: Long, compressed: Boolean,
-    hosts: Seq[String] = Nil, dStart: Long = -1L, dLen: Long = -1L,
-    fileDLen: Long = -1L, framedCodec: Byte = -1, dOrigin: Long = -1L,
-    frameLens: ArraySeq[Long] = ArraySeq.empty, firstFrame: Int = -1)
-
 /** A packed set of independently record-aligned chunks (serialized driver →
-  * executor; the Spark analog of a packed `FilePartition`). */
-final case class FixedWidthInputPartition(chunks: Seq[FileChunk]) extends InputPartition {
-  /** Hosts holding the most bytes of this partition, for locality-aware
-    * scheduling on a real cluster. */
-  override def preferredLocations(): Array[String] =
-    chunks.flatMap(c => c.hosts.map(_ -> c.length))
-      .groupMapReduce(_._1)(_._2)(_ + _)
-      .toSeq.sortBy(-_._2).take(3).map(_._1).toArray
+  * executor; the Spark analog of a packed `FilePartition`). `hosts` are the
+  * HDFS block hosts holding the most of its bytes, for locality-aware
+  * scheduling on a real cluster (empty on non-located filesystems). */
+final case class FixedWidthInputPartition(chunks: Seq[FileChunk], hosts: Seq[String] = Nil)
+    extends InputPartition {
+  override def preferredLocations(): Array[String] = hosts.toArray
 }
 
 /** A split whose rows all share one partition-column value tuple — the
@@ -1016,15 +920,15 @@ class FixedWidthReaderFactory(
     new FixedWidthColumnarReader(unwrap(partition), opts, requiredSchema, conf.value.value, pushedFilters)
 }
 
-/** Chunk-walking record cursor of [[FixedWidthColumnarReader]]: opens one
-  * chunk at a time across a partition's packed chunks. `fetchBlock`
-  * fills the caller's buffer with up to `max` whole records of ONE chunk
-  * (so of one file) and sets `blockOffset` to the first one's byte offset
-  * in its file, the reference's default key. An uncompressed chunk fills
-  * the block with one bulk read. A `.fwz` chunk decodes its frame run one
-  * frame at a time into a reused buffer and copies whole records out of
-  * it. Foreign compressed chunks (gzip whole-file, split bz2) read record
-  * by record from a Hadoop codec stream, keeping every EOF, stall and
+/** Chunk-walking record reader of [[FixedWidthColumnarReader]]: opens one
+  * chunk at a time across a partition's packed chunks, each through the
+  * cursor of its kind. `fetchBlock` fills the caller's buffer with up to
+  * `max` whole records of ONE chunk (so of one file) and sets `blockOffset`
+  * to the first one's byte offset in its file, the reference's default key.
+  * A [[PlainRange]] fills the block with one bulk read. An [[FwzRun]]
+  * decodes its frames one at a time into a reused buffer and copies whole
+  * records out of it. A [[WholeFile]] or [[Bz2Split]] reads record by
+  * record from a Hadoop codec stream, keeping every EOF, stall and
   * trailing-fragment check.
   */
 final class ChunkedRecordStream(
@@ -1033,28 +937,16 @@ final class ChunkedRecordStream(
     conf: Configuration) {
 
   private val recLen = opts.recordLength
-  private var chunkIdx = -1
-  private var rawIn: org.apache.hadoop.fs.FSDataInputStream = null
-  private var compIn: java.io.InputStream = null // Hadoop codec stream
-  private var curDecompressor: org.apache.hadoop.io.compress.Decompressor = null
-  private var curPath: String = ""
-  private var end = 0L
-  private var pos = 0L // byte offset in the current file (uncompressed/logical)
-  // total decompressed file length for SPLIT bz2 ranges (-1 when unknown:
-  // plain, gzip whole-file, small-bz2 whole-file) — lets the fetch loop
-  // tell the file's genuine trailing fragment from an unexpected early EOF
-  // and fail loudly on the latter
-  private var curFileDLen = -1L
+  private val chunks = part.chunks.iterator
+  // the open chunk's file, its raw stream, and its kind's cursor over it
+  private var curPath = ""
+  private var raw: FSDataInputStream = null
+  private var cursor: Cursor = null
 
-  // The current .fwz chunk (null for any other chunk), the run index of its
-  // next frame to decode, and the decoded frame in dBuf[fOff, fLen). The
-  // buffers and the zstd context serve every chunk of the reader.
-  private var fwz: FileChunk = null
-  private var nextFrame = 0
+  // Frame buffers and the zstd context, shared by every FwzRun cursor of
+  // the reader.
   private var cBuf = Array.emptyByteArray
   private var dBuf = Array.emptyByteArray
-  private var fOff = 0
-  private var fLen = 0
   private var zstd: com.github.luben.zstd.ZstdDecompressCtx = null
 
   var recordsRead = 0L
@@ -1068,96 +960,50 @@ final class ChunkedRecordStream(
   /** UTF-8 bytes of the file the LAST fetched record came from. */
   def currentPathUtf8: Array[Byte] = curPathUtf8
 
+  /** Byte offset in its file of the first record of the last block. */
+  var blockOffset = -1L
+
   def close(): Unit = {
     closeChunk()
     if (zstd != null) { zstd.close(); zstd = null }
   }
 
   private def closeChunk(): Unit = {
-    if (compIn != null) { compIn.close(); compIn = null }
-    if (rawIn != null) { rawIn.close(); rawIn = null }
-    if (curDecompressor != null) {
-      org.apache.hadoop.io.compress.CodecPool.returnDecompressor(curDecompressor)
-      curDecompressor = null
-    }
-    fwz = null
+    if (cursor != null) { cursor.close(); cursor = null }
+    if (raw != null) { raw.close(); raw = null }
   }
 
-  private def openNextChunk(): Boolean = {
-    closeChunk()
-    chunkIdx += 1
-    if (chunkIdx >= part.chunks.length) return false
-    val c = part.chunks(chunkIdx)
-    val p = new Path(c.filePath)
-    rawIn = p.getFileSystem(conf).open(p)
-    curPath = c.filePath
-    curPathUtf8 = c.filePath.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    curFileDLen = -1L
-    if (c.framedCodec >= 0) {
-      // framed .fwz chunk (FwzFormat): a contiguous frame run, decoded one
-      // frame at a time from the footer lengths the chunk carries. A pushed
-      // limit/offset may clip the owned range inside the run: the head
-      // [dOrigin, dStart) is skipped in the decoded frames, and frames past
-      // `end` are never read. No spanning tail: frame boundaries are
-      // record boundaries.
-      rawIn.seek(c.start)
-      if (c.framedCodec == FwzFormat.CodecZstd && zstd == null)
-        zstd = new com.github.luben.zstd.ZstdDecompressCtx
-      fwz = c
-      nextFrame = 0
-      fOff = 0
-      fLen = 0
-      pos = c.dStart
-      end = c.dStart + c.dLen
-      take(null, c.dStart - c.dOrigin)
-    } else if (c.compressed && c.dStart >= 0L) {
-      // split bzip2 range: BYBLOCK stream aligned to the range's first
-      // block; the record grid comes from the phase-1 index (dStart/dLen —
-      // see Bz2SplitIndex). Skip to the first record start ≥ dStart, own
-      // every record STARTING before dStart+dLen; the stream reads past
-      // the range's blocks transparently, which is exactly what completes
-      // a tail record spanning into the next range's blocks.
-      val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(p)
-      codec match {
-        case sp: org.apache.hadoop.io.compress.SplittableCompressionCodec =>
-          curDecompressor = org.apache.hadoop.io.compress.CodecPool.getDecompressor(codec)
-          compIn = sp.createInputStream(rawIn, curDecompressor, c.start, c.start + c.length,
-            org.apache.hadoop.io.compress.SplittableCompressionCodec.READ_MODE.BYBLOCK)
-        case _ => throw new IllegalArgumentException(
-          s"fixedwidth: ${c.filePath} planned as a split codec but no splittable Hadoop codec resolves")
+  /** Fill `dst` with up to `max` whole records of one chunk; returns how
+    * many (0 when all chunks are drained) and sets `blockOffset`. */
+  def fetchBlock(dst: Array[Byte], max: Int): Int = {
+    while (true) {
+      if (cursor != null) {
+        blockOffset = cursor.pos
+        val n = cursor.fetch(dst, max)
+        if (n > 0) { recordsRead += n; return n }
       }
-      end = if (c.dLen == Long.MaxValue) Long.MaxValue else c.dStart + c.dLen
-      curFileDLen = if (c.dLen == Long.MaxValue) -1L else c.fileDLen
-      val misalign = c.dStart % recLen
-      val skip = if (misalign == 0L) 0L else recLen - misalign
-      pos = c.dStart + skip
-      var toSkip = skip
-      val scratch = new Array[Byte](recLen)
-      while (toSkip > 0) {
-        val r = compIn.read(scratch, 0, math.min(toSkip, recLen.toLong).toInt)
-        if (r < 0) toSkip = 0 // EOF inside the head fragment: range owns nothing
-        else toSkip -= r
+      closeChunk()
+      if (!chunks.hasNext) return 0
+      val c = chunks.next()
+      val p = new Path(c.filePath)
+      raw = p.getFileSystem(conf).open(p)
+      curPath = c.filePath
+      curPathUtf8 = c.filePath.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      cursor = c match {
+        case r: PlainRange => new PlainCursor(r)
+        case w: WholeFile => new WholeFileCursor(w)
+        case b: Bz2Split => new Bz2Cursor(b)
+        case f: FwzRun => new FwzCursor(f)
       }
-    } else if (c.compressed) {
-      val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(p)
-      if (codec == null)
-        throw new IllegalArgumentException(s"fixedwidth: no Hadoop codec for ${c.filePath}")
-      compIn = codec.createInputStream(rawIn)
-      pos = 0L
-      end = Long.MaxValue // compressed whole-file: bounded by stream EOF
-    } else {
-      rawIn.seek(c.start)
-      pos = c.start
-      end = c.start + c.length
     }
-    true
+    0 // unreachable
   }
 
-  private def truncated(): Nothing =
+  private def truncated(at: Long): Nothing =
     // Parity with the reference's truncated-record detection
     // (FixedLengthRecordReader.java:225-235).
     throw new java.io.IOException(
-      s"fixedwidth: EOF mid-record at offset $pos of $curPath: " +
+      s"fixedwidth: EOF mid-record at offset $at of $curPath: " +
         s"file is not a multiple of recordLength=$recLen")
 
   /** The decoded bytes of the current file ended at logical offset `at`,
@@ -1169,64 +1015,50 @@ final class ChunkedRecordStream(
         "split index/footer is stale or inconsistent with the compressed " +
         "payload; refusing to silently drop records")
 
-  /** Decode the run's next frame into `dBuf`: one sequential read of its
-    * cLen bytes, one decompress call, and a hard check that it holds
-    * exactly the dLen bytes its footer records. */
-  private def decodeFrame(): Unit = {
-    val lens = fwz.frameLens
-    if (2 * nextFrame >= lens.length) unexpectedEof(pos)
-    val cLen = lens(2 * nextFrame)
-    val dLen = lens(2 * nextFrame + 1)
-    def fail(why: String): Nothing = throw new java.io.IOException(
-      s"fixedwidth fwz: frame ${fwz.firstFrame + nextFrame} of $curPath $why " +
-        "— corrupt frame or frame table")
-    if (cLen > Int.MaxValue - 8 || dLen > Int.MaxValue - 8)
-      fail(s"is too large to decode in one buffer ($cLen, $dLen bytes)")
-    if (cBuf.length < cLen) cBuf = new Array[Byte](cLen.toInt)
-    if (dBuf.length < dLen) dBuf = new Array[Byte](dLen.toInt)
-    val n =
-      try {
-        rawIn.readFully(cBuf, 0, cLen.toInt)
-        FwzFormat.decompressFrame(fwz.framedCodec, zstd, cBuf, cLen.toInt, dBuf, dLen.toInt)
-      } catch {
-        case e @ (_: java.io.IOException | _: com.github.luben.zstd.ZstdException) =>
-          fail(s"does not decode to the $dLen bytes its footer records: ${e.getMessage}")
-      }
-    if (n != dLen) fail(s"decompressed to $n bytes, not the $dLen its footer records")
-    nextFrame += 1
-    fOff = 0
-    fLen = n
+  /** The open chunk, read through `raw`. `pos` is the file offset
+    * (decompressed, for a compressed file) of its next record; `fetch`
+    * moves up to `max` whole records into the start of `dst` and returns
+    * how many, 0 at the chunk's end. */
+  private abstract class Cursor {
+    var pos = 0L
+    def fetch(dst: Array[Byte], max: Int): Int
+    def close(): Unit = ()
   }
 
-  /** Move the run's next `n` decoded bytes to the start of `dst` (`dst`
-    * null: skip them), decoding a frame whenever the current one is used
-    * up; a record that straddles two frames is assembled here. */
-  private def take(dst: Array[Byte], n: Long): Unit = {
-    var done = 0L
-    while (done < n) {
-      if (fOff == fLen) decodeFrame()
-      val m = math.min(n - done, (fLen - fOff).toLong).toInt
-      if (dst != null) System.arraycopy(dBuf, fOff, dst, done.toInt, m)
-      fOff += m
-      done += m
+  private final class PlainCursor(c: PlainRange) extends Cursor {
+    private val end = c.start + c.length
+    raw.seek(c.start)
+    pos = c.start
+
+    def fetch(dst: Array[Byte], max: Int): Int = {
+      if (pos >= end) return 0
+      // every record STARTING before `end` belongs to the chunk
+      val n = math.min(max.toLong, (end - pos + recLen - 1) / recLen).toInt
+      var got = 0
+      while (got < n * recLen) {
+        val r = raw.read(dst, got, n * recLen - got)
+        if (r < 0) truncated(pos + got / recLen * recLen)
+        got += r
+      }
+      pos += got
+      n
     }
   }
 
-  /** Read up to `max` records of the current chunk into `dst`; 0 at its end. */
-  private def fetchFromChunk(dst: Array[Byte], max: Int): Int =
-    if (fwz != null) {
-      val n = math.min(max.toLong, (end - pos) / recLen).toInt
-      take(dst, n.toLong * recLen)
-      pos += n.toLong * recLen
-      n
-    } else if (compIn != null) {
+  /** Record-by-record reads from a Hadoop codec stream `in`, over the
+    * records starting before `end` and at most to the stream's EOF. */
+  private abstract class CodecCursor extends Cursor {
+    protected val in: java.io.InputStream
+    protected var end = Long.MaxValue
+    /** The stream ended `n` bytes into the record at `pos`. */
+    protected def atEof(n: Int): Unit = ()
+
+    def fetch(dst: Array[Byte], max: Int): Int = {
       var k = 0
-      // split bz2 ranges bound `end` to their owned record starts (gzip
-      // whole-file chunks set Long.MaxValue — EOF-bounded, check is free)
       while (k < max && pos < end) {
         var n = 0
         while (n < recLen) {
-          val r = compIn.read(dst, k * recLen + n, recLen - n)
+          val r = in.read(dst, k * recLen + n, recLen - n)
           if (r <= 0) {
             // r == 0 breaks the blocking-stream contract of a Hadoop codec
             // stream. Treating it as progress would spin this loop forever
@@ -1235,18 +1067,8 @@ final class ChunkedRecordStream(
               throw new java.io.IOException(
                 s"fixedwidth: decompressor stalled (read 0 bytes) at logical " +
                   s"offset ${pos + n} of $curPath — corrupt compressed chunk")
-            // EOF mid-chunk. For a SPLIT bz2 range with a known decompressed
-            // file length, the ONLY legitimate mid-record EOF is the file's
-            // genuine trailing fragment (the BYBLOCK stream reads past its
-            // range bound to file EOF, so a spanning tail record always
-            // completes); anything else means the phase-1 index is stale or
-            // BYBLOCK semantics changed (phase 1 has the same guard as a
-            // require on block-boundary reads).
-            if (curFileDLen >= 0L) {
-              val tailFragment = (curFileDLen % recLen).toInt
-              if (pos != curFileDLen - tailFragment || n != tailFragment) unexpectedEof(pos + n)
-            }
-            if (n > 0 && !opts.tolerant) truncated() // tolerant: drop the trailing partial record
+            atEof(n)
+            if (n > 0 && !opts.tolerant) truncated(pos) // tolerant: drop the trailing partial record
             end = pos // drained: later calls must not read past this EOF again
             return k
           }
@@ -1256,35 +1078,124 @@ final class ChunkedRecordStream(
         k += 1
       }
       k
-    } else {
-      if (pos >= end) return 0
-      // every record STARTING before `end` belongs to the chunk
-      val n = math.min(max.toLong, (end - pos + recLen - 1) / recLen).toInt
-      var got = 0
-      while (got < n * recLen) {
-        val r = rawIn.read(dst, got, n * recLen - got)
-        if (r < 0) { pos += got / recLen * recLen; truncated() }
-        got += r
-      }
-      pos += got
+    }
+
+    override def close(): Unit = in.close()
+  }
+
+  /** A whole compressed file, bounded by its stream's EOF alone. */
+  private final class WholeFileCursor(c: WholeFile) extends CodecCursor {
+    protected val in: java.io.InputStream =
+      Option(new CompressionCodecFactory(conf).getCodec(new Path(c.filePath))).getOrElse(
+        throw new IllegalArgumentException(s"fixedwidth: no Hadoop codec for ${c.filePath}")
+      ).createInputStream(raw)
+  }
+
+  /** A split bzip2 range: a BYBLOCK stream aligned to the range's first
+    * block; the record grid comes from the phase-1 index (see
+    * [[Bz2SplitIndex]]). It skips to the first record start ≥ dStart and
+    * owns every record STARTING before dStart + dLen; the stream reads past
+    * the range's blocks transparently, which is exactly what completes a
+    * tail record spanning into the next range's blocks. */
+  private final class Bz2Cursor(c: Bz2Split) extends CodecCursor {
+    private val codec = new CompressionCodecFactory(conf).getCodec(new Path(c.filePath)) match {
+      case sp: SplittableCompressionCodec => sp
+      case _ => throw new IllegalArgumentException(
+        s"fixedwidth: ${c.filePath} planned as a split codec but no splittable Hadoop codec resolves")
+    }
+    private val decompressor = CodecPool.getDecompressor(codec)
+    end = c.dStart + c.dLen
+    pos = c.dStart + (recLen - c.dStart % recLen) % recLen
+    protected val in: java.io.InputStream =
+      try {
+        val s = codec.createInputStream(raw, decompressor, c.cStart, c.cStart + c.cLen,
+          SplittableCompressionCodec.READ_MODE.BYBLOCK)
+        // InputStream.skip reads the head fragment and stops at EOF; EOF
+        // inside it leaves pos past the file's end, so the range owns nothing
+        s.skip(pos - c.dStart)
+        s
+      } catch { case e: Throwable => CodecPool.returnDecompressor(decompressor); throw e }
+
+    // The ONLY legitimate mid-record EOF is the file's genuine trailing
+    // fragment (the BYBLOCK stream reads past its range bound to file EOF,
+    // so a spanning tail record always completes); anything else means the
+    // phase-1 index is stale or BYBLOCK semantics changed (phase 1 has the
+    // same guard as a require on block-boundary reads).
+    override protected def atEof(n: Int): Unit = {
+      val tailFragment = (c.fileDLen % recLen).toInt
+      if (pos != c.fileDLen - tailFragment || n != tailFragment) unexpectedEof(pos + n)
+    }
+
+    override def close(): Unit = try in.close() finally CodecPool.returnDecompressor(decompressor)
+  }
+
+  /** A `.fwz` frame run, decoded one frame at a time from the footer
+    * lengths the chunk carries. A pushed limit/offset may clip the owned
+    * range inside the run: the head [dOrigin, dStart) is skipped in the
+    * decoded frames, and frames past the owned range are never read. No
+    * spanning tail: frame boundaries are record boundaries. */
+  private final class FwzCursor(c: FwzRun) extends Cursor {
+    private val end = c.dStart + c.dLen
+    // the run index of the next frame to decode, and the decoded frame in
+    // dBuf[fOff, fLen)
+    private var nextFrame = 0
+    private var fOff = 0
+    private var fLen = 0
+    raw.seek(c.cStart)
+    if (c.codec == FwzFormat.CodecZstd && zstd == null)
+      zstd = new com.github.luben.zstd.ZstdDecompressCtx
+    pos = c.dStart
+    take(null, c.dStart - c.dOrigin)
+
+    def fetch(dst: Array[Byte], max: Int): Int = {
+      val n = math.min(max.toLong, (end - pos) / recLen).toInt
+      take(dst, n.toLong * recLen)
+      pos += n.toLong * recLen
       n
     }
 
-  /** Byte offset in its file of the first record of the last block. */
-  var blockOffset = -1L
-
-  /** Fill `dst` with up to `max` whole records of one chunk; returns how
-    * many (0 when all chunks are drained) and sets `blockOffset`. */
-  def fetchBlock(dst: Array[Byte], max: Int): Int = {
-    while (true) {
-      if (chunkIdx >= 0 && rawIn != null) {
-        blockOffset = pos
-        val n = fetchFromChunk(dst, max)
-        if (n > 0) { recordsRead += n; return n }
-      }
-      if (!openNextChunk()) return 0
+    /** Decode the run's next frame into `dBuf`: one sequential read of its
+      * cLen bytes, one decompress call, and a hard check that it holds
+      * exactly the dLen bytes its footer records. */
+    private def decodeFrame(): Unit = {
+      val lens = c.frameLens
+      if (2 * nextFrame >= lens.length) unexpectedEof(pos)
+      val cLen = lens(2 * nextFrame)
+      val dLen = lens(2 * nextFrame + 1)
+      def fail(why: String): Nothing = throw new java.io.IOException(
+        s"fixedwidth fwz: frame ${c.firstFrame + nextFrame} of $curPath $why " +
+          "— corrupt frame or frame table")
+      if (cLen > Int.MaxValue - 8 || dLen > Int.MaxValue - 8)
+        fail(s"is too large to decode in one buffer ($cLen, $dLen bytes)")
+      if (cBuf.length < cLen) cBuf = new Array[Byte](cLen.toInt)
+      if (dBuf.length < dLen) dBuf = new Array[Byte](dLen.toInt)
+      val n =
+        try {
+          raw.readFully(cBuf, 0, cLen.toInt)
+          FwzFormat.decompressFrame(c.codec, zstd, cBuf, cLen.toInt, dBuf, dLen.toInt)
+        } catch {
+          case e @ (_: java.io.IOException | _: com.github.luben.zstd.ZstdException) =>
+            fail(s"does not decode to the $dLen bytes its footer records: ${e.getMessage}")
+        }
+      if (n != dLen) fail(s"decompressed to $n bytes, not the $dLen its footer records")
+      nextFrame += 1
+      fOff = 0
+      fLen = n
     }
-    0 // unreachable
+
+    /** Move the run's next `n` decoded bytes to the start of `dst` (`dst`
+      * null: skip them), decoding a frame whenever the current one is used
+      * up; a record that straddles two frames is assembled here. */
+    private def take(dst: Array[Byte], n: Long): Unit = {
+      var done = 0L
+      while (done < n) {
+        if (fOff == fLen) decodeFrame()
+        val m = math.min(n - done, (fLen - fOff).toLong).toInt
+        if (dst != null) System.arraycopy(dBuf, fOff, dst, done.toInt, m)
+        fOff += m
+        done += m
+      }
+    }
   }
 }
 

@@ -79,8 +79,15 @@ import org.apache.hadoop.fs.Path
   *    just framing — the footer now answers count-star and MIN/MAX
   *    directly, so a stale cache hit would be a wrong ANSWER. Readers do
   *    not re-verify it against the frames (that would cost a full read);
-  *    it is a fingerprint, not an integrity seal — the per-frame zstd/gzip
-  *    checksums already cover corruption.
+  *    it is a fingerprint, not an integrity seal. Nor do the frames seal
+  *    themselves: gzip frames carry their member CRC-32, but zstd frames
+  *    carry no content checksum ([[compressFrame]] leaves zstd's checksum
+  *    flag off). What catches a corrupt zstd frame is the reader's frame
+  *    check (the `.fwz` cursor's `decodeFrame` in [[ChunkedRecordStream]]
+  *    fails a frame that does not decode to exactly the dLen bytes its
+  *    footer records) and the filesystem's own checksums (the local
+  *    filesystem's `.crc` sidecars, HDFS block checksums); a flipped byte
+  *    that still decodes to dLen bytes passes the frame check.
   * `statsLen` sits at the same end-relative offset (EOF-14) in v2 and v3,
   * and the last 10 bytes dispatch identically across all versions.
   */

@@ -345,7 +345,9 @@ object FwzStats {
     /** Range leaf (`= < <= > >=`, IN, StringStartsWith): the union of
       * `ranges` over field `name`. Linear walk: a frame is kept when it is
       * unknown, or has a value and either a tested bound does not decode or
-      * some range holds on every side it tests. Ordered fast path: on a
+      * some range holds on every side it tests, so an empty set (an empty
+      * IN, which matches nothing) skips every frame that has statistics, on
+      * both paths. Ordered fast path: on a
       * proved-ordered field (mins AND maxs both ascend, since
       * max_i ≤ min_{i+1}), each range keeps one contiguous INTERVAL of the
       * value frames, found by binary search — O(|ranges|·log frames)
@@ -362,9 +364,8 @@ object FwzStats {
     def rangeLeaf(name: String)(ranges: FieldCodec => Option[Seq[ValueRange]]): Pred =
       usableEntry(opts, block, name).flatMap { case (codec, st) =>
         ranges(codec).map { rs =>
-          // an empty IN list decodes both bounds, as its `=` ranges would
-          val testsMin = rs.isEmpty || rs.exists(_.within.isDefined)
-          val testsMax = rs.isEmpty || rs.exists(_.reaches.isDefined)
+          val testsMin = rs.exists(_.within.isDefined)
+          val testsMax = rs.exists(_.reaches.isDefined)
           def linear: Pred = Pred(i => unknown(st, i) || (hasVal(st, i) && {
             val mn = if (testsMin) bound(codec, st, i, wantMax = false) else null
             val mx = if (testsMax) bound(codec, st, i, wantMax = true) else null

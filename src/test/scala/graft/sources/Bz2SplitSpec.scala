@@ -252,4 +252,32 @@ class Bz2SplitSpec extends SparkSpec with Matchers {
       r.dStart + r.dLen
     }
   }
+
+  test("a bz2 file no wider than one range is planned and read whole") {
+    val n = 20000
+    val (plainDir, bz2Dir) = fixture(n)
+    val p = s"$bz2Dir/data.fwb.bz2"
+    val cLen = new java.io.File(p).length()
+    val opts = graft.sources.fixedwidth.FixedWidthOptions(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Map.of(
+        "recordLength", recLen.toString, "allowCompressed", "true")))
+    // the default split target gives ranges of at least 1 MiB
+    cLen should be < 1024L * 1024
+    graft.sources.fixedwidth.FixedWidthScan.alignedPartitionsOf(Seq(p -> cLen), opts)
+      .toSeq.flatMap(_.asInstanceOf[graft.sources.fixedwidth.FixedWidthInputPartition].chunks) shouldBe
+      Seq(graft.sources.fixedwidth.WholeFile(p, cLen))
+    readAll(bz2Dir, compressed = true) should contain theSameElementsInOrderAs
+      readAll(plainDir, compressed = false)
+
+    val (_, tailDir) = fixture(n, extraTailBytes = recLen - 5)
+    val tolerant = spark.read.format("fixedwidth").option("recordLength", recLen)
+      .option("allowCompressed", "true").option("mode", "PERMISSIVE").load(tailDir)
+    tolerant.select(col("offset")).collect().map(_.getLong(0)).sorted shouldBe
+      (0 until n).map(_.toLong * recLen)
+    val strict = spark.read.format("fixedwidth").option("recordLength", recLen)
+      .option("allowCompressed", "true").load(tailDir)
+    val e = intercept[org.apache.spark.SparkException] { strict.count() }
+    e.getMessage should include(s"fixedwidth: EOF mid-record at offset ${n.toLong * recLen} of ")
+    e.getMessage should include(s"data.fwb.bz2: file is not a multiple of recordLength=$recLen")
+  }
 }

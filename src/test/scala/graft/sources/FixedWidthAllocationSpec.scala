@@ -49,7 +49,7 @@ class FixedWidthAllocationSpec extends AnyFunSuite with Matchers {
     val factory = new FixedWidthReaderFactory(opts, opts.schema,
       new SerializableHadoopConf(new Configuration()))
     val part = FixedWidthInputPartition(Seq(
-      FileChunk(file.toString, 0L, Files.size(file), compressed = false)))
+      PlainRange(file.toString, 0L, Files.size(file))))
     val threads = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]
     val tid = Thread.currentThread().getId

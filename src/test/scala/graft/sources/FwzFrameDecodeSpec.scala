@@ -72,9 +72,9 @@ class FwzFrameDecodeSpec extends SparkSpec with Matchers {
       val frames = footer.frames
       // one hand-built chunk over the whole run, owning records [3210, 5100):
       // its head skip crosses frames 0-2 and ends inside frame 3
-      val chunk = FileChunk(f.getPath, 0L, frames.map(_.cLen).sum, compressed = true,
-        dStart = 3210L * recLen, dLen = 1890L * recLen, framedCodec = footer.codec,
-        dOrigin = 0L, frameLens = scala.collection.immutable.ArraySeq.from(
+      val chunk = FwzRun(f.getPath, 0L, footer.codec,
+        dOrigin = 0L, dStart = 3210L * recLen, dLen = 1890L * recLen,
+        frameLens = scala.collection.immutable.ArraySeq.from(
           frames.flatMap(fr => Seq(fr.cLen, fr.dLen))), firstFrame = 0)
       val r = reader(chunk)
       val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -120,8 +120,8 @@ class FwzFrameDecodeSpec extends SparkSpec with Matchers {
       if (field == 1) { // the last frame alone now claims more than it holds
         val i = after.frames.length - 1
         val last = after.frames(i)
-        val r = reader(FileChunk(f.getPath, last.cOff, last.cLen, compressed = true,
-          dStart = last.dOff, dLen = last.dLen, framedCodec = after.codec, dOrigin = last.dOff,
+        val r = reader(FwzRun(f.getPath, last.cOff, after.codec, dOrigin = last.dOff,
+          dStart = last.dOff, dLen = last.dLen,
           frameLens = scala.collection.immutable.ArraySeq(last.cLen, last.dLen), firstFrame = i))
         val short = intercept[java.io.IOException](try r.next() finally r.close())
         short.getMessage should include(s"frame $i of")

@@ -153,4 +153,23 @@ class FwzRangeRuleSpec extends SparkSpec with Matchers {
       }
     }
   }
+
+  test("an empty IN skips every frame on both walks, over a block with an undecodable bound") {
+    // one blank (undecodable) min and one blank max on an ordered field: an
+    // empty IN matches nothing, so neither walk may keep a frame for it
+    for (field <- Seq("d", "amt")) {
+      val blank = Array.fill[Byte](stats.fields.find(_.name == field).get.width)(' ')
+      def damaged(block: FwzFormat.FwzStatsBlock) = block.copy(fields = block.fields.map { f =>
+        if (f.name != field) f
+        else f.copy(mins = f.mins.updated(7, blank), maxs = f.maxs.updated(40, blank))
+      })
+      val (fast, slow) = (damaged(stats), damaged(linearStats))
+      fast.fields.find(_.name == field).get.ordered shouldBe true
+      val empty = In(field, Array.empty[Any])
+      withClue(s"$empty: ") {
+        decisions(empty, fast) shouldBe decisions(empty, slow)
+        decisions(empty, slow) shouldBe Seq.fill(nFrames)(false)
+      }
+    }
+  }
 }

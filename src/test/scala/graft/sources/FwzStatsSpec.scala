@@ -59,7 +59,7 @@ class FwzStatsSpec extends SparkSpec with Matchers {
     val pm = new FwzStats.PlanMetrics
     val parts = FixedWidthScan.alignedPartitionsOf(files, o, None, filters, pm)
     val covered = parts.flatMap(_.asInstanceOf[FixedWidthInputPartition].chunks)
-      .map(_.dLen).sum
+      .map(_.asInstanceOf[graft.sources.fixedwidth.FwzRun].dLen).sum
     (covered, pm.framesSkipped)
   }
 
@@ -498,8 +498,8 @@ class FwzStatsSpec extends SparkSpec with Matchers {
             skippedAny += pm.framesSkipped
             expected.foreach { case (id, _, off, path) =>
               withClue(s"id=$id: ") {
-                chunks.exists(c => norm(c.filePath) == path &&
-                  c.dStart <= off && off < c.dStart + c.dLen) shouldBe true
+                chunks.map(_.asInstanceOf[graft.sources.fixedwidth.FwzRun]).exists(c =>
+                  norm(c.filePath) == path && c.dStart <= off && off < c.dStart + c.dLen) shouldBe true
               }
             }
             // directory pruning keeps every file holding a matching record;

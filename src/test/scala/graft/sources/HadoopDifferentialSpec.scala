@@ -138,10 +138,10 @@ class HadoopDifferentialSpec extends SparkSpec with Matchers {
     val c = writeFile(4100, len, seed = 8) + "/data.fwb"
     // two chunks of the same file, then two more files, in one partition
     val chunks = Seq(
-      FileChunk(a, 0L, 3000L * len, compressed = false),
-      FileChunk(a, 3000L * len, 2000L * len, compressed = false),
-      FileChunk(b, 0L, 10L * len, compressed = false),
-      FileChunk(c, 0L, 4100L * len, compressed = false))
+      PlainRange(a, 0L, 3000L * len),
+      PlainRange(a, 3000L * len, 2000L * len),
+      PlainRange(b, 0L, 10L * len),
+      PlainRange(c, 0L, 4100L * len))
     val batches = columnarBatches(rawOpts(len), chunks)
     // one block per batch: capacity-bounded, never spanning a chunk
     batches.map(_._2.size) shouldBe Seq(3000, 2000, 10, 4096, 4)
@@ -159,7 +159,7 @@ class HadoopDifferentialSpec extends SparkSpec with Matchers {
     // the plan still claims whole records past the file's end
     for (claimed <- Seq(5001L, 6000L)) {
       val e = intercept[java.io.IOException](
-        columnarBatches(rawOpts(len), Seq(FileChunk(f, 0L, claimed * len, compressed = false))))
+        columnarBatches(rawOpts(len), Seq(PlainRange(f, 0L, claimed * len))))
       e.getMessage shouldBe s"fixedwidth: EOF mid-record at offset ${5000L * len} of $f: " +
         s"file is not a multiple of recordLength=$len"
     }
@@ -174,7 +174,7 @@ class HadoopDifferentialSpec extends SparkSpec with Matchers {
     rng.nextBytes(bytes)
     val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(gz))
     try out.write(bytes) finally out.close()
-    val chunk = Seq(FileChunk(gz, 0L, Files.size(Paths.get(gz)), compressed = true))
+    val chunk = Seq(WholeFile(gz, Files.size(Paths.get(gz))))
     val e = intercept[java.io.IOException](columnarBatches(rawOpts(len), chunk))
     e.getMessage shouldBe s"fixedwidth: EOF mid-record at offset ${5000L * len} of $gz: " +
       s"file is not a multiple of recordLength=$len"
