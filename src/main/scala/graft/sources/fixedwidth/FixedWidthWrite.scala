@@ -3,9 +3,11 @@ package graft.sources.fixedwidth
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,6 +31,12 @@ import org.apache.spark.util.SerializableConfiguration
   * from parquet convention, on purpose: partition columns stay IN the record
   * bytes (every record remains self-contained and exactly recordLength
   * wide); the directory layout is purely an index, never the data.
+  *
+  * Structure: [[FixedWidthWriteBuilder]] parses every write option once, on
+  * the driver, into one [[WriteJob]]; the job's [[WriteLayout]] is either
+  * `Plain` (`.fwb`, records straight to the stream) or `Framed` (`.fwz`,
+  * [[FwzFormat]]). Each output file is one [[FileSink]] the layout opens over
+  * the created stream: write a record, finish the file.
   */
 class FixedWidthWriteBuilder(
     opts: FixedWidthOptions,
@@ -48,12 +56,12 @@ class FixedWidthWriteBuilder(
   // [[FwzFormat]]): record-multiple frames + a footer of content sizes, so
   // written data splits record-aligned WITHOUT a phase-1 pass — a layout
   // this sink owns, not foreign-codec compatibility. Anything else errors.
-  private val framedCodec: Byte = {
+  private val layout: WriteLayout = {
     val v = Seq("compression", "codec").flatMap(k => Option(tableOptions.get(k)))
       .map(_.trim.toLowerCase).headOption.getOrElse("none")
-    v match {
-      case "none" | "uncompressed" => -1
-      case "zstd" | "gzip" => FwzFormat.codecIdOf(v)
+    val framed = v match {
+      case "none" | "uncompressed" => false
+      case "zstd" | "gzip" => true
       case other =>
         throw new IllegalArgumentException(
           s"fixedwidth: unsupported write compression '$other': use 'zstd' or 'gzip' " +
@@ -61,83 +69,174 @@ class FixedWidthWriteBuilder(
             "splits without a phase-1 pass), or 'none' for raw fixed-width bytes " +
             "(reference parity, FixedLengthRecordReader.java:147-152).")
     }
-  }
-
-  // Target DECOMPRESSED bytes per frame (rounded down to a record multiple,
-  // floored at one record). Smaller frames split finer but compress worse;
-  // 1 MiB ≈ a few thousand records is the sane default for both codecs.
-  private val frameBytes: Long =
-    FixedWidthOptions.positiveLong(tableOptions, "frameBytes").getOrElse(1L * 1024 * 1024)
-  if (framedCodec < 0 && tableOptions.get("frameBytes") != null)
-    throw new IllegalArgumentException(
-      "fixedwidth: 'frameBytes' requires compression=zstd|gzip (framed layout)")
-
-  // Per-frame column statistics (`frameStats=all` or a comma-separated
-  // field subset): the writer records each listed field's min/max per
-  // frame in the footer ([[FwzStats]]), so a later scan's pushed range
-  // predicates skip whole frames without decompressing them — the parquet
-  // row-group statistics idea applied to the framed layout.
-  private val statFields: Seq[FieldSpec] =
-    Option(tableOptions.get("frameStats")).map { v =>
-      if (framedCodec < 0)
+    val frameBytes = FixedWidthOptions.positiveLong(tableOptions, "frameBytes")
+      .getOrElse(WriteLayout.DefaultFrameBytes)
+    if (!framed && tableOptions.get("frameBytes") != null)
+      throw new IllegalArgumentException(
+        "fixedwidth: 'frameBytes' requires compression=zstd|gzip (framed layout)")
+    // Per-frame column statistics (`frameStats=all` or a comma-separated
+    // field subset): the writer records each listed field's min/max per
+    // frame in the footer ([[FwzStats]]), so a later scan's pushed range
+    // predicates skip whole frames without decompressing them — the parquet
+    // row-group statistics idea applied to the framed layout.
+    val statFields = Option(tableOptions.get("frameStats")).map { s =>
+      if (!framed)
         throw new IllegalArgumentException(
           "fixedwidth: 'frameStats' requires compression=zstd|gzip (framed layout)")
-      FwzStats.resolveStatFields(v, opts)
+      FwzStats.resolveStatFields(s, opts)
     }.getOrElse(Nil)
+    if (framed)
+      WriteLayout.Framed(FwzFormat.codecIdOf(v),
+        WriteLayout.frameCap(frameBytes, opts.recordLength), statFields)
+    else WriteLayout.Plain
+  }
+
+  // ---- Clustered partitioned writes (opt-in `clusteredWrite=true`): ask
+  // Spark to shuffle rows so each partition value lands in ONE task and to
+  // sort within tasks by the partition columns — the DSv2
+  // RequiresDistributionAndOrdering contract. Without it, every input
+  // task holding a value writes its own file into the value's directory:
+  // a 1000-task job over 10k dirs can mint 10M small files, the classic
+  // way a 100 TB feed becomes unmanageable. With it, a directory gets
+  // exactly one file (plus maxRecordsPerFile rolls) at the cost of one
+  // clustering shuffle. Default OFF: unclustered dynamic writes need no
+  // shuffle and are fine for few-directories layouts.
+  private val clustered = Option(tableOptions.get("clusteredWrite")).exists { v =>
+    v.trim.toLowerCase match {
+      case "true" => true
+      case "false" => false
+      case other => throw new IllegalArgumentException(
+        s"fixedwidth: option 'clusteredWrite' must be true or false, got '$other'")
+    }
+  }
+  if (clustered && partitionCols.isEmpty)
+    throw new IllegalArgumentException(
+      "fixedwidth: 'clusteredWrite' requires partitionBy columns to cluster on")
+
+  private val job = WriteJob(
+    Option(tableOptions.get("path")).getOrElse(
+      throw new IllegalArgumentException("fixedwidth: write requires a single 'path'")),
+    opts, info.schema(), partitionCols,
+    FixedWidthOptions.positiveLong(tableOptions, "maxRecordsPerFile").getOrElse(0L),
+    layout)
 
   override def truncate(): WriteBuilder = { doTruncate = true; this }
 
   override def build(): Write = new Write with RequiresDistributionAndOrdering {
-    // ---- Clustered partitioned writes (opt-in `clusteredWrite=true`): ask
-    // Spark to shuffle rows so each partition value lands in ONE task and to
-    // sort within tasks by the partition columns — the DSv2
-    // RequiresDistributionAndOrdering contract. Without it, every input
-    // task holding a value writes its own file into the value's directory:
-    // a 1000-task job over 10k dirs can mint 10M small files, the classic
-    // way a 100 TB feed becomes unmanageable. With it, a directory gets
-    // exactly one file (plus maxRecordsPerFile rolls) at the cost of one
-    // clustering shuffle. Default OFF: unclustered dynamic writes need no
-    // shuffle and are fine for few-directories layouts.
-    private val clustered = Option(tableOptions.get("clusteredWrite")).exists { v =>
-      v.trim.toLowerCase match {
-        case "true" => true
-        case "false" => false
-        case other => throw new IllegalArgumentException(
-          s"fixedwidth: option 'clusteredWrite' must be true or false, got '$other'")
-      }
-    }
-    if (clustered && partitionCols.isEmpty)
-      throw new IllegalArgumentException(
-        "fixedwidth: 'clusteredWrite' requires partitionBy columns to cluster on")
-
-    override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-      if (clustered)
-        org.apache.spark.sql.connector.distributions.Distributions.clustered(
-          partitionCols.map(c =>
-            org.apache.spark.sql.connector.expressions.Expressions.column(c): org.apache.spark.sql.connector.expressions.Expression).toArray)
-      else org.apache.spark.sql.connector.distributions.Distributions.unspecified()
+    override def requiredDistribution(): Distribution =
+      if (clustered) Distributions.clustered(partitionCols.map(c => Expressions.column(c): Expression).toArray)
+      else Distributions.unspecified()
 
     // Sorting within tasks by the partition columns makes each directory's
     // rows contiguous, so the dynamic writer holds ONE open stream at a
     // time instead of one per directory seen — open handles are the scarce
     // resource against object stores.
-    override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    override def requiredOrdering(): Array[SortOrder] =
       if (clustered)
-        partitionCols.map(c => org.apache.spark.sql.connector.expressions.Expressions.sort(
-          org.apache.spark.sql.connector.expressions.Expressions.column(c),
-          org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
+        partitionCols.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
       else Array.empty
 
-    override def toBatch: BatchWrite = {
-      val path = Option(tableOptions.get("path")).getOrElse(
-        throw new IllegalArgumentException("fixedwidth: write requires a single 'path'"))
-      val maxRecords =
-        FixedWidthOptions.positiveLong(tableOptions, "maxRecordsPerFile").getOrElse(0L)
-      new FixedWidthBatchWrite(
-        path, opts, info.schema(), doTruncate,
-        SerializableHadoopConf.broadcast(conf), partitionCols,
-        maxRecords, framedCodec, frameBytes, statFields)
-    }
+    override def toBatch: BatchWrite =
+      new FixedWidthBatchWrite(job, doTruncate, SerializableHadoopConf.broadcast(conf))
+  }
+}
+
+/** One write, parsed once on the driver and shipped to every task:
+  * `maxRecordsPerFile` 0 means unbounded files. */
+final case class WriteJob(
+    path: String,
+    opts: FixedWidthOptions,
+    querySchema: StructType,
+    partitionCols: Seq[String],
+    maxRecordsPerFile: Long,
+    layout: WriteLayout)
+
+/** How a write lays out its files: the file extension, and the sink each
+  * created stream is wrapped in. */
+sealed abstract class WriteLayout(val extension: String) extends Serializable {
+  def open(out: FSDataOutputStream, opts: FixedWidthOptions): FileSink
+}
+
+object WriteLayout {
+  /** Raw fixed-width bytes (`.fwb`). */
+  case object Plain extends WriteLayout(".fwb") {
+    def open(out: FSDataOutputStream, opts: FixedWidthOptions): FileSink = new PlainSink(out)
+  }
+
+  /** The framed compressed layout (`.fwz`, [[FwzFormat]]): `frameCap`
+    * decompressed bytes per frame, per-frame min/max of `statFields`. */
+  final case class Framed(codec: Byte, frameCap: Int, statFields: Seq[FieldSpec])
+      extends WriteLayout(FwzFormat.Extension) {
+    def open(out: FSDataOutputStream, opts: FixedWidthOptions): FileSink =
+      new FramedSink(out, codec, frameCap, new FwzStats.Tracker(opts, statFields))
+  }
+
+  // Target DECOMPRESSED bytes per frame (rounded down to a record multiple,
+  // floored at one record). Smaller frames split finer but compress worse;
+  // 1 MiB ≈ a few thousand records is the sane default for both codecs.
+  val DefaultFrameBytes: Long = 1L * 1024 * 1024
+
+  /** Frame capacity in whole records (decompressed) — frames are ALWAYS
+    * record multiples, which is what makes every frame boundary a legal
+    * split point with no spanning-record logic. */
+  def frameCap(frameBytes: Long, recordLength: Int): Int = {
+    val recs = math.max(1L, frameBytes / recordLength)
+    math.min(recs, Int.MaxValue / recordLength - 1).toInt * recordLength
+  }
+}
+
+/** One open output file: [[write]] appends one encoded record, [[finish]]
+  * completes the file and closes `out`. A failed task closes `out` without
+  * finishing — an unfinished `.fwz` has no footer, so the reader rejects it
+  * at plan time, which is the CORRECT failure mode for a crashed task:
+  * commit only renames finished files. */
+sealed abstract class FileSink(val out: FSDataOutputStream) {
+  def write(record: Array[Byte]): Unit
+  def finish(): Unit
+}
+
+final class PlainSink(out: FSDataOutputStream) extends FileSink(out) {
+  def write(record: Array[Byte]): Unit = out.write(record)
+  def finish(): Unit = out.close()
+}
+
+/** Groups records into frames of `frameCap` bytes, compresses each full
+  * frame, and at finish writes the tail frame and the v3 footer. */
+final class FramedSink(
+    out: FSDataOutputStream, codec: Byte, frameCap: Int, tracker: FwzStats.Tracker)
+    extends FileSink(out) {
+  private val frame = new Array[Byte](frameCap)
+  private var fill = 0
+  private val frames = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+  // whole-file CRC-32 over compressed frame bytes, recorded in the v3
+  // trailer so the reader's footer-cache tail fingerprint covers CONTENT
+  private val contentCrc = new java.util.zip.CRC32
+
+  def write(record: Array[Byte]): Unit = {
+    System.arraycopy(record, 0, frame, fill, record.length)
+    fill += record.length
+    if (fill >= frameCap) flushFrame()
+  }
+
+  private def flushFrame(): Unit = if (fill > 0) {
+    tracker.frameDone(frame, fill)
+    val c = FwzFormat.compressFrame(codec, frame, fill)
+    out.write(c)
+    contentCrc.update(c)
+    frames += ((c.length.toLong, fill.toLong))
+    fill = 0
+  }
+
+  def finish(): Unit = {
+    flushFrame()
+    // ALWAYS v3, even with no stat fields (the tracker then yields an empty
+    // stats block): the footer cache's tail fingerprint covers file CONTENT
+    // only through the v3 contentCrc, and a v1 file rewritten to identical
+    // length with identical framing would be undetectable — no file this
+    // sink writes should carry that residual gap (r16 closed it for stats
+    // files; r17 for all).
+    FwzFormat.writeFooter(out, codec, frames.toSeq, Some(tracker.block()), contentCrc.getValue)
+    out.close()
   }
 }
 
@@ -151,39 +250,26 @@ class FixedWidthWriteBuilder(
   * task attempts are harmless: only files named in commit messages are
   * renamed, the rest die with the temp dir.
   */
-class FixedWidthBatchWrite(
-    path: String,
-    opts: FixedWidthOptions,
-    querySchema: StructType,
-    truncate: Boolean,
-    conf: Broadcast[SerializableConfiguration],
-    partitionCols: Seq[String] = Nil,
-    maxRecordsPerFile: Long = 0L,
-    framedCodec: Byte = -1,
-    frameBytes: Long = 1L * 1024 * 1024,
-    statFields: Seq[FieldSpec] = Nil)
+class FixedWidthBatchWrite(job: WriteJob, truncate: Boolean, conf: Broadcast[SerializableConfiguration])
     extends BatchWrite {
 
   private val jobId = java.util.UUID.randomUUID().toString
-  private def tempDir = new Path(path, s"_temporary-$jobId")
+  private def tempDir = new Path(job.path, s"_temporary-$jobId")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // Driver-side, before any task launches.
-    val dir = new Path(path)
+    val dir = new Path(job.path)
     val fs = dir.getFileSystem(conf.value.value)
     if (truncate && fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(tempDir)
     // Validate the incoming schema maps onto the layout once, up front.
-    FixedWidthEncoder.plan(opts, querySchema)
-    FixedWidthEncoder.partitionRenderers(opts, querySchema, partitionCols)
-    new FixedWidthDataWriterFactory(
-      tempDir.toString, opts, querySchema, conf, partitionCols,
-      maxRecordsPerFile, jobId.replace("-", "").take(8), framedCodec, frameBytes,
-      statFields)
+    FixedWidthEncoder.plan(job.opts, job.querySchema)
+    FixedWidthEncoder.partitionRenderers(job.opts, job.querySchema, job.partitionCols)
+    new FixedWidthDataWriterFactory(job, tempDir.toString, jobId.replace("-", "").take(8), conf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new Path(path)
+    val dir = new Path(job.path)
     val fs = dir.getFileSystem(conf.value.value)
     messages.collect { case m: FixedWidthCommitMessage => m }.foreach { m =>
       m.relPaths.foreach { rel =>
@@ -199,144 +285,73 @@ class FixedWidthBatchWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value.value)
+    val fs = new Path(job.path).getFileSystem(conf.value.value)
     fs.delete(tempDir, true)
   }
 }
 
 /** `relPaths` are partition-relative (`a=1/b=x/part-...fwb`) so commit can
   * reproduce the directory tree under the final path. */
-final case class FixedWidthCommitMessage(relPaths: Seq[String], records: Long)
-    extends WriterCommitMessage
+final case class FixedWidthCommitMessage(relPaths: Seq[String]) extends WriterCommitMessage
 
+/** `jobTag` (first 8 hex of the job UUID) keeps file names unique across
+  * APPEND jobs from different sessions: Spark task ids restart from 0 in a
+  * new session, and a colliding name would make commit's rename fail. */
 class FixedWidthDataWriterFactory(
-    tempDir: String,
-    opts: FixedWidthOptions,
-    querySchema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    partitionCols: Seq[String] = Nil,
-    maxRecordsPerFile: Long = 0L,
-    jobTag: String = "",
-    framedCodec: Byte = -1,
-    frameBytes: Long = 1L * 1024 * 1024,
-    statFields: Seq[FieldSpec] = Nil)
+    job: WriteJob, tempDir: String, jobTag: String, conf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
-  // jobTag (first 8 hex of the job UUID) keeps file names unique across
-  // APPEND jobs from different sessions: Spark task ids restart from 0 in a
-  // new session, and a colliding name would make commit's rename fail.
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new FixedWidthDataWriter(
-      tempDir, f"part-$partitionId%05d-$taskId${if (jobTag.isEmpty) "" else s"-$jobTag"}",
-      opts, querySchema, conf.value.value, partitionCols, maxRecordsPerFile,
-      framedCodec, frameBytes, statFields)
+      job, tempDir, f"part-$partitionId%05d-$taskId-$jobTag", conf.value.value)
 }
 
-class FixedWidthDataWriter(
-    tempDir: String,
-    fileStem: String,
-    opts: FixedWidthOptions,
-    querySchema: StructType,
-    conf: Configuration,
-    partitionCols: Seq[String] = Nil,
-    maxRecordsPerFile: Long = 0L,
-    framedCodec: Byte = -1,
-    frameBytes: Long = 1L * 1024 * 1024,
-    statFields: Seq[FieldSpec] = Nil)
+class FixedWidthDataWriter(job: WriteJob, tempDir: String, fileStem: String, conf: Configuration)
     extends DataWriter[InternalRow] {
 
   private val fs = new Path(tempDir).getFileSystem(conf)
-  private val encoders = FixedWidthEncoder.plan(opts, querySchema)
-  private val partRender = FixedWidthEncoder.partitionRenderers(opts, querySchema, partitionCols)
-  private val buf = new Array[Byte](opts.recordLength)
-  private var records = 0L
-  private val framed = framedCodec >= 0
-  // frame capacity in whole records (decompressed) — frames are ALWAYS
-  // record multiples, which is what makes every frame boundary a legal
-  // split point with no spanning-record logic
-  private val frameCap: Int = {
-    val recs = math.max(1L, frameBytes / opts.recordLength)
-    math.min(recs, Int.MaxValue / opts.recordLength - 1).toInt * opts.recordLength
-  }
+  private val encoders = FixedWidthEncoder.plan(job.opts, job.querySchema)
+  private val partRender =
+    FixedWidthEncoder.partitionRenderers(job.opts, job.querySchema, job.partitionCols)
+  private val buf = new Array[Byte](job.opts.recordLength)
 
-  // One open stream per partition directory seen by this task (a task's
+  // One open file per partition directory seen by this task (a task's
   // rows may span many partition values — same as Spark's dynamic
   // partition file writers). Unpartitioned writes collapse to one entry
-  // under key "". With maxRecordsPerFile > 0 a directory's stream ROLLS to
+  // under key "". With maxRecordsPerFile > 0 a directory's file ROLLS to
   // a new sequence-numbered file when full (the v1 writer's option of the
   // same name) — unbounded single files are how 100 TB feeds become
-  // unmanageable.
+  // unmanageable. Each rolled file gets its own sink, so a framed file's
+  // footer describes exactly its own frames.
   private final class DirState {
     var seq = 0
     var inFile = 0L
-    var stream: org.apache.hadoop.fs.FSDataOutputStream = null
     val relPaths = scala.collection.mutable.ArrayBuffer.empty[String]
-    // framed mode: the current file's pending frame + finished-frame table
-    var frameBuf: Array[Byte] = if (framed) new Array[Byte](frameCap) else null
-    var frameFill = 0
-    val frames = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    // whole-file CRC-32 over compressed frame bytes, recorded in the v3
-    // trailer so the reader's footer-cache tail fingerprint covers CONTENT
-    val contentCrc = new java.util.zip.CRC32
-    // per-frame column statistics tracker — one per OPEN FILE (reset on
-    // roll: each file's footer describes exactly its own frames)
-    var tracker: FwzStats.Tracker = null
+    var sink: FileSink = null
   }
   private val dirs = scala.collection.mutable.LinkedHashMap.empty[String, DirState]
 
   private def relPathOf(relDir: String, seq: Int): String = {
-    val ext = if (framed) FwzFormat.Extension else ".fwb"
+    val ext = job.layout.extension
     val name = if (seq == 0) s"$fileStem$ext" else f"$fileStem-r$seq%04d$ext"
     if (relDir.isEmpty) name else s"$relDir/$name"
   }
 
-  /** Compress + write the directory's pending frame, if any. */
-  private def flushFrame(st: DirState): Unit = if (st.frameFill > 0) {
-    if (st.tracker != null) st.tracker.frameDone(st.frameBuf, st.frameFill)
-    val c = FwzFormat.compressFrame(framedCodec, st.frameBuf, st.frameFill)
-    st.stream.write(c)
-    st.contentCrc.update(c)
-    st.frames += ((c.length.toLong, st.frameFill.toLong))
-    st.frameFill = 0
-  }
-
-  /** Close the directory's current file — for framed files, flush the tail
-    * frame and append the footer first (a frameless close would leave a
-    * file the reader rejects at plan time, which is the CORRECT failure
-    * mode for a crashed task: commit only renames completed files). */
-  private def closeFile(st: DirState): Unit = if (st.stream != null) {
-    if (framed) {
-      flushFrame(st)
-      // ALWAYS v3, even with no stat fields (an empty stats block): the
-      // footer cache's tail fingerprint covers file CONTENT only through
-      // the v3 contentCrc, and a v1 file rewritten to identical length
-      // with identical framing would be undetectable — no file this sink
-      // writes should carry that residual gap (r16 closed it for stats
-      // files; r17 for all).
-      FwzFormat.writeFooter(st.stream, framedCodec, st.frames.toSeq,
-        Some(Option(st.tracker).map(_.block()).getOrElse(
-          FwzFormat.FwzStatsBlock(opts.charsetName, FwzFormat.TrimIds(opts.trim), Nil))),
-        st.contentCrc.getValue)
-      st.frames.clear()
-      st.contentCrc.reset()
-      st.tracker = null
-    }
-    st.stream.close()
-    st.stream = null
+  private def closeFile(st: DirState): Unit = if (st.sink != null) {
+    st.sink.finish()
+    st.sink = null
   }
 
   private def stateFor(relDir: String): DirState = {
     val st = dirs.getOrElseUpdate(relDir, new DirState)
-    if (st.stream != null && maxRecordsPerFile > 0 && st.inFile >= maxRecordsPerFile) {
+    if (st.sink != null && job.maxRecordsPerFile > 0 && st.inFile >= job.maxRecordsPerFile) {
       closeFile(st)
       st.seq += 1
       st.inFile = 0L
     }
-    if (st.stream == null) {
+    if (st.sink == null) {
       val rel = relPathOf(relDir, st.seq)
       st.relPaths += rel
-      st.stream = fs.create(new Path(tempDir, rel), true)
-      if (framed && statFields.nonEmpty)
-        st.tracker = new FwzStats.Tracker(opts, statFields)
+      st.sink = job.layout.open(fs.create(new Path(tempDir, rel), true), job.opts)
     }
     st.inFile += 1
     st
@@ -351,23 +366,17 @@ class FixedWidthDataWriter(
     java.util.Arrays.fill(buf, ' '.toByte)
     var i = 0
     while (i < encoders.length) { encoders(i)(record, buf); i += 1 }
-    val st = stateFor(relDir)
-    if (framed) {
-      System.arraycopy(buf, 0, st.frameBuf, st.frameFill, buf.length)
-      st.frameFill += buf.length
-      if (st.frameFill >= frameCap) flushFrame(st)
-    } else st.stream.write(buf)
-    records += 1
+    stateFor(relDir).sink.write(buf)
   }
 
   override def commit(): WriterCommitMessage = {
     dirs.values.foreach(closeFile)
-    FixedWidthCommitMessage(dirs.values.flatMap(_.relPaths).toSeq, records)
+    FixedWidthCommitMessage(dirs.values.flatMap(_.relPaths).toSeq)
   }
 
   override def abort(): Unit = {
     dirs.values.foreach { st =>
-      if (st.stream != null) try st.stream.close() catch { case _: Throwable => }
+      if (st.sink != null) try st.sink.out.close() catch { case _: Throwable => }
       st.relPaths.foreach { rel =>
         try fs.delete(new Path(tempDir, rel), false) catch { case _: Throwable => }
       }

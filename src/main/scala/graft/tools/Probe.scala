@@ -37,7 +37,8 @@ object Probe {
       .option("recordLength", 10).option("keyStartAt", 3).option("keyEndAt", 8)
       .load(s"$base/raw")
     val n = back.count()
-    val keyed = back.select($"offset", $"key".cast("string").as("k")).orderBy($"offset").head(2).toSeq
+    // offsets restart at 0 in every file: the key breaks the ties
+    val keyed = back.select($"offset", $"key".cast("string").as("k")).orderBy($"k", $"offset").head(2).toSeq
     println(s"PROBE roundtrip: n=$n first=$keyed")
 
     expectError("missing-recordLength") {

@@ -2,10 +2,12 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.sources.fixedwidth.FwzFormat
 
 /** The framed compressed layout (.fwz, FwzFormat): write → read round trips
   * at several split granularities for BOTH codecs, file rolling, Hive
@@ -178,5 +180,27 @@ class FwzRoundTripSpec extends SparkSpec with Matchers {
     withClue(p) { p should include("FixedWidthCountScan") }
     // real aggregates still decompress and are correct
     r.agg(sum(col("id"))).collect()(0).getLong(0) shouldBe (19999L * 20000L / 2)
+  }
+
+  test("a write without frameStats is still v3: empty stats block and content CRC") {
+    val conf = spark.sessionState.newHadoopConf()
+    for (codec <- Seq("zstd", "gzip")) {
+      val dir = Files.createTempDirectory(s"graft-fwz-v3-$codec").toString
+      writeFwz(dir, 20000, codec, 16 * 1024)
+      val files = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".fwz"))
+      withClue(s"$codec files") { files should not be empty }
+      files.foreach { f =>
+        withClue(s"$codec ${f.getName}: ") {
+          val bytes = Files.readAllBytes(f.toPath)
+          bytes(bytes.length - 5).toInt shouldBe 3 // trailer version byte
+          val footer = FwzFormat.readFooter(new Path(f.getPath), f.length(), conf)
+          // the reader's defaults: charset UTF-8, trim=right
+          footer.stats shouldBe Some(FwzFormat.FwzStatsBlock("UTF-8", FwzFormat.TrimIds("right"), Nil))
+          val crc = new java.util.zip.CRC32
+          crc.update(bytes, 0, footer.frames.map(_.cLen).sum.toInt)
+          java.nio.ByteBuffer.wrap(bytes, bytes.length - 22, 8).getLong shouldBe crc.getValue
+        }
+      }
+    }
   }
 }
