@@ -911,10 +911,11 @@ object CoreQueries {
     * compressed feed, `SELECT min(key), max(key), min(ts), max(ts),
     * count(*)` (the feed-freshness question) plans a one-row
     * FixedWidthCountScan that reads ONLY the memoized footers — zero
-    * frames decompressed, zero data IO, at any feed size. Values travel as
-    * the winning records' raw field slices and decode through the same
-    * parsers a scan uses (FixedWidthTable.decodeField), so the oracle's
-    * from-parquet aggregate must hash-match bit-exactly. */
+    * frames decompressed, zero data IO, at any feed size. The winning
+    * records' raw field slices decode on the driver through the same
+    * parsers a scan uses (FixedWidthTable.decodeField) and travel as the
+    * scan's one decoded row, so the oracle's from-parquet aggregate must
+    * hash-match bit-exactly. */
   def q238(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val fieldsOpt = FixedWidthOptions.renderFields(lineitemLayout)
@@ -938,8 +939,11 @@ object CoreQueries {
     * frameStats, then `SELECT l_returnflag, min(key), max(ts), count(*)
     * GROUP BY l_returnflag` plans a FixedWidthCountScan whose min/max come
     * from each group's footer envelopes — zero frames decompressed at any
-    * feed size. The oracle computes the identical grouped aggregate from
-    * the original parquet. */
+    * feed size. Groups and extremes decode on the driver (directory values
+    * through FixedWidthTable.groupByDirValues, footer slices through
+    * FixedWidthTable.decodeField) and travel as one decoded row per group.
+    * The oracle computes the identical grouped aggregate from the original
+    * parquet. */
   def q239(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val fieldsOpt = FixedWidthOptions.renderFields(lineitemLayout)

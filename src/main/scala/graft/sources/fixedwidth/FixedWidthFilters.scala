@@ -17,42 +17,20 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object FixedWidthFilters {
 
-  /** Every declared field compares through its codec (dates and timestamps
-    * as epoch days and micros, decimals by exact value); prefix, suffix and
-    * contains push down only on string fields, where they are byte
-    * compares at a fixed offset. */
-  private def comparableField(name: String, opts: FixedWidthOptions): Boolean =
-    name.equalsIgnoreCase(FixedWidthOptions.OffsetCol) || opts.fields.exists(_.name.equalsIgnoreCase(name))
-
-  private def stringField(name: String, opts: FixedWidthOptions): Boolean =
-    opts.fields.exists(f => f.name.equalsIgnoreCase(name) && opts.codec(f).isString)
-
-  def supported(f: Filter, opts: FixedWidthOptions): Boolean = f match {
-    case EqualTo(a, _)            => comparableField(a, opts)
-    case GreaterThan(a, _)        => comparableField(a, opts)
-    case GreaterThanOrEqual(a, _) => comparableField(a, opts)
-    case LessThan(a, _)           => comparableField(a, opts)
-    case LessThanOrEqual(a, _)    => comparableField(a, opts)
-    case IsNotNull(a)             => comparableField(a, opts)
-    case IsNull(a)                => comparableField(a, opts)
-    case In(a, vs)                => vs.nonEmpty && vs.forall(_ != null) && comparableField(a, opts)
-    case StringStartsWith(a, v)   => v != null && stringField(a, opts)
-    case StringEndsWith(a, v)     => v != null && stringField(a, opts)
-    case StringContains(a, v)     => v != null && stringField(a, opts)
-    case And(l, r)                => supported(l, opts) && supported(r, opts)
-    // `l_returnflag = 'A' OR l_returnflag = 'R'` arrives as Or (not In) when
-    // written with ||; composes exactly like And. Our compiled predicates
-    // encode NULL as false, which is sound under Or: null|true = true either
-    // way, null|false = null = filtered. (Not is NOT pushable under this
-    // encoding: not(null) = null must filter, but not(false) = true.)
-    case Or(l, r)                 => supported(l, opts) && supported(r, opts)
-    case _                        => false
-  }
+  /** A filter is pushable exactly when it compiles: one rule, so the reader
+    * never meets an accepted filter it cannot compile. */
+  def supported(f: Filter, opts: FixedWidthOptions): Boolean =
+    compileOnBuffer(f, opts, new Array[Byte](opts.recordLength), () => 0L).isDefined
 
   /** Compile a pushed filter to a predicate over the reused record buffer.
     * `offset` supplies the current record's byte offset (the synthetic
-    * `offset` column). Returns None only for shapes `supported` rejects —
-    * the ScanBuilder guarantees it never pushes those.
+    * `offset` column). None = not pushable: an unknown column or shape, a
+    * NULL literal, an empty `In` or one holding a NULL, a literal the
+    * field's codec rejects, a non-numeric `offset` literal, and prefix,
+    * suffix or contains on a non-string field. Every declared field
+    * compares through its codec (dates and timestamps as epoch days and
+    * micros, decimals by exact value); prefix, suffix and contains are
+    * byte compares at a fixed offset.
     *
     * Under tolerant modes a predicate field whose bytes fail the typed
     * parse evaluates as SQL NULL at the LEAF (no match for that
@@ -62,7 +40,7 @@ object FixedWidthFilters {
     * around the whole tree: with a top-level catch `x > 5 OR y = 2` on a
     * malformed x would skip the record even when the y arm is TRUE, where
     * Catalyst computes NULL OR TRUE = TRUE. (Leaf NULL-as-false composes
-    * soundly through And/Or — see the Or note in `supported`.) */
+    * soundly through And/Or — see the Or note below.) */
   def compileOnBuffer(
       f: Filter,
       opts: FixedWidthOptions,
@@ -86,9 +64,12 @@ object FixedWidthFilters {
       * when its bytes fail the typed parse. The literal converts through the
       * field codec, as the fwz frame skipper's does. */
     def cmp(name: String, value: Any): Option[() => java.lang.Integer] = {
-      if (isOffset(name)) {
-        val v = value.asInstanceOf[Number].longValue()
-        return Some(() => Integer.valueOf(java.lang.Long.compare(offset(), v)))
+      if (value == null) return None
+      if (isOffset(name)) return value match {
+        case n: Number =>
+          val v = n.longValue()
+          Some(() => Integer.valueOf(java.lang.Long.compare(offset(), v)))
+        case _ => None
       }
       fieldOf(name).flatMap { fs =>
         val codec = opts.codec(fs)
@@ -136,7 +117,9 @@ object FixedWidthFilters {
       def boolGuard(g: () => Boolean): () => Boolean =
         if (!opts.tolerant) g
         else () => try g() catch { case _: NumberFormatException => false }
+      if (vs.isEmpty || vs.contains(null)) return None
       if (isOffset(name)) {
+        if (!vs.forall(_.isInstanceOf[Number])) return None
         val set = new java.util.HashSet[java.lang.Long]()
         vs.foreach(v => set.add(java.lang.Long.valueOf(v.asInstanceOf[Number].longValue())))
         return Some(() => set.contains(java.lang.Long.valueOf(offset())))
@@ -158,6 +141,7 @@ object FixedWidthFilters {
       case IsNotNull(a)             => isNullPred(a, expectNull = false)
       case IsNull(a)                => isNullPred(a, expectNull = true)
       case In(a, vs) => inPred(a, vs)
+      case StringStartsWith(_, null) | StringEndsWith(_, null) | StringContains(_, null) => None
       case StringStartsWith(a, v) =>
         val pre = UTF8String.fromString(v)
         strGetter(a).map(g => () => g().startsWith(pre))
@@ -172,6 +156,11 @@ object FixedWidthFilters {
           lp <- compileOnBuffer(l, opts, buf, offset)
           rp <- compileOnBuffer(r, opts, buf, offset)
         } yield () => lp() && rp()
+      // `l_returnflag = 'A' OR l_returnflag = 'R'` arrives as Or (not In)
+      // when written with ||; composes exactly like And. Compiled predicates
+      // encode NULL as false, which is sound under Or: null|true = true
+      // either way, null|false = null = filtered. (Not is NOT pushable under
+      // this encoding: not(null) = null must filter, but not(false) = true.)
       case Or(l, r) =>
         for {
           lp <- compileOnBuffer(l, opts, buf, offset)

@@ -7,6 +7,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -63,8 +64,9 @@ class FixedWidthScanBuilder(
     // (NULL/blank fields, -0.0, NaN ordering, binary UTF8 collation), so no
     // post-scan re-evaluation is needed and predicate-only columns can be
     // pruned from the read schema. Only unsupported shapes are residual.
-    pushed = filters.filter(f => FixedWidthFilters.supported(f, opts))
-    filters.filterNot(f => FixedWidthFilters.supported(f, opts))
+    val (accepted, residual) = filters.partition(FixedWidthFilters.supported(_, opts))
+    pushed = accepted
+    residual
   }
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
@@ -85,20 +87,21 @@ class FixedWidthScanBuilder(
   //    PERMISSIVE trailing-fragment floor IS visible — floor(len/recLen));
   //  - pushed filters, if any, EXACTLY answered by directory pruning
   //    (PruneResult.exact) — a record-level residual would need real IO.
-  // Groups merge by DECODED directory value (a foreign `k=01` directory
-  // merges with `k=1`). Per group, COUNT(*) sums the files' exact counts
-  // (FixedWidthPlanFiles.records); any unknowable count (a foreign
-  // compressed file, a FAILFAST fragment, an unreadable footer) declines the
-  // push. MIN/MAX of a field come from the directory values when the field
-  // is bound in every file of the group and each file holds a record (the
-  // distinct directory values ARE the distinct column values, by the writer
-  // contract); otherwise from the group's fwz footer envelopes.
+  // Groups are FixedWidthTable.groupByDirValues, the rule key-grouped
+  // partitioning uses (a foreign `k=01` directory merges with `k=1`). Per
+  // group, COUNT(*) sums the files' exact counts (FixedWidthPlanFiles
+  // .records); any unknowable count (a foreign compressed file, a FAILFAST
+  // fragment, an unreadable footer) declines the push. MIN/MAX of a field
+  // come from the directory values when the field is bound in every file of
+  // the group and each file holds a record (the distinct directory values
+  // ARE the distinct column values, by the writer contract); otherwise from
+  // the group's fwz footer envelopes. The answer is decoded here, on the
+  // driver, once per Aggregation, and travels to the executor as rows.
 
   /** The declared fields of a group-by, if each is one a directory value
     * can answer (doubles refused: Catalyst normalizes -0.0/NaN in group
     * keys — not worth replicating for a pathological partition type). */
-  private def groupColsOf(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[Seq[FieldSpec]] = {
+  private def groupColsOf(agg: Aggregation): Option[Seq[FieldSpec]] = {
     val cols = agg.groupByExpressions.toSeq.map {
       case nr: org.apache.spark.sql.connector.expressions.NamedReference if nr.fieldNames.length == 1 =>
         nr.fieldNames()(0)
@@ -128,10 +131,12 @@ class FixedWidthScanBuilder(
     * decoded-value extremes of every record (tracked through the reader's
     * own parsers, type/slice/convention gated by usableEntry); NULLs never
     * participate (FlagHasValue); an unknown envelope, a foreign trailing
-    * fragment or any plain/foreign member declines. None = not answerable;
-    * Some(None) = no non-null value (SQL NULL). */
+    * fragment or any plain/foreign member declines. The winning slice
+    * decodes through FixedWidthTable.decodeField, as scanning the winning
+    * record would. None = not answerable; Some(null) = no non-null value
+    * (SQL NULL). */
   private def footerExtremeOver(
-      sts: Seq[org.apache.hadoop.fs.FileStatus], f: FieldSpec, wantMax: Boolean): Option[Option[Array[Byte]]] = {
+      sts: Seq[org.apache.hadoop.fs.FileStatus], f: FieldSpec, wantMax: Boolean): Option[Any] = {
     val recLen = opts.recordLength.toLong
     var best: AnyRef = null
     var bestSlice: Array[Byte] = null
@@ -153,7 +158,7 @@ class FixedWidthScanBuilder(
         if (better) { best = v; bestSlice = slice }
       }
     }
-    Some(Option(bestSlice))
+    Some(if (bestSlice == null) null else FixedWidthTable.decodeField(opts, f, bestSlice))
   }
 
   /** Extreme of a field over a group's directory values: None when the
@@ -162,101 +167,86 @@ class FixedWidthScanBuilder(
     * trailing-fragment file, an empty framed write — must not surface), or
     * when a value does not decode. Values compare through their DECODED
     * Catalyst forms (all listing-answerable types are Comparable with
-    * Catalyst-identical order). Some(None) = no non-null value (SQL NULL). */
+    * Catalyst-identical order), and the decoded winner is the answer.
+    * Some(null) = no non-null value (SQL NULL). */
   private def dirExtremeOver(
       pfs: Seq[FixedWidthTable.PartitionedFile], counts: Seq[Long],
-      f: FieldSpec, wantMax: Boolean): Option[Option[String]] = {
+      f: FieldSpec, wantMax: Boolean): Option[Any] = {
     val lower = f.name.toLowerCase
     if (counts.contains(0L) || !pfs.forall(_.partValues.contains(lower))) return None
     try {
       val candidates = pfs.map(_.partValues(lower)).distinct
-        .map(raw => raw -> FixedWidthTable.decodeDirValue(opts, f, raw))
-        .filter(_._2 != null) // blank = SQL NULL: min/max ignore it
-      Some(if (candidates.isEmpty) None else Some(candidates.reduceLeft { (a, b) =>
-        val c = a._2.asInstanceOf[Comparable[Any]].compareTo(b._2)
+        .map(FixedWidthTable.decodeDirValue(opts, f, _))
+        .filter(_ != null) // blank = SQL NULL: min/max ignore it
+      Some(if (candidates.isEmpty) null else candidates.reduceLeft { (a, b) =>
+        val c = a.asInstanceOf[Comparable[Any]].compareTo(b)
         if ((c >= 0) == wantMax) a else b
-      }._1))
+      })
     } catch { case _: NumberFormatException => None }
   }
 
-  /** The answer of a fully pushed aggregate: its group columns and one
-    * (raw group values, result columns) row per group. */
-  private def aggAnswerOf(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[(Seq[FieldSpec], Seq[(Seq[String], Seq[FixedWidthListingCol])])] = {
+  /** The whole answer of a fully pushed aggregate, in one pass over its
+    * aggregate expressions: the output schema, one decoded row per group
+    * and the positions a footer answered. None = not answerable. */
+  private def aggAnswerOf(agg: Aggregation): Option[FixedWidthCountScan] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    // the shape, before any IO: group columns, and the MIN/MAX target of
-    // each position
+    // the shape, before any IO: each output column, and how one group (its
+    // files and their exact counts) answers it as (value, from a footer)
+    type Answer = (Seq[FixedWidthTable.PartitionedFile], Seq[Long]) => Option[(Any, Boolean)]
+    def extreme(kind: String, e: org.apache.spark.sql.connector.expressions.Expression,
+        wantMax: Boolean): Option[(StructField, Answer)] =
+      minMaxFieldOf(e).map { f =>
+        StructField(s"$kind(${f.name})", f.dataType, nullable = true) -> { (pfs, counts) =>
+          dirExtremeOver(pfs, counts, f, wantMax).map(_ -> false)
+            .orElse(footerExtremeOver(pfs.map(_.status), f, wantMax).map(_ -> true))
+        }
+      }
     val aggs = agg.aggregateExpressions.toSeq
     if (aggs.isEmpty || opts.dropMalformed) return None
     val fields = groupColsOf(agg).getOrElse(return None)
-    val targets: Seq[Option[FieldSpec]] = aggs.map {
-      case _: CountStar => None
-      case m: Min => Some(minMaxFieldOf(m.column()).getOrElse(return None))
-      case m: Max => Some(minMaxFieldOf(m.column()).getOrElse(return None))
+    val cols: Seq[(StructField, Answer)] = aggs.zipWithIndex.map {
+      case (_: CountStar, i) =>
+        StructField(s"count(*)${if (i == 0) "" else s"_$i"}", LongType, nullable = false) ->
+          ((_, counts) => Some((counts.sum, false)))
+      case (m: Min, _) => extreme("min", m.column(), wantMax = false).getOrElse(return None)
+      case (m: Max, _) => extreme("max", m.column(), wantMax = true).getOrElse(return None)
       case _ => return None
     }
     val res = files.pruned(pushed)
     if (!res.exact) return None
-    val lowerNames = fields.map(_.name.toLowerCase)
-    if (res.keptFiles.exists(pf => !lowerNames.forall(pf.partValues.contains))) return None
-    // group by decoded key, keeping the first raw representative; zero
-    // group columns make exactly one group, even one holding no file
-    val grouped = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[Any], (Seq[String], scala.collection.mutable.ArrayBuffer[FixedWidthTable.PartitionedFile])]
-    if (fields.isEmpty) grouped(Nil) = (Nil, scala.collection.mutable.ArrayBuffer.empty)
-    try res.keptFiles.foreach { pf =>
-      val raws = lowerNames.map(pf.partValues)
-      val key = fields.zip(raws).map { case (f, r) => FixedWidthTable.decodeDirValue(opts, f, r) }
-      grouped.getOrElseUpdate(key, (raws, scala.collection.mutable.ArrayBuffer.empty))._2 += pf
-    } catch { case _: NumberFormatException => return None }
-    val rows = grouped.values.toSeq.map { case (raws, members) =>
-      val pfs = members.toSeq
+    val groups = FixedWidthTable.groupByDirValues(opts, res.keptFiles, fields).getOrElse(return None)
+    val schema = StructType(
+      fields.map(f => StructField(f.name, f.dataType, nullable = true)) ++ cols.map(_._1))
+    val toUnsafe = UnsafeProjection.create(schema)
+    val fromFooter = scala.collection.mutable.Set.empty[Int]
+    val rows = groups.map { case (key, pfs) =>
       val counts = pfs.map(pf => files.records(pf.status).getOrElse(return None))
-      val cols = aggs.zip(targets).map {
-        case (_, None) => FixedWidthCountCol(counts.sum): FixedWidthListingCol
-        case (m, Some(f)) =>
-          val wantMax = m.isInstanceOf[Max]
-          dirExtremeOver(pfs, counts, f, wantMax)
-            .map(raw => FixedWidthValueCol(f, raw): FixedWidthListingCol)
-            .orElse(footerExtremeOver(pfs.map(_.status), f, wantMax)
-              .map(s => FixedWidthSliceCol(f, s): FixedWidthListingCol))
-            .getOrElse(return None)
+      val values = cols.zipWithIndex.map { case ((_, answer), j) =>
+        val (v, footer) = answer(pfs, counts).getOrElse(return None)
+        if (footer) fromFooter += j
+        v
       }
-      (raws, cols)
+      toUnsafe(new GenericInternalRow((key ++ values).toArray)).copy(): InternalRow
     }
-    Some((fields, rows))
+    Some(new FixedWidthCountScan(schema, fields.map(_.name), rows, fromFooter.toSet))
   }
 
-  /** Output schema of a fully pushed aggregate, one field per aggregate
-    * expression in order: `count(*)` (`count(*)_i` past position 0),
-    * `min(f)`, `max(f)`. */
-  private def aggSchemaOf(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): StructType = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Max, Min}
-    def extreme(kind: String, e: org.apache.spark.sql.connector.expressions.Expression) = {
-      val f = minMaxFieldOf(e).get
-      StructField(s"$kind(${f.name})", f.dataType, nullable = true)
-    }
-    StructType(agg.aggregateExpressions.toSeq.zipWithIndex.map {
-      case (m: Min, _) => extreme("min", m.column())
-      case (m: Max, _) => extreme("max", m.column())
-      case (_, i) => StructField(s"count(*)${if (i == 0) "" else s"_$i"}", LongType, nullable = false)
-    })
+  // Spark asks supportCompletePushDown, then pushAggregation, with the same
+  // Aggregation: both read one answer. Filters are pushed before either.
+  private var aggMemo: (Aggregation, Option[FixedWidthCountScan]) = null
+  private def aggAnswer(agg: Aggregation): Option[FixedWidthCountScan] = {
+    if (aggMemo == null || !(aggMemo._1 eq agg)) aggMemo = (agg, aggAnswerOf(agg))
+    aggMemo._2
   }
 
   private var aggScan: Option[FixedWidthCountScan] = None
 
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    aggAnswerOf(agg).isDefined
+  override def supportCompletePushDown(agg: Aggregation): Boolean = aggAnswer(agg).isDefined
 
   // Never accept a PARTIAL pushdown (complete-unsupported cases): the
   // answer is the FINAL aggregate, not a per-partition partial.
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    aggScan = aggAnswerOf(agg).map { case (fields, rows) =>
-      new FixedWidthCountScan(opts, fields, rows, aggSchemaOf(agg))
-    }
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    aggScan = aggAnswer(agg)
     aggScan.isDefined
   }
 
@@ -288,51 +278,33 @@ class FixedWidthScanBuilder(
         Some((offsetN, if (limitN >= 0) limitN else Long.MaxValue)) else None))
 }
 
-/** One result column of a fully pushed aggregate, for one group. */
-sealed trait FixedWidthListingCol extends Serializable
-final case class FixedWidthCountCol(n: Long) extends FixedWidthListingCol
-/** min/max of a partition column: the winning directory value travels raw
-  * and decodes on the executor (None = SQL NULL — no non-null value). */
-final case class FixedWidthValueCol(field: FieldSpec, raw: Option[String])
-    extends FixedWidthListingCol
-/** min/max answered from fwz footer statistics: the winning record's raw
-  * field SLICE travels and decodes on the executor through the same
-  * parsers a record read uses (None = SQL NULL — no non-null value). */
-final case class FixedWidthSliceCol(field: FieldSpec, slice: Option[Array[Byte]])
-    extends FixedWidthListingCol
-
 /** The whole scan when an aggregate is fully pushed down: one partition,
   * one row per group, zero data IO. A global aggregate is the case of zero
-  * group columns and exactly one group. Every group is answered by the same
-  * rule from the query's [[FixedWidthPlanFiles]]: COUNT(*) from per-file
-  * exact counts; MIN/MAX from the group's partition directory values, or
-  * from fwz-stats-covered fields' footer envelopes. Group
-  * values and directory extremes travel as raw directory strings and
-  * decode on the executor through FixedWidthTable.decodeDirValue, the
-  * decode that grouped them at plan time; footer extremes travel as the
-  * winning records' raw field slices and decode through
-  * FixedWidthTable.decodeField. */
+  * group columns and exactly one group. [[FixedWidthScanBuilder]] answers
+  * every group on the driver from the query's [[FixedWidthPlanFiles]]:
+  * COUNT(*) from per-file exact counts; MIN/MAX from the group's decoded
+  * partition directory values, or from fwz-stats-covered fields' footer
+  * envelopes, decoded as a record read would. The decoded rows are the
+  * partition. */
 class FixedWidthCountScan(
-    opts: FixedWidthOptions,
-    groupFields: Seq[FieldSpec],
-    groups: Seq[(Seq[String], Seq[FixedWidthListingCol])],
-    aggSchema: StructType) extends Scan with Batch {
+    schema: StructType,
+    groupBy: Seq[String],
+    rows: Seq[InternalRow],
+    footerAnswered: Set[Int]) extends Scan with Batch {
 
-  override def readSchema(): StructType = StructType(
-    groupFields.map(f => StructField(f.name, f.dataType, nullable = true)) ++ aggSchema.fields)
+  override def readSchema(): StructType = schema
 
   override def toBatch: Batch = this
   override def description(): String = {
-    val aggs = aggSchema.fieldNames.zipWithIndex.map { case (n, j) =>
+    val aggs = schema.fieldNames.drop(groupBy.length).zipWithIndex.map { case (n, j) =>
       (if (n.startsWith("count(*)")) "COUNT(*)" else n.toUpperCase) +
-        (if (groups.exists(_._2(j).isInstanceOf[FixedWidthSliceCol])) " (fwz stats)" else "")
+        (if (footerAnswered(j)) " (fwz stats)" else "")
     }
-    s"FixedWidthCountScan(groups=${groups.length}) [PushedAggregates: ${aggs.mkString(", ")}" +
-      (if (groupFields.nonEmpty) s", GroupBy: ${groupFields.map(_.name).mkString(",")}" else "") + "]"
+    s"FixedWidthCountScan(groups=${rows.length}) [PushedAggregates: ${aggs.mkString(", ")}" +
+      (if (groupBy.nonEmpty) s", GroupBy: ${groupBy.mkString(",")}" else "") + "]"
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(FixedWidthCountPartition(opts, groupFields, groups, readSchema()))
+  override def planInputPartitions(): Array[InputPartition] = Array(FixedWidthCountPartition(rows))
 
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -340,35 +312,14 @@ class FixedWidthCountScan(
   }
 }
 
-final case class FixedWidthCountPartition(
-    opts: FixedWidthOptions,
-    groupFields: Seq[FieldSpec],
-    groups: Seq[(Seq[String], Seq[FixedWidthListingCol])],
-    schema: StructType) extends InputPartition
+/** A pushed aggregate's answer, one UnsafeRow per group. */
+final case class FixedWidthCountPartition(rows: Seq[InternalRow]) extends InputPartition
 
 class FixedWidthCountReader(p: FixedWidthCountPartition) extends PartitionReader[InternalRow] {
-  private val nGroup = p.groupFields.length
-  private val row = new GenericInternalRow(p.schema.length)
-  private val proj = UnsafeProjection.create(p.schema)
-  private var idx = -1
-
-  override def next(): Boolean = { idx += 1; idx < p.groups.length }
-
-  override def get(): InternalRow = {
-    val (raws, cols) = p.groups(idx)
-    p.groupFields.zip(raws).zipWithIndex.foreach { case ((f, raw), i) =>
-      row.update(i, FixedWidthTable.decodeDirValue(p.opts, f, raw))
-    }
-    cols.zipWithIndex.foreach {
-      case (FixedWidthCountCol(n), j) => row.setLong(nGroup + j, n)
-      case (FixedWidthValueCol(f, raw), j) =>
-        row.update(nGroup + j, raw.map(FixedWidthTable.decodeDirValue(p.opts, f, _)).orNull)
-      case (FixedWidthSliceCol(f, slice), j) =>
-        row.update(nGroup + j, slice.map(FixedWidthTable.decodeField(p.opts, f, _)).orNull)
-    }
-    proj(row)
-  }
-
+  private val rows = p.rows.iterator
+  private var row: InternalRow = null
+  override def next(): Boolean = rows.hasNext && { row = rows.next(); true }
+  override def get(): InternalRow = row
   override def close(): Unit = ()
 }
 
@@ -453,8 +404,8 @@ class FixedWidthScan(
   // — joins and aggregations clustered on them then skip the shuffle
   // entirely. Opt-in via spark.sql.sources.v2.bucketing.enabled (Spark
   // ignores the report otherwise), matching the conf that gates Spark's own
-  // split-grouping machinery. Key values decode through the same path the
-  // scan uses, so "k=1" and a foreign "k=01" directory land in ONE group.
+  // split-grouping machinery. Groups are FixedWidthTable.groupByDirValues,
+  // the rule pushed aggregates use: "k=1" and a foreign "k=01" are ONE group.
   private lazy val keyedGroups: Option[(Seq[FieldSpec], Seq[(org.apache.spark.sql.catalyst.expressions.UnsafeRow, Seq[FixedWidthTable.PartitionedFile])])] = {
     // NB: the registered DEFAULT of spark.sql.sources.v2.bucketing.enabled
     // is true in Spark 4 — read the effective value (getConfString with a
@@ -475,24 +426,12 @@ class FixedWidthScan(
           requiredSchema.fieldNames.exists(_.equalsIgnoreCase(f.name)) &&
             kept.forall(_.partValues.contains(lower))
         }
+        // None on a foreign garbage value
         if (common.isEmpty) None
-        else try {
-          val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-            StructType(common.map(f => StructField(f.name, f.dataType))))
-          val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(common.length)
-          val groups = scala.collection.mutable.LinkedHashMap
-            .empty[Seq[Any], (org.apache.spark.sql.catalyst.expressions.UnsafeRow, scala.collection.mutable.ArrayBuffer[FixedWidthTable.PartitionedFile])]
-          kept.foreach { pf =>
-            val key = common.map(f => FixedWidthTable.decodeDirValue(opts, f, pf.partValues(f.name.toLowerCase)))
-            val entry = groups.getOrElseUpdate(key, {
-              var i = 0
-              while (i < common.length) { row.update(i, key(i)); i += 1 }
-              (proj(row).copy(), scala.collection.mutable.ArrayBuffer.empty[FixedWidthTable.PartitionedFile])
-            })
-            entry._2 += pf
-          }
-          Some((common, groups.values.toSeq.map { case (k, fs) => (k, fs.toSeq) }))
-        } catch { case _: NumberFormatException => None } // foreign garbage value
+        else FixedWidthTable.groupByDirValues(opts, kept, common).map { groups =>
+          val proj = UnsafeProjection.create(StructType(common.map(f => StructField(f.name, f.dataType))))
+          (common, groups.map { case (key, pfs) => (proj(new GenericInternalRow(key.toArray)).copy(), pfs) })
+        }
       }
     }
   }

@@ -196,6 +196,27 @@ object FixedWidthTable {
     decodeField(opts, f, opts.codec(f).textBytes(raw, f.len).getOrElse(
       throw new NumberFormatException(s"over-width directory value '$raw'")))
 
+  /** Files grouped by their DECODED directory values of `fields`, groups in
+    * listing order: `k=1` and a foreign `k=01` form one group, and a blank
+    * value is the NULL group. Zero fields make one group, even when it holds
+    * no file. None when a file does not bind a field or a value does not
+    * decode. The one grouping rule of pushed aggregates and key-grouped
+    * partitioning. */
+  def groupByDirValues(
+      opts: FixedWidthOptions, files: Seq[PartitionedFile], fields: Seq[FieldSpec])
+      : Option[Seq[(Seq[Any], Seq[PartitionedFile])]] = {
+    val groups = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[Any], scala.collection.mutable.ArrayBuffer[PartitionedFile]]
+    if (fields.isEmpty) groups(Nil) = scala.collection.mutable.ArrayBuffer.empty
+    try files.foreach { pf =>
+      val key = fields.map { f =>
+        decodeDirValue(opts, f, pf.partValues.getOrElse(f.name.toLowerCase, return None))
+      }
+      groups.getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer.empty) += pf
+    } catch { case _: NumberFormatException => return None }
+    Some(groups.toSeq.map { case (key, members) => (key, members.toSeq) })
+  }
+
   /** Decode ONE declared field from its raw bytes, space-padded or cut to
     * the field width, with the parsers a record read uses: NULL for a blank
     * typed field, a copied `UTF8String` for strings. Throws

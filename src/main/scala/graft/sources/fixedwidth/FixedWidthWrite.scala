@@ -244,7 +244,8 @@ final class FramedSink(
   * which the reference's MapReduce pipeline got for free): every task writes
   * into a job-scoped `_temporary-<jobId>` directory (mirroring the final
   * partition subdirectories); `commit()` renames the committed tasks' files
-  * into the final directory tree and drops a `_SUCCESS` marker; `abort()`
+  * into the final directory tree (under overwrite, after deleting every
+  * other entry there) and drops a `_SUCCESS` marker; `abort()`
   * (or a task lost without abort) leaves nothing visible because readers
   * skip `_`-prefixed paths and the temp dir is deleted. Speculative/zombie
   * task attempts are harmless: only files named in commit messages are
@@ -257,20 +258,19 @@ class FixedWidthBatchWrite(job: WriteJob, truncate: Boolean, conf: Broadcast[Ser
   private def tempDir = new Path(job.path, s"_temporary-$jobId")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // Driver-side, before any task launches.
-    val dir = new Path(job.path)
-    val fs = dir.getFileSystem(conf.value.value)
-    if (truncate && fs.exists(dir)) fs.delete(dir, true)
-    fs.mkdirs(tempDir)
-    // Validate the incoming schema maps onto the layout once, up front.
+    // Driver-side, before any task launches: validate that the incoming
+    // schema maps onto the layout before touching the filesystem.
     FixedWidthEncoder.plan(job.opts, job.querySchema)
     FixedWidthEncoder.partitionRenderers(job.opts, job.querySchema, job.partitionCols)
+    tempDir.getFileSystem(conf.value.value).mkdirs(tempDir)
     new FixedWidthDataWriterFactory(job, tempDir.toString, jobId.replace("-", "").take(8), conf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(job.path)
     val fs = dir.getFileSystem(conf.value.value)
+    if (truncate)
+      fs.listStatus(dir).map(_.getPath).filter(_.getName != tempDir.getName).foreach(fs.delete(_, true))
     messages.collect { case m: FixedWidthCommitMessage => m }.foreach { m =>
       m.relPaths.foreach { rel =>
         val src = new Path(tempDir, rel)

@@ -100,16 +100,17 @@ class FixedWidthPlanIoSpec extends SparkSpec with Matchers {
   private def tableOptions(dir: String) = new CaseInsensitiveStringMap(
     Map("path" -> dir, "fields" -> layout, "recordLength" -> recLen.toString).asJava)
 
-  /** Spark 4.1's order of calls for one query: filter and aggregate
-    * pushdown, the complete-pushdown check, the build, statistics, and two
-    * input-partition plans of the built scan. */
+  /** Spark 4.1's order of calls for one query: filter pushdown, the
+    * complete-pushdown check, aggregate pushdown (the two see the same
+    * answer), the build, statistics, and two input-partition plans of the
+    * built scan. */
   private def planLikeSpark(dir: String, filters: Array[Filter], agg: Aggregation): Scan = {
     val opts = tableOptions(dir)
     val b = new FixedWidthScanBuilder(
       FixedWidthOptions(opts), opts, spark.sessionState.newHadoopConf())
     b.pushFilters(filters)
-    b.pushAggregation(agg)
-    b.supportCompletePushDown(agg)
+    val complete = b.supportCompletePushDown(agg)
+    b.pushAggregation(agg) shouldBe complete
     val scan = b.build()
     scan match {
       case s: SupportsReportStatistics => s.estimateStatistics().numRows()

@@ -310,4 +310,34 @@ class FixedWidthPushdownSpec extends SparkSpec with Matchers {
     df.count() shouldBe 30L
     df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString should not include "PushedLimit"
   }
+
+  test("a filter is pushable exactly when it compiles") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.sources.fixedwidth.{FixedWidthFilters, FixedWidthOptions}
+    val opts = FixedWidthOptions(new CaseInsensitiveStringMap(
+      Map("fields" -> "s:string:0:8,l:long:8:10,d:decimal(10,2):18:12").asJava))
+    // (column, a literal of its class, a literal of another class)
+    val columns: Seq[(String, Any, Any)] = Seq(
+      ("s", "abc", java.lang.Long.valueOf(5L)),
+      ("l", java.lang.Long.valueOf(5L), "abc"),
+      ("d", new java.math.BigDecimal("1.50"), "abc"),
+      ("offset", java.lang.Long.valueOf(30L), "abc"))
+    def shapes(c: String, v: Any): Seq[Filter] = Seq(
+      EqualTo(c, v), GreaterThan(c, v), GreaterThanOrEqual(c, v), LessThan(c, v),
+      LessThanOrEqual(c, v), In(c, Array(v)), In(c, Array(v, null)), In(c, Array.empty[Any]),
+      IsNull(c), IsNotNull(c),
+      StringStartsWith(c, String.valueOf(v)), StringEndsWith(c, String.valueOf(v)),
+      StringContains(c, String.valueOf(v)), StringStartsWith(c, null),
+      And(EqualTo(c, v), IsNotNull(c)), Or(EqualTo(c, v), IsNull(c)))
+    def compiles(f: Filter): Boolean =
+      scala.util.Try(FixedWidthFilters.compileOnBuffer(
+        f, opts, new Array[Byte](opts.recordLength), () => 0L)).toOption.flatten.isDefined
+    for ((c, right, wrong) <- columns; v <- Seq(right, wrong, null); f <- shapes(c, v))
+      withClue(s"$f: ") { FixedWidthFilters.supported(f, opts) shouldBe compiles(f) }
+    // every comparison with a literal of the column's class still pushes
+    for ((c, right, _) <- columns; f <- shapes(c, right).take(6))
+      withClue(s"$f: ") { FixedWidthFilters.supported(f, opts) shouldBe true }
+  }
 }

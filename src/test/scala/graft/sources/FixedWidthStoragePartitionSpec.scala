@@ -151,4 +151,44 @@ class FixedWidthStoragePartitionSpec extends SparkSpec with Matchers {
       agg.queryExecution.executedPlan.toString should include("Exchange hashpartitioning")
     }
   }
+
+  test("a pushed GROUP BY and key-grouped partitioning form the same groups") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.sources.fixedwidth._
+    val dir = tmp()
+    val lay = "id:long:0:8,k:long:8:6"
+    // directories k=1 and a blank k= (NULL)
+    (1 to 30).map(i => (i.toLong, if (i % 5 == 0) None else Some(1L))).toDF("id", "k")
+      .write.format("fixedwidth").option("fields", lay).partitionBy("k")
+      .mode("overwrite").save(dir)
+    // a foreign writer's zero-padded twin of k=1
+    val foreign = new java.io.File(dir, "k=01"); foreign.mkdirs()
+    val out = new java.io.FileOutputStream(new java.io.File(foreign, "part-x.fwb"))
+    (31 to 35).foreach(i => out.write(f"$i%-8d01    ".getBytes("US-ASCII")))
+    out.close()
+    new java.io.File(dir).list().filter(_.startsWith("k=")).toSet shouldBe Set("k=1", "k=01", "k=")
+    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "true") {
+      val df = spark.read.format("fixedwidth").option("fields", lay).load(dir)
+        .groupBy($"k").agg(count(lit(1)).as("n"))
+      df.queryExecution.executedPlan.toString should include("FixedWidthCountScan")
+      val pushed = df.collect().map(r => (if (r.isNullAt(0)) null else r.getLong(0)) -> r.getLong(1)).toMap
+      pushed shouldBe Map((1L: Any) -> 29L, (null: Any) -> 6L)
+
+      val opts = new CaseInsensitiveStringMap(Map("path" -> dir, "fields" -> lay).asJava)
+      val scan = new FixedWidthScanBuilder(
+        FixedWidthOptions(opts), opts, spark.sessionState.newHadoopConf()).build().asInstanceOf[FixedWidthScan]
+      val reported = scan.outputPartitioning()
+        .asInstanceOf[org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning]
+      reported.keys().map(_.describe()).toSeq shouldBe Seq("k")
+      val keys = scan.planInputPartitions().map {
+        case p: FixedWidthKeyedInputPartition =>
+          val key = p.partitionKey()
+          if (key.isNullAt(0)) null else key.getLong(0)
+      }.toSet
+      keys shouldBe pushed.keySet
+      reported.numPartitions() shouldBe pushed.size
+    }
+  }
 }
