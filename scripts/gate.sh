@@ -5,15 +5,18 @@
 #   scripts/gate.sh [sfDir] [lane...]   # sfDir defaults to the sf0.01 test data
 #
 # Lane names (SparkEntry.queries keys, or bare numbers such as q230 q233
-# q239) limit step 2 to those lanes, so step 3 checks only their outputs;
+# q239) limit step 3 to those lanes, so step 4 checks only their outputs;
 # with none, every lane runs.
 #
 # Steps (any failure aborts with nonzero exit):
 #   1. sbt test                 — full ScalaTest suite
-#   2. graft.Verify <sfDir>     — every SparkEntry.queries lane -> parquet
-#   3. oracle_check.py          — dtype-strict DuckDB compare (the same
+#   2. perfbench compile        — the benchmark (perfbench/), built offline
+#                                 against this working tree: it calls
+#                                 src/main internals a deletion can break
+#   3. graft.Verify <sfDir>     — every SparkEntry.queries lane -> parquet
+#   4. oracle_check.py          — dtype-strict DuckDB compare (the same
 #                                 check the grading driver performs)
-#   4. graft.tools.Probe        — fixedwidth edge-case surface
+#   5. graft.tools.Probe        — fixedwidth edge-case surface
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -24,6 +27,18 @@ trap 'rm -rf "$OUT_DIR"' EXIT
 
 echo "== gate: sbt test =="
 sbt -batch test 2>&1 | grep -E "^\[info\] (Tests:|Suites:|All tests)|^\[error\]" | tail -5
+
+echo "== gate: perfbench compile =="
+PB_LOG="$OUT_DIR/perfbench-compile.log"
+PB_OPTS="-Dsbt.offline=true"
+if [ -f "$HOME/.sbt/repositories" ]; then
+  PB_OPTS="$PB_OPTS -Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories"
+fi
+if ! (cd perfbench && COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:-} $PB_OPTS" \
+    sbt --batch -Dsbt.server.autostart=false compile) >"$PB_LOG" 2>&1; then
+  grep -E "^\[error\]" "$PB_LOG" | head -20 || tail -20 "$PB_LOG"
+  echo "gate: perfbench does not compile against the working tree"; exit 1
+fi
 
 echo "== gate: Verify${LANES:+ $LANES} -> $OUT_DIR =="
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR${LANES:+ $LANES}" 2>&1 \

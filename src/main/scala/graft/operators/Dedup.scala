@@ -120,12 +120,12 @@ object Dedup {
     * testdata is a single parquet file with one row group per table, so
     * every scan-stage map (shingle explode, sketch loops, per-doc gram
     * sorts) otherwise runs 1–2-way parallel REGARDLESS of cores — profiled
-    * on q172 at sf1: ~9 s of a 14 s lane sat in 2-task stages
-    * (`tools/ProfilePrefix`). On a real cluster inputs have many splits,
-    * the guard fails, and this is a no-op — no gratuitous shuffle of
-    * corpus text. Round-robin repartition is retry-deterministic (Spark
-    * sorts within partitions before redistributing) and every consumer
-    * below is partition-order-free, so results are unchanged. */
+    * on q172 at sf1: ~9 s of a 14 s lane sat in 2-task stages. On a real
+    * cluster inputs have many splits, the guard fails, and this is a no-op
+    * — no gratuitous shuffle of corpus text. Round-robin repartition is
+    * retry-deterministic (Spark sorts within partitions before
+    * redistributing) and every consumer below is partition-order-free, so
+    * results are unchanged. */
   private[graft] def ensureParallelism(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sessionState.conf.numShufflePartitions
     if (df.rdd.getNumPartitions * 2 >= target) return df
@@ -648,7 +648,8 @@ object Dedup {
     // symmetric closure via explode, not self-union: a union whose branch
     // reuses the input's attributes unaliased trips Union's constraint
     // rewrite (AttributeMap miss: "key not found") on constraint-rich
-    // inputs such as spark.range-derived edges (AdversarialCc rehearsal)
+    // inputs such as spark.range-derived edges (DedupSpec's hub-and-chains
+    // test)
     val nbrs = e.select(explode(array(
         struct(col("u").as("u"), col("v").as("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("p"))

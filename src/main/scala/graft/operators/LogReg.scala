@@ -131,11 +131,12 @@ object LogReg {
           .cast("double")
         val perDoc = db.select($"fs",
           (round(lit(1.0) / (lit(1.0) + exp(-m)), 8) - $"y").as("err"))
+        // n is read in round 1 only, so only round 1 carries the cnt sum
+        val g = sum(($"err" * $"f.c").cast("decimal(30,10)")).cast("double").as("g")
         val grads = perDoc
           .select(explode($"fs").as("f"), $"err")
           .groupBy($"f.b".as("b"))
-          .agg(sum(($"err" * $"f.c").cast("decimal(30,10)")).cast("double").as("g"),
-            sum($"f.c").as("cnt"))
+          .agg(g, (if (r == 1) Seq(sum($"f.c").as("cnt")) else Nil): _*)
         val gRows = BoundedPull.rows(grads, buckets + 1,
           s"logreg gradients (<= 2^$logBuckets + 1 rows)")
         if (r == 1) {
@@ -152,32 +153,6 @@ object LogReg {
       }
       w.toDF("b", "weight").select($"b".cast("int").as("bucket"), $"weight")
     } finally db.unpersist(blocking = false)
-  }
-
-  /** Diagnostic (tools.ExplainInternal): print the formatted plan of one
-    * GD round's gradient aggregate at zero weights over the per-doc
-    * feature arrays — the per-round shape `trainWeights` executes. Builds
-    * the same frames as one loop iteration, explains instead of running. */
-  private[graft] def explainRoundShape(docs: DataFrame): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val logBuckets = 6
-    val buckets = 1 << logBuckets
-    val base = docs.select(col("doc_id"), (col("lang") === "en").cast("int").as("y"),
-      col("text"))
-    val db = features(base, "doc_id", "text", logBuckets, Seq("y"))
-      .groupBy($"doc_id", $"y")
-      .agg(collect_list(struct($"b", $"c")).as("fs"))
-    val wLit = typedlit(IndexedSeq.fill(buckets + 1)(0.0))
-    val m = aggregate($"fs", lit(0.0).cast("decimal(30,10)"),
-      (acc, f) => (acc + (element_at(wLit, (f.getField("b") + lit(1L)).cast("int")) *
-        f.getField("c")).cast("decimal(30,10)")).cast("decimal(30,10)"))
-      .cast("double")
-    db.select($"fs", (round(lit(1.0) / (lit(1.0) + exp(-m)), 8) - $"y").as("err"))
-      .select(explode($"fs").as("f"), $"err")
-      .groupBy($"f.b".as("b"))
-      .agg(sum(($"err" * $"f.c").cast("decimal(30,10)")).cast("double").as("g"))
-      .explain("formatted")
   }
 
   /** HALF_UP rounding to 8 decimals, bit for bit what Spark's

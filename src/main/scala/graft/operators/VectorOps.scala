@@ -59,17 +59,6 @@ object VectorOps {
     * loud error instead of a driver OOM. */
   private val MaxPulledDims = 1 << 16
 
-  // Diagnostic phase timing behind SPARK_GRAFT_PCA_PROFILE (see
-  // tools.ProfilePca): attributes a lane's wall-clock to the driver
-  // actions. No effect when the env var is unset.
-  private def prof[A](label: String)(f: => A): A =
-    if (!sys.env.contains("SPARK_GRAFT_PCA_PROFILE")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[pca-profile] $label ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
-
   /** Group-sum of `t` under `mode`: ordered fold by `ord` (exact, q103
     * convention) or plain partial-agg double sum (scale). Usable wherever
     * an aggregate expression is (groupBy.agg or global agg). */
@@ -260,7 +249,7 @@ object VectorOps {
       .agg(foldSum(sumMode, col(idCol), col("x")).as("sx"),
         count(lit(1)).cast("double").as("n"))
       .select(col("dim"), (col("sx") / col("n")).as("mean"))
-    val mRows = prof("means pull")(BoundedPull(means, MaxPulledDims, "per-dim means (d rows)").collect())
+    val mRows = BoundedPull(means, MaxPulledDims, "per-dim means (d rows)").collect()
     val maxDim = if (mRows.isEmpty) -1 else mRows.map(_.getInt(0)).max
     val mArr = Array.fill(maxDim + 1)(Double.NaN)
     mRows.foreach(r => mArr(r.getInt(0)) = if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
@@ -339,8 +328,8 @@ object VectorOps {
       // double multiply/subtract/divide, java.lang.Math.sqrt (what
       // Spark's SQRT evaluates). A null u would previously have flowed
       // through as SQL null — fail loudly instead (ADVICE r18).
-      val uRows = prof("round u pull")(BoundedPull.rows(
-        u, MaxPulledDims, "power-iteration re-projection (d rows)"))
+      val uRows = BoundedPull.rows(
+        u, MaxPulledDims, "power-iteration re-projection (d rows)")
       require(uRows.nonEmpty,
         "power iteration over empty input: zero embedding rows (or empty " +
           "vectors) reached leadingDirection — nothing to decompose")
@@ -406,26 +395,6 @@ object VectorOps {
       v = u.crossJoin(broadcast(lambda)).select(col("dim"), (col("u") / col("nrm")).as("v"))
     }
     (v, lambda, v0)
-  }
-
-  /** Diagnostic (tools.ExplainInternal): print the formatted plan of one
-    * materialized power-iteration round's re-projection frame at the all-⅛
-    * start — the per-round corpus action `topTwoComponents` executes.
-    * Builds the same frames as one loop round, explains instead of
-    * pulling. */
-  private[graft] def explainRoundShape(embs: DataFrame): Unit = {
-    val (exv0, maxDim) = centeredVectors(embs, "vec_id", "embedding", SumMode.ExactFold)
-    val exv = exv0.persist() // as topTwoComponents runs it (r19)
-    try {
-      val vLit = typedLit(startVector(maxDim, alternate = false))
-      val s = aggregate(
-        transform(col("xcv"), (x, i) => x * element_at(vLit, (i + lit(1)).cast("int"))),
-        lit(0.0), (a, b) => a + b)
-      exv.select(col("vec_id"), s.as("s"), posexplode(col("xcv")).as(Seq("dim", "xc")))
-        .groupBy(col("dim"))
-        .agg(foldSum(SumMode.ExactFold, col("vec_id"), col("s") * col("xc")).as("u"))
-        .explain("formatted")
-    } finally exv.unpersist(blocking = false)
   }
 
   /** JL projection to `k` dimensions: (idCol, j, y) where

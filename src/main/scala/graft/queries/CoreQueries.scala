@@ -816,8 +816,9 @@ object CoreQueries {
     * clustered by its write key (a real feed lands in ingest/time order —
     * the driver's synthetic lineitem is shuffled, which no feed is), and
     * with tight per-frame key ranges the q235 predicate demonstrably skips
-    * ~99% of frames (ProfileFwzStats measures it). frameBytes=64 KiB keeps
-    * sf0.01 at ~70 frames/file so there are real frames to skip. */
+    * ~99% of frames (the scan's `fwFramesSkipped` metric counts them).
+    * frameBytes=64 KiB keeps sf0.01 at ~70 frames/file so there are real
+    * frames to skip. */
   private[queries] def lineitemFwzStatsPath(spark: SparkSession, dir: String): String = {
     val fieldsOpt = FixedWidthOptions.renderFields(lineitemLayout)
     val out = QueryRegistry.scratch(dir, "lineitem_fwz_stats")

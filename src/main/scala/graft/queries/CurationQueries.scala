@@ -1331,9 +1331,9 @@ object CurationQueries {
   }
 
   /** The q179 corpus pass: (doc_id, lang, bucket, count) hashed n-gram
-    * profile rows — split out (with [[dsirResultFrame]]) so plan evidence
-    * can explain the computation `dsirSelect` eagerly collects. */
-  private[graft] def dsirBucketCounts(spark: SparkSession, dir: String): DataFrame = {
+    * profile rows, the table `dsirSelect` persists and [[dsirResultFrame]]
+    * folds twice. */
+  private def dsirBucketCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Dedup.ensureParallelism(table(spark, dir, "documents"))
       .select($"doc_id", $"lang",
@@ -1352,7 +1352,7 @@ object CurationQueries {
     * the ≤1024-row bucket frame is value-identical (guide §1.2 step 1:
     * don't re-read what one pass can produce). tgt's old left-join +
     * na.fill(0) semantics are preserved by otherwise(0L). */
-  private[graft] def dsirResultFrame(db: DataFrame, m: Int): DataFrame = {
+  private def dsirResultFrame(db: DataFrame, m: Int): DataFrame = {
     val spark = db.sparkSession
     import spark.implicits._
     val byB = db.groupBy($"b").agg(sum($"c").as("cr"),

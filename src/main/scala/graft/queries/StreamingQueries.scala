@@ -33,51 +33,31 @@ object StreamingQueries {
     * SparkContext — so a concurrent query on the shared session can never
     * observe it (the previous set/restore on the shared conf raced). On a
     * real cluster this knob is sized to key cardinality × executor count. */
-  private def runToMemory(spark: SparkSession, name: String, mode: String,
+  private[graft] def runToMemory(spark: SparkSession, name: String, mode: String,
       statePartitions: Int = 8, requireSingleBatch: Boolean = false)(
       build: SparkSession => DataFrame): DataFrame = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     val ckpt = freshCkpt(name)
-    val t0 = System.nanoTime()
-    val built = build(ss)
-    val t1 = System.nanoTime()
-    val q = built.writeStream
+    val q = build(ss).writeStream
       .format("memory").queryName(name).outputMode(mode)
       .option("checkpointLocation", ckpt.toString)
       .trigger(Trigger.AvailableNow())
       .start()
-    val t2 = System.nanoTime()
-    q.awaitTermination()
-    // SPARK_GRAFT_STREAM_PROFILE: dump where the lane's wall-clock went —
-    // build (DataFrame construction incl. any batch-side schema reads),
-    // start (stream thread + offset-log init), drain (micro-batch
-    // execution), plus Spark's own per-batch durationMs split. Diagnostic
-    // only; no effect on results.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE")) {
-      val t3 = System.nanoTime()
-      def ms(a: Long, b: Long) = (b - a) / 1e6.toLong
-      System.err.println(s"[stream-profile] $name wall: build=${ms(t0, t1)}ms " +
-        s"start=${ms(t1, t2)}ms drain=${ms(t2, t3)}ms")
-      q.recentProgress.foreach { p =>
-        val durs = p.durationMs
-        val keys = durs.keySet().toArray(Array.empty[String]).sortBy(k => -durs.get(k))
-        System.err.println(s"[stream-profile] $name batch=${p.batchId} " +
-          s"rows=${p.numInputRows} " +
-          keys.map(k => s"$k=${durs.get(k)}").mkString(" "))
+    try {
+      q.awaitTermination()
+      if (requireSingleBatch) {
+        // The drained-stream == batch-oracle claim for watermarked
+        // append-mode queries relies on all input landing in ONE
+        // micro-batch: if the file source ever split the files such that
+        // event time regresses past the watermark across batches, state
+        // eviction would drop matches and the oracle would diverge
+        // silently. Fail loudly instead.
+        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        require(dataBatches <= 1,
+          s"$name: expected one data micro-batch under AvailableNow, saw $dataBatches")
       }
-    }
-    if (requireSingleBatch) {
-      // The drained-stream == batch-oracle claim for watermarked append-mode
-      // queries relies on all input landing in ONE micro-batch: if the file
-      // source ever split the files such that event time regresses past the
-      // watermark across batches, state eviction would drop matches and the
-      // oracle would diverge silently. Fail loudly instead.
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches <= 1,
-        s"$name: expected one data micro-batch under AvailableNow, saw $dataBatches")
-    }
-    dropCkpt(ckpt) // drained — the memory-sink table is all that's needed
+    } finally dropCkpt(ckpt) // drained or failed: only the memory-sink table is needed
     ss.table(name)
   }
 

@@ -390,4 +390,28 @@ class DedupSpec extends SparkSpec with Matchers {
     Dedup.keepBest(docs, col("grp"), col("quality"), col("id")).columns should
       not contain "_kb_rn"
   }
+
+  test("connected components over spark.range edges: a hub plus div-built chains") {
+    import spark.implicits._
+    // Range-derived edges carry constraints a local Seq does not, and a
+    // star round that self-unions its input trips Union's constraint
+    // rewrite on them. Hub: node 0 adjacent to 1..hubDegree. Chains:
+    // disjoint paths of chainLen nodes from base + c * chainLen, with the
+    // chain index computed by `div` (Spark's `/` on longs is double
+    // division).
+    val (hubDegree, chains, chainLen, base) = (2000L, 3L, 1000L, 1000000000L)
+    val hub = spark.range(1L, hubDegree + 1L).select(lit(0L).as("id_a"), $"id".as("id_b"))
+    val off = expr(s"(id div ${chainLen - 1}) * $chainLen + (id % ${chainLen - 1}) + $base")
+    val chainEdges = spark.range(chains * (chainLen - 1))
+      .select(off.as("id_a"), (off + 1L).as("id_b"))
+    val agg = Dedup.connectedComponents(hub.unionByName(chainEdges)).agg(
+        count(lit(1)),
+        count(when($"id" <= hubDegree && $"component" === 0L, 1)),
+        count(when($"id" >= base &&
+          $"component" === expr(s"((id - $base) div $chainLen) * $chainLen + $base"), 1)))
+      .head()
+    agg.getLong(0) shouldBe hubDegree + 1L + chains * chainLen
+    agg.getLong(1) shouldBe hubDegree + 1L
+    agg.getLong(2) shouldBe chains * chainLen
+  }
 }

@@ -158,4 +158,30 @@ class LogRegSpec extends SparkSpec with Matchers {
     val viaSpark = xs.toDF("x").select(round(col("x"), 8)).collect().map(_.getDouble(0)).toSeq
     xs.map(LogReg.round8) shouldBe viaSpark
   }
+
+  test("only round 1's gradient aggregate sums the counts (n is read in round 1 only)") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    // the output columns of every gradient aggregate the loop itself runs
+    val grads = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.foreach {
+          case a: Aggregate if a.aggregateExpressions.map(_.name).take(2) == Seq("b", "g") =>
+            grads.add(a.aggregateExpressions.map(_.name).toSeq)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      LogReg.trainWeights(corpus(), "doc_id", "text", col("y") === 1,
+        logBuckets = 6, rounds = 3, lr = 0.5).collect()
+      eventually(timeout(Span(30, Seconds))) { grads.size shouldBe 3 }
+    } finally spark.listenerManager.unregister(listener)
+    grads.toArray.toSeq shouldBe Seq(Seq("b", "g", "cnt"), Seq("b", "g"), Seq("b", "g"))
+  }
 }
